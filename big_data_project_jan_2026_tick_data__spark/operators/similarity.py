@@ -103,6 +103,19 @@ def _folded_arr1_sql(vals) -> str:
     return f"from_json('{json.dumps(vals)}', 'array<double>')"
 
 
+def _centroid_dsq_sql(vec_expr: str, cents) -> str:
+    """SQL ``array<struct<dsq, cid>>``: the squared L2 distance from
+    ``vec_expr`` to every centroid of the folded ``cents`` literal, cid
+    the centroid's INT position. ``array_min`` of it is the nearest
+    centroid with ties broken by the lowest cid; ``array_sort`` ranks
+    them. Typed even for an empty ``cents``."""
+    return (
+        f"transform({_folded_arr2_sql(cents)}, (c, i) -> struct("
+        f"aggregate(zip_with({vec_expr}, c, (x, y) -> (x - y) * (x - y)), "
+        f"0D, (a, x) -> a + x) AS dsq, i AS cid))"
+    )
+
+
 def _check_finite(vals) -> list[float]:
     """Reject NaN/Inf in a vector destined for a literal (see _sql_arr:
     centroids are computed from data, so a poisoned embedding CAN reach
@@ -448,7 +461,9 @@ def kmeans(
     At 100 TB: per iteration the corpus is scanned once, the only
     shuffle is the tiny partial-agg exchange, and nothing larger than
     k×dim ever reaches the driver. Empty clusters keep their previous
-    centroid.
+    centroid. With fewer than ``k`` vectors, ``k`` shrinks to the
+    vector count (an empty input yields an empty assignment and no
+    centroids). Assign and update are :func:`_lloyd` with one subspace.
 
     Returns (id_col, cluster, dist_sq) for the final assignment.
     """
@@ -477,48 +492,9 @@ def kmeans(
         raise ValueError(
             f"init must be lowest_id|kmeanspp|kmeansparallel, got {init!r}"
         )
-    centroids: list[list[float]] = [[float(x) for x in r.vec] for r in init_rows]
+    (nearest,), (centroids,) = _lloyd(v, init_rows, iters)
 
-    def assign_expr(cents: list[list[float]]) -> Column:
-        # r13: the k×dim centroid literals ride a constant-folded
-        # from_json literal inside ONE parsed SQL expression (see
-        # _folded_arr2_sql). Values are bit-identical: same
-        # zip_with/aggregate fold, same (dsq, cid)-min tie rule, and
-        # the transform index i is the same INT the historical
-        # per-entry cid literal carried.
-        return F.expr(
-            f"array_min(transform({_folded_arr2_sql(cents)}, "
-            f"(c, i) -> struct("
-            f"aggregate(zip_with(vec, c, (x, y) -> (x - y) * (x - y)), "
-            f"0D, (a, x) -> a + x) AS dsq, i AS cid)))"
-        )
-
-    for _ in range(iters):
-        assigned = v.withColumn("cluster", assign_expr(centroids).getField("cid"))
-        # per-(cluster, dim) mean over 1e-9-grid integer snaps summed as
-        # BIGINT: the raw float avg is partial-agg-order sensitive, and a
-        # q6 boundary flip in an early iteration cascades into different
-        # assignments (the cross-engine hash-FAIL class)
-        upd = (
-            assigned.select("cluster", F.posexplode("vec").alias("pos", "x"))
-            .groupBy("cluster", "pos")
-            .agg(
-                F.sum(F.floor(F.col("x") * 1e9 + F.lit(0.5))).alias("s9"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()
-        )
-        new_c: dict[int, dict[int, float]] = {}
-        for r in upd:
-            new_c.setdefault(r.cluster, {})[r.pos] = _q6((r.s9 / 1e9) / r.n)
-        centroids = [
-            [new_c[cid][p] for p in range(len(centroids[cid]))]
-            if cid in new_c
-            else centroids[cid]
-            for cid in range(k)
-        ]
-
-    final = v.withColumn("a", assign_expr(centroids))
+    final = v.withColumn("a", nearest)
     cols = [
         F.col(id_col),
         F.col("a").getField("cid").alias("cluster"),
@@ -534,6 +510,80 @@ def kmeans(
         # centroid literals the final assignment ran against
         return out, centroids
     return out
+
+
+def _lloyd(v: DataFrame, init_rows: list, iters: int, m: int = 1):
+    """Lloyd's k-means over the ``vec`` (array<double>) column of ``v``,
+    run independently in each of ``m`` contiguous subspaces: ``m=1`` is
+    :func:`kmeans`, ``m>1`` trains product-quantization codebooks
+    (:func:`pq_codes`). ``k`` is ``len(init_rows)``; row ``cid``'s
+    ``vec`` seeds centroid ``cid`` of every subspace.
+
+    Per iteration the corpus is scanned once: ONE projection computes
+    all ``m`` assignments (lowest-cid argmin over each subspace's folded
+    centroid literal), then ONE ``posexplode("vec")`` is grouped by
+    (the cluster of subspace ``pos div dsub``, ``pos``). Each mean sums
+    1e-9-grid integer snaps as BIGINT (the raw float avg is
+    partial-agg-order sensitive, and a q6 boundary flip in an early
+    iteration cascades into different assignments — the cross-engine
+    hash-FAIL class) and is snapped to q6. Empty clusters keep their
+    previous centroid.
+
+    Returns ``(nearest, books)``: ``nearest[s]`` the struct<dsq, cid>
+    Column of subspace ``s`` against the final centroids, ``books[s]``
+    those ``k`` q6 centroids."""
+    dim = len(init_rows[0].vec) if init_rows else 0
+    if dim % m != 0:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    dsub = dim // m
+    books = [
+        [[float(x) for x in r.vec[s * dsub : (s + 1) * dsub]] for r in init_rows]
+        for s in range(m)
+    ]
+
+    subs = (
+        ["vec"]
+        if m == 1
+        else [f"slice(vec, {s * dsub + 1}, {dsub})" for s in range(m)]
+    )
+
+    def nearest() -> list[Column]:
+        return [
+            F.expr(f"array_min({_centroid_dsq_sql(sub, book)})")
+            for sub, book in zip(subs, books)
+        ]
+
+    for _ in range(iters):
+        cids = [a.getField("cid") for a in nearest()]
+        # m=1 groups by the bare cluster column: the plain k-means plan
+        # carries no per-element array lookup
+        cl, key = (
+            (cids[0], "cl") if m == 1 else (F.array(*cids), f"cl[pos div {dsub}]")
+        )
+        upd = (
+            v.select("vec", cl.alias("cl"))
+            .select("cl", F.posexplode("vec").alias("pos", "x"))
+            .groupBy(F.expr(key).alias("cl"), "pos")
+            .agg(
+                F.sum(F.floor(F.col("x") * 1e9 + F.lit(0.5))).alias("s9"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            .collect()
+        )
+        fresh: dict[tuple[int, int], dict[int, float]] = {}
+        for r in upd:
+            s, p = divmod(r.pos, dsub)
+            fresh.setdefault((s, r.cl), {})[p] = _q6((r.s9 / 1e9) / r.n)
+        books = [
+            [
+                [fresh[(s, cid)][p] for p in range(dsub)]
+                if (s, cid) in fresh
+                else cent
+                for cid, cent in enumerate(book)
+            ]
+            for s, book in enumerate(books)
+        ]
+    return nearest(), books
 
 
 def kmeanspp_init(
@@ -1511,114 +1561,42 @@ def mmr_rerank(
     return withv.groupBy(query_id).applyInPandas(greedy, schema=out_schema)
 
 
+def _empty_topk(v: DataFrame, id_col: str) -> DataFrame:
+    """The empty, schema-stable (query_id, id_col, adist_q6, rank)
+    result of :func:`pq_topk` / :func:`ivfpq_topk` on an empty corpus."""
+    return v.select(
+        F.col(id_col).alias("query_id"),
+        F.col(id_col),
+        F.lit(0.0).alias("adist_q6"),
+        F.lit(0).alias("rank"),
+    ).limit(0)
+
+
 def _pq_train(
-    df: DataFrame,
-    m: int = 2,
-    ksub: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, list | None]:
+    v: DataFrame, init_rows: list, m: int, iters: int
+) -> tuple[DataFrame, list]:
     """Shared PQ trainer behind :func:`pq_codes` / :func:`pq_topk` /
-    :func:`ivfpq_topk`: returns ``(codes_df, codebooks)`` explicitly
-    (codebooks ``None`` on empty input) instead of smuggling the
-    trained centroids on a dynamic DataFrame attribute — the attribute
-    was dropped by the empty-input early return, so ADC consumers
-    raised AttributeError on an empty corpus.  ``ksub`` is clamped to
-    the corpus size: with fewer than ``ksub`` vectors the lowest-id
-    init produces a shorter codebook (every vector still gets an exact
-    centroid) rather than an IndexError in the update loop.
+    :func:`ivfpq_topk`: :func:`_lloyd` over the ``m`` subspaces of
+    ``v.vec``, seeded by ``init_rows`` (the ``ksub`` lowest-id rows, so
+    a corpus smaller than ``ksub`` trains a shorter codebook and every
+    vector still gets an exact centroid).
 
-    Body documented at :func:`pq_codes`."""
-    import math as _math
-
-    v = df.select(F.col(id_col), _to_double(F.col(vec_col)).alias("vec"))
-    first = v.select(F.size("vec").alias("d")).first()
-    if first is None:
-        empty = v.select(
-            F.col(id_col),
-            F.lit(0).alias("subspace"),
-            F.lit(0).alias("code"),
-            F.lit(0.0).alias("dist_q6"),
-        ).limit(0)
-        return empty, None
-    dim = first["d"]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    init_rows = v.orderBy(id_col).limit(ksub).collect()
-    ksub = min(ksub, len(init_rows))
-    cents: list[list[list[float]]] = [
-        [[float(x) for x in r.vec[s * dsub : (s + 1) * dsub]] for r in init_rows]
-        for s in range(m)
-    ]
-
-    def assign(s: int) -> Column:
-        # deliberately the scalar-literal form, NOT the from_json fold
-        # used by kmeans/ivf_topk: the fold was measured a consistent
-        # ~0.7-1.0 s REGRESSION on emb_ivfpq_topk (3-round alternating
-        # A/B, r13) — this operator rebuilds assign() m×(iters+1) times
-        # across many small jobs, where the scalar form's plans run
-        # faster end-to-end
-        entries = []
-        for cid, cent in enumerate(cents[s]):
-            arr = ", ".join(f"{x!r}D" for x in cent)
-            sub = f"slice(vec, {s * dsub + 1}, {dsub})"
-            dsq = (
-                f"aggregate(zip_with({sub}, array({arr}), "
-                f"(x, c) -> (x - c) * (x - c)), 0D, (a, x) -> a + x)"
-            )
-            entries.append(f"struct({dsq} AS dsq, {cid} AS cid)")
-        return F.expr(f"array_min(array({', '.join(entries)}))")
-
-    for _ in range(iters):
-        a = v.select(
-            "vec", *[assign(s).getField("cid").alias(f"c{s}") for s in range(m)]
-        )
-        stacked = None
-        for s in range(m):
-            part = a.select(
-                F.lit(s).alias("s"),
-                F.col(f"c{s}").alias("cl"),
-                F.posexplode(F.slice("vec", s * dsub + 1, dsub)).alias("pos", "x"),
-            )
-            stacked = part if stacked is None else stacked.unionByName(part)
-        upd = (
-            stacked.groupBy("s", "cl", "pos")
-            .agg(
-                F.sum(F.floor(F.col("x") * 1e9 + F.lit(0.5))).alias("s9"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()
-        )
-        fresh: dict[tuple[int, int], dict[int, float]] = {}
-        for r in upd:
-            fresh.setdefault((r.s, r.cl), {})[r.pos] = _math.floor(
-                ((r.s9 / 1e9) / r.n) * 1e6 + 0.5
-            ) / 1e6
-        for s in range(m):
-            cents[s] = [
-                [fresh[(s, cid)][p] for p in range(dsub)]
-                if (s, cid) in fresh
-                else cents[s][cid]
-                for cid in range(ksub)
-            ]
-
-    final = v.select(
-        F.col(id_col), *[assign(s).alias(f"a{s}") for s in range(m)]
+    Returns ``(codes, codebooks)`` explicitly: ``codes`` has one row per
+    (vector, subspace) — every column of ``v`` but ``vec``, then
+    (subspace, code, dist_q6) — from ONE posexplode of the ``m``
+    assignments; ``codebooks[s][code]`` is a q6 centroid.  Body
+    documented at :func:`pq_codes`."""
+    nearest, books = _lloyd(v, init_rows, iters, m)
+    keep = [c for c in v.columns if c != "vec"]
+    codes = v.select(
+        *keep, F.posexplode(F.array(*nearest)).alias("subspace", "a")
+    ).select(
+        *keep,
+        "subspace",
+        F.col("a.cid").alias("code"),
+        (F.floor(F.col("a.dsq") * 1e6 + F.lit(0.5)) / 1e6).alias("dist_q6"),
     )
-    out = None
-    for s in range(m):
-        part = final.select(
-            F.col(id_col),
-            F.lit(s).alias("subspace"),
-            F.col(f"a{s}").getField("cid").alias("code"),
-            (
-                F.floor(F.col(f"a{s}").getField("dsq") * 1e6 + F.lit(0.5)) / 1e6
-            ).alias("dist_q6"),
-        )
-        out = part if out is None else out.unionByName(part)
-    return out, cents
+    return codes, books
 
 
 def pq_codes(
@@ -1639,17 +1617,16 @@ def pq_codes(
 
     Scale shape: all ``m`` subspace assignments are map-side expressions
     in the SAME projection, and each update iteration is ONE shuffle of
-    (subspace, cluster, dim) partial means (≤ m·ksub·dsub rows after
-    map-side combine) + a metadata-scale collect — the corpus is
-    scanned once per iteration regardless of m, never joined.
+    (cluster, dim) partial means (≤ ksub·dim rows after map-side
+    combine) + a metadata-scale collect — the corpus is scanned once
+    per iteration regardless of m, never joined.
 
     Returns (id_col, subspace, code, dist_q6) — long/scalar form so the
     value oracle hashes it directly.  ADC consumers needing the trained
     codebooks use :func:`_pq_train` directly (explicit tuple return).
     """
-    codes, _ = _pq_train(
-        df, m=m, ksub=ksub, iters=iters, id_col=id_col, vec_col=vec_col
-    )
+    v = df.select(F.col(id_col), _to_double(F.col(vec_col)).alias("vec"))
+    codes, _ = _pq_train(v, v.orderBy(id_col).limit(ksub).collect(), m, iters)
     return codes
 
 
@@ -1674,23 +1651,14 @@ def pq_topk(
 
     Returns (query_id, id_col, adist_q6, rank), query excluded.
     """
-    import math as _math
-
-    from pyspark.sql import Window
-
-    codes, cents = _pq_train(
-        df, m=m, ksub=ksub, iters=iters, id_col=id_col, vec_col=vec_col
-    )
-    if cents is None:  # empty corpus: propagate an empty, schema-stable frame
-        return codes.select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col),
-            F.lit(0.0).alias("adist_q6"),
-            F.lit(0).alias("rank"),
-        ).limit(0)
-    dsub = len(cents[0][0])
     v = df.select(F.col(id_col), _to_double(F.col(vec_col)).alias("vec"))
-    qrows = v.orderBy(id_col).limit(n_queries).collect()
+    # one collect of the lowest-id rows seeds the codebooks AND
+    # serves the queries
+    rows = v.orderBy(id_col).limit(max(ksub, n_queries)).collect()
+    if not rows:
+        return _empty_topk(v, id_col)
+    codes, cents = _pq_train(v, rows[:ksub], m, iters)
+    dsub = len(cents[0][0])
     # the wide code table is consumed once PER QUERY branch below —
     # materialize it once (m ints per vector; the at-rest form a real
     # deployment persists anyway) instead of re-encoding the corpus
@@ -1701,7 +1669,7 @@ def pq_topk(
         .agg(F.first("code"))
     ).localCheckpoint()
     out = None
-    for qr in qrows:
+    for qr in rows[:n_queries]:
         qid = qr[id_col]
         adist = None
         for s in range(m):
@@ -1710,16 +1678,10 @@ def pq_topk(
             # oracle's list_sum, snapped to q6 so a fold-order ulp can't
             # leak into the ranking
             tbl = [
-                _math.floor(
-                    sum((qx - cx) * (qx - cx) for qx, cx in zip(qsub, cent))
-                    * 1e6
-                    + 0.5
-                )
-                / 1e6
+                _q6(sum((qx - cx) * (qx - cx) for qx, cx in zip(qsub, cent)))
                 for cent in cents[s]
             ]
-            arr = ", ".join(f"{x!r}D" for x in tbl)
-            term = F.expr(f"element_at(array({arr}), `{s}` + 1)")
+            term = F.expr(f"element_at({_sql_arr(tbl)}, `{s}` + 1)")
             adist = term if adist is None else adist + term
         part = wide.select(
             F.lit(qid).alias("query_id"),
@@ -1782,59 +1744,44 @@ def ivfpq_topk(
     import math as _math
 
     v = df.select(F.col(id_col), _to_double(F.col(vec_col)).alias("vec"))
-    first = v.select(F.size("vec").alias("d")).first()
-    if first is None:
-        return v.select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col),
-            F.lit(0.0).alias("adist_q6"),
-            F.lit(0).alias("rank"),
-        ).limit(0)
-    dim = first["d"]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
+    # one collect of the lowest-id rows serves the coarse centroids AND
+    # the queries
+    rows = v.orderBy(id_col).limit(max(nlist, n_queries)).collect()
+    if not rows:
+        return _empty_topk(v, id_col)
 
     # --- coarse quantizer: nlist lowest-id vectors, full precision ---
-    crows = v.orderBy(id_col).limit(nlist).collect()
-    coarse = [[float(x) for x in r.vec] for r in crows]
-    cents_sql = "array(" + ", ".join(_sql_arr(c) for c in coarse) + ")"
-    # argmin squared-L2 cell id, one parsed expression (py4j
-    # discipline); scalar-literal form kept deliberately — the
-    # from_json fold regressed emb_ivfpq_topk ~0.7-1.0 s (see
-    # _pq_train.assign)
-    cell_expr = F.expr(
-        f"array_min(transform({cents_sql}, (c, i) -> struct("
-        f"aggregate(zip_with(vec, c, (x, y) -> (x - y) * (x - y)), 0D, "
-        f"(a, x) -> a + x) AS dsq, i AS cid))).cid"
+    coarse = [[float(x) for x in r.vec] for r in rows[:nlist]]
+    asn = v.withColumn(
+        "cell", F.expr(f"array_min({_centroid_dsq_sql('vec', coarse)}).cid")
     )
-    asn = v.withColumn("cell", cell_expr)
+    # materialize the residual once, the one checkpoint per call: the
+    # codebook init collect, every Lloyd pass and the final codes read
+    # this column instead of re-deriving the coarse argmin and the
+    # subtraction through lineage. Checkpointing the code table instead
+    # (the slim at-rest index) measured emb_ivfpq_topk build 3.28 s vs
+    # 1.86 s at sf0.1 (4-core host, 8 alternating pairs, 8/8); the
+    # codes and the ADC join below stay lazy over the residual
     resid = asn.select(
         F.col(id_col),
         F.expr(
-            f"zip_with(vec, element_at({cents_sql}, cell + 1), "
+            f"zip_with(vec, element_at({_folded_arr2_sql(coarse)}, cell + 1), "
             f"(x, y) -> x - y)"
-        ).alias("embedding"),
+        ).alias("vec"),
         "cell",
-    )
+    ).localCheckpoint()
 
-    # --- residual PQ codebooks + codes (shared across cells); corpus
-    # is non-empty here (the `first is None` early return above), so
-    # the trained codebooks are always present ---
+    # --- residual PQ codebooks + codes (shared across cells); codes
+    # keep the cell column, so the index needs no join back ---
     codes, cb = _pq_train(
-        resid.select(id_col, "embedding"),
-        m=m,
-        ksub=ksub,
-        iters=iters,
-        id_col=id_col,
-        vec_col="embedding",
+        resid, resid.orderBy(id_col).limit(ksub).collect(), m, iters
     )
+    dsub = len(cb[0][0])
 
     # --- queries: n_queries lowest-id vectors; probe + distance table
     # built driver-side (metadata-scale), snapped to the 1e-6 grid ---
-    qrows = v.orderBy(id_col).limit(n_queries).collect()
     dt_rows = []
-    for qr in qrows:
+    for qr in rows[:n_queries]:
         qid = qr[id_col]
         qv = [float(x) for x in qr.vec]
         cd = sorted(
@@ -1858,19 +1805,8 @@ def ivfpq_topk(
         dt_rows, "query_id long, cell int, subspace int, code int, d6i long"
     )
 
-    # materialize the slim at-rest index once (cell int + m code ints
-    # per vector — what a deployment persists as the index table), so
-    # the ADC join below reads it instead of re-deriving assignments
-    # through lineage (scan-audit discipline)
-    long_codes = (
-        codes.select(id_col, "subspace", "code")
-        .join(resid.select(id_col, "cell"), id_col)
-        .localCheckpoint()
-    )
     ad = (
-        long_codes.join(
-            F.broadcast(dt), ["cell", "subspace", "code"]
-        )
+        codes.join(F.broadcast(dt), ["cell", "subspace", "code"])
         .filter(F.col(id_col) != F.col("query_id"))
         .groupBy("query_id", id_col)
         .agg(F.sum("d6i").alias("ai"))

@@ -913,11 +913,10 @@ def emb_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = [_math.floor(float(x) * 1e6 + 0.5) / 1e6 for x in first.v]
     prev_state = state
     for _ in range(iters):
-        lits = ", ".join(f"{x!r}D" for x in state)
         s6 = (
             F.floor(
                 F.expr(
-                    f"aggregate(zip_with(v, array({lits}), "
+                    f"aggregate(zip_with(v, {similarity._sql_arr(state)}, "
                     "(x, c) -> x * c), 0D, (a, b) -> a + b)"
                 )
                 * 1e6
@@ -2120,15 +2119,9 @@ def emb_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transform(embedding, x -> cast(x as double))"
         ).alias("vec"),
     )
-    entries = []
-    for cid, cent in enumerate(cents):
-        arr = ", ".join(f"{x!r}D" for x in cent)
-        dsq = (
-            f"aggregate(zip_with(vec, array({arr}), "
-            f"(x, c) -> (x - c) * (x - c)), 0D, (a, x) -> a + x)"
-        )
-        entries.append(f"struct({dsq} AS dsq, {cid} AS cid)")
-    sorted_arr = f"array_sort(array({', '.join(entries)}))"
+    # typed centroid literal: an empty corpus has no centroids, and an
+    # untyped empty array() cannot yield the struct fields below
+    sorted_arr = f"array_sort({similarity._centroid_dsq_sql('vec', cents)})"
     two = v.select(
         "vec_id",
         F.expr(f"{sorted_arr}[0]").alias("own"),

@@ -614,6 +614,7 @@ _SCAN_BUDGETS = {
     "doc_ngram_jaccard": 0,
     "doc_source_divergence": 0,
     "part_fuzzy_link": 0,
+    "emb_pq_codes": 1,  # one posexplode of the m assignments, no union
     "emb_pq_topk": 0,
     "emb_ivfpq_topk": 0,
     "ml_label_uniqueness": 0,

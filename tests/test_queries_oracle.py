@@ -53,7 +53,7 @@ def _rows_to_multiset(cols, rows):
 # changes. The three BPE oracles (77 s combined, one shared 8-merge
 # training chain) are exhaustive-lane-only: the chain stays
 # property-tested against the canonical python reference by default.
-from tests._lanes import EXHAUSTIVE, lane_sample  # noqa: E402
+from _lanes import EXHAUSTIVE, lane_sample  # noqa: E402
 
 _LANE_KEEP = {
     # headline bench suite
@@ -91,8 +91,9 @@ ORACLE_KEYS = [
 ]
 
 
-@pytest.mark.parametrize("name", ORACLE_KEYS)
-def test_query_matches_oracle(spark, sf_dir, name):
+def _assert_matches_oracle(spark, sf_dir, name):
+    """Run ``name`` in Spark and its DuckDB oracle over ``sf_dir``,
+    compare columns, row count and values; return the Spark frame."""
     sdf = QUERIES[name](spark, sf_dir)
     srows = sdf.collect()
     scols = sdf.columns
@@ -108,6 +109,48 @@ def test_query_matches_oracle(spark, sf_dir, name):
     oset = _rows_to_multiset(ocols, orows)
     mismatches = [(a, b) for a, b in zip(sset, oset) if a != b]
     assert not mismatches, f"{name}: first value mismatches: {mismatches[:5]}"
+    return sdf
+
+
+@pytest.mark.parametrize("name", ORACLE_KEYS)
+def test_query_matches_oracle(spark, sf_dir, name):
+    _assert_matches_oracle(spark, sf_dir, name)
+
+
+@pytest.fixture(scope="module")
+def empty_sf_dir(sf_dir, tmp_path_factory):
+    """Zero-row copies of every test table, original schemas kept."""
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("sf_empty")
+    for t in TESTDATA_TABLES:
+        pq.write_table(
+            pq.read_schema(f"{sf_dir}/{t}.parquet").empty_table(),
+            str(d / f"{t}.parquet"),
+        )
+    return str(d)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "emb_kmeans",
+        "emb_centroid_outliers",
+        "emb_davies_bouldin",
+        "emb_silhouette",
+        "emb_calinski_harabasz",
+        "emb_semantic_dedup",
+    ],
+)
+def test_kmeans_family_on_empty_embeddings(spark, sf_dir, empty_sf_dir, name):
+    """The k-means consumers on a zero-row corpus: the schema of the
+    sf0.001 result, and the oracle's answer (calinski's 1-row n=0 digest,
+    empty frames for the rest). k-means indexed a centroid per requested
+    cluster and raised IndexError here."""
+    got = _assert_matches_oracle(spark, empty_sf_dir, name)
+    assert got.schema.simpleString() == (
+        QUERIES[name](spark, sf_dir).schema.simpleString()
+    )
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLE)))

@@ -542,6 +542,31 @@ def test_pq_corpus_smaller_than_ksub_clamps(spark, emb_small):
     assert len(got) == 4
 
 
+@pytest.mark.parametrize("n_rows", [0, 3])
+def test_kmeans_fewer_rows_than_k_clamps(spark, emb_small, n_rows):
+    """With fewer vectors than k, k clamps to the vector count: each
+    vector seeds (and stays) its own centroid at distance 0. Indexing a
+    centroid per requested cluster raised IndexError."""
+    tiny = emb_small.filter(F.col("vec_id") < n_rows)
+    out, cents = similarity.kmeans(tiny, k=8, iters=2, return_centroids=True)
+    rows = out.collect()
+    assert len(cents) == n_rows
+    assert sorted(r.cluster for r in rows) == list(range(n_rows))
+    assert all(r.dist_sq == 0.0 for r in rows)
+
+
+def test_pq_codes_nan_embedding_raises_check_finite(spark):
+    """A NaN component reaching a codebook literal fails at build time
+    with the _check_finite message, not as an analysis error on a
+    rendered 'nan' token."""
+    emb = spark.createDataFrame(
+        [(0, [float("nan"), 1.0, 2.0, 3.0]), (1, [0.5, 1.5, 2.5, 3.5])],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="non-finite"):
+        similarity.pq_codes(emb, m=2, ksub=2, iters=1)
+
+
 @slow_lane  # 14 s: the numpy-twin parity test below keeps the seeder
 # value-pinned in the default lane
 def test_kmeans_parallel_init_spreads_seeds_and_matches_contract(spark):
