@@ -15,14 +15,13 @@ import os
 import re
 import sys
 import time
+from collections.abc import Callable
 
 # ambient host load, sampled BEFORE the heavy imports below (judge r9
-# #6: bench provenance): registry import runs the frozen-weight/seed
-# oracle generators whose BLAS fans out across every core — sampling
-# after it reads back our own startup as "host load". load1 well above
-# ~1 HERE means a busy box and a total not comparable to an idle-host
-# best (BASELINE.md documents 10.0-21.9 s swings for an identical plan
-# set).
+# #6: bench provenance): sampling after them reads back our own startup
+# as "host load". load1 well above ~1 HERE means a busy box and a total
+# not comparable to an idle-host best (BASELINE.md documents 10.0-21.9 s
+# swings for an identical plan set).
 try:
     _LOADAVG = [round(x, 2) for x in os.getloadavg()]
 except OSError:  # pragma: no cover — getloadavg unsupported
@@ -94,7 +93,9 @@ def _calibration_sec(spark) -> float:
     return round(best, 3)
 
 
-def _make_split_copy(spark, sf_dir: str, n_splits: int) -> str:
+def _make_split_copy(
+    spark, sf_dir: str, n_splits: int
+) -> tuple[str, Callable[[], None]]:
     """Opt-in scaling-measurement mode (judge r12 #7): copy every table
     of ``sf_dir`` into a temp dir re-written as ``n_splits`` parquet
     files (same rows — every query is order-independent, proven by the
@@ -104,7 +105,10 @@ def _make_split_copy(spark, sf_dir: str, n_splits: int) -> str:
     task and the 8-vs-32-core ratio measures fixed plan cost, not the
     engine. NOT part of the driver contract: default off, totals not
     comparable to unsplit runs (the JSON line carries split_inputs so
-    nobody compares them by accident)."""
+    nobody compares them by accident).
+
+    Returns the copy's directory and a callable that restores the
+    session's open cost, for when the split-input runs are done."""
     import atexit
     import glob
     import shutil
@@ -120,11 +124,17 @@ def _make_split_copy(spark, sf_dir: str, n_splits: int) -> str:
     # one scan task per written file: each file is charged openCost
     # bytes when packing splits, so a full-budget open cost stops the
     # small files from packing back into one split
-    spark.conf.set(
-        "spark.sql.files.openCostInBytes",
-        spark.conf.get("spark.sql.files.maxPartitionBytes"),
-    )
-    return dst
+    key = "spark.sql.files.openCostInBytes"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, spark.conf.get("spark.sql.files.maxPartitionBytes"))
+
+    def restore() -> None:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+    return dst, restore
 
 
 def main() -> None:
@@ -145,8 +155,9 @@ def main() -> None:
     # opt-in multi-split inputs for core-count scaling measurements
     # (see _make_split_copy); 0/unset = the driver contract, untouched
     split_inputs = int(os.environ.get("SPARK_GRAFT_SPLIT_INPUTS", "0"))
+    restore_open_cost = None
     if split_inputs > 0:
-        sf_dir = _make_split_copy(spark, sf_dir, split_inputs)
+        sf_dir, restore_open_cost = _make_split_copy(spark, sf_dir, split_inputs)
     timings: dict[str, float] = {}
 
     # JIT-warm the calibration shape once (uncounted), then take the
@@ -197,6 +208,9 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001
             timings[name] = None
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
+
+    if restore_open_cost is not None:
+        restore_open_cost()
 
     # a degraded run must never look faster than a complete one: with any
     # per-query error the headline value is null, not a smaller sum

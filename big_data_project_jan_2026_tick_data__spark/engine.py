@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Conf profile applied to every session. Each value is a plain string as
 # spark expects.
@@ -93,6 +93,18 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+def to_local(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` on the driver now and return it as a
+    self-contained ``LocalRelation`` with the same schema.
+
+    The rows cross the JVM boundary as Arrow batches in each direction,
+    so no Python ``Row`` is built, no Python worker starts and no RDD is
+    left persisted. Use it for small results that must outlive their
+    inputs (a temp dir about to be removed) or that several plan
+    branches would otherwise recompute."""
+    return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:

@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..engine import to_local
 from ..functions.scalars import interval_expr
 from pyspark.sql import types as T
 
@@ -422,8 +423,7 @@ def purged_cv_folds(
         .groupBy("day")
         .agg(F.count(F.lit(1)).alias("n_rows"))
     )
-    spark = df.sparkSession
-    days = spark.createDataFrame(days_agg.collect(), days_agg.schema)
+    days = to_local(days_agg)
     n = days.agg(F.count(F.lit(1)).alias("n_days"))
     ranked = (
         days.crossJoin(F.broadcast(n))
@@ -646,7 +646,7 @@ def cpcv_folds(
         .agg(F.count(F.lit(1)).alias("n_rows"))
     )
     spark = df.sparkSession
-    days = spark.createDataFrame(days_agg.collect(), days_agg.schema)
+    days = to_local(days_agg)
     n = days.agg(F.count(F.lit(1)).alias("n_days"))
     ranked = (
         days.crossJoin(F.broadcast(n))

@@ -616,10 +616,11 @@ def kmeanspp_init(
     Returns (sel_step 1..k, id_col, dmin_q6) — dmin_q6 is the picked
     vector's min-distance-to-prior-seeds (NULL for step 1)."""
     v = df.select(F.col(id_col), _to_double(F.col(vec_col)).alias("vec"))
-    first = v.orderBy(id_col).limit(1).collect()[0]
-    chosen: list[tuple[int, object, float | None]] = [(1, first[id_col], None)]
-    seeds = [[_q6(float(x)) for x in first.vec]]
-    for step in range(2, k + 1):
+    # an empty corpus has no first seed and returns no rows
+    head = v.orderBy(id_col).limit(1).collect()
+    chosen: list[tuple[int, object, float | None]] = [(1, r[id_col], None) for r in head]
+    seeds = [[_q6(float(x)) for x in r.vec] for r in head]
+    for step in range(2, k + 1 if head else 2):
         dmins = ", ".join(
             f"aggregate(zip_with(vec, {_sql_arr(s)}, "
             f"(x, c) -> (x - c) * (x - c)), 0D, (a, x) -> a + x)"

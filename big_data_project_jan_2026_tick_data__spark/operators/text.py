@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..engine import to_local
+
 # Word-splitting pattern: runs of letters/digits (BPE-ish fallback is
 # token_count_bpe below).
 WORD_RE = r"[A-Za-z0-9]+"
@@ -1033,7 +1035,7 @@ def source_js_divergence(
     # branches (both pair sides, the term scaffold, pa, pb) — pin it on
     # the driver so the corpus token stream is aggregated once, not per
     # branch (scan-audit finding; the centroid-collect precedent)
-    probs = df.sparkSession.createDataFrame(probs.collect(), probs.schema)
+    probs = to_local(probs)
     # pair × term scaffold keeps absent terms as p=0 on either side
     # (a plain term equi-join would silently drop them)
     pairs = (

@@ -487,7 +487,8 @@ def despike(
     # 1-element array) evaluates each exactly once, and
     # coalesce(rel <= max, TRUE) is the single-reference twin of
     # `rel IS NULL OR rel <= max` (NULL -> TRUE keeps the n=1/all-null
-    # frames; NaN from med=0 compares false either way -> dropped).
+    # frames, and the med=0 frames too: a division by zero yields NULL,
+    # not NaN, so their rows are kept).
     def _keep_for(a: Column) -> Column:
         n = F.size(a)
         lo = F.element_at(a, (F.floor((n - 1) / 2) + 1).cast("int"))

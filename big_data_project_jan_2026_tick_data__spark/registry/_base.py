@@ -14,7 +14,7 @@ Operator keys map to SURVEY.md §2 inventory lines (noted per query).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,9 +22,49 @@ from pyspark.sql import functions as F
 from ..operators import dedup, joins, mlfeat, multimodal, similarity, stats, text, ticks
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+OracleBuilder = Callable[[], "str | None"]
+
+
+class _Oracles(Mapping):
+    """Oracle SQL by query name, in registration order.
+
+    An entry registered as a builder runs the builder on first access
+    of its name, or of the whole mapping (iteration, ``len``); a builder
+    that returns None leaves its name out. Some builders replay a numpy
+    twin over every reachable testdata scale factor through DuckDB,
+    which costs seconds that a caller running only the queries never
+    needs."""
+
+    def __init__(self) -> None:
+        self._entries: dict[str, str | OracleBuilder] = {}
+
+    def _resolve(self, name: str) -> str | None:
+        sql = self._entries.get(name)
+        if callable(sql):
+            sql = sql()
+            if sql is None:
+                self._entries.pop(name, None)
+            else:
+                self._entries[name] = sql
+        return sql
+
+    def __getitem__(self, name: str) -> str:
+        sql = self._resolve(name)
+        if sql is None:
+            raise KeyError(name)
+        return sql
+
+    def __iter__(self) -> Iterator[str]:
+        for name in list(self._entries):
+            self._resolve(name)
+        return iter(list(self._entries))
+
+    def __len__(self) -> int:
+        return sum(1 for _ in self)
+
 
 QUERIES: dict[str, QueryFn] = {}
-ORACLE: dict[str, str] = {}
+ORACLE = _Oracles()
 
 # Names registered only under an env flag (e.g. the retired
 # probe_hugeint_render instrument under SPARK_GRAFT_PROBES=1).  The
@@ -34,7 +74,10 @@ ORACLE: dict[str, str] = {}
 ENV_GATED: set[str] = set()
 
 
-def _register(name: str, oracle: str | None = None):
+def _register(name: str, oracle: str | OracleBuilder | None = None):
+    """Register ``fn`` as query ``name`` with its oracle SQL, or with a
+    builder of it that ``ORACLE`` runs on first access."""
+
     def deco(fn: QueryFn) -> QueryFn:
         # a silent dict overwrite would leave the earlier query
         # registered-looking but untested (and the later one shadowed) —
@@ -43,7 +86,7 @@ def _register(name: str, oracle: str | None = None):
             raise ValueError(f"duplicate registry query name: {name!r}")
         QUERIES[name] = fn
         if oracle is not None:
-            ORACLE[name] = oracle
+            ORACLE._entries[name] = oracle
         return fn
 
     return deco
@@ -75,13 +118,20 @@ def _td(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     key = (spark, sf_dir, table)
     if key in _TD_CACHE:
         return _TD_CACHE[key]
-    if table == "events":
-        # schema-adaptive: the testdata generator has shipped ts as both
-        # int64-nanos and native timestamp[us]; io.read_events branches on
-        # the resolved schema instead of pinning one physical type.
-        from ..sources.io import read_events
+    if table == "events_raw":
+        # the events file before ts normalization: one schema-resolution
+        # job per (session, sf_dir), shared by the batch table and every
+        # file stream over a copy of it
+        from ..sources.io import _read_events_raw
 
-        df = read_events(spark, f"{sf_dir}/{table}.parquet")
+        df = _read_events_raw(spark, f"{sf_dir}/events.parquet")
+    elif table == "events":
+        # schema-adaptive: the testdata generator has shipped ts as both
+        # int64-nanos and native timestamp[us]; normalize_events_ts
+        # branches on the resolved schema instead of pinning one type.
+        from ..sources.io import normalize_events_ts
+
+        df = normalize_events_ts(_td(spark, sf_dir, "events_raw"))
     else:
         df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     _TD_CACHE[key] = df

@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import detmath
+from ..engine import to_local
 from ..operators import (  # noqa: F401
     dedup,
     joins,
@@ -444,7 +445,7 @@ def _portable_minhash_ctes(
        AND a.doc_id < b.doc_id)"""
 
 
-@_register("doc_minhash_pairs", _portable_minhash_oracle())
+@_register("doc_minhash_pairs", _portable_minhash_oracle)
 def doc_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fast-path MinHash+LSH near-dup pairs — the headline-bench dedup
     slot, VALUE-ORACLED since r8: per-token hashes + polynomial 3-gram
@@ -499,7 +500,7 @@ def _minhash_calibration_oracle(
     """
 
 
-@_register("doc_minhash_calibration", _minhash_calibration_oracle())
+@_register("doc_minhash_calibration", _minhash_calibration_oracle)
 def doc_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Accuracy audit of the headline MinHash estimator (r8): for every
     LSH candidate pair, the EXACT word-3-gram Jaccard (intersection via
@@ -679,7 +680,7 @@ def _hybrid_near_dup_oracle(
     """
 
 
-@_register("doc_hybrid_near_dup", _hybrid_near_dup_oracle())
+@_register("doc_hybrid_near_dup", _hybrid_near_dup_oracle)
 def doc_hybrid_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Staged cross-modal near-dup: the embedding LSH+cosine candidate
     pairs (cheap semantic prefilter, emb_near_dup_pairs' exact recipe)
@@ -1111,7 +1112,7 @@ def _scrub_pii_oracle() -> str:
     )
 
 
-@_register("doc_scrub_pii", _scrub_pii_oracle())
+@_register("doc_scrub_pii", _scrub_pii_oracle)
 def doc_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing (emails/IPs/phone runs -> typed placeholders) —
     chained codegen regexp_replace, no UDF."""
@@ -1361,7 +1362,7 @@ def doc_md5_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("doc_md5_minhash_pairs", _md5_minhash_oracle())
+@_register("doc_md5_minhash_pairs", _md5_minhash_oracle)
 def doc_md5_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL MinHash+LSH pipeline under an independent value-hash
     oracle: md5-derived shingle hashes (engine-portable, unlike the
@@ -1578,8 +1579,7 @@ def doc_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         manifest = export_training_shards(
             spark, docs, d, min_quality=0.4, budget=256, num_shards=4
         )
-        rows = manifest.collect()
-        return spark.createDataFrame(rows, manifest.schema)
+        return to_local(manifest)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -1712,7 +1712,7 @@ def _md5_incr_minhash_oracle(
     """
 
 
-@_register("doc_incremental_minhash", _md5_incr_minhash_oracle())
+@_register("doc_incremental_minhash", _md5_incr_minhash_oracle)
 def doc_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental NEAR-dup ingestion (the MinHash twin of
     incremental_dedup's exact path): the committed corpus is represented
@@ -1777,7 +1777,7 @@ def _md5_incr_simhash_oracle(
     """
 
 
-@_register("doc_incremental_simhash", _md5_incr_simhash_oracle())
+@_register("doc_incremental_simhash", _md5_incr_simhash_oracle)
 def doc_incremental_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental SimHash ingestion: the committed corpus is its stored
     8-byte fingerprints (dedup.md5_simhash — never recomputed), and the
@@ -1929,7 +1929,7 @@ def _dsir_oracle(target_where: str = "lang = 'en'") -> str:
     """
 
 
-@_register("doc_dsir_weights", _dsir_oracle())
+@_register("doc_dsir_weights", _dsir_oracle)
 def doc_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style importance weighting (Xie et al. 2023, Data Selection
     via Importance Resampling, adapted to the engine's bigram LMs):
@@ -2386,7 +2386,7 @@ def _quality_classifier_oracle(
     return "".join(parts)
 
 
-@_register("doc_quality_classifier", _quality_classifier_oracle())
+@_register("doc_quality_classifier", _quality_classifier_oracle)
 def doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fastText-style corpus quality classifier, trained AND applied
     in-engine: weak label = (lang == 'en'), three codegen features
@@ -3065,8 +3065,7 @@ def doc_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.length("text")).alias("sum_chars"),
             F.count_distinct(F.md5("text")).alias("distinct_md5"),
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return to_local(out)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -3224,7 +3223,7 @@ def _bpe_fertility_oracle(num_merges: int = 8) -> str:
     )
 
 
-@_register("doc_bpe_fertility", _bpe_fertility_oracle())
+@_register("doc_bpe_fertility", _bpe_fertility_oracle)
 def doc_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fertility by source (BPE tokens per word under the
     learned 8-merge vocabulary) — THE tokenizer-fit metric: fertility
@@ -3255,7 +3254,7 @@ def doc_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("doc_bpe_merges", _bpe_oracle())
+@_register("doc_bpe_merges", _bpe_oracle)
 def doc_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE tokenizer training (text.bpe_merges): the first
     8 merge rules learned from the corpus — classic BPE shape where ONE
@@ -3276,7 +3275,7 @@ def doc_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.bpe_merges(docs, num_merges=8)
 
 
-@_register("doc_bpe_token_counts", _bpe_token_counts_oracle())
+@_register("doc_bpe_token_counts", _bpe_token_counts_oracle)
 def doc_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token counts under the LEARNED 8-merge BPE
     vocabulary (text.bpe_token_counts) — the budget estimate a pipeline
@@ -3335,7 +3334,7 @@ def _ngram_novelty_oracle(n: int = 3, ref_cut: int = 100) -> str:
     """
 
 
-@_register("doc_ngram_novelty", _ngram_novelty_oracle())
+@_register("doc_ngram_novelty", _ngram_novelty_oracle)
 def doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document n-gram NOVELTY against a reference corpus — the
     pretraining-data metric behind memorization/contamination audits
@@ -3432,7 +3431,7 @@ def _ngram_coverage_oracle(n: int = 3) -> str:
     """
 
 
-@_register("doc_ngram_coverage", _ngram_coverage_oracle())
+@_register("doc_ngram_coverage", _ngram_coverage_oracle)
 def doc_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-growth (Heaps-law) curve over the corpus in doc_id
     order: per document, how many of its distinct word-3-grams are NEW
@@ -3599,7 +3598,7 @@ def _rake_oracle() -> str:
     """
 
 
-@_register("doc_rake_keywords", _rake_oracle())
+@_register("doc_rake_keywords", _rake_oracle)
 def doc_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyword extraction (Rose et al. 2010) — the stopword-
     delimited phrase scorer that needs no model: candidate phrases are
@@ -3737,7 +3736,7 @@ def _gopher_oracle() -> str:
     """
 
 
-@_register("doc_gopher_rules", _gopher_oracle())
+@_register("doc_gopher_rules", _gopher_oracle)
 def doc_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher quality-rule table (Rae et al. 2021, App. A — the named
     rule battery most open-data pipelines start from), restricted to

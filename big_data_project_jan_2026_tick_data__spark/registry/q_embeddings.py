@@ -244,7 +244,7 @@ def _lsh_topk_oracle(
     """
 
 
-@_register("emb_lsh_topk", _lsh_topk_oracle())
+@_register("emb_lsh_topk", _lsh_topk_oracle)
 def emb_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-10 via random-hyperplane LSH buckets (recall < 1 by
     design; the oracle recomputes identical buckets in SQL, so the
@@ -319,7 +319,7 @@ def _ndcg_oracle(dim: int = 64, num_planes: int = 4, seed: int = 42) -> str:
     """
 
 
-@_register("emb_lsh_ndcg", _ndcg_oracle())
+@_register("emb_lsh_ndcg", _ndcg_oracle)
 def emb_lsh_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graded ranking quality of the LSH index: NDCG@10 of the bucketed
     ranking against the exact cosine top-10 (rel = 11 − exact rank, 0
@@ -512,7 +512,7 @@ def _kmeanspp_oracle(k: int = 8, dim: int = 64) -> str:
     """
 
 
-@_register("emb_kmeanspp_init", _kmeanspp_oracle())
+@_register("emb_kmeanspp_init", _kmeanspp_oracle)
 def emb_kmeanspp_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic k-means++-style seeding (greedy farthest-point /
     derandomized D² — similarity.kmeanspp_init): 8 seeds spread across
@@ -524,7 +524,7 @@ def emb_kmeanspp_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.kmeanspp_init(emb, k=8)
 
 
-@_register("emb_ivf_topk", _ivf_topk_oracle())
+@_register("emb_ivf_topk", _ivf_topk_oracle)
 def emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style cluster-pruned ANN (recall < 1 by design at
     nprobe < nlist), VALUE-ORACLED since r8 via the 'lowest_id' coarse
@@ -676,7 +676,7 @@ def _ivf_kmeanspar_oracle(nlist: int = 16, nprobe: int = 4, k: int = 10) -> str 
     return "\n    UNION ALL\n    ".join(branches)
 
 
-@_register("emb_ivf_kmeanspar", _ivf_kmeanspar_oracle())
+@_register("emb_ivf_kmeanspar", _ivf_kmeanspar_oracle)
 def emb_ivf_kmeanspar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with the k-means‖ coarse quantizer end-to-end (judge r9
     #4): similarity.kmeans_parallel_init (Bahmani et al. 2012,
@@ -771,7 +771,7 @@ def _emb_dup_clusters_oracle(dim: int = 64, num_planes: int = 4, seed: int = 42)
     """
 
 
-@_register("emb_dup_clusters", _emb_dup_clusters_oracle())
+@_register("emb_dup_clusters", _emb_dup_clusters_oracle)
 def emb_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup CLUSTERS: the LSH-bucketed cosine pairs fed
     through connected components (min-label propagation) — the step a
@@ -786,7 +786,7 @@ def emb_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dup_clusters(emb.select("vec_id"), pairs, id_col="vec_id")
 
 
-@_register("emb_near_dup_pairs", _near_dup_oracle())
+@_register("emb_near_dup_pairs", _near_dup_oracle)
 def emb_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs: random-hyperplane LSH bucket join +
     exact cosine filter — oracle re-derives the identical buckets in SQL
@@ -884,7 +884,7 @@ def _top_component_oracle(dim: int = 64, iters: int = 3) -> str:
     return "".join(parts)
 
 
-@_register("emb_top_component", _top_component_oracle())
+@_register("emb_top_component", _top_component_oracle)
 def emb_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top principal direction of the embedding corpus by distributed
     power iteration on (1/N)·XᵀX — the first step of 'all-but-the-top'
@@ -909,8 +909,11 @@ def emb_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.select(
         "vec_id", similarity._to_double(F.col("embedding")).alias("v")
     )
-    first = base.orderBy("vec_id").limit(1).collect()[0]
-    state = [_math.floor(float(x) * 1e6 + 0.5) / 1e6 for x in first.v]
+    schema = "dim long, loading_q6 double, eigenvalue_q4 double"
+    head = base.orderBy("vec_id").limit(1).collect()
+    if not head:  # empty corpus: no direction, as in the oracle
+        return spark.createDataFrame([], schema)
+    state = [_math.floor(float(x) * 1e6 + 0.5) / 1e6 for x in head[0].v]
     prev_state = state
     for _ in range(iters):
         s6 = (
@@ -959,9 +962,7 @@ def emb_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for d, u in enumerate(u_last)
     ]
-    return spark.createDataFrame(
-        out_rows, "dim long, loading_q6 double, eigenvalue_q4 double"
-    )
+    return spark.createDataFrame(out_rows, schema)
 
 
 def _kmeans_cte(k: int = 8, dim: int = 64) -> str:
@@ -1061,7 +1062,7 @@ def _semantic_dedup_oracle(
     )
 
 
-@_register("emb_kmeans", _kmeans_oracle())
+@_register("emb_kmeans", _kmeans_oracle)
 def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Lloyd's k-means (k=8, 2 iterations, deterministic
     lowest-id init) over the embeddings table: map-side argmin assignment
@@ -1104,7 +1105,7 @@ def _incr_near_dup_oracle(dim: int = 64, num_planes: int = 4, seed: int = 42) ->
     """
 
 
-@_register("emb_incremental_near_dup", _incr_near_dup_oracle())
+@_register("emb_incremental_near_dup", _incr_near_dup_oracle)
 def emb_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental embedding near-dup ingestion: an arriving batch
     (vec_id % 5 = 4) LSH-bucketed against the existing corpus — whose
@@ -1190,7 +1191,7 @@ def emb_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.brute_force_topk(deq, queries, k=10)
 
 
-@_register("emb_semantic_dedup", _semantic_dedup_oracle())
+@_register("emb_semantic_dedup", _semantic_dedup_oracle)
 def emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic near-dup pairs: deterministic k-means
     topic clustering (k=8, 2 Lloyd iterations) then within-cluster
@@ -1252,7 +1253,7 @@ def _rrf_fusion_oracle(
     """
 
 
-@_register("emb_rrf_fusion", _rrf_fusion_oracle())
+@_register("emb_rrf_fusion", _rrf_fusion_oracle)
 def emb_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion of two retrieval systems (hyperplane-LSH
     ANN + exhaustive cosine) per query — the calibration-free ensemble
@@ -1312,7 +1313,7 @@ def _ann_recall_oracle(dim: int = 64, num_planes: int = 4, seed: int = 42, k: in
     """
 
 
-@_register("emb_ann_recall", _ann_recall_oracle())
+@_register("emb_ann_recall", _ann_recall_oracle)
 def emb_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the hyperplane-LSH ANN path against the exact cosine
     ranking, per query — the in-engine ANN quality gauge
@@ -1347,7 +1348,7 @@ def _centroid_outliers_oracle(k: int = 8, dim: int = 64) -> str:
     )
 
 
-@_register("emb_centroid_outliers", _centroid_outliers_oracle())
+@_register("emb_centroid_outliers", _centroid_outliers_oracle)
 def emb_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space outlier detection: vectors farther from their
     k-means centroid than the cluster's exact 95th-percentile distance
@@ -1442,7 +1443,7 @@ def _mmr_oracle(
     return "".join(parts)
 
 
-@_register("emb_mmr_rerank", _mmr_oracle())
+@_register("emb_mmr_rerank", _mmr_oracle)
 def emb_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance diversified re-ranking: exact top-20
     per query, then the greedy λ·relevance − (1−λ)·redundancy selection
@@ -1777,7 +1778,7 @@ def _ivfpq_topk_oracle(
     """
 
 
-@_register("emb_ivfpq_topk", _ivfpq_topk_oracle())
+@_register("emb_ivfpq_topk", _ivfpq_topk_oracle)
 def emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ ANN search (similarity.ivfpq_topk — the FAISS
     `IVF8,PQ2x8`-shape index): coarse Voronoi cells over the 8
@@ -1795,7 +1796,7 @@ def emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("emb_pq_codes", _pq_codes_oracle())
+@_register("emb_pq_codes", _pq_codes_oracle)
 def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization codebook training + encoding
     (similarity.pq_codes): m=2 subspaces × 8 centroids, the
@@ -1810,7 +1811,7 @@ def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.pq_codes(emb, m=2, ksub=8, iters=2)
 
 
-@_register("emb_pq_topk", _pq_topk_oracle())
+@_register("emb_pq_topk", _pq_topk_oracle)
 def emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric-distance (ADC) PQ search (similarity.pq_topk): top-5
     neighbours for the 5 lowest-id query vectors using only the m
@@ -1869,7 +1870,7 @@ def _twonn_oracle(n_queries: int = 50) -> str:
     """
 
 
-@_register("emb_intrinsic_dim", _twonn_oracle())
+@_register("emb_intrinsic_dim", _twonn_oracle)
 def emb_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TwoNN intrinsic-dimension estimate (Facco et al. 2017) over the
     embedding corpus — the manifold-dimension diagnostic a curation
@@ -1968,7 +1969,7 @@ def _davies_bouldin_oracle(k: int = 8, dim: int = 64) -> str:
     )
 
 
-@_register("emb_davies_bouldin", _davies_bouldin_oracle())
+@_register("emb_davies_bouldin", _davies_bouldin_oracle)
 def emb_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Davies-Bouldin cluster-quality index over the k-means assignment
     (Davies & Bouldin 1979) — per cluster: the mean member distance to
@@ -2092,7 +2093,7 @@ def _silhouette_oracle(k: int = 8, dim: int = 64) -> str:
     )
 
 
-@_register("emb_silhouette", _silhouette_oracle())
+@_register("emb_silhouette", _silhouette_oracle)
 def emb_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simplified (centroid-based) silhouette per cluster — the
     member-level companion to emb_davies_bouldin: for each vector,
@@ -2202,7 +2203,7 @@ def _calinski_oracle(k: int = 8, dim: int = 64) -> str:
     )
 
 
-@_register("emb_calinski_harabasz", _calinski_oracle())
+@_register("emb_calinski_harabasz", _calinski_oracle)
 def emb_calinski_harabasz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calinski-Harabasz index — the third clustering-quality lens next
     to emb_davies_bouldin (pairwise separation) and emb_silhouette
@@ -2376,7 +2377,7 @@ def _whitening_oracle(top: int = 3, dim: int = 64) -> str | None:
     return "\n    UNION ALL\n    ".join(branches)
 
 
-@_register("emb_whitening_digest", _whitening_oracle())
+@_register("emb_whitening_digest", _whitening_oracle)
 def emb_whitening_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCA whitening of the embedding corpus, end-to-end: the isotropy
     post-processing retrieval stacks run before indexing ("all-but-the-
@@ -2518,7 +2519,7 @@ def _procrustes_oracle(dim: int = 64, c: float = 0.8, s: float = 0.6) -> str | N
     return "\n    UNION ALL\n    ".join(branches)
 
 
-@_register("emb_procrustes_drift", _procrustes_oracle())
+@_register("emb_procrustes_drift", _procrustes_oracle)
 def emb_procrustes_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orthogonal-Procrustes alignment digest between the embedding
     corpus and a deterministically drifted twin (v2_j = 0.8·v1_j +

@@ -7,6 +7,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..engine import to_local
 from ..operators import (  # noqa: F401
     dedup,
     joins,
@@ -397,7 +398,7 @@ def _frac_diff_oracle(d: float = 0.4, window: int = 20) -> str:
     """
 
 
-@_register("ticks_frac_diff", _frac_diff_oracle())
+@_register("ticks_frac_diff", _frac_diff_oracle)
 def ticks_frac_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width fractional differentiation (stats.frac_diff, d=0.4,
     window=20) of the integer-grid minute closes — the López de Prado
@@ -1184,9 +1185,11 @@ def ticks_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _td(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts")).over(w).cast("long")
+    # in microseconds: whole seconds would truncate a 1800.4 s gap to
+    # 1800 s and miss the session break the oracle's interval test sees
+    gap = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
     is_new = F.when(
-        F.lag(F.col("ts")).over(w).isNull() | (gap > 30 * 60), 1
+        F.lag(F.col("ts")).over(w).isNull() | (gap > 30 * 60 * 1_000_000), 1
     ).otherwise(0)
     run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
         Window.unboundedPreceding, 0
@@ -1610,8 +1613,7 @@ def stats_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             d,
             schema="date date, ticks_window1 bigint, ticks_window2 bigint",
         )
-        rows = back.collect()
-        return spark.createDataFrame(rows, back.schema)
+        return to_local(back)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -1957,7 +1959,7 @@ def _pagerank_oracle(damping: float = 0.85, iters: int = 10) -> str:
     return "".join(parts)
 
 
-@_register("events_pagerank", _pagerank_oracle())
+@_register("events_pagerank", _pagerank_oracle)
 def events_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank centrality over the event-type transition graph
     (which states matter in user paths): per superstep ONE
@@ -2380,7 +2382,7 @@ def _acf_oracle(lags: int = 3) -> str:
 
 @_register(
     "ticks_return_acf",
-    _acf_oracle(),
+    _acf_oracle,
 )
 def ticks_return_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Return autocorrelation at lags 1-3 per symbol (microstructure /
@@ -2564,7 +2566,7 @@ def _hurst_oracle() -> str:
     """
 
 
-@_register("ticks_hurst_exponent", _hurst_oracle())
+@_register("ticks_hurst_exponent", _hurst_oracle)
 def ticks_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hurst exponent per symbol by the variance-ratio method: the
     k-lag log-return variance of a fractal process scales as k^2H, so
@@ -2633,7 +2635,7 @@ def ticks_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # symbols × lags rows (20): materialize driver-side — breaks codegen
     # fusion with the detmath tail AND makes the pivot metadata-scale
-    agg = spark.createDataFrame(agg_df.collect(), agg_df.schema)
+    agg = to_local(agg_df)
     # the tail stays LONG too: ln(var) over (symbol, k, v) rows keeps
     # every codegen stage at exactly ONE det_ln expansion — the wide
     # 5-column formulation put 5 expansions in one collapsed Project
@@ -2646,11 +2648,11 @@ def ticks_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
             - (F.col("s1") / F.col("n")) * (F.col("s1") / F.col("n")),
         ),
     )
-    var_long = spark.createDataFrame(var_long.collect(), var_long.schema)
+    var_long = to_local(var_long)
     y_long = var_long.withColumn(
         "y", F.when(F.col("v") > 0, detmath.det_ln_pos("v"))
     )
-    y_long = spark.createDataFrame(y_long.collect(), y_long.schema)
+    y_long = to_local(y_long)
     v = y_long.groupBy("symbol").agg(
         F.max(F.when(F.col("k") == 1, F.col("n"))).alias("n1"),
         *[
@@ -2945,7 +2947,7 @@ def _tsrv_oracle() -> str:
     """
 
 
-@_register("ticks_tsrv", _tsrv_oracle())
+@_register("ticks_tsrv", _tsrv_oracle)
 def ticks_tsrv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-scale realized variance (Zhang, Mykland & Aït-Sahalia 2005)
     per symbol: the microstructure-noise-robust RV estimator — average
@@ -2996,7 +2998,7 @@ def ticks_tsrv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 8-row pivot: materialize driver-side (breaks codegen fusion with
     # the arithmetic tail AND keeps the combine metadata-scale)
-    agg = spark.createDataFrame(agg_df.collect(), agg_df.schema)
+    agg = to_local(agg_df)
     v = agg.groupBy("symbol").agg(
         F.max(F.when(F.col("k") == 1, F.col("n"))).alias("n1"),
         F.max(F.when(F.col("k") == 1, F.col("s2"))).alias("rv_all"),
@@ -3085,7 +3087,7 @@ def _yang_zhang_oracle() -> str:
     """
 
 
-@_register("ticks_yang_zhang", _yang_zhang_oracle())
+@_register("ticks_yang_zhang", _yang_zhang_oracle)
 def ticks_yang_zhang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Yang-Zhang (2000) volatility per symbol — the drift-independent,
     jump-robust estimator that combines overnight variance (close→open),
@@ -3655,7 +3657,7 @@ def _ljung_box_oracle(lags: int = 5) -> str:
     """
 
 
-@_register("events_ljung_box", _ljung_box_oracle())
+@_register("events_ljung_box", _ljung_box_oracle)
 def events_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ljung-Box portmanteau white-noise test over the per-symbol return
     series (lags 1-5): Q = n(n+2)·Σ ρ̂ₖ²/(n−k) against the χ²₅ 95%
@@ -3775,7 +3777,7 @@ def _ou_half_life_oracle() -> str:
     """
 
 
-@_register("ticks_ou_half_life", _ou_half_life_oracle())
+@_register("ticks_ou_half_life", _ou_half_life_oracle)
 def ticks_ou_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ornstein-Uhlenbeck mean-reversion half-life per symbol — the
     stat-arb sizing number (how many ticks until a deviation decays by
@@ -3873,7 +3875,7 @@ def _realized_kernel_oracle() -> str:
     """
 
 
-@_register("ticks_realized_kernel", _realized_kernel_oracle())
+@_register("ticks_realized_kernel", _realized_kernel_oracle)
 def ticks_realized_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flat-top realized kernel (Barndorff-Nielsen, Hansen, Lunde &
     Shephard 2008) with a Parzen kernel at H=4 — the noise-robust
@@ -3966,7 +3968,7 @@ def _benford_oracle() -> str:
     """
 
 
-@_register("events_benford_test", _benford_oracle())
+@_register("events_benford_test", _benford_oracle)
 def events_benford_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law conformance test over the event values — the
     classic data-quality / fraud screen for a numeric feed: first
@@ -4049,7 +4051,7 @@ def _bipower_oracle() -> str:
     """
 
 
-@_register("ticks_bipower_variation", _bipower_oracle())
+@_register("ticks_bipower_variation", _bipower_oracle)
 def ticks_bipower_variation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bipower variation (Barndorff-Nielsen & Shephard 2004) — the
     jump-robust integrated-variance estimator BV = (π/2)·Σ|rₜ||rₜ₋₁|,
@@ -4355,7 +4357,7 @@ def _variance_ratio_oracle(qs=(2, 4)) -> str:
     """
 
 
-@_register("ticks_variance_ratio", _variance_ratio_oracle())
+@_register("ticks_variance_ratio", _variance_ratio_oracle)
 def ticks_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lo-MacKinlay variance-ratio test (1988) at horizons q=2,4 — the
     random-walk diagnostic (VR≈1 random walk, VR>1 trending/momentum,
@@ -4468,8 +4470,7 @@ def stats_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cents_sum"),
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return to_local(out)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -4527,7 +4528,7 @@ def _garman_klass_oracle() -> str:
     """
 
 
-@_register("ticks_garman_klass", _garman_klass_oracle())
+@_register("ticks_garman_klass", _garman_klass_oracle)
 def ticks_garman_klass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Garman-Klass range-based volatility per (symbol, day) — the
     OHLC estimator between Parkinson (range only) and Yang-Zhang
@@ -5005,7 +5006,7 @@ def _poisson_bootstrap_oracle() -> str:
     """
 
 
-@_register("events_poisson_bootstrap_ci", _poisson_bootstrap_oracle())
+@_register("events_poisson_bootstrap_ci", _poisson_bootstrap_oracle)
 def events_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed bootstrap confidence interval for the mean purchase
     value — via the POISSON bootstrap (Chamandy et al., "Estimating
@@ -5168,7 +5169,7 @@ def _kaplan_meier_oracle() -> str:
     """
 
 
-@_register("events_kaplan_meier", _kaplan_meier_oracle())
+@_register("events_kaplan_meier", _kaplan_meier_oracle)
 def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier survival curve for click→purchase conversion — the
     right-censoring-aware time-to-convert estimate (events_time_to_convert
@@ -5810,7 +5811,7 @@ def _hy_lead_lag_oracle() -> str:
     """
 
 
-@_register("ticks_hy_lead_lag", _hy_lead_lag_oracle())
+@_register("ticks_hy_lead_lag", _hy_lead_lag_oracle)
 def ticks_hy_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hayashi-Yoshida LEAD-LAG curve (Hoffmann, Rosenbaum & Yoshida
     2013): the HY cross-covariance recomputed with one stream's return
@@ -6065,8 +6066,7 @@ def stats_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cents_sum"),
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return to_local(out)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -6155,7 +6155,7 @@ def _holm_oracle() -> str:
     """
 
 
-@_register("events_holm_multiple_tests", _holm_oracle())
+@_register("events_holm_multiple_tests", _holm_oracle)
 def events_holm_multiple_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holm step-down multiple-testing correction over the A/B metric
     family — one two-proportion z per event type on the portable md5
@@ -6685,7 +6685,7 @@ def _g_test_oracle() -> str:
     """
 
 
-@_register("events_g_test", _g_test_oracle())
+@_register("events_g_test", _g_test_oracle)
 def events_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G-test (log-likelihood-ratio test) of independence between event
     type and experiment arm — the χ²'s better-behaved sibling for
@@ -7441,7 +7441,7 @@ def _msprt_oracle() -> str:
     """
 
 
-@_register("events_msprt_sequential", _msprt_oracle())
+@_register("events_msprt_sequential", _msprt_oracle)
 def events_msprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Always-valid sequential A/B testing — the mixture SPRT of Johari,
     Koomen, Pekelis & Walsh (KDD 2017, "Peeking at A/B Tests"), the
@@ -7762,7 +7762,7 @@ def _bh_fdr_oracle() -> str:
     """
 
 
-@_register("events_bh_fdr", _bh_fdr_oracle())
+@_register("events_bh_fdr", _bh_fdr_oracle)
 def events_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benjamini-Hochberg step-UP FDR control over the same A/B metric
     family events_holm_multiple_tests step-downs — the modern default
@@ -8330,7 +8330,7 @@ def _nelson_aalen_oracle() -> str:
     """
 
 
-@_register("events_nelson_aalen", _nelson_aalen_oracle())
+@_register("events_nelson_aalen", _nelson_aalen_oracle)
 def events_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nelson-Aalen cumulative hazard for click→purchase conversion —
     the hazard-space companion to events_kaplan_meier (same entry/
@@ -8933,7 +8933,7 @@ def _odds_ratio_oracle() -> str:
     """
 
 
-@_register("events_odds_ratio", _odds_ratio_oracle())
+@_register("events_odds_ratio", _odds_ratio_oracle)
 def events_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Odds ratio and relative risk of FIRST-TOUCH purchase conversion
     between the md5 arms, with the Katz log-normal 95% CI — the

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..engine import to_local
 from ..operators import (  # noqa: F401
     dedup,
     joins,
@@ -53,7 +54,7 @@ def _tracking_oracle() -> str:
     )
 
 
-@_register("tracking_best_run", _tracking_oracle())
+@_register("tracking_best_run", _tracking_oracle)
 def tracking_best_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Experiment tracking surface (reference mlflow_utils.py phase
     runs/params/metrics/artifacts → parquet tables): simulate a
@@ -94,8 +95,7 @@ def tracking_best_run(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce("is_best", F.lit(False)).alias("is_best"),
             )
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return to_local(out)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -142,8 +142,7 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at("summary", "added-records").cast("bigint").alias("added_records"),
             F.element_at("summary", "total-records").cast("bigint").alias("total_records"),
         )
-        rows = out.collect()  # materialize before tmpdir cleanup
-    return spark.createDataFrame(rows, out.schema)
+        return to_local(out)  # materialize before tmpdir cleanup
 
 
 @_register(
@@ -175,8 +174,7 @@ def snapshot_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             key_cols=["event_id"],
         )
         out = t.read().select("event_id", "value")
-        rows = out.collect()  # materialize before tmpdir cleanup
-    return spark.createDataFrame(rows, out.schema)
+        return to_local(out)  # materialize before tmpdir cleanup
 
 
 @_register(
@@ -421,8 +419,7 @@ def snapshot_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(bool(abandoned_invisible)).alias("abandoned_invisible"),
             )
         )
-        rows = out.collect()  # materialize before tmpdir cleanup
-    return spark.createDataFrame(rows, out.schema)
+        return to_local(out)  # materialize before tmpdir cleanup
 
 
 @_register(
@@ -482,8 +479,7 @@ def snapshot_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("manifest_is_single_dir", F.lit(bool(single)))
             .withColumn("history_still_readable", F.lit(bool(readable)))
         )
-        rows = out.collect()  # materialize before tmpdir cleanup
-    return spark.createDataFrame(rows, out.schema)
+        return to_local(out)  # materialize before tmpdir cleanup
 
 
 @_register(
@@ -550,8 +546,7 @@ def incremental_ohlc_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = finalize_ohlc_view(tbl.read()).withColumn(
             "n_snapshots", F.lit(int(n_snaps))
         )
-        rows = out.collect()  # materialize before tmpdir cleanup
-    return spark.createDataFrame(rows, out.schema)
+        return to_local(out)  # materialize before tmpdir cleanup
 
 
 @_register(
@@ -594,8 +589,7 @@ def snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pre-evolution snapshot still serves the narrow schema
         assert t.read(version=v1).columns == ["event_id", "value"]
         out = t.read().select("event_id", "value", "value_i4")
-        rows = out.collect()  # materialize before tmpdir cleanup
-    return spark.createDataFrame(rows, out.schema)
+        return to_local(out)  # materialize before tmpdir cleanup
 
 
 @_register(
@@ -656,8 +650,7 @@ def snapshot_delete_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("snapshots_remaining", F.lit(int(n_snaps)))
             .withColumn("history_purged", F.lit(bool(purged)))
         )
-        rows = out.collect()  # materialize before tmpdir cleanup
-    return spark.createDataFrame(rows, out.schema)
+        return to_local(out)  # materialize before tmpdir cleanup
 
 
 @_register(
@@ -695,8 +688,7 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_append(t, docs.filter((F.col("doc_id") > t1) & (F.col("doc_id") <= t2)))
         dedup_append(t, docs.filter(F.col("doc_id") > t2))
         out = t.read().select("doc_id", "lang", "source")
-        rows = out.collect()  # materialize before tmpdir cleanup
-    return spark.createDataFrame(rows, out.schema)
+        return to_local(out)  # materialize before tmpdir cleanup
 
 
 @_register(
@@ -928,8 +920,7 @@ def snapshot_branching(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(digest(t.read(ref="exp"), "branch"))
             .unionByName(digest(t.read(ref="v1"), "tag"))
         )
-        rows = out.collect()  # materialize before tmpdir cleanup
-    return spark.createDataFrame(rows, out.schema)
+        return to_local(out)  # materialize before tmpdir cleanup
 
 
 @_register(
@@ -965,5 +956,4 @@ def snapshot_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.sum("event_id").cast("long").alias("key_sum"),
         )
-        rows = out.collect()  # materialize before tmpdir cleanup
-    return spark.createDataFrame(rows, out.schema)
+        return to_local(out)  # materialize before tmpdir cleanup

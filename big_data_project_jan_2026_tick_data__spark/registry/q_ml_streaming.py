@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..engine import to_local
 from ..operators import (  # noqa: F401
     dedup,
     joins,
@@ -35,14 +36,13 @@ def _replayed_events(spark: SparkSession, sf_dir: str, prefix: str = "stream_rep
 
     from ..sources.io import events_stream_source
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     d = tempfile.mkdtemp(prefix=prefix)
     try:
         os.symlink(
             os.path.abspath(f"{sf_dir}/events.parquet"),
             os.path.join(d, "events.parquet"),
         )
-        yield events_stream_source(spark, f"{sf_dir}/events.parquet", d)
+        yield events_stream_source(spark, _td(spark, sf_dir, "events_raw").schema, d)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -56,7 +56,10 @@ def _materialized(spark: SparkSession, streaming_df: DataFrame, name: str) -> Da
     round trip, which converted every result row through py4j TWICE
     (driver-out, driver-back-in) and dominated the big-output streaming
     queries (streaming_interval_join's pair table most of all). Same
-    rows, same schema, self-contained after the sink's temp view dies."""
+    rows, same schema, self-contained after the sink's temp view dies.
+    The checkpoint stays persisted for the session; ``engine.to_local``
+    is the handoff that retains nothing (Arrow both ways, a
+    ``LocalRelation``) and serves the small snapshot-read results."""
     from ..streaming.session_pipeline import run_stream_to_memory
 
     return run_stream_to_memory(streaming_df, name).localCheckpoint()
@@ -260,7 +263,7 @@ def _pca_anomaly_oracle(dim: int = 3, iters: int = 16) -> str:
     """
 
 
-@_register("ml_anomaly_scores", _pca_anomaly_oracle())
+@_register("ml_anomaly_scores", _pca_anomaly_oracle)
 def ml_anomaly_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's full ML lifecycle (SURVEY §3.3) as one plan:
     featurize (window tensors via applyInPandas) → train (per-symbol
@@ -487,7 +490,7 @@ def _ae_frozen_oracle() -> str | None:
     return "\n    UNION ALL\n    ".join(branches)
 
 
-@_register("ml_anomaly_scores_ae", _ae_frozen_oracle())
+@_register("ml_anomaly_scores_ae", _ae_frozen_oracle)
 def ml_anomaly_scores_ae(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's ACTUAL training stack, distributed AND
     value-oracled: featurize → train a gradient MLP autoencoder per
@@ -608,7 +611,7 @@ def _ae_fixedw_oracle() -> str:
     )
 
 
-@_register("ml_anomaly_scores_ae_fixedw", _ae_fixedw_oracle())
+@_register("ml_anomaly_scores_ae_fixedw", _ae_fixedw_oracle)
 def ml_anomaly_scores_ae_fixedw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-verified value proof for the gradient-autoencoder SCORING
     lifecycle (the trainer itself is bit-deterministic and finite-
@@ -1593,8 +1596,7 @@ def streaming_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("event_id").alias("last_event_id"),
                 F.col("value").alias("last_value"),
             )
-            rows = out.collect()  # materialize before tmpdir cleanup
-    return spark.createDataFrame(rows, out.schema)
+            return to_local(out)  # materialize before tmpdir cleanup
 
 
 def _cpcv_oracle(
@@ -1640,7 +1642,7 @@ def _cpcv_oracle(
     """
 
 
-@_register("ml_cpcv_folds", _cpcv_oracle())
+@_register("ml_cpcv_folds", _cpcv_oracle)
 def ml_cpcv_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Combinatorial purged CV (mlfeat.cpcv_folds, 5 groups choose 2
     test, purge=embargo=1 day): every pair of day blocks serves as one

@@ -129,7 +129,7 @@ def _multimodal_frames_oracle(
     )
 
 
-@_register("multimodal_image_dedup", _multimodal_dedup_oracle())
+@_register("multimodal_image_dedup", _multimodal_dedup_oracle)
 def multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual media dedup: dHash for images (videos hash their
     first frame), RMS-envelope hash for audio, near-dup pairs via
@@ -149,7 +149,7 @@ def multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("multimodal_features_digest", _multimodal_features_oracle())
+@_register("multimodal_features_digest", _multimodal_features_oracle)
 def multimodal_features_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-checked twin of multimodal_features: the full decode→
     featurize path (PPM/WAV/PSEQ, Arrow-batched mapInPandas) collapsed
@@ -165,7 +165,7 @@ def multimodal_features_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("multimodal_frame_digest", _multimodal_frames_oracle())
+@_register("multimodal_frame_digest", _multimodal_frames_oracle)
 def multimodal_frame_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-checked twin of multimodal_frame_sample: per sampled video
     frame (real PSEQ demux + PPM decode inside the cardinality-increasing
@@ -237,7 +237,7 @@ def _multimodal_frames_rows_oracle(
     )
 
 
-@_register("multimodal_features", _multimodal_features_rows_oracle())
+@_register("multimodal_features", _multimodal_features_rows_oracle)
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real decode→featurize over Arrow batches: P6 PPM / WAV PCM16 /
     PSEQ payloads parsed with the pure-numpy codecs (operators/codecs.py);
@@ -263,7 +263,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("multimodal_frame_sample", _multimodal_frames_rows_oracle())
+@_register("multimodal_frame_sample", _multimodal_frames_rows_oracle)
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cardinality-increasing mapInPandas: one row per sampled video
     frame, real PSEQ demux + PPM decode per emitted frame; frame feature
@@ -310,7 +310,7 @@ def _multimodal_resize_oracle(n: int = 64, out_h: int = 12, out_w: int = 16) -> 
     )
 
 
-@_register("multimodal_resize_digest", _multimodal_resize_oracle())
+@_register("multimodal_resize_digest", _multimodal_resize_oracle)
 def multimodal_resize_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch visual resize through the real distributed kernel (PPM
     images + every PSEQ video frame to 16x12 nearest-neighbor; audio
@@ -347,7 +347,7 @@ def _multimodal_scene_cuts_oracle(n: int = 32, threshold: int = 16) -> str:
     )
 
 
-@_register("multimodal_scene_cuts", _multimodal_scene_cuts_oracle())
+@_register("multimodal_scene_cuts", _multimodal_scene_cuts_oracle)
 def multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shot-boundary detection (r8): scene-structured synthetic PSEQ
     videos (repeated base frame + small noise per scene, new base per
@@ -388,7 +388,7 @@ def _multimodal_scene_samples_oracle(
     )
 
 
-@_register("multimodal_scene_samples", _multimodal_scene_samples_oracle())
+@_register("multimodal_scene_samples", _multimodal_scene_samples_oracle)
 def multimodal_scene_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-scene frame sampling (r8): shot boundaries from the dHash
     scene detector, then up to 2 evenly-spaced frames per scene
@@ -429,7 +429,7 @@ def _multimodal_audio_segments_oracle(
     )
 
 
-@_register("multimodal_audio_segments", _multimodal_audio_segments_oracle())
+@_register("multimodal_audio_segments", _multimodal_audio_segments_oracle)
 def multimodal_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Energy-based voice-activity segmentation (r8): speech-shaped
     synthetic WAV (voiced bursts between near-silence gaps) through

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..engine import to_local
 from ..operators import (  # noqa: F401
     dedup,
     joins,
@@ -2414,7 +2415,7 @@ def orders_forecast_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # calendar-sized — pin on the driver so the four consumers (prev,
     # increment stats, max month, basis) cost ONE corpus scan, not four
     # (purged-CV precedent, caught by the scan audit)
-    m = spark.createDataFrame(m_agg.collect(), m_agg.schema)
+    m = to_local(m_agg)
     prev = m.select(
         F.to_timestamp(F.add_months("month", 12)).alias("month"),
         F.col("rev_cents").alias("prev_cents"),
@@ -2612,7 +2613,7 @@ def _price_elasticity_oracle() -> str:
     """
 
 
-@_register("orders_price_elasticity", _price_elasticity_oracle())
+@_register("orders_price_elasticity", _price_elasticity_oracle)
 def orders_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Price elasticity of demand per brand — the log-log regression
     slope of quantity on unit price across a brand's parts (the pricing
@@ -2742,7 +2743,7 @@ def _link_prediction_oracle() -> str:
     """
 
 
-@_register("part_link_prediction", _link_prediction_oracle())
+@_register("part_link_prediction", _link_prediction_oracle)
 def part_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link prediction on the co-purchase graph — the three classical
     neighborhood scores (Liben-Nowell & Kleinberg 2003) for every
@@ -3004,7 +3005,7 @@ def _theil_oracle() -> str:
     """
 
 
-@_register("orders_theil_index", _theil_oracle())
+@_register("orders_theil_index", _theil_oracle)
 def orders_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil T inequality index of customer spend with the classical
     between/within-nation decomposition — the concentration lens

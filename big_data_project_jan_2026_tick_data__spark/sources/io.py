@@ -14,6 +14,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..schemas import TICKS_RAW_DDL
 
@@ -64,25 +65,24 @@ def read_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
-def _events_ts_normalizer(dt):
-    """Map the physical type of an events ``ts`` column to a normalizer
-    producing session-TZ TimestampType. The testdata generator has shipped
-    ``ts`` as int64-nanos (surfaced as LongType under
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """Normalize the ``ts`` column of an events frame, batch or
+    streaming, to session-TZ TimestampType. The testdata generator has
+    shipped ``ts`` as int64-nanos (surfaced as LongType under
     ``spark.sql.legacy.parquet.nanosAsLong``) and as native timestamp[us]
     (surfaced as TimestampNTZ); queries must never assume which."""
     from pyspark.sql.types import LongType, TimestampNTZType
 
+    dt = df.schema["ts"].dataType
     if isinstance(dt, LongType):
         # integer division — ns→µs via double would lose precision at
         # nanosecond magnitudes (> 2^53); matches DuckDB's truncation.
-        return lambda df: df.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
-        )
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     if isinstance(dt, TimestampNTZType):
         # wall-clock-preserving under a UTC session TZ, so downstream
         # hour/minute extraction and oracle hashes are unchanged.
-        return lambda df: df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return lambda df: df
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def _read_events_raw(spark: SparkSession, path: str) -> DataFrame:
@@ -104,7 +104,7 @@ def _read_events_raw(spark: SparkSession, path: str) -> DataFrame:
         # file, so it cannot be restored here. Consequence: any later
         # parquet read of OTHER ns-timestamp data in the same session also
         # resolves ts as LongType; read_events handles that shape
-        # explicitly (see _events_ts_normalizer), and µs/ms files are
+        # explicitly (see normalize_events_ts), and µs/ms files are
         # unaffected (the conf only changes TIMESTAMP(NANOS) resolution).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return spark.read.parquet(path)
@@ -113,19 +113,17 @@ def _read_events_raw(spark: SparkSession, path: str) -> DataFrame:
 def read_events(spark: SparkSession, path: str) -> DataFrame:
     """S3 (events branch): schema-adaptive scan of the event-stream table —
     inspect the resolved schema and normalize ``ts`` to TimestampType."""
-    df = _read_events_raw(spark, path)
-    return _events_ts_normalizer(df.schema["ts"].dataType)(df)
+    return normalize_events_ts(_read_events_raw(spark, path))
 
 
 def events_stream_source(
-    spark: SparkSession, probe_path: str, directory: str
+    spark: SparkSession, raw_schema: StructType, directory: str
 ) -> DataFrame:
-    """Streaming events source. File streams require an explicit schema,
-    so batch-probe the raw file schema first (one footer read), then apply
-    the identical ts normalization to the stream."""
-    raw = _read_events_raw(spark, probe_path)
-    stream = spark.readStream.schema(raw.schema).parquet(directory)
-    return _events_ts_normalizer(raw.schema["ts"].dataType)(stream)
+    """Streaming events source over ``directory``. File streams require
+    an explicit schema: ``raw_schema`` is that of the batch-resolved
+    events file (``_read_events_raw``), and the stream gets the same ts
+    normalization as the batch read."""
+    return normalize_events_ts(spark.readStream.schema(raw_schema).parquet(directory))
 
 
 def events_socket_stream_source(

@@ -521,7 +521,8 @@ def run_stream_to_memory(
     sequentially on the driver thread, matching the engine-wide
     single-threaded driver model (see engine.CheckpointTracker)."""
     spark = agg.sparkSession
-    override = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
+    # an empty value counts as unset
+    override = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS") or None
     if override is not None:
         try:
             if int(override) <= 0:

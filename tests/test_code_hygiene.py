@@ -119,3 +119,51 @@ def test_no_duplicate_literal_dict_keys():
                     else:
                         seen[key] = k.lineno
     assert not offenders, "\n".join(offenders)
+
+
+def _collected_frame(node) -> str | None:
+    """Source of ``<frame>`` when ``node`` is ``<frame>.collect()``."""
+    if (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "collect"
+        and not node.args
+    ):
+        return ast.unparse(node.func.value)
+    return None
+
+
+def test_no_collect_createdataframe_round_trip():
+    """A small result is brought back into Spark with
+    ``engine.to_local`` (Arrow batches both ways), never as
+    ``createDataFrame(<frame>.collect(), <frame>.schema)`` — inline or
+    through a name bound to ``<frame>.collect()`` — which builds one
+    pickled Python Row per result row."""
+    offenders = []
+    for path in _module_files():
+        tree = ast.parse(path.read_text(), filename=str(path))
+        bound = {
+            (node.targets[0].id, _collected_frame(node.value))
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Assign)
+            and len(node.targets) == 1
+            and isinstance(node.targets[0], ast.Name)
+            and _collected_frame(node.value)
+        }
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+                and len(node.args) >= 2
+            ):
+                continue
+            data, schema = node.args[:2]
+            if not (isinstance(schema, ast.Attribute) and schema.attr == "schema"):
+                continue
+            frame = ast.unparse(schema.value)
+            if _collected_frame(data) == frame or (
+                isinstance(data, ast.Name) and (data.id, frame) in bound
+            ):
+                offenders.append(f"{path.relative_to(PKG.parent)}:{node.lineno}")
+    assert not offenders, "\n".join(offenders)

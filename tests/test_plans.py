@@ -891,3 +891,88 @@ def test_lorenz_chained_sweeps_broadcast_deciles(spark, sf_dir):
     assert not re.search(r"Exchange SinglePartition[^\n]*\n[^\n]*Window", full)
     assert "BroadcastHashJoin" in full
     assert "CartesianProduct" not in full
+
+
+def test_split_copy_restores_open_cost(spark, sf_dir):
+    """bench's split-input mode raises the per-file open cost for its
+    runs, and its restore puts back the session's own setting."""
+    import bench
+
+    key = "spark.sql.files.openCostInBytes"
+    before = spark.conf.get(key, None)
+    _dst, restore = bench._make_split_copy(spark, sf_dir, 2)
+    assert spark.conf.get(key) == spark.conf.get("spark.sql.files.maxPartitionBytes")
+    restore()
+    assert spark.conf.get(key, None) == before
+
+
+def test_to_local_matches_the_row_round_trip(spark):
+    """engine.to_local returns a LocalRelation with the values and schema
+    of the collect() + createDataFrame(rows, schema) round trip, across
+    the types results carry and for an empty frame; repeated calls leave
+    no persisted RDD behind."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    from big_data_project_jan_2026_tick_data__spark.engine import (
+        persistent_rdd_ids,
+        to_local,
+    )
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), False),
+            T.StructField("d", T.DecimalType(38, 6)),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("ts_ntz", T.TimestampNTZType()),
+            T.StructField("day", T.DateType()),
+            T.StructField("m", T.MapType(T.StringType(), T.DoubleType())),
+            T.StructField(
+                "arr",
+                T.ArrayType(
+                    T.StructType(
+                        [
+                            T.StructField("k", T.IntegerType()),
+                            T.StructField("v", T.StringType()),
+                        ]
+                    )
+                ),
+            ),
+            T.StructField("bin", T.BinaryType()),
+            T.StructField("x", T.DoubleType()),
+        ]
+    )
+    ts = dt.datetime(2026, 1, 5, 10, 0, 0, 123456)
+    rows = [
+        (
+            1,
+            Decimal("12345678901234567890123456789012.123456"),
+            ts,
+            ts,
+            ts.date(),
+            {"a": 1.5, "b": None},
+            [(1, "x"), (2, None)],
+            bytearray(b"\x00\xff"),
+            float("nan"),
+        ),
+        (2, None, None, None, None, None, None, None, float("inf")),
+        (3, Decimal("-0.000001"), ts, ts, ts.date(), {}, [], bytearray(), float("-inf")),
+        (4, Decimal(0), ts, ts, ts.date(), None, [None], None, -0.0),
+    ]
+    src = spark.createDataFrame(rows, schema).select("*")
+
+    def canon(df):
+        return [repr(r) for r in sorted(df.collect(), key=lambda r: r.id)]
+
+    before = persistent_rdd_ids(spark)
+    for frame in (src, src.limit(0)):
+        row_path = spark.createDataFrame(frame.collect(), frame.schema)
+        for _ in range(2):
+            got = to_local(frame)
+            plan = got._jdf.queryExecution().analyzed()
+            assert plan.getClass().getSimpleName() == "LocalRelation"
+            assert got.schema == frame.schema == row_path.schema
+            assert canon(got) == canon(row_path)
+    assert persistent_rdd_ids(spark) == before

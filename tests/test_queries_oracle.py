@@ -140,6 +140,8 @@ def empty_sf_dir(sf_dir, tmp_path_factory):
         "emb_silhouette",
         "emb_calinski_harabasz",
         "emb_semantic_dedup",
+        "emb_kmeanspp_init",
+        "emb_top_component",
     ],
 )
 def test_kmeans_family_on_empty_embeddings(spark, sf_dir, empty_sf_dir, name):
@@ -151,6 +153,91 @@ def test_kmeans_family_on_empty_embeddings(spark, sf_dir, empty_sf_dir, name):
     assert got.schema.simpleString() == (
         QUERIES[name](spark, sf_dir).schema.simpleString()
     )
+
+
+def test_sessionize_sub_second_gap(spark, sf_dir, tmp_path):
+    """A 30 min + 0.5 s gap whose ends truncate to whole seconds exactly
+    30 min apart still starts a session; a gap of exactly 30 min does
+    not. Comparing whole seconds merged user 1's two events."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for t in TESTDATA_TABLES:
+        pq.write_table(
+            pq.read_schema(f"{sf_dir}/{t}.parquet").empty_table(),
+            str(tmp_path / f"{t}.parquet"),
+        )
+    t0 = dt.datetime(2026, 1, 5, 10, 0, 0, 300_000)
+    rows = [  # (event_id, ts, user_id)
+        (1, t0, 1),
+        (2, t0 + dt.timedelta(seconds=1800.5), 1),
+        (3, t0, 2),
+        (4, t0 + dt.timedelta(seconds=1800), 2),
+    ]
+    schema = pq.read_schema(f"{sf_dir}/events.parquet")
+    cols = {
+        "event_id": [r[0] for r in rows],
+        "ts": [r[1] for r in rows],
+        "user_id": [r[2] for r in rows],
+        "event_type": ["click"] * len(rows),
+        "value": [1.0] * len(rows),
+        "props": ["{}"] * len(rows),
+    }
+    pq.write_table(
+        pa.table({f.name: pa.array(cols[f.name], f.type) for f in schema}),
+        str(tmp_path / "events.parquet"),
+    )
+    got = _assert_matches_oracle(spark, str(tmp_path), "ticks_sessionize")
+    assert sorted(tuple(r) for r in got.collect()) == [(1, 1, 1), (1, 2, 1), (2, 1, 2)]
+
+
+def test_registry_import_builds_no_oracle():
+    """Importing the registry runs no oracle builder: the ones that
+    replay numpy twins through DuckDB run on first access of their
+    ORACLE entry."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "import duckdb\n"
+        "def refuse(*a, **k):\n"
+        "    raise RuntimeError('duckdb.connect')\n"
+        "duckdb.connect = refuse\n"
+        "from big_data_project_jan_2026_tick_data__spark.registry import ORACLE\n"
+        "try:\n"
+        "    ORACLE['emb_procrustes_drift']\n"
+        "except RuntimeError:\n"
+        "    print('built on access')\n"
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert res.stdout.strip() == "built on access"
+
+
+def test_oracle_builders_run_once_and_none_leaves_the_name_out():
+    from big_data_project_jan_2026_tick_data__spark.registry._base import _Oracles
+
+    calls = []
+    oracles = _Oracles()
+    oracles._entries.update(
+        a="SELECT 1",
+        b=lambda: calls.append("b"),
+        c=lambda: calls.append("c") or "SELECT 3",
+    )
+    assert oracles["c"] == oracles["c"] == "SELECT 3"
+    assert calls == ["c"]
+    assert "b" not in oracles
+    assert list(oracles) == ["a", "c"] and len(oracles) == 2
+    assert calls == ["c", "b"]
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLE)))

@@ -1075,3 +1075,34 @@ def test_state_partitions_env_applies_and_restores(spark, tick_dir, monkeypatch)
     }
     assert got == baseline
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_state_partitions_env_empty_is_unset(spark, tick_dir, monkeypatch):
+    """An empty SPARK_GRAFT_STATE_PARTITIONS counts as unset: the stream
+    runs on the session's partition count instead of raising."""
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", "")
+    stream = spark.readStream.schema(TICK_SCHEMA).parquet(tick_dir)
+    out = run_stream_to_memory(session_window_aggregate(stream), "sp_empty_q")
+    assert out.count() > 0
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_replayed_events_resolve_the_events_schema_once(spark, sf_dir):
+    """Streaming registry queries take the events file's raw schema from
+    the registry's table cache: after the first replay in a session,
+    opening another one starts no schema-inference job."""
+    from big_data_project_jan_2026_tick_data__spark.registry.q_ml_streaming import (
+        _replayed_events,
+    )
+
+    with _replayed_events(spark, sf_dir):
+        pass
+    sc = spark.sparkContext
+    sc.setJobGroup("replay_probe", "second replay")
+    try:
+        with _replayed_events(spark, sf_dir) as src:
+            assert dict(src.dtypes)["ts"] == "timestamp"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("replay_probe")) == []

@@ -140,6 +140,19 @@ def test_despike_removes_bad_print(spark):
     assert len(vals) == 10
 
 
+def test_despike_keeps_rows_when_median_is_zero(spark):
+    """A trailing median of 0 makes the relative deviation a division by
+    zero, which is NULL: the row is kept, even a jump from 0 to 5."""
+    from big_data_project_jan_2026_tick_data__spark.operators.ticks import despike
+
+    df = spark.createDataFrame(
+        [("US30", i, v) for i, v in enumerate([0.0, 0.0, 0.0, 5.0])],
+        "symbol string, i long, bid double",
+    ).withColumn("ts", F.timestamp_seconds(F.col("i") * 10))
+    out = despike(df, value_col="bid", k=4, max_rel_dev=0.5).collect()
+    assert sorted(r.bid for r in out) == [0.0, 0.0, 0.0, 5.0]
+
+
 def test_winsorize_contract(spark):
     from big_data_project_jan_2026_tick_data__spark.operators import ticks as tk
 
