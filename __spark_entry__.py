@@ -5,16 +5,36 @@ each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
+The driver adjudicates a bounded window (the first ~50 names) per
+round, so the order of ``queries()`` is derived from the committed
+``CORRECTNESS_r{N}.json`` ledgers beside this file. A query's standing
+verdict is its entry in the highest-numbered ledger that names it, and
+the order is:
+
+1. a failing standing verdict (``rows_match``, ``schema_match`` or
+   ``hash_match`` false, or ``err`` set);
+2. no verdict yet;
+3. the oldest standing verdict round first;
+4. alphabetical within each of the above.
+
+With no ledger beside this file the order is alphabetical.
+``oracle_sql()`` follows the same order.
+
 Implementation lives in ``big_data_project_jan_2026_tick_data__spark.registry``.
 """
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from big_data_project_jan_2026_tick_data__spark import registry
+
+_HERE = Path(__file__).resolve().parent
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -22,404 +42,36 @@ def entry(spark: SparkSession) -> DataFrame:
     return registry.entry_query(spark, "/root/testdata/sf0.001")
 
 
-# The driver adjudicates a bounded window (the first ~50 names) per
-# round, so dict order is the scheduling lever. Round-12 ordering
-# (standing rule: CHANGED-CODE RE-PROOF OUTRANKS NEW-QUERY PROOF; this
-# round's advisor fixes touch (a) the env-gated Avro sink — no registry
-# query — and (b) an empty-corpus guard prepended to procrustes_drift,
-# whose query emb_procrustes_drift is itself in the first-ever block,
-# so it is re-proved by construction):
-# (a) slots 1-14: first-ever verdicts for the FOURTEEN late-r11 queries
-#     the judge staged (VERDICT r11 #1) — the survival pair
-#     (Nelson-Aalen, log-rank), PR-AUC, ANOVA F, Brier decomposition,
-#     the streaming Page-Hinkley monitor, skyline, Lorenz, odds ratio,
-#     Mann-Kendall, Procrustes drift, conformal coverage,
-#     Dickey-Fuller, Cramér's V. Every one is sweep-, hostile-layout-,
-#     order-lane- and sf0.01-vanilla-proven locally.
-# (b) slot 15: events_kruskal_wallis CHANGED-CODE RE-PROOF — the r12
-#     10M-row parity lane caught a silent BIGINT wrap in the per-group
-#     grid snaps of events_anova_f (first-ever above, fixed pre-verdict)
-#     and kruskal (r11-verdicted, plan changed to exact decimal
-#     division via exactagg.dec_round_div, so its verdict re-proves).
-# (c) slots 16-46: the FULL r4-era rotation block (VERDICT r11 #3) —
-#     all 31 queries whose standing verdict is r4, oldest block first;
-#     after this window no standing verdict predates r5.
-# (d) slots 47+: the rotation tail, strictly oldest-verdict-first
-#     (r5 block, then r6, r7, ...), alphabetical within a round — the
-#     ready-made r13 window is simply the head of the tail.
-# Rows-only entries: NONE — all registry queries carry value oracles.
-_ADJUDICATION_PRIORITY = [
-    "events_nelson_aalen",
-    "events_log_rank",
-    "doc_classifier_pr_auc",
-    "events_anova_f",
-    "doc_brier_decomposition",
-    "streaming_page_hinkley",
-    "orders_skyline",
-    "events_lorenz_curve",
-    "events_odds_ratio",
-    "ticks_mann_kendall",
-    "emb_procrustes_drift",
-    "doc_conformal_coverage",
-    "ticks_dickey_fuller",
-    "events_cramers_v",
-    # slot 15: CHANGED-CODE RE-PROOF (outranks rotation) — the r12
-    # 10M-row parity lane caught a silent BIGINT wrap in the
-    # per-group grid snaps of events_anova_f (in-window above) and
-    # events_kruskal_wallis; both now snap via exact decimal
-    # division (exactagg.dec_round_div), so kruskal's r11 verdict
-    # must be re-proven on the new plan
-    "events_kruskal_wallis",
-    # ---- standing verdict r4 ----
-    "doc_chunk_windows",
-    "doc_cross_overlap",
-    "doc_incremental_minhash",
-    "doc_incremental_simhash",
-    "doc_lang_confusion",
-    "doc_line_dedup",
-    "doc_vocab_coverage",
-    "emb_ann_recall",
-    "emb_incremental_near_dup",
-    "emb_quantize_int8",
-    "emb_quantized_topk",
-    "emb_rrf_fusion",
-    "events_data_contract",
-    "events_date_membership",
-    "events_funnel_steps",
-    "events_inter_arrival",
-    "events_pagerank",
-    "events_retention_cohorts",
-    "events_threshold_islands",
-    "events_time_to_convert",
-    "events_transition_matrix",
-    "events_type_affinity",
-    "multimodal_resize_digest",
-    "orders_abc_pareto",
-    "orders_rfm_segments",
-    "orders_seasonality",
-    "sql_function_surface",
-    "stats_csv_roundtrip",
-    "ticks_tz_spread_scrub",
-    "ticks_winsorize",
-    "window_value_functions",
-    # ---- standing verdict r5 ----
-    "approx_aggregates",
-    "doc_hash_sample",
-    "doc_jsonl_roundtrip",
-    "emb_diversity_report",
-    # ---- ~50-slot window boundary; the r12 window above = the 14
-    # late-r11 first-evers + the kruskal changed-code re-proof + the
-    # full 31-query r4 block + the first 4 of the r5 block; r13's
-    # ready-made window is the head of the tail below (r5 remainder,
-    # then r6, ...) ----
-    "emb_ivf_exact",
-    "emb_lsh_topk",
-    "emb_mmr_rerank",
-    "emb_near_dup_pairs",
-    "events_dau_mau",
-    "events_histogram_percentiles",
-    "events_hll_user_reach",
-    "events_robust_outliers",
-    "events_top_paths",
-    "join_anti_customers_without_orders",
-    "join_semi_customers_with_orders",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "orders_cohort_ltv",
-    "orders_scd2_priority",
-    "orders_segment_migration",
-    "part_fuzzy_link",
-    "rollup_orders",
-    "supplier_return_rates",
-    "ticks_drawdown",
-    "ticks_return_acf",
-    "ticks_symbol_correlation",
-    "ticks_value_stats",
-    "ticks_vwap_twap",
-    "topk_orders_per_priority",
-    "window_lag_lead_rank",
-    # ---- standing verdict r6 ----
-    "doc_dup_clusters",
-    "doc_leakage_safe_split",
-    "doc_weighted_sample",
-    "emb_centroid_outliers",
-    "emb_dup_clusters",
-    "emb_ivfpq_topk",
-    "events_alarm_episodes",
-    "events_cms_heavy_hitters",
-    "events_cusum_alarms",
-    "events_psi_drift",
-    "ml_anomaly_scores_mean",
-    "ml_triple_barrier",
-    "orders_scd2_asof_state",
-    "orders_seasonal_decompose",
-    "part_association_rules",
-    "part_copurchase_communities",
-    "part_copurchase_triangles",
-    "streaming_cusum_alarms",
-    "streaming_dedup_replay",
-    "streaming_health",
-    "streaming_session_agg",
-    "streaming_upsert_replay",
-    "streaming_vwap_bars",
-    "ticks_market_beta",
-    # ---- standing verdict r7 ----
-    "doc_ccnet_buckets",
-    "doc_dataset_card",
-    "doc_distinctive_terms",
-    "doc_hybrid_near_dup",
-    "doc_length_histogram",
-    "doc_lm_perplexity",
-    "doc_mixture_weights",
-    "doc_token_entropy",
-    "emb_pq_codes",
-    "emb_pq_topk",
-    "events_attribution",
-    "events_funnel_time_bounded",
-    "events_k_anonymity",
-    "events_l_diversity",
-    "incremental_ohlc_view",
-    "ml_cpcv_folds",
-    "ml_label_uniqueness",
-    "ml_purged_backtest",
-    "ml_purged_cv_folds",
-    "orders_forecast_yoy",
-    "pivot_user_event_values",
-    "probe_norm_wordfreq",
-    "snapshot_compact_roundtrip",
-    "snapshot_delete_purge",
-    "snapshot_schema_evolution",
-    "streaming_interval_join",
-    "streaming_static_enrich",
-    "ticks_amihud_illiq",
-    "ticks_dollar_bars",
-    "ticks_frac_diff",
-    "ticks_intraday_seasonality",
-    "ticks_kyle_lambda",
-    "ticks_lead_lag_corr",
-    "ticks_roll_spread",
-    "ticks_rv_signature",
-    "ticks_tick_rule_flow",
-    "ticks_volume_bars",
-    "ticks_vpin",
-    "tpch_q1",
-    "tpch_q14_promo_ratio",
-    "tpch_q18_large_orders",
-    "tpch_q3_top10",
-    "tpch_q5_region_revenue",
-    "tpch_q6_forecast_revenue",
-    # ---- standing verdict r8 ----
-    "doc_bm25_search",
-    "doc_bpe_fertility",
-    "doc_bpe_merges",
-    "doc_bpe_token_counts",
-    "doc_classifier_calibration",
-    "doc_containment_pairs",
-    "doc_domain_caps",
-    "doc_dsir_weights",
-    "doc_dup_spans",
-    "doc_fingerprints",
-    "doc_pmi_collocations",
-    "doc_quality_classifier",
-    "doc_simhash_pairs",
-    "doc_source_divergence",
-    "doc_survivorship",
-    "doc_tfidf_top_terms",
-    "emb_hamming_topk",
-    "emb_ivf_topk",
-    "emb_lsh_ndcg",
-    "emb_mrl_recall",
-    "emb_semantic_dedup",
-    "emb_top_component",
-    "events_decay_engagement",
-    "events_funnel",
-    "events_markov_entropy",
-    "events_moment_stats",
-    "events_t_closeness",
-    "events_zipf_fit",
-    "ml_anomaly_scores",
-    "multimodal_audio_segments",
-    "orders_concentration_hhi",
-    "orders_scd2_apply",
-    "orders_semi_additive_balance",
-    "probe_bigint_render",
-    "probe_detmath_log2",
-    "snapshot_wap_publish",
-    "ticks_corwin_schultz",
-    "ticks_hurst_exponent",
-    "ticks_indicators",
-    "ticks_parkinson_vol",
-    "ticks_rolling_stats",
-    "ticks_tsrv",
-    "ticks_yang_zhang",
-    "tracking_best_run",
-    # ---- standing verdict r9 ----
-    "cube_orders",
-    "distinct_agg_per_status",
-    "doc_classifier_auc",
-    "doc_exact_dedup",
-    "doc_flesch_reading_ease",
-    "doc_gopher_rules",
-    "doc_minhash_calibration",
-    "doc_minhash_pairs",
-    "doc_ngram_coverage",
-    "doc_ngram_novelty",
-    "doc_rake_keywords",
-    "emb_davies_bouldin",
-    "emb_intrinsic_dim",
-    "emb_kmeans",
-    "emb_kmeanspp_init",
-    "emb_silhouette",
-    "events_ab_test",
-    "events_bandit_replay",
-    "events_benford_test",
-    "events_diff_in_diff",
-    "events_gini_engagement",
-    "events_kaplan_meier",
-    "events_ljung_box",
-    "events_poisson_bootstrap_ci",
-    "events_quantile_treatment_effect",
-    "events_runs_test",
-    "ml_anomaly_scores_ae",
-    "ml_anomaly_scores_ae_fixedw",
-    "multimodal_scene_cuts",
-    "multimodal_scene_samples",
-    "orders_price_elasticity",
-    "part_link_prediction",
-    "snapshot_branching",
-    "snapshot_incremental_read",
-    "stats_orc_roundtrip",
-    "stats_zorder_roundtrip",
-    "streaming_srm_monitor",
-    "ticks_bipower_variation",
-    "ticks_epps_effect",
-    "ticks_hayashi_yoshida",
-    "ticks_hy_lead_lag",
-    "ticks_ou_half_life",
-    "ticks_realized_kernel",
-    "ticks_variance_ratio",
-    # ---- standing verdict r10 ----
-    "asof_purchase_last_click",
-    "asof_with_tolerance",
-    "doc_curation_pipeline",
-    "doc_decontaminate",
-    "doc_lang_id",
-    "doc_ngram_jaccard",
-    "doc_pack_sequences",
-    "doc_quality_scores",
-    "doc_repetition_signals",
-    "doc_scrub_pii",
-    "doc_strip_boilerplate",
-    "doc_token_stats",
-    "emb_calinski_harabasz",
-    "emb_cosine_topk",
-    "emb_ivf_kmeanspar",
-    "emb_label_centroids",
-    "events_cuped",
-    "events_g_test",
-    "events_holm_multiple_tests",
-    "events_jackknife_ratio_ci",
-    "events_mann_whitney",
-    "events_power_analysis",
-    "events_wasserstein_arms",
-    "grouping_sets_orders",
-    "minmax_by_priority",
-    "ml_information_coefficient",
-    "ntile_percentile_orders",
-    "orders_unpivot",
-    "part_name_tokens",
-    "salted_join_skewed_users",
-    "scalar_subquery_above_avg",
-    "stats_min_max_metadata",
-    "string_funcs_part_names",
-    "ticks_garman_klass",
-    "ticks_realized_semivariance",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_parts",
-    "tpch_q12_shipmode_buckets",
-    "tpch_q13_customer_distribution",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_count",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q19_disjunctive_predicate",
-    "tpch_q20_part_promotion",
-    "tpch_q22_global_sales_opportunity",
-    "tpch_q2_min_acctbal_supplier",
-    "tpch_q4_priority_check",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "union_all_orders_split",
-    # ---- standing verdict r11 ----
-    "doc_export_shards",
-    "doc_md5_fingerprints",
-    "doc_md5_minhash_pairs",
-    "doc_md5_simhash_pairs",
-    "doc_rater_agreement",
-    "doc_shap_linear",
-    "doc_source_report",
-    "doc_stratified_sample",
-    "doc_yule_k",
-    "emb_whitening_digest",
-    "events_bh_fdr",
-    "events_did_event_study",
-    "events_key_skew_report",
-    "events_ks_test",
-    "events_msprt_sequential",
-    "events_page_hinkley",
-    "events_value_histogram",
-    "events_weekly_retention",
-    "events_winsorized_ab",
-    "incremental_dedup",
-    "json_props_extract",
-    "ml_window_tensors",
-    "multimodal_features_digest",
-    "multimodal_frame_digest",
-    "multimodal_image_dedup",
-    "orders_price_index",
-    "orders_theil_index",
-    "range_join_events_in_order_windows",
-    "set_ops_multiset",
-    "set_users_click_and_purchase",
-    "set_users_click_not_purchase",
-    "snapshot_merge_upsert",
-    "snapshot_time_travel",
-    "sql_over_views",
-    "ticks_daily_outer_join",
-    "ticks_daily_window_counts",
-    "ticks_despike",
-    "ticks_downsample_1min",
-    "ticks_ffill",
-    "ticks_gap_fill",
-    "ticks_ohlc_bars",
-    "ticks_quality_scan",
-    "ticks_resample_even",
-    "ticks_session_filter",
-    "ticks_sessionize",
-    "ticks_theil_sen",
-    "ticks_threshold_exceed",
-    "tpch_q21_sole_fault_supplier",
-    "tpch_q9_product_profit",
-]
+def _standing_verdicts(ledger_dir: Path) -> dict[str, tuple[int, dict]]:
+    """name → (round, verdict) from the highest-numbered ledger naming it."""
+    ledgers = {
+        int(m.group(1)): p
+        for p in ledger_dir.glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name))
+    }
+    standing = {}
+    for rnd in sorted(ledgers):
+        for name, verdict in json.loads(ledgers[rnd].read_text()).items():
+            standing[name] = (rnd, verdict)
+    return standing
 
 
-# dict lookup, not list.index-inside-a-sort-key (judge r10 nit: that
-# was O(n²) over 300+ names — harmless driver-side, but free to fix)
-_PRIORITY_RANK = {n: i for i, n in enumerate(_ADJUDICATION_PRIORITY)}
+def _failed(verdict: dict) -> bool:
+    return bool(verdict.get("err")) or not all(
+        verdict.get(k) for k in ("rows_match", "schema_match", "hash_match")
+    )
 
 
-def _ordered(mapping: dict) -> dict:
-    def rank(name: str) -> tuple[int, int]:
-        if name in _PRIORITY_RANK:
-            return (0, _PRIORITY_RANK[name])
-        fn = registry.QUERIES[name]
-        reads_events = "events" in (fn.__doc__ or "") or any(
-            name.startswith(p)
-            for p in ("ticks_", "events_", "window_", "asof_", "set_", "ml_")
-        ) or name in ("snapshot_time_travel", "streaming_session_agg")
-        return (1 if reads_events else 2, 0)
+def _ordered(mapping: dict, ledger_dir: Path = _HERE) -> dict:
+    standing = _standing_verdicts(ledger_dir)
 
-    names = sorted(mapping, key=lambda n: (rank(n), n))
-    return {n: mapping[n] for n in names}
+    def rank(name: str) -> tuple[int, int, str]:
+        if name not in standing:
+            return (1, 0, name)
+        rnd, verdict = standing[name]
+        return (0 if _failed(verdict) else 2, rnd, name)
+
+    return {n: mapping[n] for n in sorted(mapping, key=rank)}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -64,6 +64,14 @@ def interval_expr(spec: str | int | _dt.timedelta, unit: str | None = None) -> C
     return F.expr(f"INTERVAL {n} {u.upper()}")
 
 
+def q6(c: Column) -> Column:
+    """Floor-half-up to 6 decimals, ``FLOOR(c * 1e6 + 0.5) / 1e6``. Spark
+    and an IEEE-754 SQL oracle floor the same binary double, so 6th-
+    decimal half-way values cannot disagree the way decimal-string
+    HALF_UP and binary rounding do."""
+    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
+
+
 def parse_tick_ts(col: Column, fmt: str = TICKS_TS_FORMAT) -> Column:
     """F1: null-on-failure timestamp parse (reference
     spark_session_window_tick_cleaner.py:136 / pandas errors='coerce')."""

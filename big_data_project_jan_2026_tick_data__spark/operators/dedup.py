@@ -18,6 +18,7 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.scalars import q6
 from .text import normalize_text
 
 
@@ -1173,7 +1174,6 @@ def containment_pairs(
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     out = (
         inter.join(
             sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"),

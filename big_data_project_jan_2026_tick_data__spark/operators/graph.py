@@ -14,6 +14,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.scalars import q6
+
 
 def _q9(c):
     return F.floor(c * 1e9 + F.lit(0.5)) / 1e9
@@ -282,7 +284,6 @@ def association_rules(
     confidence_q6, lift_q6, rank) with rank = top_k by lift
     (ties → confidence desc, antecedent asc, consequent asc).
     """
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     it = (
         items.select(
             F.col(basket_col).alias("bk"), F.col(item_col).alias("item")

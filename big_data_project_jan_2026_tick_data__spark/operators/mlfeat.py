@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..engine import to_local
-from ..functions.scalars import interval_expr
+from ..functions.scalars import interval_expr, q6
 from pyspark.sql import types as T
 
 from .ticks import SESSION_WINDOWS, session_filter, with_spread
@@ -599,7 +599,6 @@ def label_uniqueness_weights(
     w = contrib.groupBy("symbol", "entry_ts").agg(
         F.count(F.lit(1)).alias("n_bars"), F.sum("u9").alias("s9")
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return lab.join(w, ["symbol", "entry_ts"], "left").select(
         "symbol",
         "entry_ts",

@@ -1076,6 +1076,8 @@ def whitening_matrix(
         )
         .collect()
     )
+    if not agg:  # empty corpus: no covariance, so the zero transform
+        return [[0.0] * d for _ in range(top)], [0.0] * top
     by_k = {r["k"]: (int(r["s"]), int(r["cnt"])) for r in agg}
     n = by_k[0][1]
     import numpy as np

@@ -15,6 +15,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.scalars import q6
 from .ticks import SESSION_WINDOWS, window_predicate
 
 
@@ -1066,7 +1067,6 @@ def moment_stats(
         + 6 * mu * mu * s2 / n
         - 3 * mu * mu * mu * mu
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return agg.select(
         *by,
         "n",
@@ -1344,7 +1344,6 @@ def type_affinity(
         F.count(F.lit(1)).alias("c")
     )
     total = per_user.agg(F.count(F.lit(1)).alias("nu"))
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (
         pair_n.join(
             F.broadcast(type_n.withColumnRenamed("t", "type_a").withColumnRenamed("c", "ca")),
@@ -1530,7 +1529,6 @@ def market_beta(
     num, _dx, dm = corr_terms("c")
     beta = F.when(dm > 0, num / dm)
     corr = exact_corr_value("c")
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (
         agg.withColumn("__beta", beta)
         .withColumn("__corr", corr)
@@ -1600,14 +1598,12 @@ def frac_diff(
     total = terms[0]
     for t in terms[1:]:
         total = total + t
-    q6 = F.floor(
-        (total.cast("double") / F.lit(1e9) / F.lit(1e4)) * 1e6 + F.lit(0.5)
-    ) / 1e6
+    ffd = q6(total.cast("double") / F.lit(1e9) / F.lit(1e4))
     return bars.select(
         F.col(symbol_col).alias("symbol"),
         F.col(ts_col).alias("ts"),
         F.col(price_i4_col).alias("price_i4"),
         F.when(
-            F.lag(F.col(price_i4_col), window - 1).over(w).isNotNull(), q6
+            F.lag(F.col(price_i4_col), window - 1).over(w).isNotNull(), ffd
         ).alias("ffd_q6"),
     )

@@ -11,6 +11,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..engine import to_local
+from ..functions.scalars import q6
 
 # Word-splitting pattern: runs of letters/digits (BPE-ish fallback is
 # token_count_bpe below).
@@ -105,16 +106,11 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
         + F.lit(0.25) * F.least(stop_ratio * 5.0, F.lit(1.0))
         + F.lit(0.15) * wlen_score
     )
-    # floor-based half-up round: both engines (Spark and any IEEE-754 SQL
-    # oracle) floor the *same* binary double, so 6th-decimal half-way
-    # values can't disagree the way decimal-string HALF_UP vs binary
-    # rounding do.
-    q6 = F.floor(quality * 1e6 + F.lit(0.5)) / F.lit(1e6)
     return (
         df.withColumn("n_words", words)
         .withColumn("punct_ratio", F.round(punct_ratio, 6))
         .withColumn("stop_ratio", F.round(stop_ratio, 6))
-        .withColumn("quality", q6)
+        .withColumn("quality", q6(quality))
     )
 
 
@@ -215,9 +211,6 @@ def repetition_signals(
         ),
         lambda x: x.isNotNull(),
     )
-
-    def q6(c: Column) -> Column:
-        return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
     base = df.select(
         F.col(id_col),
@@ -625,7 +618,6 @@ def lm_cross_entropy(
     )
     lp = detmath.det_log2_int("__pnum") - detmath.det_log2_int("__pden")
     lp9 = F.floor(lp * 1e9 + F.lit(0.5))
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     h = -(F.col("__s9").cast("double") / F.lit(1e9)) / F.col("n_tokens").cast(
         "double"
     )
@@ -840,7 +832,6 @@ def mixture_weights(
     tot = per_src.agg(F.sum("__w6").alias("__tw6"))
     wq = F.col("__w6").cast("double") / F.lit(1e6)
     tw = F.col("__tw6").cast("double") / F.lit(1e6)
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (
         per_src.crossJoin(F.broadcast(tot))
         .select(

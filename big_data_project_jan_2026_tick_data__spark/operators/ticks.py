@@ -25,7 +25,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalars import interval_expr
+from ..functions.scalars import interval_expr, q6
 
 from ..schemas import TICKS_TS_FORMAT
 
@@ -760,7 +760,6 @@ def volume_bars(
     ).cast("long")
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     g = F.lit(float(price_grid))
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     agg = (
         t.groupBy("symbol", bar.alias("bar_id"))
         .agg(
@@ -861,9 +860,6 @@ def vwap_twap_bars(
         F.sum("__dur").alias("__sd"),
         F.sum(F.col("__p4") * F.col("__dur")).alias("__spd"),
     )
-
-    def q6(c: Column) -> Column:
-        return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
     return agg.select(
         *partition_cols,

@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import detmath
+from ..functions.scalars import q6
 from ..engine import to_local
 from ..operators import (  # noqa: F401
     dedup,
@@ -166,7 +167,6 @@ def doc_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("lang_pred") == "en").cast("bigint")).alias("n_en"),
         )
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return agg.select(
         "source",
         "n_docs",
@@ -1956,7 +1956,6 @@ def doc_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("cross_entropy").alias("h_target_q6")
     )
     ratio = F.col("h_source_q6") - F.col("h_target_q6")
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (
         src.join(tgt, "doc_id")
         .select(
@@ -2431,7 +2430,6 @@ def doc_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mean_score = F.col("ss").cast("double") / 1e6 / F.col("n")
     pos_rate = F.col("sy").cast("double") / F.col("n")
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return agg.select(
         F.col("bucket").cast("int").alias("bucket"),
         F.col("n").cast("long").alias("n_docs"),
@@ -2843,7 +2841,6 @@ def doc_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = stream.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("c"))
     lg = tf.withColumn("l2c", detmath.det_log2_int("c"))
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     contrib9 = F.floor(F.col("c").cast("double") * F.col("l2c") * 1e9 + F.lit(0.5))
     agg = lg.groupBy("doc_id").agg(
         F.sum("c").alias("nt"),
@@ -3935,7 +3932,7 @@ def doc_shap_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw = F.lit(wj) * (
             d.cast("double") / (F.col("n").cast("double") * F.lit(1e9))
         )
-        return F.floor(raw * 1e6 + F.lit(0.5)) / 1e6
+        return q6(raw)
 
     p = feats.crossJoin(F.broadcast(m)).select(
         "doc_id",
@@ -4268,7 +4265,6 @@ def doc_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") > 0)
         .select("n", rel.alias("rel"), res.alias("res"), unc.alias("unc"))
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return o.select(
         "n",
         q6(F.col("rel")).alias("reliability_q6"),

@@ -16,6 +16,7 @@ from ..operators import (  # noqa: F401
     ticks,
 )
 from ..functions import detmath
+from ..functions.scalars import q6
 from ._base import _register, _td
 
 
@@ -364,7 +365,6 @@ def emb_lsh_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     dcg = graded.groupBy("query_id").agg(
         (F.sum("t9").cast("double") / 1e9).alias("dcg")
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return dcg.select(
         "query_id",
         q6(F.col("dcg")).alias("dcg_q6"),
@@ -1552,7 +1552,6 @@ def emb_diversity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mn = (F.col("sn").cast("double") / F.col("nv")) / F.lit(1e9)
     msq = (F.col("ssq").cast("double") / F.col("nv")) / F.lit(1e12)
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (
         agg_v.crossJoin(F.broadcast(agg_n))
         .select(

@@ -19,6 +19,7 @@ from ..operators import (  # noqa: F401
     ticks,
 )
 from ..functions import detmath, exactagg
+from ..functions.scalars import q6
 from ._base import _register, _td
 
 _CS_DEN = 3.0 - 2.0 * math.sqrt(2.0)  # Corwin-Schultz denominator
@@ -668,7 +669,6 @@ def ticks_intraday_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("symbol")
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return g.select(
         "symbol",
         "hour_of_day",
@@ -1572,10 +1572,9 @@ def ticks_tz_spread_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = ticks.with_spread(t)
     t = ticks.shift_timezone(t, hours=2)
 
-    def q6(c: str):
-        return (F.floor(F.col(c) * 1e6 + F.lit(0.5)) / 1e6).alias(c)
-
-    return t.select("event_id", "ts", q6("bid"), q6("ask"), q6("spread"))
+    return t.select(
+        "event_id", "ts", *(q6(F.col(c)).alias(c) for c in ("bid", "ask", "spread"))
+    )
 
 
 @_register(
@@ -1724,7 +1723,6 @@ def events_markov_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         (-(F.sum("t9").cast("double") / F.lit(1e9))).alias("h"),
     )
     fin = agg.withColumn("hmax", detmath.det_log2_int("n_states"))
-    q6 = lambda col: F.floor(col * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return fin.select(
         F.col("n_transitions").cast("bigint").alias("n_transitions"),
         F.col("n_states").cast("int").alias("n_states"),
@@ -1848,7 +1846,6 @@ def events_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = stats.robust_outliers(
         ev, value_col="value", by=("event_type",), z_threshold=3.5
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return scored.groupBy("event_type").agg(
         F.count("value").alias("n"),
         q6(F.any_value("med")).alias("med_q6"),
@@ -2071,7 +2068,6 @@ def events_cusum_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
         t, ts_col="ts", value_col="value", by=("symbol",),
         tiebreak_cols=("event_id",), k=0.5, h=3.0,
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return scored.groupBy("symbol").agg(
         F.count_if(F.col("alarm_up")).alias("n_alarms_up"),
         F.count_if(F.col("alarm_dn")).alias("n_alarms_dn"),
@@ -2206,7 +2202,6 @@ def events_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.unix_millis("t1") - F.unix_millis("t0")) / 1000.0).alias("dur_s"),
     )
     nv = v.agg(F.count(F.lit(1)).alias("n_viewers"))
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (
         d.crossJoin(F.broadcast(nv))
         .groupBy("n_viewers")
@@ -2295,7 +2290,6 @@ def events_inter_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gap_s",
         (F.unix_millis("ts") - F.unix_millis(F.lag("ts").over(w))) / 1000.0,
     ).filter(F.col("gap_s").isNotNull())
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return g.groupBy("symbol").agg(
         F.count("gap_s").alias("n_gaps"),
         q6(
@@ -2412,7 +2406,6 @@ def ticks_return_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("r2", F.lag("r0", 2).over(w))
         .withColumn("r3", F.lag("r0", 3).over(w))
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     agg = rl.groupBy("symbol").agg(
         F.count("r0").alias("n_returns"),
         *stats.exact_corr_sums(F.col("r0"), F.col("r1"), "l1"),
@@ -2664,7 +2657,6 @@ def ticks_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k in ks
         ],
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     hurst = F.when(
         F.col("__y1").isNotNull()
         & F.col("__y2").isNotNull()
@@ -2808,7 +2800,6 @@ def ticks_corwin_schultz(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("__ea", detmath.det_exp("__alpha"))
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     spread = 2.0 * (F.col("__ea") - 1.0) / (1.0 + F.col("__ea"))
     return staged.select(
         "symbol",
@@ -3006,7 +2997,6 @@ def ticks_tsrv(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rv_avg"
         ),
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     n1 = F.col("n1")
     tsrv = F.when(
         n1 > 4,
@@ -3185,7 +3175,6 @@ def ticks_yang_zhang(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("qc") - F.col("mc") * F.col("mc")) * n / (n - 1)).alias("vc"),
         (F.lit(0.34) / (F.lit(1.34) + (n + 1) / (n - 1))).alias("k"),
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return v.select(
         "symbol",
         F.col("n").cast("long").alias("n_days"),
@@ -3305,7 +3294,6 @@ def events_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dau = d.groupBy("month", "day").agg(F.countDistinct("user_id").alias("dau"))
     mau = d.groupBy("month").agg(F.countDistinct("user_id").alias("mau"))
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (
         dau.join(mau, "month")
         .groupBy(F.col("month").cast("date").alias("month"), "mau")
@@ -3468,7 +3456,6 @@ def events_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return s.select(
         F.col("n").alias("n_ranks"),
         q6(slope).alias("zipf_slope_q6"),
@@ -3701,7 +3688,6 @@ def events_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
             for e in stats.exact_corr_sums(F.col("r0"), F.col(f"r{k}"), f"l{k}")
         ],
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     rh = agg.select(
         "symbol",
         "n_returns",
@@ -5582,9 +5568,6 @@ def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("n_c_post").isNotNull()
     )
 
-    def q6(c):
-        return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
-
     return wide.select(
         "n_t_pre",
         "n_t_post",
@@ -5765,9 +5748,6 @@ def events_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("xd"),
         )
     )
-
-    def q6(c):
-        return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
     return f.select(
         "n_t",
@@ -6908,9 +6888,6 @@ def events_jackknife_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         * ((F.col("ss").cast("double") / (bd * bd)) / F.lit(1e18))
     )
 
-    def q6(c):
-        return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
-
     return sq.filter(F.col("b") >= 2).select(
         F.col("b").alias("n_buckets"),
         q6(theta).alias("theta_q6"),
@@ -7011,9 +6988,6 @@ def ticks_realized_semivariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("spos") / 1e4).alias("rs_pos"),
         ((F.col("spos") + F.col("sneg")) / 1e4).alias("rv"),
     )
-
-    def q6(c):
-        return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
     return m.select(
         "symbol",
@@ -7251,9 +7225,6 @@ def events_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     nad = F.col("n_a").cast("double")
     nbd = (F.col("n") - F.col("n_a")).cast("double")
 
-    def q6(col):
-        return F.floor(col * 1e6 + F.lit(0.5)) / 1e6
-
     dq6 = q6(F.col("d_num").cast("double") / (nad * nbd))
     crit_q6 = q6(F.lit(1.3580986393225505) * F.sqrt((nad + nbd) / (nad * nbd)))
     return s.filter((F.col("n_a") > 0) & ((F.col("n") - F.col("n_a")) > 0)).select(
@@ -7360,9 +7331,6 @@ def events_winsorized_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wa = F.col("ws_a").cast("double") / F.col("n_a").cast("double")
     wb = F.col("ws_b").cast("double") / F.col("n_b").cast("double")
-
-    def q6(col):
-        return F.floor(col * 1e6 + F.lit(0.5)) / 1e6
 
     return s.filter((F.col("n_a") > 0) & (F.col("n_b") > 0)).select(
         "n_a",
@@ -8997,7 +8965,6 @@ def events_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("lo_or", F.col("__lnor") - F.lit(1.959964) * F.col("se"))
         .withColumn("hi_or", F.col("__lnor") + F.lit(1.959964) * F.col("se"))
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     lo = q6(detmath.det_exp("lo_or"))
     hi = q6(detmath.det_exp("hi_or"))
     return f.select(

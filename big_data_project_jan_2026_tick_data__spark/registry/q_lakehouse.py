@@ -680,6 +680,8 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # contiguous range thresholds: 2 scalars collected, batch bounds are
     # data-independent of partitioning
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
+    if lo is None:  # empty corpus: nothing to ingest
+        return docs.select("doc_id", "lang", "source")
     t1 = lo + (hi - lo) // 3
     t2 = lo + 2 * (hi - lo) // 3
     with tempfile.TemporaryDirectory() as d:

@@ -17,6 +17,7 @@ from ..operators import (  # noqa: F401
     ticks,
 )
 from ..functions import detmath
+from ..functions.scalars import q6
 from ._base import _register, _td
 
 
@@ -733,13 +734,12 @@ def streaming_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         df = _materialized(spark, agg, "reg_stream_sess")
 
-    def q6(c: str):
-        return (F.floor(F.col(c) * 1e6 + F.lit(0.5)) / 1e6).alias(c)
-
     return df.select(
         "symbol", "window_start", "window_end", "n_ticks",
-        q6("min_bid"), q6("max_bid"), q6("avg_bid"),
-        q6("min_ask"), q6("max_ask"), q6("avg_ask"),
+        *(
+            q6(F.col(c)).alias(c)
+            for c in ("min_bid", "max_bid", "avg_bid", "min_ask", "max_ask", "avg_ask")
+        ),
     )
 
 
@@ -854,14 +854,11 @@ def approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tol = (F.col("vmax") - F.col("vmin")) * 0.05 + F.lit(1e-9)
 
-    def q6(c: str):
-        return (F.floor(F.col(c) * 1e6 + F.lit(0.5)) / 1e6).alias(c)
-
     return agg.select(
         "event_type",
         "exact_users",
-        q6("exact_median"),
-        q6("exact_p95"),
+        q6(F.col("exact_median")).alias("exact_median"),
+        q6(F.col("exact_p95")).alias("exact_p95"),
         (
             F.abs(F.col("approx_users") - F.col("exact_users"))
             <= 0.15 * F.greatest(F.col("exact_users"), F.lit(1))
@@ -1746,7 +1743,6 @@ def ml_purged_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.abs(F.col("v4") - F.col("mu4"))).alias("serr"),
         )
     )
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return te.select(
         "fold",
         "n_train",

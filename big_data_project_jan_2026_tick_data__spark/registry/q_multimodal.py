@@ -15,6 +15,7 @@ from ..operators import (  # noqa: F401
     text,
     ticks,
 )
+from ..functions.scalars import q6
 from ._base import _register, _td
 
 
@@ -181,13 +182,6 @@ def multimodal_frame_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q6_col(c) -> "F.Column":
-    """floor-half-up 6dp on a float32 feature element, cast to double
-    first so Spark and the VALUES oracle quantize the identical IEEE
-    value."""
-    return F.floor(c.cast("double") * 1e6 + F.lit(0.5)) / 1e6
-
-
 def _multimodal_features_rows_oracle(n: int = 64) -> str:
     """Per-ELEMENT expected values: every (media_id, pos, feature) scalar
     recomputed locally — the raw-query oracle (digest twin collapses the
@@ -259,7 +253,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "kind",
         "n_bytes",
         "pos",
-        _q6_col(F.col("fv")).alias("feat_q"),
+        q6(F.col("fv").cast("double")).alias("feat_q"),
     )
 
 
@@ -282,7 +276,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "frame_idx",
         "frame_ms",
         "pos",
-        _q6_col(F.col("fv")).alias("feat_q"),
+        q6(F.col("fv").cast("double")).alias("feat_q"),
     )
 
 

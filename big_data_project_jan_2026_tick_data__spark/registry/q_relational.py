@@ -18,6 +18,7 @@ from ..operators import (  # noqa: F401
 )
 from ..functions import detmath
 from ..functions.exactagg import exact_avg, exact_avg_sql, exact_sum, exact_sum_sql
+from ..functions.scalars import q6
 from ._base import _register, _td
 
 # Shorthand for the oracle f-strings: exact integer-grid sums/means of
@@ -1712,7 +1713,6 @@ def orders_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("n_orders"), F.lit(0)).alias("n_orders"),
     )
     w = Window.orderBy("month")
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     growth = lambda n: F.when(  # noqa: E731
         F.lag("cents", n).over(w) > 0,
         F.col("cents") / F.lag("cents", n).over(w) - 1,
@@ -1918,7 +1918,6 @@ def supplier_return_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     ret_cents = F.floor(
         F.coalesce(exact_sum(F.when(ret, rev), 4), F.lit(0.0)) * 100 + F.lit(0.5)
     ).cast("long")
-    q6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (
         li.groupBy("l_suppkey")
         .agg(
@@ -2444,9 +2443,6 @@ def orders_forecast_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def q6(c):
-        return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
     mean_yoy = F.col("s").cast("double") / F.col("n")
     return (
         basis.crossJoin(F.broadcast(st))
@@ -2529,9 +2525,6 @@ def orders_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("moy")
         .agg(F.sum("dev12").alias("ds"), F.count("dev12").alias("dn"))
     )
-
-    def q6(c):
-        return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
     j = t.join(s, "moy", "left")
     return j.select(
@@ -2937,9 +2930,6 @@ def orders_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lsp = F.col("l_num").cast("double") / F.col("l_den").cast("double")
     psh = F.col("p_num").cast("double") / F.col("p_den").cast("double")
-
-    def q6(c):
-        return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
     return s.filter((F.col("l_den") > 0) & (F.col("p_den") > 0)).select(
         "yr",

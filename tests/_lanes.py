@@ -19,7 +19,10 @@ every headline query.
 
 from __future__ import annotations
 
+import functools
+import importlib.util
 import os
+import pathlib
 import zlib
 
 import pytest
@@ -33,6 +36,17 @@ slow_lane = pytest.mark.skipif(
     not EXHAUSTIVE,
     reason="slow test — runs in the SPARK_GRAFT_EXHAUSTIVE=1 lane",
 )
+
+
+@functools.cache
+def headline() -> tuple[str, ...]:
+    """``bench.HEADLINE``, the one written-out copy of the headline
+    suite, loaded from the bench script beside the tests."""
+    bench = pathlib.Path(__file__).resolve().parents[1] / "bench.py"
+    spec = importlib.util.spec_from_file_location("__bench_check__", str(bench))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return tuple(mod.HEADLINE)
 
 
 def lane_sample(names, keep=(), k: int = 3, m: int = 5):

@@ -167,3 +167,102 @@ def test_no_collect_createdataframe_round_trip():
             ):
                 offenders.append(f"{path.relative_to(PKG.parent)}:{node.lineno}")
     assert not offenders, "\n".join(offenders)
+
+
+def _headline_names(bench: pathlib.Path) -> set[str]:
+    for node in ast.parse(bench.read_text()).body:
+        if (
+            isinstance(node, ast.Assign)
+            and [ast.unparse(t) for t in node.targets] == ["HEADLINE"]
+        ):
+            return set(ast.literal_eval(node.value))
+    raise AssertionError("bench.py no longer defines HEADLINE")
+
+
+def test_headline_list_has_one_source():
+    """``bench.HEADLINE`` is the only written-out headline suite: no
+    other tracked script or test keeps a literal list or set of ten or
+    more of its names (a copy drifts the day the suite changes)."""
+    import subprocess
+
+    root = PKG.parent
+    names = _headline_names(root / "bench.py")
+    try:
+        tracked = subprocess.run(
+            ["git", "ls-files", "*.py"], cwd=root, capture_output=True,
+            text=True, check=True,
+        ).stdout.split()
+        files = [root / f for f in tracked]
+    except (OSError, subprocess.CalledProcessError):
+        files = list(root.rglob("*.py"))
+    offenders = []
+    for path in files:
+        if path.name == "bench.py" and path.parent == root or not path.exists():
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, (ast.List, ast.Set)):
+                held = {
+                    e.value for e in node.elts
+                    if isinstance(e, ast.Constant) and e.value in names
+                }
+                if len(held) >= 10:
+                    offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, "\n".join(offenders)
+
+
+def _is_lit(node, value) -> bool:
+    """``value`` as a bare constant or ``F.lit(value)`` (Column arithmetic
+    wraps a bare constant in the same Catalyst literal)."""
+    if isinstance(node, ast.Call) and ast.unparse(node.func) == "F.lit":
+        node = node.args[0] if len(node.args) == 1 else None
+    return isinstance(node, ast.Constant) and node.value == value
+
+
+def _q6_operand(node):
+    """``x`` when ``node`` is ``F.floor(x * 1e6 + F.lit(0.5)) / 1e6``."""
+    if not (isinstance(node, ast.BinOp) and isinstance(node.op, ast.Div)):
+        return None
+    floor = node.left
+    if not (
+        _is_lit(node.right, 1e6)
+        and isinstance(floor, ast.Call)
+        and ast.unparse(floor.func) == "F.floor"
+        and len(floor.args) == 1
+    ):
+        return None
+    add = floor.args[0]
+    if not (
+        isinstance(add, ast.BinOp)
+        and isinstance(add.op, ast.Add)
+        and _is_lit(add.right, 0.5)
+    ):
+        return None
+    mul = add.left
+    if not (
+        isinstance(mul, ast.BinOp)
+        and isinstance(mul.op, ast.Mult)
+        and _is_lit(mul.right, 1e6)
+    ):
+        return None
+    return mul.left
+
+
+def test_q6_snap_has_one_definition():
+    """``functions.scalars.q6`` is the only package function or lambda
+    that returns the 6-decimal floor-half-up snap of a name; every other
+    site calls it instead of keeping a local copy."""
+    sites = []
+    for path in _module_files():
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Return):
+                value = node.value
+            elif isinstance(node, ast.Lambda):
+                value = node.body
+            else:
+                continue
+            if isinstance(_q6_operand(value), ast.Name):
+                sites.append(f"{path.relative_to(PKG)}:{node.lineno}")
+    assert len(sites) == 1 and sites[0].startswith("functions/scalars.py:"), (
+        "\n".join(sites)
+    )

@@ -719,14 +719,9 @@ def test_scan_budget_covers_every_headline_query():
     must carry a pinned scan budget so a lineage-recompute regression
     (the r6 doc_lm_perplexity 5x re-read) fails CI instead of showing
     up as a bench slowdown."""
-    import importlib.util
-    from pathlib import Path
+    from _lanes import headline
 
-    bench = Path(__file__).resolve().parents[1] / "bench.py"
-    spec = importlib.util.spec_from_file_location("__bench_check__", str(bench))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    missing = [n for n in mod.HEADLINE if n not in _SCAN_BUDGETS]
+    missing = [n for n in headline() if n not in _SCAN_BUDGETS]
     assert missing == [], missing
 
 
@@ -760,26 +755,13 @@ def test_registry_wide_scan_audit(spark, sf_dir):
         "doc_incremental_simhash", "emb_incremental_near_dup",
         "doc_export_shards", "doc_jsonl_roundtrip", "stats_csv_roundtrip",
     }
-    from _lanes import lane_sample
+    from _lanes import headline, lane_sample
 
     # default lane audits a deterministic stratified ~60% of the
     # registry + every headline query (judge r12 #1: the full 331-query
     # audit alone cost 150 s); the FULL audit runs bit-identically under
     # SPARK_GRAFT_EXHAUSTIVE=1 (end-of-round proof lane)
-    audited = lane_sample(
-        sorted(QUERIES),
-        keep={
-            "tpch_q1", "tpch_q3_top10", "tpch_q5_region_revenue",
-            "tpch_q9_product_profit", "tpch_q21_sole_fault_supplier",
-            "ticks_downsample_1min", "ticks_ohlc_bars",
-            "ticks_rolling_stats", "ticks_daily_window_counts",
-            "ticks_sessionize", "window_lag_lead_rank",
-            "asof_purchase_last_click", "doc_exact_dedup",
-            "doc_minhash_pairs", "emb_lsh_topk", "emb_ivf_topk",
-            "doc_quality_scores", "doc_line_dedup", "doc_lm_perplexity",
-            "events_mann_whitney",
-        },
-    )
+    audited = lane_sample(sorted(QUERIES), keep=headline())
     over = {}
     for name in audited:
         if name in legit:
