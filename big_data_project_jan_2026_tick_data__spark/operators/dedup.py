@@ -254,6 +254,137 @@ def minhash_sig_sql(
     return f"transform(array({sh}), __mh_sh -> array({terms}))[0]"
 
 
+def _drop_hot(
+    sides: list[DataFrame], key_cols: list[str], cap: int | None
+) -> list[DataFrame]:
+    """The near-dup family's hot-key safety valve. A key (band bucket,
+    fingerprint segment, shingle, cluster) held by m entries yields m²/2
+    candidate pairs, so one degenerate key (boilerplate, empty docs,
+    identical vectors) turns the pair join quadratic at corpus scale.
+    Keys with more than ``cap`` entries are dropped from every side
+    before that join; with two sides (existing, new) the count runs over
+    their union — a key degenerate in the union is exactly as quadratic
+    as in a one-shot pass. Hot keys are few (≤ entries/cap), so they are
+    found with a map-side-combined count and broadcast-anti-joined away:
+    no sort and no extra shuffle of the entries. ``cap=None`` returns the
+    sides unchanged."""
+    if cap is None:
+        return sides
+    keys = sides[0].select(*key_cols)
+    for side in sides[1:]:
+        keys = keys.unionAll(side.select(*key_cols))
+    hot = (
+        keys.groupBy(*key_cols)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") > cap)
+        .select(*key_cols)
+    )
+    return [side.join(F.broadcast(hot), key_cols, "left_anti") for side in sides]
+
+
+def _bucket_pairs(
+    sides: list[DataFrame],
+    key_cols: list[str],
+    id_col: str,
+    carry: tuple[str, ...] = (),
+    multi_bucket: bool = False,
+) -> DataFrame:
+    """Candidate pairs by an equi-join on the bucket key — never a cross
+    product. One side self-joins with ``id_a < id_b`` (each unordered
+    pair once, never ``(x, x)``); two sides pair each existing row
+    (``id_a``) with each new row (``id_b``). ``carry`` columns come
+    through as ``<c>_a`` / ``<c>_b``. ``multi_bucket``: a row sits in
+    several buckets (LSH bands, pigeonhole segments), so a pair can meet
+    more than once and is deduplicated on ``(id_a, id_b)``; single-bucket
+    joins skip that shuffle."""
+    a, b = sides[0].alias("a"), sides[-1].alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in key_cols]
+    if len(sides) == 1:
+        on.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    pairs = a.join(b, on).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+    )
+    return pairs.dropDuplicates(["id_a", "id_b"]) if multi_bucket else pairs
+
+
+def _set_overlap(sides: list[DataFrame], cap: int | None) -> DataFrame:
+    """``(id_a, id_b, inter, sz_a, sz_b)`` for every pair of sets sharing
+    an element: ``sides`` are ``(id, g)`` frames with distinct elements
+    per id. Elements in more than ``cap`` sets are dropped from both the
+    intersections and the set sizes (the overlap is then exact over the
+    reduced universe — hot elements carry no similarity signal). Each
+    pruned side feeds its sizes and the element join, so it is
+    materialized once: one row per distinct element occurrence, the
+    volume the join shuffles anyway, instead of re-running the source
+    explode per branch."""
+    sides = [side.localCheckpoint() for side in _drop_hot(sides, ["g"], cap)]
+    sizes = [side.groupBy("id").agg(F.count(F.lit(1)).alias("sz")) for side in sides]
+    inter = (
+        _bucket_pairs(sides, ["g"], "id")
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    return inter.join(
+        sizes[0].select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")), "id_a"
+    ).join(sizes[-1].select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
+
+
+def _band_entries(
+    sigs: DataFrame, id_col: str, num_hashes: int, bands: int, portable: bool
+) -> DataFrame:
+    """(id, band_idx, band) LSH band entries of a signature column: each
+    band's signature slice as one xxhash64 (fixed width, no string per
+    band), or as its '-'-joined string (``portable`` — any SQL engine
+    re-derives the key). One SQL string, not bands × rows py4j calls."""
+    rows = num_hashes // bands
+    key = "concat_ws('-', {})" if portable else "xxhash64({})"
+    band_arr = ", ".join(
+        key.format(", ".join(f"sig[{b * rows + r}]" for r in range(rows)))
+        for b in range(bands)
+    )
+    return sigs.select(
+        F.col(id_col),
+        F.posexplode(F.expr(f"array({band_arr})")).alias("band_idx", "band"),
+    )
+
+
+def _lsh_pairs(
+    sigs: list[DataFrame],
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    cap: int | None,
+    portable: bool,
+) -> DataFrame:
+    """(id_a, id_b, est_jaccard) from one signature table (self-join) or
+    two (existing × new). The band join runs on SLIM entries (id, band
+    only): carrying the num_hashes-long signature through both sides
+    would multiply its width ~8×. Signatures are joined back only for the
+    far fewer candidate pairs — and a signature groupBy's output is
+    already hash-partitioned by id, so the join-back needs no new
+    exchange of the signature table."""
+    key = ["band_idx", "band"]
+    entries = [_band_entries(s, id_col, num_hashes, bands, portable) for s in sigs]
+    pairs = _bucket_pairs(
+        _drop_hot(entries, key, cap), key, id_col, multi_bucket=True
+    )
+    sa = sigs[0].select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
+    sb = sigs[-1].select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
+    # divisor must be an explicit DOUBLE: a bare `64.0` literal parses as
+    # DECIMAL in Spark SQL and would silently decimal-ize the estimate
+    est = F.expr(
+        "round(size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))"
+        f" / cast({num_hashes} as double), 6)"
+    )
+    return (
+        pairs.join(sa, "id_a")
+        .join(sb, "id_b")
+        .select("id_a", "id_b", est.alias("est_jaccard"))
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -275,16 +406,11 @@ def minhash_lsh_pairs(
     key here short of a 2^-64 collision); 'xxhash64' is the fastest
     non-portable path.
 
-    ``max_bucket_size`` is the hot-bucket safety valve for real corpora:
-    a degenerate band bucket holding m documents (boilerplate, empty
-    docs, templated text) contributes m²/2 candidate pairs, so one hot
-    bucket can turn the equi-join quadratic at 100 TB. Buckets larger
-    than the cap are dropped *before* the self-join (the count runs over
-    the same (band_idx, band_hash) partitioning the join shuffles on, so
-    AQE reuses the exchange). Near-dup semantics degrade gracefully —
+    ``max_bucket_size`` is the hot-bucket safety valve for real corpora
+    (:func:`_drop_hot`): band buckets larger than the cap are dropped
+    *before* the self-join. Near-dup semantics degrade gracefully —
     docs in a dropped bucket still pair through their other bands.
     ``None`` disables the cap."""
-    rows = num_hashes // bands
     # Materialize signatures once: they feed five plan branches (both
     # band-join sides, the hot-bucket count, and both signature
     # join-backs), and lineage recompute would re-run the corpus-sized
@@ -294,60 +420,9 @@ def minhash_lsh_pairs(
     sigs = minhash_signatures(
         df, text_col, id_col, num_hashes, shingle_n, token_hash
     ).localCheckpoint()
-    # variadic fixed-width hash of each band's signature slice — no
-    # string materialization per band; one SQL string, not 8×4 py4j ops
-    band_arr = ", ".join(
-        f"xxhash64({', '.join(f'sig[{b * rows + r}]' for r in range(rows))})"
-        for b in range(bands)
+    return _lsh_pairs(
+        [sigs], id_col, num_hashes, bands, max_bucket_size, portable=False
     )
-    band_entries = sigs.select(
-        F.col(id_col),
-        F.posexplode(F.expr(f"array({band_arr})")).alias("band_idx", "band_hash"),
-    )
-    if max_bucket_size is not None:
-        # hot buckets are rare by construction (≤ docs·bands/cap of them),
-        # so find them with a map-side-combined count and broadcast-ANTI-
-        # join them away — no sort, no extra shuffle of the entries
-        hot = (
-            band_entries.groupBy("band_idx", "band_hash")
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .filter(F.col("__bsz") > max_bucket_size)
-            .select("band_idx", "band_hash")
-        )
-        band_entries = band_entries.join(
-            F.broadcast(hot), ["band_idx", "band_hash"], "left_anti"
-        )
-    # Self-join on SLIM entries (id, band only): the band-bucket join is
-    # the dominant shuffle, and carrying the num_hashes-long signature
-    # array through both sides would multiply its width ~8×. Signatures
-    # are joined back only for the (far fewer) surviving candidate pairs
-    # — and sigs' groupBy output is already hash-partitioned by id, so
-    # the join-back needs no new exchange of the signature table.
-    a = band_entries.alias("a")
-    b = band_entries.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    pairs = pairs.join(sa, "id_a").join(sb, "id_b")
-    # divisor must be an explicit DOUBLE: a bare `64.0` literal parses as
-    # DECIMAL in Spark SQL and would silently decimal-ize the estimate
-    est = F.expr(
-        "round(size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))"
-        f" / cast({num_hashes} as double), 6)"
-    )
-    return pairs.select("id_a", "id_b", est.alias("est_jaccard"))
 
 
 def md5_minhash_signatures(
@@ -371,24 +446,6 @@ def md5_minhash_signatures(
     return _signatures_from_hashes(sh, id_col, num_hashes)
 
 
-def _md5_band_entries(
-    sigs: DataFrame, id_col: str, num_hashes: int, bands: int
-) -> DataFrame:
-    """(id, band_idx, band_key) LSH band entries from a signature column
-    ('-'-joined slice strings — portable band keys)."""
-    rows = num_hashes // bands
-    band_arr = ", ".join(
-        "concat_ws('-', {})".format(
-            ", ".join(f"sig[{b * rows + r}]" for r in range(rows))
-        )
-        for b in range(bands)
-    )
-    return sigs.select(
-        F.col(id_col),
-        F.posexplode(F.expr(f"array({band_arr})")).alias("band_idx", "band_key"),
-    )
-
-
 def incremental_minhash_pairs(
     existing_sigs: DataFrame,
     batch_sigs: DataFrame,
@@ -410,45 +467,11 @@ def incremental_minhash_pairs(
     degenerate in the union is exactly as quadratic as in the one-shot
     pipeline) and drops them before the join, same safety valve as the
     one-shot path. Returns (id_existing, id_new, est_jaccard)."""
-    e = _md5_band_entries(existing_sigs, id_col, num_hashes, bands)
-    b = _md5_band_entries(batch_sigs, id_col, num_hashes, bands)
-    if max_bucket_size is not None:
-        combined = e.select("band_idx", "band_key").unionAll(
-            b.select("band_idx", "band_key")
-        )
-        hot = (
-            combined.groupBy("band_idx", "band_key")
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .filter(F.col("__bsz") > max_bucket_size)
-            .select("band_idx", "band_key")
-        )
-        e = e.join(F.broadcast(hot), ["band_idx", "band_key"], "left_anti")
-        b = b.join(F.broadcast(hot), ["band_idx", "band_key"], "left_anti")
-    pairs = (
-        e.alias("e")
-        .join(
-            b.alias("b"),
-            (F.col("e.band_idx") == F.col("b.band_idx"))
-            & (F.col("e.band_key") == F.col("b.band_key")),
-        )
-        .select(
-            F.col(f"e.{id_col}").alias("id_existing"),
-            F.col(f"b.{id_col}").alias("id_new"),
-        )
-        .dropDuplicates(["id_existing", "id_new"])
-    )
-    se = existing_sigs.select(
-        F.col(id_col).alias("id_existing"), F.col("sig").alias("sig_a")
-    )
-    sb = batch_sigs.select(F.col(id_col).alias("id_new"), F.col("sig").alias("sig_b"))
-    est = F.expr(
-        "round(size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))"
-        f" / cast({num_hashes} as double), 6)"
-    )
-    return (
-        pairs.join(se, "id_existing")
-        .join(sb, "id_new")
-        .select("id_existing", "id_new", est.alias("est_jaccard"))
+    return _lsh_pairs(
+        [existing_sigs, batch_sigs], id_col, num_hashes, bands, max_bucket_size,
+        portable=True,
+    ).select(
+        F.col("id_a").alias("id_existing"), F.col("id_b").alias("id_new"), "est_jaccard"
     )
 
 
@@ -474,41 +497,8 @@ def md5_minhash_lsh_pairs(
     sigs = md5_minhash_signatures(
         df, text_col, id_col, num_hashes, shingle_n
     ).localCheckpoint()
-    band_entries = _md5_band_entries(sigs, id_col, num_hashes, bands)
-    if max_bucket_size is not None:
-        hot = (
-            band_entries.groupBy("band_idx", "band_key")
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .filter(F.col("__bsz") > max_bucket_size)
-            .select("band_idx", "band_key")
-        )
-        band_entries = band_entries.join(
-            F.broadcast(hot), ["band_idx", "band_key"], "left_anti"
-        )
-    a = band_entries.alias("a")
-    b = band_entries.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    est = F.expr(
-        "round(size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))"
-        f" / cast({num_hashes} as double), 6)"
-    )
-    return (
-        pairs.join(sa, "id_a").join(sb, "id_b")
-        .select("id_a", "id_b", est.alias("est_jaccard"))
+    return _lsh_pairs(
+        [sigs], id_col, num_hashes, bands, max_bucket_size, portable=True
     )
 
 
@@ -535,40 +525,12 @@ def ngram_jaccard_pairs(
     anyway). ``None`` disables the cap."""
     sh = df.select(
         F.col(id_col).alias("id"),
-        F.explode(shingles(F.col(text_col), shingle_n)).alias("sh"),
+        F.explode(shingles(F.col(text_col), shingle_n)).alias("g"),
     )
-    if max_shingle_df is not None:
-        # hot shingles are few (≤ total/cap): map-side-combined count,
-        # then broadcast anti-join — no sort of the full shingle stream
-        hot = (
-            sh.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_shingle_df)
-            .select("sh")
-        )
-        sh = sh.join(F.broadcast(hot), "sh", "left_anti")
-    # the pruned shingle stream feeds three branches (sizes + both
-    # intersection-join sides); materialize it once — the storage is
-    # one (id, shingle) row per distinct shingle occurrence, the same
-    # volume the intersection join shuffles anyway, vs re-running the
-    # corpus normalize + explode per branch (scan-audit finding)
-    sh = sh.localCheckpoint()
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
-        sh.alias("a")
-        .join(sh.alias("b"), (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    jaccard = F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
     out = (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6
-            ),
-        )
+        _set_overlap([sh], max_shingle_df)
+        .withColumn("jaccard", F.round(jaccard, 6))
         .select("id_a", "id_b", "jaccard")
     )
     if threshold > 0:
@@ -813,46 +775,46 @@ def hamming_pairs(
     # pandas-UDF upstreams (the multimodal perceptual-hash path paid it
     # until the r12 sweep). #rows × 1-long — the cheapest frame in the
     # plan; callers no longer need their own call-site checkpoint.
-    fps = fps.localCheckpoint()
+    return _hamming_pairs(
+        [fps.localCheckpoint()], fp_col, id_col, max_hamming, blocks,
+        max_bucket_size, group_cols,
+    )
+
+
+def _hamming_pairs(
+    sides: list[DataFrame],
+    fp_col: str,
+    id_col: str,
+    max_hamming: int,
+    blocks: int,
+    cap: int | None,
+    group_cols: tuple[str, ...],
+) -> DataFrame:
+    """(id_a, id_b, hamming) of the pigeonhole segment join over one
+    fingerprint table (self-join) or two (existing × new)."""
     seg_bits = 64 // blocks
-    segs = fps.select(
-        F.col(id_col),
-        F.col(fp_col),
-        *[F.col(g) for g in group_cols],
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col(fp_col), i * seg_bits)
-                    .bitwiseAND(F.lit((1 << seg_bits) - 1).cast("long"))
-                    for i in range(blocks)
-                ]
-            )
-        ).alias("seg_idx", "seg"),
-    )
-    bucket_cols = [*group_cols, "seg_idx", "seg"]
-    if max_bucket_size is not None:
-        hot = (
-            segs.groupBy(*bucket_cols)
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .filter(F.col("__bsz") > max_bucket_size)
-            .select(*bucket_cols)
+    mask = F.lit((1 << seg_bits) - 1).cast("long")
+    segs = [
+        side.select(
+            F.col(id_col),
+            F.col(fp_col),
+            *[F.col(g) for g in group_cols],
+            F.posexplode(
+                F.array(
+                    *[
+                        F.shiftrightunsigned(F.col(fp_col), i * seg_bits).bitwiseAND(mask)
+                        for i in range(blocks)
+                    ]
+                )
+            ).alias("seg_idx", "seg"),
         )
-        segs = segs.join(F.broadcast(hot), bucket_cols, "left_anti")
-    cond = (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    for c in bucket_cols:
-        cond = (F.col(f"a.{c}") == F.col(f"b.{c}")) & cond
-    pairs = (
-        segs.alias("a")
-        .join(segs.alias("b"), cond)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{fp_col}").alias("fp_a"),
-            F.col(f"b.{fp_col}").alias("fp_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+        for side in sides
+    ]
+    key = [*group_cols, "seg_idx", "seg"]
+    pairs = _bucket_pairs(
+        _drop_hot(segs, key, cap), key, id_col, carry=(fp_col,), multi_bucket=True
     )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
+    hamming = F.bit_count(F.col(f"{fp_col}_a").bitwiseXOR(F.col(f"{fp_col}_b")))
     return (
         pairs.withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
@@ -879,55 +841,11 @@ def incremental_hamming_pairs(
     and equi-joins the stored ones. The hot-bucket cap counts segment
     entries across BOTH generations. Returns
     (id_existing, id_new, hamming ≤ max_hamming)."""
-    seg_bits = 64 // blocks
-
-    def segments(fps: DataFrame) -> DataFrame:
-        return fps.select(
-            F.col(id_col),
-            F.col(fp_col),
-            *[F.col(g) for g in group_cols],
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftrightunsigned(F.col(fp_col), i * seg_bits)
-                        .bitwiseAND(F.lit((1 << seg_bits) - 1).cast("long"))
-                        for i in range(blocks)
-                    ]
-                )
-            ).alias("seg_idx", "seg"),
-        )
-
-    e, b = segments(existing_fps), segments(batch_fps)
-    bucket_cols = [*group_cols, "seg_idx", "seg"]
-    if max_bucket_size is not None:
-        combined = e.select(*bucket_cols).unionAll(b.select(*bucket_cols))
-        hot = (
-            combined.groupBy(*bucket_cols)
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .filter(F.col("__bsz") > max_bucket_size)
-            .select(*bucket_cols)
-        )
-        e = e.join(F.broadcast(hot), bucket_cols, "left_anti")
-        b = b.join(F.broadcast(hot), bucket_cols, "left_anti")
-    cond = F.lit(True)
-    for c in bucket_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    pairs = (
-        e.alias("a")
-        .join(b.alias("b"), cond)
-        .select(
-            F.col(f"a.{id_col}").alias("id_existing"),
-            F.col(f"b.{id_col}").alias("id_new"),
-            F.col(f"a.{fp_col}").alias("fp_a"),
-            F.col(f"b.{fp_col}").alias("fp_b"),
-        )
-        .dropDuplicates(["id_existing", "id_new"])
-    )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return (
-        pairs.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_existing", "id_new", "hamming")
+    return _hamming_pairs(
+        [existing_fps, batch_fps], fp_col, id_col, max_hamming, blocks,
+        max_bucket_size, group_cols,
+    ).select(
+        F.col("id_a").alias("id_existing"), F.col("id_b").alias("id_new"), "hamming"
     )
 
 
@@ -1153,36 +1071,10 @@ def containment_pairs(
     # stream is set-semantic without an extra shuffle
     sh = df.select(
         F.col(id_col).alias("id"),
-        F.explode(shingles(F.col(text_col), shingle_n)).alias("sh"),
-    )
-    if max_shingle_df is not None:
-        hot = (
-            sh.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_shingle_df)
-            .select("sh")
-        )
-        sh = sh.join(F.broadcast(hot), "sh", "left_anti")
-    sh = sh.localCheckpoint()
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
-        sh.alias("a")
-        .join(
-            sh.alias("b"),
-            (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
+        F.explode(shingles(F.col(text_col), shingle_n)).alias("g"),
     )
     out = (
-        inter.join(
-            sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"),
-            "id_a",
-        )
-        .join(
-            sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"),
-            "id_b",
-        )
+        _set_overlap([sh], max_shingle_df)
         .withColumn("cont_a_q6", q6(F.col("inter") / F.col("sz_a")))
         .withColumn("cont_b_q6", q6(F.col("inter") / F.col("sz_b")))
     )

@@ -14,6 +14,9 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.scalars import q6
+from .dedup import _set_overlap
+
 
 def asof_join(
     left: DataFrame,
@@ -220,7 +223,7 @@ def fuzzy_string_link(
     top match per left row (Jaccard desc, right id asc). Returns
     (left_id, right_id, jaccard_q6[, match_rank]).
     """
-    def grams(df: DataFrame, id_col: str, s_col: str, out_id: str) -> DataFrame:
+    def grams(df: DataFrame, id_col: str, s_col: str) -> DataFrame:
         # empty keys would emit a single '' gram and link any two empty
         # records with jaccard 1.0 — drop them before gram generation
         df = df.filter(F.length(F.col(s_col)) > 0)
@@ -231,53 +234,17 @@ def fuzzy_string_link(
                 f"i -> substr({s_col}, i, {ngram}))"
             )
         )
-        return df.select(F.col(id_col).alias(out_id), F.explode(gs).alias("g"))
+        return df.select(F.col(id_col).alias("id"), F.explode(gs).alias("g"))
 
-    lg = grams(left, left_id, left_str, "__lid")
-    rg = grams(right, right_id, right_str, "__rid")
-    if max_gram_df is not None:
-        hot = (
-            lg.select("g").unionAll(rg.select("g"))
-            .groupBy("g")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_gram_df)
-            .select("g")
-        )
-        lg = lg.join(F.broadcast(hot), "g", "left_anti")
-        rg = rg.join(F.broadcast(hot), "g", "left_anti")
-    # each pruned gram stream feeds its size agg AND the intersection
-    # join (and fed the hot-gram count upstream) — materialize once so
-    # lineage recompute doesn't re-explode the source strings per
-    # branch (scan-audit finding); volume = one (id, gram) row per
-    # distinct gram, the same rows the intersection join shuffles
-    lg = lg.localCheckpoint()
-    rg = rg.localCheckpoint()
-    ls = lg.groupBy("__lid").agg(F.count(F.lit(1)).alias("__la"))
-    rs = rg.groupBy("__rid").agg(F.count(F.lit(1)).alias("__ra"))
-    inter = (
-        lg.join(rg, "g")
-        .groupBy("__lid", "__rid")
-        .agg(F.count(F.lit(1)).alias("__i"))
-    )
-    j = (
-        inter.join(ls, "__lid")
-        .join(rs, "__rid")
-        .withColumn(
-            "jaccard_q6",
-            F.floor(
-                F.col("__i")
-                / (F.col("__la") + F.col("__ra") - F.col("__i"))
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6,
-        )
+    sides = [grams(left, left_id, left_str), grams(right, right_id, right_str)]
+    jaccard = F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
+    out = (
+        _set_overlap(sides, max_gram_df)
+        .withColumn("jaccard_q6", q6(jaccard))
         .filter(F.col("jaccard_q6") >= threshold)
-    )
-    out = j.select(
-        F.col("__lid").alias(left_id),
-        F.col("__rid").alias(right_id),
-        "jaccard_q6",
+        .select(
+            F.col("id_a").alias(left_id), F.col("id_b").alias(right_id), "jaccard_q6"
+        )
     )
     if not best_only:
         return out

@@ -14,6 +14,8 @@ import json
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _bucket_pairs, _drop_hot
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -1150,35 +1152,40 @@ def semantic_dedup(
     asn = kmeans(
         df, k=k, iters=iters, id_col=id_col, vec_col=vec_col, return_vec=True
     ).select(F.col(id_col), "cluster", "vec")
-    if max_cluster_size is not None:
-        hot = (
-            asn.groupBy("cluster")
-            .agg(F.count(F.lit(1)).alias("__csz"))
-            .filter(F.col("__csz") > max_cluster_size)
-            .select("cluster")
-        )
-        asn = asn.join(F.broadcast(hot), "cluster", "left_anti")
+    (asn,) = _drop_hot([asn], ["cluster"], max_cluster_size)
     asn = asn.withColumn("n", norm(F.col("vec")))
-    return (
-        asn.alias("a")
-        .join(
-            asn.alias("b"),
-            (F.col("a.cluster") == F.col("b.cluster"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("a.vec"), F.col("b.vec")) / (F.col("a.n") * F.col("b.n")), 6
-            ),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.cluster").alias("cluster"),
-            "cosine",
-        )
+    return _cosine_pairs([asn], "cluster", id_col, threshold, ("cluster",)).select(
+        "id_a", "id_b", F.col("cluster_a").alias("cluster"), "cosine"
+    )
+
+
+def _lsh_buckets(
+    df: DataFrame, id_col: str, vec_col: str, dim: int, num_planes: int, seed: int
+) -> DataFrame:
+    """(id, vec, bucket, n): the hyperplane-signature bucket and norm of
+    each vector. The hyperplanes are a pure function of (plane_idx,
+    seed), so a stored corpus's buckets stay valid for every later
+    batch."""
+    v = df.select(F.col(id_col), _to_double(F.col(vec_col)).alias("vec"))
+    return v.withColumn(
+        "bucket", _signature_expr("vec", dim, num_planes, seed)
+    ).withColumn("n", norm(F.col("vec")))
+
+
+def _cosine_pairs(
+    sides: list[DataFrame],
+    key: str,
+    id_col: str,
+    threshold: float,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Pairs sharing ``key`` (one side: self-join, two: existing × new)
+    whose cosine, from the ``vec`` and norm ``n`` columns, reaches
+    ``threshold``: (id_a, id_b, <carry>_a/_b, …, cosine)."""
+    pairs = _bucket_pairs(sides, [key], id_col, carry=(*carry, "vec", "n"))
+    cosine = dot(F.col("vec_a"), F.col("vec_b")) / (F.col("n_a") * F.col("n_b"))
+    return pairs.withColumn("cosine", F.round(cosine, 6)).filter(
+        F.col("cosine") >= threshold
     )
 
 
@@ -1197,39 +1204,10 @@ def embedding_near_dup_pairs(
     ``max_bucket_size`` drops degenerate buckets (e.g. a corpus full of
     zero/identical vectors) before the quadratic self-join — same guard
     as the text-dedup operators; oracles mirror the cap in SQL."""
-    v = df.select(F.col(id_col), _to_double(F.col(vec_col)).alias("vec"))
-    v = v.withColumn(
-        "bucket", _signature_expr("vec", dim, num_planes, seed)
-    ).withColumn("n", norm(F.col("vec")))
-    if max_bucket_size is not None:
-        hot = (
-            v.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .filter(F.col("__bsz") > max_bucket_size)
-            .select("bucket")
-        )
-        v = v.join(F.broadcast(hot), "bucket", "left_anti")
-    pairs = (
-        v.alias("a")
-        .join(
-            v.alias("b"),
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("a.vec"), F.col("b.vec")) / (F.col("a.n") * F.col("b.n")), 6
-            ),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            "cosine",
-        )
-    )
-    return pairs
+    v = _lsh_buckets(df, id_col, vec_col, dim, num_planes, seed)
+    return _cosine_pairs(
+        _drop_hot([v], ["bucket"], max_bucket_size), "bucket", id_col, threshold
+    ).select("id_a", "id_b", "cosine")
 
 
 def incremental_embedding_near_dup(
@@ -1253,40 +1231,13 @@ def incremental_embedding_near_dup(
     self-join. The hot-bucket cap counts entries across both generations
     (union), mirroring the one-shot operator's guard. Returns
     (id_existing, id_new, cosine ≥ threshold)."""
-
-    def prep(df: DataFrame) -> DataFrame:
-        v = df.select(F.col(id_col), _to_double(F.col(vec_col)).alias("vec"))
-        return v.withColumn(
-            "bucket", _signature_expr("vec", dim, num_planes, seed)
-        ).withColumn("n", norm(F.col("vec")))
-
-    e, b = prep(existing), prep(batch)
-    if max_bucket_size is not None:
-        combined = e.select("bucket").unionAll(b.select("bucket"))
-        hot = (
-            combined.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .filter(F.col("__bsz") > max_bucket_size)
-            .select("bucket")
-        )
-        e = e.join(F.broadcast(hot), "bucket", "left_anti")
-        b = b.join(F.broadcast(hot), "bucket", "left_anti")
-    return (
-        e.alias("a")
-        .join(b.alias("b"), F.col("a.bucket") == F.col("b.bucket"))
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("a.vec"), F.col("b.vec")) / (F.col("a.n") * F.col("b.n")), 6
-            ),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select(
-            F.col(f"a.{id_col}").alias("id_existing"),
-            F.col(f"b.{id_col}").alias("id_new"),
-            "cosine",
-        )
-    )
+    sides = [
+        _lsh_buckets(side, id_col, vec_col, dim, num_planes, seed)
+        for side in (existing, batch)
+    ]
+    return _cosine_pairs(
+        _drop_hot(sides, ["bucket"], max_bucket_size), "bucket", id_col, threshold
+    ).select(F.col("id_a").alias("id_existing"), F.col("id_b").alias("id_new"), "cosine")
 
 
 def _exploded_dims(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:

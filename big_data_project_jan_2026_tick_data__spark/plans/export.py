@@ -60,7 +60,9 @@ def export_training_shards(
         partition_by=("shard_id",),
         max_records_per_file=max_records_per_file,
     )
-    return shard_manifest(spark.read.parquet(out_dir))
+    # read back with the written frame's schema: no inference job, and an
+    # empty export, which writes no shard directory, still reads back
+    return shard_manifest(spark.read.schema(out.schema).parquet(out_dir))
 
 
 def shard_manifest(shards: DataFrame) -> DataFrame:

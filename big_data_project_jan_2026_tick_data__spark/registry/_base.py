@@ -14,7 +14,10 @@ Operator keys map to SURVEY.md §2 inventory lines (noted per query).
 
 from __future__ import annotations
 
+import functools
+import os
 from collections.abc import Callable, Iterator, Mapping
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,6 +77,24 @@ ORACLE = _Oracles()
 ENV_GATED: set[str] = set()
 
 
+# the directory that holds the package
+_PKG_PARENT = str(Path(__file__).resolve().parents[2])
+
+
+def _workers_import_package(spark: SparkSession) -> None:
+    """Put the package's directory on the Python workers' path. A pandas
+    UDF of this package is unpickled inside a worker, which starts with
+    Spark's own path plus the process's ``PYTHONPATH`` only, so a driver
+    that found the package through its ``sys.path`` or working directory
+    would fail there with ``ModuleNotFoundError``. A UDF takes
+    ``SparkContext.environment`` when it is wrapped, which is why every
+    registry query runs this before it builds anything."""
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PKG_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([*paths, _PKG_PARENT])
+
+
 def _register(name: str, oracle: str | OracleBuilder | None = None):
     """Register ``fn`` as query ``name`` with its oracle SQL, or with a
     builder of it that ``ORACLE`` runs on first access."""
@@ -84,10 +105,16 @@ def _register(name: str, oracle: str | OracleBuilder | None = None):
         # fail loudly at import instead
         if name in QUERIES:
             raise ValueError(f"duplicate registry query name: {name!r}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+            _workers_import_package(spark)
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = query
         if oracle is not None:
             ORACLE._entries[name] = oracle
-        return fn
+        return query
 
     return deco
 

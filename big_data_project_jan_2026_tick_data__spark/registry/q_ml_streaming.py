@@ -1587,7 +1587,11 @@ def streaming_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 order_cols=["ts", "event_id"],
             )
             q.awaitTermination()
-            out = SnapshotTable(spark, f"{d}/tbl").read().select(
+            try:
+                final = SnapshotTable(spark, f"{d}/tbl").read()
+            except ValueError:  # an empty feed commits no batch
+                final = spark.createDataFrame([], keyed.schema)
+            out = final.select(
                 "user_id",
                 F.col("ts").alias("last_ts"),
                 F.col("event_id").alias("last_event_id"),

@@ -21,7 +21,6 @@ Structured Streaming job:
 
 from __future__ import annotations
 
-import os
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -493,71 +492,30 @@ def run_stream_to_memory(
     agg: DataFrame, query_name: str, output_mode: str = "append"
 ) -> "DataFrame":
     """Drive a streaming aggregate to completion against a memory sink
-    (test/smoke harness — processAllAvailable is synchronous).
-
-    ``SPARK_GRAFT_STATE_PARTITIONS`` (optional env): state-store
-    partition count for the stream. A stateful query creates ONE state
-    store per shuffle partition per stateful operator, and every
-    micro-batch pays that store lifecycle (load, commit, snapshot)
-    whether or not the partition holds keys — so state partitioning is
-    a throughput/latency knob independent of the session's batch
-    shuffle sizing. Spark pins it from ``spark.sql.shuffle.partitions``
-    AT STREAM START (it is fixed for the checkpoint's lifetime
-    thereafter), which is why this is applied here, bracketing the
-    synchronous start→stop window, and restored afterwards so batch
-    planning in the same session is untouched. Unset (the default) the
-    session value applies unchanged. Production sizing: match expected
-    state size (~100 MB-1 GB of state per partition) rather than core
-    count; for the availableNow replay harness both defaults are fine
-    because results are partition-count-independent (key-partitioned
-    stateful operators emit the same rows under any layout — covered by
-    the order-independence lane).
-
-    Single-threaded contract (advisor r12): the override mutates the
-    session-global ``spark.sql.shuffle.partitions`` for the start→stop
-    window, so a concurrent batch query on the same SparkSession would
-    silently plan with the overridden partition count. Callers (the
-    registry's ``_stream_to_local`` and the test harness) run streams
-    sequentially on the driver thread, matching the engine-wide
-    single-threaded driver model (see engine.CheckpointTracker)."""
-    spark = agg.sparkSession
-    # an empty value counts as unset
-    override = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS") or None
-    if override is not None:
-        try:
-            if int(override) <= 0:
-                raise ValueError
-        except ValueError:
-            raise ValueError(
-                "SPARK_GRAFT_STATE_PARTITIONS must be a positive integer, "
-                f"got {override!r}"
-            ) from None
-    prev = spark.conf.get("spark.sql.shuffle.partitions") if override else None
-    if override:
-        spark.conf.set("spark.sql.shuffle.partitions", override)
+    (test/smoke harness; it returns once the availableNow query ends). The
+    stream's state stores take the session's
+    ``spark.sql.shuffle.partitions``; results are partition-count-
+    independent (key-partitioned stateful operators emit the same rows
+    under any layout — covered by the order-independence lane)."""
+    q = (
+        agg.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(query_name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    # stop() in a finally (advisor r12): if the wait raises, an
+    # orphaned query would stay registered under query_name and
+    # block any retry with the same name. The wait itself is
+    # awaitTermination, not processAllAvailable: an availableNow
+    # query self-terminates only after its final no-data batch
+    # (which commits watermark-finalized append-mode windows),
+    # while processAllAvailable can return as soon as no INPUT is
+    # pending — stop() then races the finalization batch and can
+    # drop its rows (observed once as a suite-order flake in
+    # test_cusum_monitor_multi_batch_state_continuity).
     try:
-        q = (
-            agg.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(query_name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # stop() in a finally (advisor r12): if the wait raises, an
-        # orphaned query would stay registered under query_name and
-        # block any retry with the same name. The wait itself is
-        # awaitTermination, not processAllAvailable: an availableNow
-        # query self-terminates only after its final no-data batch
-        # (which commits watermark-finalized append-mode windows),
-        # while processAllAvailable can return as soon as no INPUT is
-        # pending — stop() then races the finalization batch and can
-        # drop its rows (observed once as a suite-order flake in
-        # test_cusum_monitor_multi_batch_state_continuity).
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+        q.awaitTermination()
     finally:
-        if override:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        q.stop()
     return agg.sparkSession.sql(f"SELECT * FROM {query_name}")

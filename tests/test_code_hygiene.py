@@ -266,3 +266,66 @@ def test_q6_snap_has_one_definition():
     assert len(sites) == 1 and sites[0].startswith("functions/scalars.py:"), (
         "\n".join(sites)
     )
+
+
+def _own_nodes(fn):
+    """Nodes of ``fn``'s body, not descending into nested defs."""
+    stack = list(fn.body)
+    while stack:
+        node = stack.pop()
+        yield node
+        stack.extend(
+            child for child in ast.iter_child_nodes(node)
+            if not isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda))
+        )
+
+
+def _builds_hot_key_cap(fn) -> bool:
+    """``fn`` counts entries per key (``.agg(F.count(...))``), keeps the
+    keys above a cap (``.filter(<x> > <cap>)``) and removes them with a
+    broadcast anti-join (``.join(F.broadcast(hot), ..., "left_anti")``)."""
+    calls = [
+        n for n in _own_nodes(fn)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+    ]
+    counts = any(
+        c.func.attr == "agg"
+        and any(ast.unparse(a).startswith("F.count(") for a in c.args)
+        for c in calls
+    )
+    above_cap = any(
+        c.func.attr == "filter"
+        and c.args
+        and isinstance(c.args[0], ast.Compare)
+        and isinstance(c.args[0].ops[0], ast.Gt)
+        for c in calls
+    )
+    anti = any(
+        c.func.attr == "join"
+        and c.args
+        and isinstance(c.args[0], ast.Call)
+        and ast.unparse(c.args[0].func) == "F.broadcast"
+        and any(
+            isinstance(a, ast.Constant) and a.value == "left_anti"
+            for a in [*c.args, *(k.value for k in c.keywords)]
+        )
+        for c in calls
+    )
+    return counts and above_cap and anti
+
+
+def test_hot_key_cap_has_one_definition():
+    """``operators.dedup._drop_hot`` is the only package function that
+    builds the near-dup family's hot-key cap (count per key → keep keys
+    above the cap → broadcast ``left_anti``); every capped pair join
+    calls it instead of keeping a local copy."""
+    sites = []
+    for path in _module_files():
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and _builds_hot_key_cap(node):
+                sites.append(f"{path.relative_to(PKG)}:{node.lineno} {node.name}")
+    assert len(sites) == 1 and sites[0].startswith("operators/dedup.py:"), (
+        "\n".join(sites)
+    )
+    assert sites[0].endswith(" _drop_hot")

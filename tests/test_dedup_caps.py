@@ -514,3 +514,77 @@ def test_survivorship_keeps_best_per_cluster(spark):
     assert out[2]["n_in_cluster"] == 3
     # singletons always survive
     assert out[4]["is_kept"] and out[5]["is_kept"]
+
+
+# ---------------------------------------------------------------------------
+# the shared capped bucket join behind the near-dup family
+
+
+def _pairs(df):
+    return sorted((r.id_a, r.id_b) for r in df.select("id_a", "id_b").collect())
+
+
+def test_drop_hot_counts_over_the_union_of_both_sides(spark):
+    """A bucket within the cap on each side but above it in the union
+    is as quadratic as a one-shot hot bucket: it leaves BOTH sides."""
+    existing = spark.createDataFrame(
+        [(i, "hot") for i in range(3)] + [(10, "cold")], "id long, k string"
+    )
+    new = spark.createDataFrame(
+        [(i, "hot") for i in range(3, 6)] + [(11, "cold")], "id long, k string"
+    )
+    kept_e, kept_n = dedup._drop_hot([existing, new], ["k"], 4)
+    assert [(r.id, r.k) for r in kept_e.collect()] == [(10, "cold")]
+    assert [(r.id, r.k) for r in kept_n.collect()] == [(11, "cold")]
+    # each side alone stays within the cap
+    assert dedup._drop_hot([existing], ["k"], 4)[0].count() == 4
+
+
+def test_drop_hot_without_cap_keeps_every_bucket(spark):
+    sides = [
+        spark.createDataFrame([(i, "hot") for i in range(50)], "id long, k string"),
+        spark.createDataFrame([(99, "hot")], "id long, k string"),
+    ]
+    kept = dedup._drop_hot(sides, ["k"], None)
+    assert [side.count() for side in kept] == [50, 1]
+    # a cap of zero drops every bucket
+    assert [side.count() for side in dedup._drop_hot(sides, ["k"], 0)] == [0, 0]
+
+
+def test_bucket_pairs_multi_bucket_pair_once(spark):
+    """Rows 1 and 2 share three bands (and row 3 shares one with 2): with
+    ``multi_bucket`` each pair comes out once, not once per band."""
+    entries = spark.createDataFrame(
+        [(1, 0, "x"), (1, 1, "y"), (1, 2, "z"),
+         (2, 0, "x"), (2, 1, "y"), (2, 2, "z"), (2, 3, "w"),
+         (3, 3, "w")],
+        "doc_id long, band_idx int, band string",
+    )
+    key = ["band_idx", "band"]
+    once = dedup._bucket_pairs([entries], key, "doc_id", multi_bucket=True)
+    assert _pairs(once) == [(1, 2), (2, 3)]
+    # the same for the two-sided (existing × new) join
+    new = entries.filter("doc_id = 2")
+    old = entries.filter("doc_id <> 2")
+    cross = dedup._bucket_pairs([old, new], key, "doc_id", multi_bucket=True)
+    assert _pairs(cross) == [(1, 2), (3, 2)]
+    # and through the public pigeonhole join: identical fingerprints
+    # share all four segments yet pair once
+    fps = spark.createDataFrame(
+        [(1, 0x123456789ABCDEF), (2, 0x123456789ABCDEF)], "id long, fp long"
+    )
+    ham = dedup.hamming_pairs(fps, fp_col="fp", id_col="id")
+    assert [tuple(r) for r in ham.collect()] == [(1, 2, 0)]
+
+
+def test_bucket_pairs_self_join_is_ordered_and_irreflexive(spark):
+    """A self-join emits each unordered pair once as (lower, higher):
+    never (x, x), never (b, a)."""
+    rows = spark.createDataFrame(
+        [(3, "k", 30.0), (1, "k", 10.0), (2, "k", 20.0), (4, "other", 40.0)],
+        "id long, bucket string, v double",
+    )
+    pairs = dedup._bucket_pairs([rows], ["bucket"], "id", carry=("v",))
+    got = sorted(tuple(r) for r in pairs.collect())
+    assert got == [(1, 2, 10.0, 20.0), (1, 3, 10.0, 30.0), (2, 3, 20.0, 30.0)]
+    assert pairs.columns == ["id_a", "id_b", "v_a", "v_b"]

@@ -136,6 +136,14 @@ def empty_sf_dir(sf_dir, tmp_path_factory):
         "emb_top_component",
         "emb_whitening_digest",
         "incremental_dedup",
+        "doc_export_shards",
+        "streaming_upsert_replay",
+        # the capped bucket join behind the near-dup family
+        "doc_md5_minhash_pairs",
+        "doc_incremental_minhash",
+        "doc_md5_simhash_pairs",
+        "emb_incremental_near_dup",
+        "part_fuzzy_link",
     ],
 )
 def test_kmeans_family_on_empty_embeddings(spark, sf_dir, empty_sf_dir, name):
@@ -143,7 +151,10 @@ def test_kmeans_family_on_empty_embeddings(spark, sf_dir, empty_sf_dir, name):
     the oracle's answer (calinski's 1-row n=0 digest, empty frames for
     the rest). k-means indexed a centroid per requested cluster and
     raised IndexError here, the whitening covariance raised KeyError on
-    its missing keys, and incremental_dedup split a NULL doc_id range."""
+    its missing keys, incremental_dedup split a NULL doc_id range, the
+    shard export inferred the schema of a directory with no shard in it,
+    and the streaming upsert read a snapshot table no batch had
+    committed to."""
     got = _assert_matches_oracle(spark, empty_sf_dir, name)
     assert got.schema.simpleString() == (
         QUERIES[name](spark, sf_dir).schema.simpleString()
@@ -216,6 +227,41 @@ def test_registry_import_builds_no_oracle():
     )
     assert res.returncode == 0, res.stderr[-2000:]
     assert res.stdout.strip() == "built on access"
+
+
+def test_entry_runs_pandas_udf_queries_from_any_directory(sf_dir, tmp_path):
+    """A driver that loads ``__spark_entry__.py`` by path, from another
+    working directory and with the repo only on its own ``sys.path``,
+    runs a pandas-UDF query: the Python workers import the package too."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    code = (
+        "import importlib.util, sys\n"
+        f"sys.path.insert(0, {str(root)!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        "spark = SparkSession.builder.master('local[1]')"
+        ".config('spark.ui.enabled', 'false').getOrCreate()\n"
+        "spec = importlib.util.spec_from_file_location("
+        f"'__spark_entry__', {str(root / '__spark_entry__.py')!r})\n"
+        "mod = importlib.util.module_from_spec(spec)\n"
+        "spec.loader.exec_module(mod)\n"
+        f"print(mod.queries()['multimodal_features'](spark, {sf_dir!r}).count())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert int(res.stdout.split()[-1]) > 0
 
 
 def test_oracle_builders_run_once_and_none_leaves_the_name_out():

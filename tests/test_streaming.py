@@ -1052,42 +1052,6 @@ def test_ph_monitor_multi_batch_bit_identical(spark, tmp_path):
     assert min(one) >= 20  # only the drift section alarms
 
 
-def test_state_partitions_env_applies_and_restores(spark, tick_dir, monkeypatch):
-    """SPARK_GRAFT_STATE_PARTITIONS: the stream runs its stateful
-    operators over the overridden partition count (state stores are
-    pinned from spark.sql.shuffle.partitions at stream start), emits
-    the SAME rows (key-partitioned stateful operators are
-    partition-count-independent), and the session's batch shuffle
-    setting is restored afterwards."""
-    stream = spark.readStream.schema(TICK_SCHEMA).parquet(tick_dir)
-    baseline = {
-        (r["symbol"], str(r["window_start"])): r["n_ticks"]
-        for r in run_stream_to_memory(
-            session_window_aggregate(stream), "sp_default_q"
-        ).collect()
-    }
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", "4")
-    out = run_stream_to_memory(session_window_aggregate(stream), "sp_four_q")
-    got = {
-        (r["symbol"], str(r["window_start"])): r["n_ticks"]
-        for r in out.collect()
-    }
-    assert got == baseline
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
-def test_state_partitions_env_empty_is_unset(spark, tick_dir, monkeypatch):
-    """An empty SPARK_GRAFT_STATE_PARTITIONS counts as unset: the stream
-    runs on the session's partition count instead of raising."""
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", "")
-    stream = spark.readStream.schema(TICK_SCHEMA).parquet(tick_dir)
-    out = run_stream_to_memory(session_window_aggregate(stream), "sp_empty_q")
-    assert out.count() > 0
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
 def test_replayed_events_resolve_the_events_schema_once(spark, sf_dir):
     """Streaming registry queries take the events file's raw schema from
     the registry's table cache: after the first replay in a session,
