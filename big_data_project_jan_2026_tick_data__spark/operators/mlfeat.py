@@ -1,10 +1,11 @@
 """ML featurization: session-window tensors, scaling, scoring.
 
 Re-expresses the reference's pandas featurization (`ML Model/Scripts/
-model.py:187-398`) as distributed DataFrame ops + ONE grouped pandas UDF
-(the tensor pad/resample — the only place per-group imperative logic is
-genuinely needed; SURVEY §2.10). Scaling stats and reconstruction-error
-statistics are plain aggregations.
+model.py:187-398`) as distributed DataFrame ops. The tensor pad/resample
+is one aggregate per window whose per-window logic is Catalyst
+higher-order functions (the ``collect_list`` + ``transform`` form of
+SURVEY §2.10), so building tensors starts no Python worker. Scaling
+stats and reconstruction-error statistics are plain aggregations.
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..engine import to_local
@@ -24,59 +25,60 @@ from .ticks import SESSION_WINDOWS, session_filter, with_spread
 
 WINDOW_SIZE = 600  # ticks per session-window tensor (model.py:20)
 
-TENSOR_SCHEMA = T.StructType(
-    [
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("window_id", T.StringType(), False),
-        T.StructField("original_tick_count", T.IntegerType(), False),
-        T.StructField("features", T.ArrayType(T.ArrayType(T.FloatType())), False),
-    ]
-)
-
-
-def with_window_id(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def window_id(ts_col: str = "ts") -> Column:
     """`{date}_{morning|afternoon}` composite window key (model.py:260-272):
     morning = first session window, afternoon = second."""
     ts = F.col(ts_col)
     session = F.when(F.hour(ts) < 12, "morning").otherwise("afternoon")
-    return df.withColumn(
-        "window_id", F.concat_ws("_", F.to_date(ts).cast("string"), session)
-    )
+    return F.concat_ws("_", F.to_date(ts).cast("string"), session)
 
 
-def _fill(values: np.ndarray) -> np.ndarray:
-    """ffill → bfill → 0 (model.py:227-231, 301-311)."""
-    return pd.DataFrame(values).ffill().bfill().fillna(0.0).to_numpy()
+def _spaced(i: str, n_points: str, span: str) -> str:
+    """SQL for round(i·span/(n_points-1)) with round-half-up in exact
+    integer arithmetic, ``(2·i·span + n_points-1) div (2(n_points-1))``,
+    and 0 for a single point: the endpoint-inclusive ``linspace`` index
+    of the reference without its float half-point ambiguity."""
+    d = f"({n_points} - 1)"
+    return f"CAST((2L * {i} * ({span}) + {d}) div greatest(2L * {d}, 1L) AS INT)"
 
 
-def _spaced_indices(n_points: int, span: int) -> np.ndarray:
-    """round(i·span/(n_points-1)) for i in 0..n_points-1 — linspace
-    endpoints-inclusive index spacing, computed in EXACT integer
-    arithmetic with round-half-up: ``(2·i·span + (n-1)) // (2(n-1))``.
-    Replaces ``np.linspace(...).round()`` (banker's rounding on floats),
-    whose half-point behavior is float-representation-dependent and not
-    reproducible in SQL — this formula is, so the tensor oracle can
-    re-derive identical indices."""
-    if n_points == 1:
-        return np.zeros(1, dtype=int)
-    d = n_points - 1
-    return np.array([(2 * i * span + d) // (2 * d) for i in range(n_points)])
+def _tensor_sql(rows: str, n_feats: int, n_target: int) -> str:
+    """SQL for the n_target × n_feats float tensor of one window's
+    sorted ``rows`` (an array of structs of ``ts`` and the feature array
+    ``v``, in which null cells are already NaN).
 
+    ``n ≥ n_target`` picks rows at evenly spaced indices; ``n <
+    n_target`` places every row at an evenly spaced slot (model.py:
+    296-315). Each feature column is then forward-filled, back-filled
+    and zero-filled on its own, NaN and ±inf counting as missing
+    (``abs(x) < inf`` is false for exactly those): each valid cell
+    repeats up to the next valid slot, so the fill is linear in
+    n_target.
 
-def _pad_resample(values: np.ndarray, n_target: int) -> np.ndarray:
-    """model.py:296-315 semantics: <n → place at evenly-spaced positions
-    then fill; >n → pick evenly-spaced indices; ==n → unchanged. NaNs are
-    filled in every branch (the reference scrubs before windowing)."""
-    n = len(values)
-    if n == n_target:
-        return _fill(values)
-    if n > n_target:
-        idx = _spaced_indices(n_target, n - 1)
-        return _fill(values[idx])
-    out = np.full((n_target, values.shape[1]), np.nan, dtype=np.float64)
-    pos = _spaced_indices(n, n_target - 1)
-    out[pos] = values
-    return _fill(out)
+    ``transform(array(x), b -> …)[0]`` binds ``x`` to ``b`` inside the
+    one expression. A computed array referenced from a lambda body
+    instead would be inlined there by the optimizer and evaluated again
+    for every element."""
+    t = n_target
+    n = "size(r)"
+    # (slot, features) of the rows that reach the tensor, in slot order
+    items = f"""transform(sequence(0, least({n}, {t}) - 1), i -> named_struct(
+        'slot', if({n} >= {t}, i, {_spaced("i", n, str(t - 1))}),
+        'v', r[if({n} >= {t}, {_spaced("i", str(t), f"{n} - 1")}, i)].v))"""
+    # column c: the first valid cell from slot 0, and every valid cell up
+    # to the next one (``get`` is null past the end: up to slot t); no
+    # valid cell leaves t nulls, which become 0
+    fill = f"""transform(array(filter(its, it -> abs(it.v[c]) < double('Infinity'))),
+        ok -> concat(
+          array_repeat(get(ok, 0).v[c], coalesce(get(ok, 0).slot, {t})),
+          flatten(transform(ok, (it, j) -> array_repeat(
+            it.v[c], coalesce(get(ok, j + 1).slot, {t}) - it.slot)))))[0]"""
+    cells = f"""transform(sequence(0, {t - 1}), s ->
+        transform(cols, col -> CAST(coalesce(col[s], 0D) AS FLOAT)))"""
+    return f"""transform(array({rows}), r ->
+      transform(array({items}), its ->
+        transform(array(transform(sequence(0, {n_feats - 1}), c -> {fill})),
+          cols -> {cells})[0])[0])[0]"""
 
 
 def window_tensors(
@@ -88,35 +90,25 @@ def window_tensors(
 ) -> DataFrame:
     """Per (symbol, window_id): the n_target × len(features) padded tensor.
 
-    Session filter + window id are Catalyst expressions; only the
-    pad/resample is pandas (applyInPandas per group — groups are ≤600
-    rows by construction, so batches stay tiny regardless of data scale;
-    parallelism = #(symbol, window_id) groups, which grows with the data).
+    Session filter and window id are Catalyst expressions, and so is
+    the tensor: one aggregate per (symbol, window_id) collects the
+    window's rows, sorts them on ``(ts, *features)`` with null and NaN
+    cells last (the order of a pandas sort, and a total order, so the
+    tensor does not depend on upstream partitioning), and builds the
+    tensor from them in its result expression (``_tensor_sql``). No
+    Python worker runs. One shuffle; parallelism = #(symbol, window_id)
+    groups, which grows with the data.
     """
     feats = list(feature_cols)
     base = session_filter(df, ts_col=ts_col, windows=windows, closed="both")
     if "spread" in feats and "spread" not in base.columns:
         base = with_spread(base)
-    base = with_window_id(base, ts_col)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        # tiebreak duplicate timestamps on the feature values themselves:
-        # pandas' stable sort would otherwise preserve Arrow batch order,
-        # which depends on upstream partitioning — nondeterministic output
-        pdf = pdf.sort_values([ts_col, *feats], kind="mergesort")
-        vals = pdf[feats].to_numpy(dtype=np.float64)
-        vals = np.where(np.isinf(vals), np.nan, vals)
-        tensor = _pad_resample(vals, n_target)
-        return pd.DataFrame(
-            {
-                "symbol": [pdf["symbol"].iloc[0]],
-                "window_id": [pdf["window_id"].iloc[0]],
-                "original_tick_count": [len(pdf)],
-                "features": [tensor.astype(np.float32).tolist()],
-            }
-        )
-
-    return base.groupBy("symbol", "window_id").applyInPandas(build, schema=TENSOR_SCHEMA)
+    cells = ", ".join(f"coalesce(CAST(`{f}` AS DOUBLE), double('NaN'))" for f in feats)
+    rows = f"array_sort(collect_list(named_struct('ts', `{ts_col}`, 'v', array({cells}))))"
+    return base.groupBy("symbol", window_id(ts_col).alias("window_id")).agg(
+        F.count(F.lit(1)).cast("int").alias("original_tick_count"),
+        F.expr(_tensor_sql(rows, len(feats), n_target)).alias("features"),
+    )
 
 
 def scaler_stats(

@@ -466,7 +466,7 @@ def scene_sample_rows(
     """(scene_idx, frame_idx, scene_len, feat_digest) for up to
     ``per_scene`` evenly-spaced frames of each detected scene — pure
     function shared by the kernel and the oracle. Spacing uses the
-    exact-integer round-half-up index formula (mlfeat._spaced_indices
+    exact-integer round-half-up index formula (the mlfeat._spaced
     convention): pick positions (2·i·(L−1) + (k−1)) // (2·(k−1)) for
     k>1, else position 0. One demux per payload: the frame list feeds
     BOTH the cut pass and the emitted-frame decode (advisor r8)."""

@@ -400,13 +400,6 @@ def emb_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_topk(emb, queries, k=10, nlist=16, nprobe=16)
 
 
-# Exploded ML window tensors re-derived fully in SQL: session filter,
-# window ids, (ts, features) total order, exact integer round-half-up
-# pick/place indices (mlfeat._spaced_indices), ffill/bfill padding, and
-# the float32 quantization of the ArrayType(FloatType) tensor cells.
-# Shared by the ml_window_tensors and ml_anomaly_scores_mean oracles.
-
-
 def _ivf_topk_oracle(
     nlist: int = 16, nprobe: int = 4, k: int = 10, dim: int = 64
 ) -> str:

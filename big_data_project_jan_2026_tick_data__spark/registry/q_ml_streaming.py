@@ -60,12 +60,21 @@ def _materialized(spark: SparkSession, streaming_df: DataFrame, name: str) -> Da
     rows, same schema, self-contained after the sink's temp view dies.
     The checkpoint stays persisted for the session; ``engine.to_local``
     is the handoff that retains nothing (Arrow both ways, a
-    ``LocalRelation``) and serves the small snapshot-read results."""
+    ``LocalRelation``) and serves the small snapshot-read results. Here
+    it was slower: on streaming_interval_join at sf0.1 (4-core host),
+    0.081 s against the checkpoint's 0.063 s for the pin itself (median
+    of 10 alternating pairs), and slower in 8 of 12 alternating
+    whole-query pairs."""
     from ..streaming.session_pipeline import run_stream_to_memory
 
     return run_stream_to_memory(streaming_df, name).localCheckpoint()
 
 
+# Exploded ML window tensors re-derived fully in SQL: session filter,
+# window ids, (ts, features) total order, exact integer round-half-up
+# pick/place indices (mlfeat._spaced), ffill/bfill padding, and the
+# float32 quantization of the ArrayType(FloatType) tensor cells. Shared
+# by every tensor consumer's oracle in this module.
 _TENSOR_ROWS_SQL = """
         WITH base AS (
           SELECT CAST(ts AS TIMESTAMP) AS ts,
@@ -130,11 +139,11 @@ _TENSOR_ROWS_SQL = """
 
 @_register("ml_window_tensors", _TENSOR_ROWS_SQL)
 def ml_window_tensors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.10 through the driver contract, FULLY oracled: the pandas
-    pad/resample tensor builder exploded back to scalar rows, and the
+    """§2.10 through the driver contract, FULLY oracled: the
+    pad/resample tensor aggregate exploded back to scalar rows, and the
     DuckDB oracle re-derives the entire path in SQL — session filter,
     window ids, (ts, features) total order, the exact integer
-    round-half-up pick/place indices (see mlfeat._spaced_indices),
+    round-half-up pick/place indices (see mlfeat._spaced),
     ffill/bfill padding, and the float32 quantization of the tensor
     cells (CAST(... AS FLOAT) AS DOUBLE mirrors the ArrayType(Float)
     storage)."""
@@ -267,7 +276,7 @@ def _pca_anomaly_oracle(dim: int = 3, iters: int = 16) -> str:
 @_register("ml_anomaly_scores", _pca_anomaly_oracle)
 def ml_anomaly_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's full ML lifecycle (SURVEY §3.3) as one plan:
-    featurize (window tensors via applyInPandas) → train (per-symbol
+    featurize (the window-tensor aggregate) → train (per-symbol
     top-PC linear autoencoder — exact-grid distributed moments + a
     fixed-order power iteration, mlfeat.fit_pca_power_det) → score
     (per-window reconstruction MSE on a 1e-9 integer grid, entirely
@@ -895,8 +904,8 @@ def approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ml_anomaly_scores_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The anomaly-scoring lifecycle with the 0-parameter mean
     reconstruction model — the one scoring path whose math is fully
-    SQL-expressible, so the WHOLE pipeline (pandas-UDF tensors →
-    reconstruction MSE → percentile thresholds → flags) gets an
+    SQL-expressible, so the WHOLE pipeline (window tensors →
+    pandas-UDF reconstruction MSE → percentile thresholds → flags) gets an
     independent DuckDB verdict. Mean-model MSE ≡ per-window average of
     the per-feature population variances; thresholds are interpolated
     percentiles (Spark ``percentile`` ≡ DuckDB ``quantile_cont``). The

@@ -386,7 +386,7 @@ def _multimodal_scene_samples_oracle(
 def multimodal_scene_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-scene frame sampling (r8): shot boundaries from the dHash
     scene detector, then up to 2 evenly-spaced frames per scene
-    (exact-integer round-half-up spacing — the mlfeat._spaced_indices
+    (exact-integer round-half-up spacing — the mlfeat._spaced
     convention), each decoded and reduced to the quantized feature
     digest. The sampling policy a video-pretraining pipeline uses so a
     1 s cutaway and a 40 s monologue both contribute representative

@@ -1,8 +1,11 @@
 """ML featurization: window tensors (FIXTURES.md §5 cases — exactly n,
-fewer (pad+fill), more (linspace downsample), leading nulls), scaler,
+fewer (pad+fill), more (linspace downsample), leading nulls — and a
+differential check against the numpy pad/resample oracle below), scaler,
 chronological split, reconstruction errors."""
 
 from __future__ import annotations
+
+import datetime as dt
 
 import numpy as np
 import pandas as pd
@@ -10,6 +13,54 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_project_jan_2026_tick_data__spark.operators import mlfeat, stats
+
+
+# -- numpy oracle of mlfeat.window_tensors (reference model.py:296-315) --
+
+
+def _fill(values: np.ndarray) -> np.ndarray:
+    """ffill → bfill → 0 per column (model.py:227-231, 301-311)."""
+    return pd.DataFrame(values).ffill().bfill().fillna(0.0).to_numpy()
+
+
+def _spaced_indices(n_points: int, span: int) -> np.ndarray:
+    """round(i·span/(n_points-1)) for i in 0..n_points-1 — linspace
+    endpoints-inclusive index spacing, computed in EXACT integer
+    arithmetic with round-half-up: ``(2·i·span + (n-1)) // (2(n-1))``.
+    Replaces ``np.linspace(...).round()`` (banker's rounding on floats),
+    whose half-point behavior is float-representation-dependent and not
+    reproducible in SQL — this formula is."""
+    if n_points == 1:
+        return np.zeros(1, dtype=int)
+    d = n_points - 1
+    return np.array([(2 * i * span + d) // (2 * d) for i in range(n_points)])
+
+
+def _pad_resample(values: np.ndarray, n_target: int) -> np.ndarray:
+    """<n → place at evenly-spaced positions then fill; >n → pick
+    evenly-spaced indices; ==n → unchanged. Missing cells are filled in
+    every branch (the reference scrubs before windowing)."""
+    n = len(values)
+    if n == n_target:
+        return _fill(values)
+    if n > n_target:
+        idx = _spaced_indices(n_target, n - 1)
+        return _fill(values[idx])
+    out = np.full((n_target, values.shape[1]), np.nan, dtype=np.float64)
+    pos = _spaced_indices(n, n_target - 1)
+    out[pos] = values
+    return _fill(out)
+
+
+def _oracle_tensor(rows, feats, n_target: int) -> np.ndarray:
+    """One window's float32 tensor from its (ts, *features) rows: a
+    stable sort on (ts, *features) with NaN and null last, ±inf →
+    missing, pad/resample + fill, float32."""
+    pdf = pd.DataFrame(rows, columns=["ts", *feats])
+    pdf = pdf.sort_values(["ts", *feats], kind="mergesort")
+    vals = pdf[feats].to_numpy(dtype=np.float64)
+    vals = np.where(np.isinf(vals), np.nan, vals)
+    return _pad_resample(vals, n_target).astype(np.float32)
 
 
 def _ticks(spark, n, day=5, h=7, m0=50, sym="US30", bid0=100.0, none_at=()):
@@ -101,7 +152,11 @@ def test_pca_reconstructor_matches_numpy_oracle(spark):
         for w in range(4):
             feats = x[w * 10 : (w + 1) * 10].astype(np.float32).tolist()
             rows.append((sym, f"w{w}", 10, feats))
-    tensors = spark.createDataFrame(rows, schema=mlfeat.TENSOR_SCHEMA)
+    tensors = spark.createDataFrame(
+        rows,
+        "symbol string, window_id string, original_tick_count int, "
+        "features array<array<float>>",
+    )
 
     model = mlfeat.fit_pca_reconstructor(tensors, dim=3, n_components=1)
     errs = {
@@ -157,10 +212,6 @@ def test_spaced_indices_properties():
     away from half-points (where numpy's banker's rounding is float-
     representation-dependent by design — the integer formula is the
     spec there)."""
-    from big_data_project_jan_2026_tick_data__spark.operators.mlfeat import (
-        _spaced_indices,
-    )
-
     for n_points in range(1, 70):
         for span in (0, 1, 5, 31, 32, 100, 599):
             idx = _spaced_indices(n_points, span)
@@ -176,6 +227,117 @@ def test_spaced_indices_properties():
                 frac_half = np.isclose(ls % 1, 0.5)
                 agree = ls.round().astype(int)[~frac_half]
                 assert (np.asarray(idx)[~frac_half] == agree).all()
+
+
+_FEATS = ["a", "b", "c"]
+_T0 = dt.datetime(2026, 1, 5, 7, 50)
+
+
+def _window_rows(rng, n, n_ts, cells):
+    """n rows of (ts, a, b, c) inside the 07:50-08:00 session: ts drawn
+    from n_ts distinct instants (so ties on ts are common) and every
+    cell drawn from ``cells`` (so ties on features are common too)."""
+    ts = [_T0 + dt.timedelta(milliseconds=int(t)) for t in rng.integers(0, n_ts, n)]
+    pick = rng.integers(0, len(cells), (n, len(_FEATS)))
+    return [(t, *[cells[j] for j in row]) for t, row in zip(ts, pick)]
+
+
+def _assert_matches_oracle(spark, windows, n_target):
+    """Every window of ``windows`` (symbol → rows) through
+    mlfeat.window_tensors in one job, each tensor equal to the oracle's
+    bit for bit, and its original_tick_count equal to the row count."""
+    data = [(sym, *r) for sym, rows in windows.items() for r in rows]
+    df = spark.createDataFrame(
+        data, "symbol string, ts timestamp, a double, b double, c double"
+    )
+    got = {
+        r["symbol"]: r
+        for r in mlfeat.window_tensors(
+            df, feature_cols=_FEATS, n_target=n_target
+        ).collect()
+    }
+    assert sorted(got) == sorted(windows)
+    for sym, rows in windows.items():
+        r = got[sym]
+        assert r["window_id"] == "2026-01-05_morning"
+        assert r["original_tick_count"] == len(rows)
+        want = _oracle_tensor(rows, _FEATS, n_target)
+        have = np.array(r["features"], dtype=np.float32)
+        assert have.shape == want.shape, sym
+        np.testing.assert_array_equal(have, want, err_msg=sym)
+
+
+_SPECIAL = [None, float("nan"), float("inf"), float("-inf")]
+
+
+def test_tensor_matches_oracle_on_missing_and_infinite_cells(spark):
+    """null, NaN, +inf and -inf cells are all missing, filled from
+    their neighbours; sizes around n_target (1, T-1, T, T+1, 2T+3)."""
+    rng = np.random.default_rng(11)
+    cells = [1.5, -2.25, 3.0, 0.0, *_SPECIAL]
+    t = 8
+    windows = {
+        f"n{n}_{k}": _window_rows(rng, n, 1000, cells)
+        for n in (1, 2, t - 1, t, t + 1, 2 * t + 3, 57)
+        for k in range(3)
+    }
+    _assert_matches_oracle(spark, windows, t)
+
+
+def test_tensor_ties_on_ts_break_on_features_nulls_last(spark):
+    """Many rows share a ts: the order falls to the feature values,
+    with null and NaN sorting after every number (-inf first, +inf
+    before them), as a pandas sort puts NaN last. Picks land on tied
+    rows, so a different tiebreak would change the tensor."""
+    rng = np.random.default_rng(12)
+    cells = [2.0, 1.0, -1.0, *_SPECIAL]
+    windows = {
+        f"w{k}": _window_rows(rng, n, 3, cells)
+        for k, n in enumerate((5, 9, 16, 40, 41, 90))
+    }
+    _assert_matches_oracle(spark, windows, 7)
+
+
+def test_tensor_single_slot_and_single_row(spark):
+    """n_target=1 keeps the first row in (ts, features) order; a
+    single row fills every slot of a wider tensor."""
+    rng = np.random.default_rng(13)
+    cells = [4.0, -4.0, *_SPECIAL]
+    windows = {
+        f"n{n}": _window_rows(rng, n, 50, cells) for n in (1, 2, 3, 30)
+    }
+    _assert_matches_oracle(spark, windows, 1)
+    _assert_matches_oracle(spark, {"one": windows["n1"]}, 5)
+
+
+def test_tensor_all_missing_column_is_zero(spark):
+    """A feature column with no valid cell in the window is all 0.0;
+    the other columns are unaffected."""
+    rows = [
+        (_T0 + dt.timedelta(seconds=i), 1.0 + i, None if i % 2 else float("nan"), 2.0)
+        for i in range(6)
+    ]
+    _assert_matches_oracle(spark, {"S": rows}, 4)
+    df = spark.createDataFrame(
+        [("S", *r) for r in rows],
+        "symbol string, ts timestamp, a double, b double, c double",
+    )
+    feats = np.array(
+        mlfeat.window_tensors(df, feature_cols=_FEATS, n_target=9).first()["features"]
+    )
+    assert (feats[:, 1] == 0.0).all() and (feats[:, 2] == 2.0).all()
+
+
+def test_tensor_full_window_size(spark):
+    """The operator's default WINDOW_SIZE with windows of about half and
+    about 1.2 times as many rows: placement, picks and the fill at
+    full width."""
+    rng = np.random.default_rng(14)
+    cells = [0.125, 7.0, -3.5, 1e6, *_SPECIAL]
+    windows = {
+        f"n{n}": _window_rows(rng, n, 500_000, cells) for n in (301, 700)
+    }
+    _assert_matches_oracle(spark, windows, mlfeat.WINDOW_SIZE)
 
 
 def test_purged_cv_folds_invariants(spark):

@@ -958,3 +958,18 @@ def test_to_local_matches_the_row_round_trip(spark):
             assert got.schema == frame.schema == row_path.schema
             assert canon(got) == canon(row_path)
     assert persistent_rdd_ids(spark) == before
+
+
+def test_window_tensors_run_no_python_and_one_shuffle(spark, sf_dir):
+    """ml_window_tensors builds its tensors in one aggregate of Catalyst
+    expressions: the executed plan holds no Python node and at most one
+    shuffle Exchange."""
+    df = QUERIES["ml_window_tensors"](spark, sf_dir)
+    assert df.collect()
+    # the adaptive plan prints its final plan above the initial one
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert "== Final Plan ==" in plan
+    for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "MapInPandas", "BatchEvalPython"):
+        assert node not in plan, node
+    assert _shuffles(plan) <= 1

@@ -144,6 +144,9 @@ def empty_sf_dir(sf_dir, tmp_path_factory):
         "doc_md5_simhash_pairs",
         "emb_incremental_near_dup",
         "part_fuzzy_link",
+        # the window-tensor aggregate
+        "ml_window_tensors",
+        "ml_anomaly_scores_mean",
     ],
 )
 def test_kmeans_family_on_empty_embeddings(spark, sf_dir, empty_sf_dir, name):
@@ -250,6 +253,43 @@ def test_entry_runs_pandas_udf_queries_from_any_directory(sf_dir, tmp_path):
         "mod = importlib.util.module_from_spec(spec)\n"
         "spec.loader.exec_module(mod)\n"
         f"print(mod.queries()['multimodal_features'](spark, {sf_dir!r}).count())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert int(res.stdout.split()[-1]) > 0
+
+
+def test_window_tensors_called_directly_from_any_directory(sf_dir, tmp_path):
+    """mlfeat.window_tensors called directly, not through the registry,
+    from another working directory and with the repo only on the
+    driver's ``sys.path``: no Python worker has to import the package."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    code = (
+        "import sys\n"
+        f"sys.path.insert(0, {str(root)!r})\n"
+        "from pyspark.sql import SparkSession, functions as F\n"
+        "from big_data_project_jan_2026_tick_data__spark.operators import mlfeat\n"
+        "from big_data_project_jan_2026_tick_data__spark.sources.io import read_events\n"
+        "spark = SparkSession.builder.master('local[1]')"
+        ".config('spark.ui.enabled', 'false').getOrCreate()\n"
+        f"ev = read_events(spark, {sf_dir + '/events.parquet'!r})\n"
+        "t = ev.select(F.lit('EVENTS').alias('symbol'), 'ts',"
+        " F.col('value').alias('bid'), (F.col('value') * 1.01).alias('ask'))\n"
+        "print(mlfeat.window_tensors(t, n_target=32,"
+        " windows=((7, 0, 12, 0), (13, 0, 18, 0))).count())\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     res = subprocess.run(
