@@ -19,8 +19,10 @@ defaults.
 from __future__ import annotations
 
 import os
+from typing import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Conf profile applied to every session. Each value is a plain string as
 # spark expects.
@@ -105,6 +107,40 @@ def to_local(df: DataFrame) -> DataFrame:
     inputs (a temp dir about to be removed) or that several plan
     branches would otherwise recompute."""
     return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
+
+
+def map_rows(
+    df: DataFrame,
+    cols: Sequence[str],
+    fn: Callable[..., Iterable[tuple]],
+    schema: StructType,
+) -> DataFrame:
+    """Run ``fn`` on every row of ``df`` in the Python workers and return
+    the rows it yields as a DataFrame of ``schema``.
+
+    ``fn`` takes the row's ``cols`` values as plain Python objects
+    (structs as dicts, binary as bytes, NULL as None) and returns zero or
+    more output rows, each a tuple in ``schema``'s field order. The rows
+    cross the JVM boundary as Arrow batches (``mapInArrow``), and the
+    declared schema types every output column, empty batches and NULLs
+    included, so no caller fixes dtypes. This is the package's one
+    Python-worker row map; :func:`to_local` is the driver-side Arrow
+    handoff."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    names = schema.names
+
+    def run(batches):
+        for batch in batches:
+            rows = zip(*(batch.column(c).to_pylist() for c in cols))
+            yield pa.RecordBatch.from_pylist(
+                [dict(zip(names, out)) for row in rows for out in fn(*row)],
+                schema=arrow_schema,
+            )
+
+    return df.mapInArrow(run, schema)
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:

@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..engine import map_rows
+
 # parameters.json "model" / "training" blocks
 HIDDEN_DIMS = (256, 128, 64, 32)
 LATENT_DIM = 16
@@ -326,6 +328,12 @@ def mse_seq(x: list[float], r: list[float]) -> float:
     return s / len(x)
 
 
+_ERR_SCHEMA = (
+    T.StructType().add("symbol", "string").add("window_id", "string")
+    .add("err", "double")
+)
+
+
 def score_errors_seq(tensors: DataFrame, model: TrainedAutoencoder) -> DataFrame:
     """(symbol, window_id, err) reconstruction errors through
     :func:`forward_seq` — the scoring kernel for value-oracled registry
@@ -336,36 +344,29 @@ def score_errors_seq(tensors: DataFrame, model: TrainedAutoencoder) -> DataFrame
     blocks = model.blocks
     models = model.models
 
-    def fn(it):
-        for pdf in it:
-            syms, wids, errs = [], [], []
-            for sym, wid, feats in zip(
-                pdf["symbol"], pdf["window_id"], pdf["features"]
-            ):
-                m = models.get(sym)
-                x = [float(v) for row in feats for v in row]
-                if m is None:
-                    # per-feature mean reconstruction (TrainedAutoencoder's
-                    # unknown-symbol fallback), sequential accumulation
-                    nf = len(feats[0])
-                    nt = len(feats)
-                    means = []
-                    for j in range(nf):
-                        acc = x[j]
-                        for t in range(1, nt):
-                            acc = acc + x[t * nf + j]
-                        means.append(acc / nt)
-                    r = [means[i % nf] for i in range(len(x))]
-                else:
-                    r = forward_seq(blocks, m[0], m[1], x)
-                syms.append(sym)
-                wids.append(wid)
-                errs.append(mse_seq(x, r))
-            yield pd.DataFrame(
-                {"symbol": syms, "window_id": wids, "err": errs}
-            )
+    def score(sym, wid, feats):
+        m = models.get(sym)
+        x = [v for row in feats for v in row]
+        if m is None:
+            # per-feature mean reconstruction (TrainedAutoencoder's
+            # unknown-symbol fallback), sequential accumulation
+            nf = len(feats[0])
+            nt = len(feats)
+            means = []
+            for j in range(nf):
+                acc = x[j]
+                for t in range(1, nt):
+                    acc = acc + x[t * nf + j]
+                means.append(acc / nt)
+            r = [means[i % nf] for i in range(len(x))]
+        else:
+            r = forward_seq(blocks, m[0], m[1], x)
+        return [(sym, wid, mse_seq(x, r))]
 
-    return tensors.mapInPandas(fn, "symbol string, window_id string, err double")
+    return map_rows(
+        tensors, ["symbol", "window_id", "features"], score, _ERR_SCHEMA
+    )
+
 
 
 # ---------------------------------------------------------------------------

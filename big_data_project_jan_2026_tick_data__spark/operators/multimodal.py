@@ -1,9 +1,11 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media payloads are opaque ``binary`` columns with a typed metadata struct;
-per-item decode / feature-extract / resize / frame-sample run as
-Arrow-batched pandas functions over ``mapInPandas`` (one batch per
-partition slice — never row-at-a-time).
+per-item decode / feature-extract / resize / frame-sample run as pure
+per-row Python functions behind ``engine.map_rows``, which hands the
+workers Arrow batches (``mapInArrow``) and types the rows they return
+with the declared schema. The oracles call the same pure functions
+driver-side.
 
 Decoding is REAL for the self-describing formats a pure-numpy
 environment can parse (see ``codecs.py``): binary P6 PPM images,
@@ -18,14 +20,13 @@ arbitrary blobs).
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F  # noqa: F401  (for meta structs)
 from pyspark.sql import types as T
 
+from ..engine import map_rows
 from . import codecs
 
 MEDIA_SCHEMA = T.StructType(
@@ -46,6 +47,13 @@ MEDIA_SCHEMA = T.StructType(
             ),
             True,
         ),
+    ]
+)
+
+_ID_PAYLOAD_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("payload", T.BinaryType(), False),
     ]
 )
 
@@ -123,33 +131,24 @@ def extract_features(
     payload_col: str = "payload",
     allow_hash_fallback: bool = False,
 ) -> DataFrame:
-    """Decode + featurize media payloads via mapInPandas (Arrow batches).
+    """Decode + featurize media payloads, one feature row per media row.
 
     Dispatches on ``meta.codec``: ppm / pcm16 / ppmseq decode for REAL
     (pure numpy, ``codecs.py``); anything else raises where an external
     codec would run, or falls back to content-hash features when
     ``allow_hash_fallback`` is set."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload, meta in zip(pdf[payload_col], pdf["meta"]):
-                codec = (meta or {}).get("codec") or ""
-                feats.append(
-                    _decode_features(payload or b"", codec, allow_hash_fallback)
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pdf[payload_col].map(
-                        lambda b: len(b) if b is not None else 0
-                    ),
-                    "features": pd.Series(feats, dtype="object"),
-                }
-            )
+    def features(mid, kind, payload, meta):
+        codec = (meta or {}).get("codec") or ""
+        payload = payload or b""
+        return [
+            (mid, kind, len(payload),
+             _decode_features(payload, codec, allow_hash_fallback))
+        ]
 
-    return df.mapInPandas(kernel, schema=_FEATURES_SCHEMA)
+    return map_rows(
+        df, ["media_id", "kind", payload_col, "meta"], features, _FEATURES_SCHEMA
+    )
 
 
 _FRAMES_SCHEMA = T.StructType(
@@ -171,43 +170,29 @@ def sample_frames(
     """Frame sampling for video payloads: demux the PSEQ container, pick
     the frame nearest each ``every_ms`` tick of the declared duration
     (capped at ``max_frames``), decode it and emit one row per sampled
-    frame — a cardinality-*increasing* mapInPandas kernel (n media rows
-    → Σ frames rows), the same batch shape an av/ffmpeg sampler
-    produces, with a real demux→decode per emitted frame."""
+    frame — a cardinality-*increasing* row map (n media rows → Σ frames
+    rows), the same batch shape an av/ffmpeg sampler produces, with a
+    real demux→decode per emitted frame."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "frame_idx": [], "frame_ms": [], "features": []}
-            vids = pdf[pdf["kind"] == "video"]
-            for _, row in vids.iterrows():
-                meta = row["meta"] or {}
-                dur = int(meta.get("duration_ms") or 0)
-                for i, t_ms, feats in plan_frame_samples(
-                    row[payload_col], dur, every_ms, max_frames
-                ):
-                    out["media_id"].append(row["media_id"])
-                    out["frame_idx"].append(i)
-                    out["frame_ms"].append(t_ms)
-                    out["features"].append(feats)
-            # explicit dtypes: an empty dict-of-lists defaults every
-            # column to float64, which Arrow can't cast to list<float>
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(out["media_id"], dtype="int64"),
-                    "frame_idx": pd.Series(out["frame_idx"], dtype="int32"),
-                    "frame_ms": pd.Series(out["frame_ms"], dtype="int64"),
-                    "features": pd.Series(out["features"], dtype="object"),
-                }
-            )
+    def frames(mid, kind, payload, meta):
+        if kind != "video":
+            return []
+        dur = int((meta or {}).get("duration_ms") or 0)
+        return [
+            (mid, *sample)
+            for sample in plan_frame_samples(payload, dur, every_ms, max_frames)
+        ]
 
-    return df.mapInPandas(kernel, schema=_FRAMES_SCHEMA)
+    return map_rows(
+        df, ["media_id", "kind", payload_col, "meta"], frames, _FRAMES_SCHEMA
+    )
 
 
 def plan_frame_samples(
     payload: bytes, duration_ms: int, every_ms: int, max_frames: int
 ) -> list[tuple[int, int, list[float]]]:
     """(frame_idx, frame_ms, features) for each sampled frame of one PSEQ
-    payload — pure function shared by the mapInPandas kernel and the
+    payload — pure function shared by :func:`sample_frames` and the
     driver-side oracle recomputation: pick the frame nearest each
     ``every_ms`` tick of the declared duration, capped at ``max_frames``,
     decode it, featurize."""
@@ -266,33 +251,20 @@ _PHASH_SCHEMA = T.StructType(
 
 
 def perceptual_hashes(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Perceptual fingerprints for media payloads via mapInPandas: ppm
-    images dHash their pixels, ppmseq videos dHash their first frame
-    (thumbnail semantics), pcm16 audio hashes its RMS-energy envelope;
-    unknown codecs yield NULL. Hashes from different kinds live in
+    """Perceptual fingerprints for media payloads (:func:`local_phash`
+    per row): ppm images dHash their pixels, ppmseq videos dHash their
+    first frame (thumbnail semantics), pcm16 audio hashes its RMS-energy
+    envelope; unknown codecs yield NULL. Hashes from different kinds live in
     different metric spaces — pair them with ``dedup.hamming_pairs(...,
     group_cols=("kind",))``. At 100 TB only (media_id, kind, phash)
     triples ever shuffle; payload bytes stay where they were decoded."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, kind, payload, meta in zip(
-                pdf["media_id"], pdf["kind"], pdf[payload_col], pdf["meta"]
-            ):
-                codec = (meta or {}).get("codec") or ""
-                if codec == "ppm":
-                    ph = _dhash(codecs.decode_ppm(payload))
-                elif codec == "ppmseq":
-                    ph = _dhash(codecs.decode_ppm(codecs.demux_ppmseq(payload)[0]))
-                elif codec == "pcm16":
-                    ph = _audio_envelope_hash(codecs.decode_wav(payload)[0])
-                else:
-                    ph = None
-                out.append((int(mid), kind, ph))
-            yield pd.DataFrame(out, columns=["media_id", "kind", "phash"])
+    def phash(mid, kind, payload, meta):
+        return [(mid, kind, local_phash(payload, (meta or {}).get("codec") or ""))]
 
-    return df.mapInPandas(kernel, schema=_PHASH_SCHEMA)
+    return map_rows(
+        df, ["media_id", "kind", payload_col, "meta"], phash, _PHASH_SCHEMA
+    )
 
 
 def synthetic_media_item(mid: int, seed: int = 7) -> tuple[str, bytes, tuple]:
@@ -331,21 +303,12 @@ def synthetic_media_item(mid: int, seed: int = 7) -> tuple[str, bytes, tuple]:
 def synthetic_media(spark, n: int = 64, seed: int = 7) -> DataFrame:
     """Deterministic synthetic media table in the REAL formats the
     decoders parse: P6 PPM images, RIFF/WAVE PCM16 audio, PSEQ frame
-    sequences for video. Generated distributively (mapInPandas over a
+    sequences for video. Generated distributively (a row map over a
     range — payload bytes never touch the driver)."""
-    base = spark.range(n).select(F.col("id").alias("media_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf["media_id"]:
-                kind, payload, meta = synthetic_media_item(int(mid), seed)
-                rows.append((int(mid), kind, payload, meta))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "meta"]
-            )
-
-    return base.mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return map_rows(
+        spark.range(n), ["id"],
+        lambda mid: [(mid, *synthetic_media_item(mid, seed))], MEDIA_SCHEMA,
+    )
 
 
 def synthetic_scene_video_item(mid: int, seed: int = 7) -> bytes:
@@ -371,23 +334,11 @@ def synthetic_scene_video_item(mid: int, seed: int = 7) -> bytes:
 def synthetic_scene_videos(spark, n: int = 32, seed: int = 7) -> DataFrame:
     """(media_id, payload) table of scene-structured PSEQ videos,
     generated distributively (payload bytes never touch the driver)."""
-    base = spark.range(n).select(F.col("id").alias("media_id"))
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-        ]
+    return map_rows(
+        spark.range(n), ["id"],
+        lambda mid: [(mid, synthetic_scene_video_item(mid, seed))],
+        _ID_PAYLOAD_SCHEMA,
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(mid), synthetic_scene_video_item(int(mid), seed))
-                for mid in pdf["media_id"]
-            ]
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return base.mapInPandas(gen, schema=out_schema)
 
 
 def _scene_cuts_from_frames(
@@ -414,8 +365,8 @@ def scene_cut_rows(
     payload: bytes, threshold: int
 ) -> list[tuple[int, int | None, bool]]:
     """(frame_idx, hamming-to-previous-frame-dHash, is_cut) per frame of
-    one PSEQ payload — pure function shared by the mapInPandas kernel
-    and the driver-side oracle recomputation. Frame 0 opens the first
+    one PSEQ payload — pure function shared by :func:`scene_cuts` and
+    the driver-side oracle recomputation. Frame 0 opens the first
     scene (hamming NULL, cut True); later frames cut when the dHash
     Hamming distance to the previous frame exceeds ``threshold``."""
     return _scene_cuts_from_frames(codecs.demux_ppmseq(payload or b""), threshold)
@@ -439,25 +390,16 @@ def scene_cuts(
     frame exceeds ``threshold`` bits — the scene segmentation step a
     video-pretraining pipeline runs before per-scene frame sampling
     (sampling per SCENE beats sampling per fixed tick when shots have
-    very different lengths). Cardinality-increasing mapInPandas (one
-    row per frame); at 100 TB only (media_id, frame_idx, int, bool)
-    rows ever leave the decode site — payload bytes stay put."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                for i, d, cut in scene_cut_rows(payload, threshold):
-                    rows.append((int(mid), i, d, cut))
-            out = pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "hamming_prev", "is_cut"]
-            )
-            out["media_id"] = out["media_id"].astype("int64")
-            out["frame_idx"] = out["frame_idx"].astype("int32")
-            out["hamming_prev"] = out["hamming_prev"].astype("object")
-            yield out
-
-    return df.mapInPandas(kernel, schema=_SCENE_SCHEMA)
+    very different lengths). Cardinality-increasing row map (one row
+    per frame); at 100 TB only (media_id, frame_idx, int, bool) rows
+    ever leave the decode site — payload bytes stay put."""
+    return map_rows(
+        df, ["media_id", payload_col],
+        lambda mid, payload: [
+            (mid, *r) for r in scene_cut_rows(payload, threshold)
+        ],
+        _SCENE_SCHEMA,
+    )
 
 
 def scene_sample_rows(
@@ -465,11 +407,12 @@ def scene_sample_rows(
 ) -> list[tuple[int, int, int, float]]:
     """(scene_idx, frame_idx, scene_len, feat_digest) for up to
     ``per_scene`` evenly-spaced frames of each detected scene — pure
-    function shared by the kernel and the oracle. Spacing uses the
-    exact-integer round-half-up index formula (the mlfeat._spaced
-    convention): pick positions (2·i·(L−1) + (k−1)) // (2·(k−1)) for
-    k>1, else position 0. One demux per payload: the frame list feeds
-    BOTH the cut pass and the emitted-frame decode (advisor r8)."""
+    function shared by :func:`scene_frame_samples` and the oracle.
+    Spacing uses the exact-integer round-half-up index formula (the
+    mlfeat._spaced convention): pick positions
+    (2·i·(L−1) + (k−1)) // (2·(k−1)) for k>1, else position 0. One
+    demux per payload: the frame list feeds BOTH the cut pass and the
+    emitted-frame decode (advisor r8)."""
     frames = codecs.demux_ppmseq(payload or b"")
     cuts = _scene_cuts_from_frames(frames, threshold)
     # group frame indices into scenes
@@ -493,11 +436,7 @@ def scene_sample_rows(
             seen.add(p)
             fi = idxs[p]
             feats = _image_features(codecs.decode_ppm(frames[fi]))
-            f32 = [float(np.float32(v)) for v in feats]
-            s = 0.0
-            for v in f32:
-                s += math.floor(v * 1e4 + 0.5) / 1e4
-            out.append((s_idx, fi, L, math.floor(s * 1e6 + 0.5) / 1e6))
+            out.append((s_idx, fi, L, feat_digest(feats)))
     return out
 
 
@@ -524,33 +463,17 @@ def scene_frame_samples(
     beats fixed-tick sampling when shots have very different lengths
     (a 1 s cutaway and a 40 s monologue both contribute representative
     frames instead of the tick grid oversampling the monologue).
-    Cardinality-increasing mapInPandas; ONE demux per payload, one
-    decode per frame for the dHash pass (cut detection needs every
-    frame's pixels by definition), plus one decode per EMITTED frame;
-    payload bytes never leave the executor."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                for s_idx, fi, sl, dig in scene_sample_rows(
-                    payload, threshold, per_scene
-                ):
-                    rows.append((int(mid), s_idx, fi, sl, dig))
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "scene_idx", "frame_idx", "scene_len",
-                    "feat_digest",
-                ],
-            )
-            out["media_id"] = out["media_id"].astype("int64")
-            for c in ("scene_idx", "frame_idx", "scene_len"):
-                out[c] = out[c].astype("int32")
-            out["feat_digest"] = out["feat_digest"].astype("float64")
-            yield out
-
-    return df.mapInPandas(kernel, schema=_SCENE_SAMPLE_SCHEMA)
+    Cardinality-increasing row map; ONE demux per payload, one decode
+    per frame for the dHash pass (cut detection needs every frame's
+    pixels by definition), plus one decode per EMITTED frame; payload
+    bytes never leave the executor."""
+    return map_rows(
+        df, ["media_id", payload_col],
+        lambda mid, payload: [
+            (mid, *r) for r in scene_sample_rows(payload, threshold, per_scene)
+        ],
+        _SCENE_SAMPLE_SCHEMA,
+    )
 
 
 def synthetic_speech_audio_item(mid: int, seed: int = 7) -> bytes:
@@ -581,36 +504,24 @@ def synthetic_speech_audio_item(mid: int, seed: int = 7) -> bytes:
 def synthetic_speech_audio(spark, n: int = 32, seed: int = 7) -> DataFrame:
     """(media_id, payload) table of speech-shaped WAV payloads,
     generated distributively."""
-    base = spark.range(n).select(F.col("id").alias("media_id"))
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-        ]
+    return map_rows(
+        spark.range(n), ["id"],
+        lambda mid: [(mid, synthetic_speech_audio_item(mid, seed))],
+        _ID_PAYLOAD_SCHEMA,
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(mid), synthetic_speech_audio_item(int(mid), seed))
-                for mid in pdf["media_id"]
-            ]
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return base.mapInPandas(gen, schema=out_schema)
 
 
 def active_segment_rows(
     payload: bytes, win_ms: int, k_mult: float
 ) -> list[tuple[int, int, int, int]]:
     """(segment_idx, start_ms, end_ms, n_windows) of the voice-active
-    segments of one WAV payload — pure function shared by the kernel
-    and the oracle. A window is ACTIVE when its integer mean-square
-    energy exceeds ``k_mult`` × the payload's global integer
-    mean-square (exact int arithmetic end to end: int16 squares summed
-    as Python ints, the threshold compare cross-multiplied so no
-    division or float ever happens); consecutive active windows merge
-    into segments."""
+    segments of one WAV payload — pure function shared by
+    :func:`active_audio_segments` and the oracle. A window is ACTIVE
+    when its integer mean-square energy exceeds ``k_mult`` × the
+    payload's global integer mean-square (exact int arithmetic end to
+    end: int16 squares summed as Python ints, the threshold compare
+    cross-multiplied so no division or float ever happens); consecutive
+    active windows merge into segments."""
     samples, sr = codecs.decode_wav(payload or b"")
     if len(samples) == 0:
         return []
@@ -673,33 +584,20 @@ def active_audio_segments(
     pretraining pipeline runs before transcription or chunking (drop
     silence, bound segment length). All-integer arithmetic (no float
     thresholds), so the segmentation is bit-identical everywhere.
-    Cardinality-increasing mapInPandas; only (id, idx, ms, ms, int)
-    rows leave the decode site."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                for s, a, b, nw in active_segment_rows(payload, win_ms, k_mult):
-                    rows.append((int(mid), s, a, b, nw))
-            out = pd.DataFrame(
-                rows,
-                columns=["media_id", "segment_idx", "start_ms", "end_ms",
-                         "n_windows"],
-            )
-            out["media_id"] = out["media_id"].astype("int64")
-            out["segment_idx"] = out["segment_idx"].astype("int32")
-            out["start_ms"] = out["start_ms"].astype("int64")
-            out["end_ms"] = out["end_ms"].astype("int64")
-            out["n_windows"] = out["n_windows"].astype("int32")
-            yield out
-
-    return df.mapInPandas(kernel, schema=_AUDIO_SEG_SCHEMA)
+    Cardinality-increasing row map; only (id, idx, ms, ms, int) rows
+    leave the decode site."""
+    return map_rows(
+        df, ["media_id", payload_col],
+        lambda mid, payload: [
+            (mid, *r) for r in active_segment_rows(payload, win_ms, k_mult)
+        ],
+        _AUDIO_SEG_SCHEMA,
+    )
 
 
 def local_phash(payload: bytes, codec: str) -> int | None:
-    """Driver-side recomputation of one perceptual hash (no Spark) —
-    oracle companion to :func:`perceptual_hashes`."""
+    """One payload's perceptual hash, or None for a codec without one —
+    the per-row function of :func:`perceptual_hashes` and its oracle."""
     if codec == "ppm":
         return _dhash(codecs.decode_ppm(payload))
     if codec == "ppmseq":
@@ -713,6 +611,17 @@ def local_features(payload: bytes, codec: str) -> list[float]:
     """Driver-side recomputation of one feature vector, quantized through
     float32 exactly as the ArrayType(FloatType) column stores it."""
     return [float(np.float32(v)) for v in _decode_features(payload, codec, False)]
+
+
+def feat_digest(feats: list[float]) -> float:
+    """One feature vector's digest as the SQL side computes it over the
+    stored float32 array: each element through float32, half-up to 4 dp,
+    summed left to right, the total half-up to 6 dp — identical doubles
+    in identical order on both sides."""
+    s = 0.0
+    for v in feats:
+        s += math.floor(float(np.float32(v)) * 1e4 + 0.5) / 1e4
+    return math.floor(s * 1e6 + 0.5) / 1e6
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -754,45 +663,20 @@ def resize_images(df: DataFrame, out_h: int, out_w: int) -> DataFrame:
     step before any fixed-input-size vision featurizer): images and
     every frame of PSEQ videos go through the real nearest-neighbor
     kernel (`codecs.resize_nearest`); audio rows pass through untouched
-    with ``resized=false``. Arrow-batched ``mapInPandas`` — payload
-    bytes move executor-side only, width/height metadata updated in
-    place. External-codec formats raise at the decode boundary like
-    :func:`extract_features` (reference `Data Preprocessing and
-    Cleaning` performs the equivalent per-file resize loop
-    single-node)."""
+    with ``resized=false``. A row map — payload bytes move executor-side
+    only, width/height metadata updated in place. External-codec
+    formats raise at the decode boundary like :func:`extract_features`
+    (reference `Data Preprocessing and Cleaning` performs the equivalent
+    per-file resize loop single-node)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_payloads, out_meta, flags = [], [], []
-            for payload, meta in zip(pdf["payload"], pdf["meta"]):
-                if meta is None:
-                    codec = ""
-                elif isinstance(meta, dict):
-                    codec = meta.get("codec") or ""
-                else:
-                    codec = meta[4] or ""
-                new_payload, did = _resize_payload(
-                    bytes(payload), codec, out_h, out_w
-                )
-                m = dict(meta) if isinstance(meta, dict) else {
-                    "width": meta[0],
-                    "height": meta[1],
-                    "sample_rate": meta[2],
-                    "duration_ms": meta[3],
-                    "codec": meta[4],
-                }
-                if did:
-                    m["width"], m["height"] = out_w, out_h
-                out_payloads.append(new_payload)
-                out_meta.append(m)
-                flags.append(did)
-            pdf = pdf.copy()
-            pdf["payload"] = out_payloads
-            pdf["meta"] = out_meta
-            pdf["resized"] = flags
-            yield pdf
+    def resize(mid, kind, payload, meta):
+        codec = (meta or {}).get("codec") or ""
+        new_payload, did = _resize_payload(payload, codec, out_h, out_w)
+        if did:
+            meta = {**meta, "width": out_w, "height": out_h}
+        return [(mid, kind, new_payload, meta, did)]
 
-    return df.mapInPandas(kernel, schema=RESIZED_SCHEMA)
+    return map_rows(df, MEDIA_SCHEMA.names, resize, RESIZED_SCHEMA)
 
 
 def local_resize_digest(payload: bytes, codec: str, out_h: int, out_w: int) -> str:

@@ -34,8 +34,9 @@ def plan_report(df: DataFrame) -> dict:
     - ``cartesian_products`` / ``broadcast_nested_loop_joins``: almost
       always a missing equi-condition — quadratic at scale.
     - ``python_row_udfs``: row-at-a-time Python eval (BatchEvalPython);
-      Arrow-batched pandas UDFs (ArrowEvalPython / MapInPandas) are
-      reported separately and are acceptable where built-ins can't go.
+      Arrow-batched Python UDFs (ArrowEvalPython / MapInPandas /
+      MapInArrow / FlatMapGroupsInPandas) are reported separately as
+      ``pandas_udfs`` and are acceptable where built-ins can't go.
     - ``codegen_stages``: WholeStageCodegen span count (higher = more of
       the plan fused into generated JVM loops).
     - ``scans`` / ``pushed_filter_scans``: parquet scans, and how many
@@ -59,6 +60,7 @@ def plan_report(df: DataFrame) -> dict:
         "python_row_udfs": tree.count("BatchEvalPython"),
         "pandas_udfs": tree.count("ArrowEvalPython")
         + tree.count("MapInPandas")
+        + tree.count("MapInArrow")
         + tree.count("FlatMapGroupsInPandas"),
         "codegen_stages": len(set(re.findall(r"WholeStageCodegen \((\d+)\)", tree))),
         "scans": len(scans),

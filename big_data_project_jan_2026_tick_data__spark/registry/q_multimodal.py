@@ -22,12 +22,12 @@ from ._base import _register, _td
 # ---------------------------------------------------------------------------
 # Multimodal value-checked oracles. The synthetic media generator is a pure
 # function of (media_id, seed), so the oracle side REGENERATES every payload
-# driver-side with plain numpy (no Spark, no Arrow, no mapInPandas) and
+# driver-side with plain numpy (no Spark, no Arrow, no row map) and
 # recomputes hashes/features locally, emitting the expected result as a
 # VALUES table. The Spark side must then reproduce it through the real
-# distributed plumbing — partition-local generation, Arrow batch transfer,
-# pandas kernels, the pigeonhole Hamming join — for the driver's value-hash
-# compare to go green. This upgrades the whole family from rows-only.
+# distributed plumbing — partition-local generation, Arrow batch transfer
+# through engine.map_rows, the pigeonhole Hamming join — for the driver's
+# value-hash compare to go green. This upgrades the whole family from rows-only.
 # ---------------------------------------------------------------------------
 
 
@@ -38,16 +38,6 @@ def _q(x: float, digits: int) -> float:
 
     p = 10.0**digits
     return math.floor(x * p + 0.5) / p
-
-
-def _feat_digest_local(feats: list[float]) -> float:
-    """Mirror of the SQL digest: per-element half-up 4dp quantization,
-    left-to-right sum, half-up 6dp on the total — identical doubles in
-    identical order on both sides."""
-    s = 0.0
-    for v in feats:
-        s += _q(v, 4)
-    return _q(s, 6)
 
 
 _FEAT_DIGEST_SQL = (
@@ -85,12 +75,12 @@ def _multimodal_dedup_oracle(n: int = 48, max_hamming: int = 2) -> str:
 
 
 def _multimodal_features_oracle(n: int = 64) -> str:
-    from ..operators.multimodal import local_features, synthetic_media_item
+    from ..operators.multimodal import feat_digest, local_features, synthetic_media_item
 
     rows = []
     for mid in range(n):
         kind, payload, meta = synthetic_media_item(mid)
-        d = _feat_digest_local(local_features(payload, meta[4]))
+        d = feat_digest(local_features(payload, meta[4]))
         rows.append((mid, kind, len(payload), d))
     vals = ", ".join(
         f"({m}, '{k}', {nb}, {d!r})" for m, k, nb, d in rows
@@ -106,9 +96,7 @@ def _multimodal_features_oracle(n: int = 64) -> str:
 def _multimodal_frames_oracle(
     n: int = 64, every_ms: int = 1000, max_frames: int = 8
 ) -> str:
-    import numpy as np
-
-    from ..operators.multimodal import plan_frame_samples, synthetic_media_item
+    from ..operators.multimodal import feat_digest, plan_frame_samples, synthetic_media_item
 
     rows = []
     for mid in range(n):
@@ -118,8 +106,7 @@ def _multimodal_frames_oracle(
         for i, t_ms, feats in plan_frame_samples(
             payload, meta[3], every_ms, max_frames
         ):
-            f32 = [float(np.float32(v)) for v in feats]
-            rows.append((mid, i, t_ms, _feat_digest_local(f32)))
+            rows.append((mid, i, t_ms, feat_digest(feats)))
     vals = ", ".join(f"({m}, {i}, {t}, {d!r})" for m, i, t, d in rows)
     return (
         "SELECT CAST(media_id AS BIGINT) AS media_id, "
@@ -153,7 +140,7 @@ def multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register("multimodal_features_digest", _multimodal_features_oracle)
 def multimodal_features_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-checked twin of multimodal_features: the full decode→
-    featurize path (PPM/WAV/PSEQ, Arrow-batched mapInPandas) collapsed
+    featurize path (PPM/WAV/PSEQ, Arrow-batched row map) collapsed
     to one quantized digest per media item; the oracle recomputes every
     payload + feature vector locally with numpy."""
     media = multimodal.synthetic_media(spark, n=64)
@@ -259,7 +246,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register("multimodal_frame_sample", _multimodal_frames_rows_oracle)
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cardinality-increasing mapInPandas: one row per sampled video
+    """Cardinality-increasing row map: one row per sampled video
     frame, real PSEQ demux + PPM decode per emitted frame; frame feature
     vectors posexploded to scalar rows for the per-element value-hash
     (see multimodal_features)."""

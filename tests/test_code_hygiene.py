@@ -329,3 +329,24 @@ def test_hot_key_cap_has_one_definition():
         "\n".join(sites)
     )
     assert sites[0].endswith(" _drop_hot")
+
+
+def test_row_map_has_one_definition():
+    """``engine.map_rows`` is the only package function that calls
+    ``mapInPandas`` or ``mapInArrow``; every per-row Python kernel goes
+    through it, so the Arrow boundary and its output typing are written
+    once."""
+    sites = []
+    for path in _module_files():
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for top in tree.body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("mapInPandas", "mapInArrow")
+                ):
+                    name = getattr(top, "name", "<module>")
+                    sites.append(f"{path.relative_to(PKG)}:{node.lineno} {name}")
+    assert len(sites) == 1 and sites[0].startswith("engine.py:"), "\n".join(sites)
+    assert sites[0].endswith(" map_rows")

@@ -1,6 +1,7 @@
 """Multimodal columns: real pure-numpy codecs (P6 PPM / WAV PCM16 /
-PSEQ) through Arrow-batched mapInPandas kernels — decode correctness
-AND the Spark-side schema/batch/cardinality contracts."""
+PSEQ) through per-row kernels on the Arrow row map (``engine.map_rows``)
+— decode correctness AND the Spark-side schema/batch/cardinality
+contracts."""
 
 from __future__ import annotations
 
@@ -277,3 +278,80 @@ def test_audio_segments_match_burst_layout(spark):
         for a, b in zip(segs, segs[1:]):
             assert a.end_ms <= b.start_ms  # ordered, non-overlapping
         assert all(s.end_ms > s.start_ms and s.n_windows >= 1 for s in segs)
+
+
+def test_map_rows_types_every_output_row(spark):
+    """``engine.map_rows`` calls the function once per input row, keeps
+    zero or more output rows per call, takes structs in as dicts, and
+    types the output with the declared schema: NULLs, struct tuples, and
+    a batch whose every row yields nothing."""
+    from pyspark.sql import types as T
+
+    from big_data_project_jan_2026_tick_data__spark.engine import map_rows
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), False),
+            T.StructField("v", T.IntegerType(), True),
+            T.StructField("s", T.StructType([T.StructField("k", T.StringType())])),
+        ]
+    )
+    src = spark.createDataFrame(
+        [(0, {"k": "z"}), (1, {"k": "a"}), (2, None)], "id long, m struct<k:string>"
+    )
+
+    def fan_out(i, m):
+        return [(i, j if j else None, ((m or {}).get("k"),)) for j in range(i)]
+
+    out = map_rows(src, ["id", "m"], fan_out, schema)
+    assert out.schema == schema
+    assert {tuple(r) for r in out.collect()} == {
+        (1, None, ("a",)), (2, None, (None,)), (2, 1, (None,)),
+    }
+    empty = map_rows(src, ["id"], lambda i: [], schema)
+    assert empty.schema == schema and empty.collect() == []
+
+
+_ID_PAYLOAD = "media_id long, payload binary"
+
+
+@pytest.mark.parametrize(
+    "run, schema",
+    [
+        (
+            lambda spark: multimodal.scene_cuts(
+                spark.createDataFrame([(1, codecs.encode_ppmseq([]))], _ID_PAYLOAD)
+            ),
+            multimodal._SCENE_SCHEMA,
+        ),
+        (
+            lambda spark: multimodal.scene_frame_samples(
+                spark.createDataFrame([(1, codecs.encode_ppmseq([]))], _ID_PAYLOAD)
+            ),
+            multimodal._SCENE_SAMPLE_SCHEMA,
+        ),
+        (
+            lambda spark: multimodal.sample_frames(
+                multimodal.synthetic_media(spark, n=12).filter("kind = 'image'")
+            ),
+            multimodal._FRAMES_SCHEMA,
+        ),
+        (
+            lambda spark: multimodal.active_audio_segments(
+                spark.createDataFrame(
+                    [(1, codecs.encode_wav(np.zeros(1600, np.int16), 16000))],
+                    _ID_PAYLOAD,
+                )
+            ),
+            multimodal._AUDIO_SEG_SCHEMA,
+        ),
+    ],
+    ids=["scene_cuts", "scene_frame_samples", "sample_frames", "audio_segments"],
+)
+def test_kernels_on_input_that_yields_no_rows(spark, run, schema):
+    """A non-empty input whose rows all yield nothing (a PSEQ with no
+    frames, image-only media, a silent WAV) returns zero rows with the
+    declared schema."""
+    out = run(spark)
+    assert out.schema == schema
+    assert out.collect() == []

@@ -970,6 +970,29 @@ def test_window_tensors_run_no_python_and_one_shuffle(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     plan = plan.split("== Initial Plan ==")[0]
     assert "== Final Plan ==" in plan
-    for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "MapInPandas", "BatchEvalPython"):
+    for node in (
+        "FlatMapGroupsInPandas", "ArrowEvalPython", "MapInPandas", "MapInArrow",
+        "BatchEvalPython",
+    ):
         assert node not in plan, node
     assert _shuffles(plan) <= 1
+
+
+def test_plan_doctor_counts_map_in_arrow(spark):
+    """A ``mapInArrow`` node is a Python-worker boundary like its
+    ``mapInPandas`` twin: ``plan_report`` counts it as a pandas UDF and
+    ``assert_scale_safe(allow_pandas_udfs=False)`` rejects it."""
+    import pytest as _pytest
+
+    from big_data_project_jan_2026_tick_data__spark.plans.doctor import (
+        ScaleSafetyError,
+        assert_scale_safe,
+        plan_report,
+    )
+
+    arrow = spark.range(3).mapInArrow(lambda it: it, "id long")
+    pandas = spark.range(3).mapInPandas(lambda it: it, "id long")
+    assert plan_report(arrow)["pandas_udfs"] == 1
+    assert plan_report(pandas)["pandas_udfs"] == 1
+    with _pytest.raises(ScaleSafetyError, match="1 pandas UDF"):
+        assert_scale_safe(arrow, allow_pandas_udfs=False)

@@ -147,6 +147,10 @@ def empty_sf_dir(sf_dir, tmp_path_factory):
         # the window-tensor aggregate
         "ml_window_tensors",
         "ml_anomaly_scores_mean",
+        # the PCA and autoencoder scorers (the AE rows through the row map)
+        "ml_anomaly_scores",
+        "ml_anomaly_scores_ae",
+        "ml_anomaly_scores_ae_fixedw",
     ],
 )
 def test_kmeans_family_on_empty_embeddings(spark, sf_dir, empty_sf_dir, name):
