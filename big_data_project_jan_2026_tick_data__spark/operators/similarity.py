@@ -1622,6 +1622,7 @@ def pq_topk(
         .pivot("subspace", list(range(m)))
         .agg(F.first("code"))
     ).localCheckpoint()
+    id_type = v.schema[id_col].dataType
     out = None
     for qr in rows[:n_queries]:
         qid = qr[id_col]
@@ -1638,7 +1639,7 @@ def pq_topk(
             term = F.expr(f"element_at({_sql_arr(tbl)}, `{s}` + 1)")
             adist = term if adist is None else adist + term
         part = wide.select(
-            F.lit(qid).alias("query_id"),
+            F.lit(qid).cast(id_type).alias("query_id"),
             F.col(id_col),
             adist.alias("adist_q6"),
         ).filter(F.col(id_col) != qid)

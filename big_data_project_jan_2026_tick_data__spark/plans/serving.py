@@ -30,6 +30,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..engine import persistent_rdd_ids, release_rdd_ids
 from ..operators import autoencoder, mlfeat
 from .tracking import RunTracker
 
@@ -261,30 +262,15 @@ class MLPipelineService:
         # blocks — so track exactly the RDD ids this call creates and
         # free them in the phase's finally (otherwise a long-lived
         # service leaks one tensor copy per train/test call).
-        before = self._persistent_rdd_ids()
+        before = persistent_rdd_ids(self.spark)
         out = mlfeat.window_tensors(
             t, feature_cols=feats, n_target=p["window_size"]
         ).localCheckpoint()
-        self._phase_ckpt_ids.update(self._persistent_rdd_ids() - before)
+        self._phase_ckpt_ids.update(persistent_rdd_ids(self.spark) - before)
         return out
 
-    def _persistent_rdd_ids(self) -> set[int]:
-        sc = self.spark.sparkContext._jsc.sc()
-        it = sc.getPersistentRDDs().keysIterator()
-        ids = set()
-        while it.hasNext():
-            ids.add(it.next())
-        return ids
-
     def _release_phase_checkpoints(self) -> None:
-        if not self._phase_ckpt_ids:
-            return
-        sc = self.spark.sparkContext._jsc.sc()
-        it = sc.getPersistentRDDs().iterator()
-        while it.hasNext():
-            kv = it.next()
-            if kv._1() in self._phase_ckpt_ids:
-                kv._2().unpersist(False)
+        release_rdd_ids(self.spark, self._phase_ckpt_ids)
         self._phase_ckpt_ids.clear()
 
     def _begin(self, phase: str, parent_run_id: str | None = None) -> str:

@@ -14,6 +14,20 @@ shared ``_base.QUERIES`` / ``_base.ORACLE`` dicts on import):
 - ``q_ml_streaming``  — window tensors, anomaly scoring, streaming
 - ``q_lakehouse``     — snapshots, MERGE, incremental ingest, tracking
 
+Tick feeds: the reference keeps one tick table per symbol (PAPER.md
+§1.1); the registry stands the ``events`` table in for it. ``_base``
+derives two tables from ``events``, read through ``_td`` like any
+other: ``ticks`` adds the 4-symbol feed's ``symbol = 'S' || user_id %
+4`` and trade size ``sz = event_id % 100 + 1`` (``value`` is the
+price), and ``quotes`` is the one-symbol quote feed ``(symbol, ts, bid,
+ask)`` with ``symbol = 'EVENTS'``, ``bid = value`` and ``ask = value *
+1.01``. Streaming queries apply the same ``_ticks`` / ``_quotes`` to
+the replayed events stream, and ``_cent_returns`` is the per-symbol
+cent return over ``_tick_order()``. The DuckDB oracles spell the same
+feeds out in their own SQL text (``'S' || CAST(user_id % 4 AS
+VARCHAR)``, ``value * 1.01``), so each side stays an independent check
+of the other.
+
 Oracle/aliasing discipline (shared by every submodule): the driver
 hash-compares values order-insensitively with columns sorted by name, so
 every computed column is aliased identically on both sides, floats are

@@ -19,7 +19,7 @@ import os
 from collections.abc import Callable, Iterator, Mapping
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from ..operators import dedup, joins, mlfeat, multimodal, similarity, stats, text, ticks
@@ -140,6 +140,46 @@ def _pin_session(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.ansi.enabled", "false")
 
 
+def _ticks(events: DataFrame) -> DataFrame:
+    """The tick feed over an events frame, batch or streaming: four
+    symbols, ``symbol = 'S' || user_id % 4``, and a trade size
+    ``sz = event_id % 100 + 1``; ``value`` is the price."""
+    return events.withColumns(
+        {
+            "symbol": F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")),
+            "sz": F.col("event_id") % 100 + 1,
+        }
+    )
+
+
+def _quotes(events: DataFrame) -> DataFrame:
+    """The quote feed over an events frame, batch or streaming: one
+    symbol, ``EVENTS``, with ``bid = value`` and ``ask = value * 1.01``."""
+    return events.select(
+        F.lit("EVENTS").alias("symbol"),
+        F.col("ts"),
+        F.col("value").alias("bid"),
+        (F.col("value") * 1.01).alias("ask"),
+    )
+
+
+def _tick_order() -> WindowSpec:
+    """Each symbol's ticks in time order, ``event_id`` breaking ties."""
+    return Window.partitionBy("symbol").orderBy(F.col("ts"), F.col("event_id"))
+
+
+def _cent_returns(ticks: DataFrame) -> DataFrame:
+    """``ticks`` with ``r0``: each tick's price change from the symbol's
+    previous tick in whole cents, rounded half-up (NULL on the first)."""
+    return ticks.withColumn(
+        "r0",
+        F.floor(
+            (F.col("value") - F.lag("value", 1).over(_tick_order())) * 100
+            + F.lit(0.5)
+        ),
+    )
+
+
 def _td(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     _pin_session(spark)
     key = (spark, sf_dir, table)
@@ -159,6 +199,10 @@ def _td(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         from ..sources.io import normalize_events_ts
 
         df = normalize_events_ts(_td(spark, sf_dir, "events_raw"))
+    elif table == "ticks":
+        df = _ticks(_td(spark, sf_dir, "events"))
+    elif table == "quotes":
+        df = _quotes(_td(spark, sf_dir, "events"))
     else:
         df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     _TD_CACHE[key] = df

@@ -20,7 +20,7 @@ from ..operators import (  # noqa: F401
 )
 from ..functions import detmath, exactagg
 from ..functions.scalars import q6
-from ._base import _register, _td
+from ._base import _cent_returns, _register, _td, _tick_order
 
 _CS_DEN = 3.0 - 2.0 * math.sqrt(2.0)  # Corwin-Schultz denominator
 
@@ -174,14 +174,7 @@ def ticks_symbol_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Quadratic only in symbol count, linear in ticks. Order-independent:
     grid-snapped bucket means + exact integer Pearson sums on both
     engines (stats.exact_corr_sums)."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        "ts",
-        "value",
-    )
+    t = _td(spark, sf_dir, "ticks")
     return stats.symbol_correlation(t, interval_sec=3600).withColumnRenamed(
         "corr", "corr_q6"
     )
@@ -237,14 +230,7 @@ def ticks_lead_lag_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix. Differenced series (trending levels correlate at every lag);
     bucket means on the 1e-6 grid, diffs exact BIGINT, Pearson via
     exact integer sums — order-independent on both engines."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        "ts",
-        "value",
-    )
+    t = _td(spark, sf_dir, "ticks")
     return stats.lead_lag_correlation(t, interval_sec=3600, max_lag=3)
 
 
@@ -289,15 +275,7 @@ def ticks_rv_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampling reveals bid-ask bounce). Ticks reduce ONCE to minute
     last-prices; coarser intervals derive from that table. All sums are
     exact integers — order-independent on both engines."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        F.col("ts").cast("long").alias("es"),
-        "event_id",
-        "value",
-    )
+    t = _td(spark, sf_dir, "ticks").withColumn("es", F.col("ts").cast("long"))
     return stats.rv_signature(
         t, ts_col="es", price_col="value", tiebreak_cols=("event_id",)
     )
@@ -346,15 +324,7 @@ def ticks_roll_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     price changes); NULL when the covariance is non-negative. Prices on
     the 1e-6 grid, Δp exact BIGINT, covariance from exact integer sums
     — order-independent on both engines."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        F.col("ts").cast("long").alias("es"),
-        "event_id",
-        "value",
-    )
+    t = _td(spark, sf_dir, "ticks").withColumn("es", F.col("ts").cast("long"))
     return stats.roll_spread(
         t, ts_col="es", price_col="value", tiebreak_cols=("event_id",)
     )
@@ -411,16 +381,8 @@ def ticks_frac_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout-independent."""
     from pyspark.sql import Window
 
-    ev = _td(spark, sf_dir, "events").filter(
+    src = _td(spark, sf_dir, "ticks").filter(
         F.col("user_id").isNotNull() & F.col("value").isNotNull()
-    )
-    src = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        "ts",
-        "event_id",
-        "value",
     )
     w = Window.partitionBy("symbol", F.date_trunc("minute", "ts")).orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
@@ -475,16 +437,7 @@ def ticks_amihud_illiq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ×1e9 (synthetic size event_id%100+1 as in ticks_vwap_twap). Each
     day's ratio snaps to a 1e-15 integer grid BEFORE the cross-day
     average, so the sum is exact on both engines."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        F.col("ts").cast("long").alias("es"),
-        "event_id",
-        "value",
-        (F.col("event_id") % 100 + 1).alias("sz"),
-    )
+    t = _td(spark, sf_dir, "ticks").withColumn("es", F.col("ts").cast("long"))
     return stats.amihud_illiquidity(
         t,
         ts_col="es",
@@ -539,16 +492,7 @@ def ticks_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal-volume buckets (same synthetic size and bucket assignment as
     ticks_volume_bars). Integer buckets and imbalance sums; one
     pointwise division — order-independent on both engines."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        F.col("ts").cast("long").alias("es"),
-        "event_id",
-        "value",
-        (F.col("event_id") % 100 + 1).alias("sz"),
-    )
+    t = _td(spark, sf_dir, "ticks").withColumn("es", F.col("ts").cast("long"))
     return stats.vpin(
         t,
         ts_col="es",
@@ -602,16 +546,7 @@ def ticks_volume_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     the information-driven sampling alternative to clock bars. Integer
     prefix sums assign bars; exact integer OHLC/VWAP sums — order-
     independent on both engines."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        F.col("ts").cast("long").alias("es"),
-        "event_id",
-        "value",
-        (F.col("event_id") % 100 + 1).alias("sz"),
-    )
+    t = _td(spark, sf_dir, "ticks").withColumn("es", F.col("ts").cast("long"))
     return ticks.volume_bars(
         t,
         ts_col="es",
@@ -653,15 +588,10 @@ def ticks_intraday_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     divisions only."""
     from pyspark.sql import Window
 
-    ev = _td(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     g = (
-        ev.select(
-            F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-                "symbol"
-            ),
-            F.hour("ts").alias("hour_of_day"),
-            (F.col("event_id") % 100 + 1).alias("sz"),
-        )
+        _td(spark, sf_dir, "ticks")
+        .filter(F.col("user_id").isNotNull())
+        .select("symbol", F.hour("ts").alias("hour_of_day"), "sz")
         .groupBy("symbol", "hour_of_day")
         .agg(
             F.count(F.lit(1)).alias("n_ticks"),
@@ -727,18 +657,9 @@ def ticks_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents × size) and closing every $100k — robust to price-level
     drift where tick/volume bars aren't. One per-symbol sort + one
     hash agg; all integers, layout-independent."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        F.col("ts").cast("long").alias("es"),
-        "event_id",
-        "value",
-        (
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-            * (F.col("event_id") % 100 + 1)
-        ).alias("sz"),
+    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    t = _td(spark, sf_dir, "ticks").withColumns(
+        {"es": F.col("ts").cast("long"), "sz": cents * F.col("sz")}
     )
     return ticks.volume_bars(
         t,
@@ -816,16 +737,7 @@ def ticks_kyle_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitting the OLS slope in price units per unit size plus R². Exact
     integer sums feed the regression on both engines — the unordered-
     float-sum hazard is absent by construction."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        F.col("ts").cast("long").alias("es"),
-        "event_id",
-        "value",
-        (F.col("event_id") % 100 + 1).alias("sz"),
-    )
+    t = _td(spark, sf_dir, "ticks").withColumn("es", F.col("ts").cast("long"))
     return stats.kyle_lambda(
         t,
         ts_col="es",
@@ -877,15 +789,7 @@ def ticks_tick_rule_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     signed imbalance per symbol. One per-symbol sort reused by both
     window passes, one hash agg — integer outputs + a pointwise ratio,
     order-independent on both engines."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        F.col("ts").cast("long").alias("es"),
-        "event_id",
-        "value",
-    )
+    t = _td(spark, sf_dir, "ticks").withColumn("es", F.col("ts").cast("long"))
     return ticks.tick_rule_flow(
         t, ts_col="es", price_col="value", tiebreak_cols=("event_id",)
     )
@@ -916,12 +820,7 @@ def ticks_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-symbol 5/95-percentile winsorization with intervention flags
     (exact percentiles, broadcast bounds join — the robust-cleaning
     counterpart of `ticks_despike`)."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        "event_id",
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias("symbol"),
-        "value",
-    )
+    t = _td(spark, sf_dir, "ticks")
     out = ticks.winsorize(t, value_cols=("value",), lo=0.05, hi=0.95)
     return out.select(
         "event_id",
@@ -1795,13 +1694,7 @@ def ticks_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp — one sort per symbol partition, two window passes, no
     self-join (reference domain: per-symbol stats family,
     `Data Preprocessing and Cleaning/symbol_statistics_generate.py`)."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        "event_id",
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias("symbol"),
-        "ts",
-        "value",
-    )
+    t = _td(spark, sf_dir, "ticks")
     return ticks.max_drawdown_summary(
         t,
         ts_col="ts",
@@ -2057,13 +1950,7 @@ def events_cusum_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the clamped recurrence solved as prefix-sum + running-min windows —
     no recursion, no UDF (stats.cusum_changepoints); summarized to
     per-symbol alarm counts, maxima and first alarm time."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        "event_id",
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias("symbol"),
-        "ts",
-        "value",
-    )
+    t = _td(spark, sf_dir, "ticks")
     scored = stats.cusum_changepoints(
         t, ts_col="ts", value_col="value", by=("symbol",),
         tiebreak_cols=("event_id",), k=0.5, h=3.0,
@@ -2237,13 +2124,7 @@ def events_threshold_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gaps-and-islands over a per-row threshold flag: contiguous runs
     of hot ticks (value > 30) collapsed into episodes per symbol —
     double-row_number island ids, one sort per series (stats.islands)."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        "event_id",
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias("symbol"),
-        "ts",
-        (F.col("value") > 30.0).alias("hot"),
-    )
+    t = _td(spark, sf_dir, "ticks").withColumn("hot", F.col("value") > 30.0)
     return stats.islands(
         t, flag_col="hot", ts_col="ts", by=("symbol",), tiebreak_cols=("event_id",)
     )
@@ -2277,15 +2158,8 @@ def events_inter_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     liquidity metric): lag-difference per series then one hash agg with
     exact percentiles — the latency profile the gap_fill/despike
     cleaning steps are tuned against."""
-    from pyspark.sql import Window
-
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias("symbol"),
-        "ts",
-        "event_id",
-    )
-    w = Window.partitionBy("symbol").orderBy(F.col("ts"), F.col("event_id"))
+    t = _td(spark, sf_dir, "ticks")
+    w = _tick_order()
     g = t.withColumn(
         "gap_s",
         (F.unix_millis("ts") - F.unix_millis(F.lag("ts").over(w))) / 1000.0,
@@ -2387,20 +2261,8 @@ def ticks_return_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns are snapped to integer cents (exact — the feed carries two
     decimals) and each lag's corr uses stats.exact_corr_sums, so no
     float sum ever crosses engines."""
-    from pyspark.sql import Window
-
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias("symbol"),
-        "ts",
-        "event_id",
-        "value",
-    )
-    w = Window.partitionBy("symbol").orderBy(F.col("ts"), F.col("event_id"))
-    r = t.withColumn(
-        "r0",
-        F.floor((F.col("value") - F.lag("value", 1).over(w)) * 100 + F.lit(0.5)),
-    )
+    w = _tick_order()
+    r = _cent_returns(_td(spark, sf_dir, "ticks"))
     rl = (
         r.withColumn("r1", F.lag("r0", 1).over(w))
         .withColumn("r2", F.lag("r0", 2).over(w))
@@ -2580,21 +2442,13 @@ def ticks_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     a real price series lands near 0.5.)"""
     import math as _math
 
-    from pyspark.sql import Window
-
     from ..functions.exactagg import exact_sum
 
     ks = [1, 2, 4, 8, 16]
-    ev = _td(spark, sf_dir, "events")
-    ticks_df = ev.filter(F.col("value") > 0).select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        "ts",
-        "event_id",
-        F.col("value").alias("p"),
+    ticks_df = _td(spark, sf_dir, "ticks").filter(F.col("value") > 0).select(
+        "symbol", "ts", "event_id", F.col("value").alias("p")
     )
-    w = Window.partitionBy("symbol").orderBy("ts", "event_id")
+    w = _tick_order()
     lagged = ticks_df.select(
         "symbol",
         "p",
@@ -2749,15 +2603,9 @@ def ticks_corwin_schultz(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines quantize identical doubles."""
     from pyspark.sql import Window
 
-    ev = _td(spark, sf_dir, "events")
     daily = (
-        ev.select(
-            F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-                "symbol"
-            ),
-            F.to_date("ts").alias("day"),
-            "value",
-        )
+        _td(spark, sf_dir, "ticks")
+        .select("symbol", F.to_date("ts").alias("day"), "value")
         .groupBy("symbol", "day")
         .agg(F.max("value").alias("hi"), F.min("value").alias("lo"))
         .filter(F.col("lo") > 0)
@@ -2843,12 +2691,10 @@ def ticks_parkinson_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     quant desks prefer over close-to-close vol for sparse intraday data
     (~5× more efficient per bar). Two hash aggs (bars, then daily), no
     window, no self-join."""
-    ev = _td(spark, sf_dir, "events")
     bars = (
-        ev.select(
-            F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-                "symbol"
-            ),
+        _td(spark, sf_dir, "ticks")
+        .select(
+            "symbol",
             F.to_date("ts").alias("day"),
             F.date_trunc("minute", F.col("ts")).alias("bar"),
             "value",
@@ -2952,21 +2798,13 @@ def ticks_tsrv(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulators per the exactagg k>6 rule), closed-form combine —
     corpus scanned once. The long explode keeps exactly ONE det_ln
     expansion per codegen stage (the hurst 64 KB-janino discipline)."""
-    from pyspark.sql import Window
-
     from ..functions.exactagg import exact_sum
 
     ks = [1, 5]
-    ev = _td(spark, sf_dir, "events")
-    ticks_df = ev.filter(F.col("value") > 0).select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        "ts",
-        "event_id",
-        F.col("value").alias("p"),
+    ticks_df = _td(spark, sf_dir, "ticks").filter(F.col("value") > 0).select(
+        "symbol", "ts", "event_id", F.col("value").alias("p")
     )
-    w = Window.partitionBy("symbol").orderBy("ts", "event_id")
+    w = _tick_order()
     lagged = ticks_df.select(
         "symbol",
         "p",
@@ -3095,19 +2933,11 @@ def ticks_yang_zhang(spark: SparkSession, sf_dir: str) -> DataFrame:
     term for term in the oracle."""
     from pyspark.sql import Window
 
-    ev = _td(spark, sf_dir, "events")
     ordk = F.struct("ts", "event_id")
     daily = (
-        ev.filter(F.col("value") > 0)
-        .select(
-            F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-                "symbol"
-            ),
-            F.to_date("ts").alias("day"),
-            "ts",
-            "event_id",
-            "value",
-        )
+        _td(spark, sf_dir, "ticks")
+        .filter(F.col("value") > 0)
+        .withColumn("day", F.to_date("ts"))
         .groupBy("symbol", "day")
         .agg(
             F.min_by("value", ordk).alias("open"),
@@ -3354,13 +3184,7 @@ def events_alarm_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stats.islands) — per-row drift flags become reportable incident
     windows; the windows of both operators share one partition/order,
     so the composition still plans a single sort per series."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        "event_id",
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias("symbol"),
-        "ts",
-        "value",
-    )
+    t = _td(spark, sf_dir, "ticks")
     scored = stats.cusum_changepoints(
         t, ts_col="ts", value_col="value", by=("symbol",),
         tiebreak_cols=("event_id",), k=0.5, h=3.0,
@@ -3493,10 +3317,8 @@ def ticks_vwap_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     on both sides). The classic unordered-float-sum hazard is absent by
     construction: integer-grid prices × integer sizes/durations sum as
     exact BIGINTs — partition-layout-independent per the playbook."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.withColumn("sz", (F.col("event_id") % 100 + 1))
     return ticks.vwap_twap_bars(
-        t,
+        _td(spark, sf_dir, "ticks"),
         ts_col="ts",
         price_col="value",
         size_col="sz",
@@ -3554,12 +3376,7 @@ def ticks_market_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     beta = cov/var(market) and the market correlation, from the same
     exact-integer Pearson sums as `ticks_symbol_correlation` (linear in
     symbols; one market join instead of a pair self-join)."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias("symbol"),
-        "ts",
-        "value",
-    )
+    t = _td(spark, sf_dir, "ticks")
     return stats.market_beta(t, interval_sec=3600)
 
 
@@ -3660,21 +3477,9 @@ def events_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     the compare-precision rule). NULL at any undefined lag (constant
     series) propagates to a NULL Q and NULL flag identically in both
     engines."""
-    from pyspark.sql import Window
-
     lags = 5
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias("symbol"),
-        "ts",
-        "event_id",
-        "value",
-    )
-    w = Window.partitionBy("symbol").orderBy(F.col("ts"), F.col("event_id"))
-    r = t.withColumn(
-        "r0",
-        F.floor((F.col("value") - F.lag("value", 1).over(w)) * 100 + F.lit(0.5)),
-    )
+    w = _tick_order()
+    r = _cent_returns(_td(spark, sf_dir, "ticks"))
     rl = r.select(
         "symbol",
         "r0",
@@ -3775,16 +3580,10 @@ def ticks_ou_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
     q9-SNAPPED slope — exactly ONE detmath expansion in the plan, on a
     #symbols-sized aggregate (the hurst 64 KB-codegen discipline). The
     b ≥ 1e-9 guard keeps 1/b inside det_ln_pos's BIGINT-floor domain."""
-    from pyspark.sql import Window
-
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias("symbol"),
-        "ts",
-        "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
+    t = _td(spark, sf_dir, "ticks").withColumn(
+        "v", F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     )
-    w = Window.partitionBy("symbol").orderBy(F.col("ts"), F.col("event_id"))
+    w = _tick_order()
     lagd = t.select(
         "symbol", F.col("v").alias("y"), F.lag("v", 1).over(w).alias("x")
     )
@@ -3874,20 +3673,8 @@ def ticks_realized_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplies by DYADIC kernel weights (exactly representable doubles)
     in a fixed left-to-right order. Emits RK and plain RV (γ₀) per
     symbol, both q6 in value² units (cents² / 1e4)."""
-    from pyspark.sql import Window
-
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias("symbol"),
-        "ts",
-        "event_id",
-        "value",
-    )
-    w = Window.partitionBy("symbol").orderBy(F.col("ts"), F.col("event_id"))
-    r = t.withColumn(
-        "r0",
-        F.floor((F.col("value") - F.lag("value", 1).over(w)) * 100 + F.lit(0.5)),
-    )
+    w = _tick_order()
+    r = _cent_returns(_td(spark, sf_dir, "ticks"))
     rl = r.select(
         "symbol",
         "r0",
@@ -4048,21 +3835,9 @@ def ticks_bipower_variation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent-grid product is integer and |·| commutes with the integer
     product; only the final (π/2)-scale and ratio are float ops, on
     identical doubles in fixed order."""
-    from pyspark.sql import Window
-
     half_pi = 1.5707963267948966
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias("symbol"),
-        "ts",
-        "event_id",
-        "value",
-    )
-    w = Window.partitionBy("symbol").orderBy(F.col("ts"), F.col("event_id"))
-    r = t.withColumn(
-        "r0",
-        F.floor((F.col("value") - F.lag("value", 1).over(w)) * 100 + F.lit(0.5)),
-    )
+    w = _tick_order()
+    r = _cent_returns(_td(spark, sf_dir, "ticks"))
     rl = r.select("symbol", "r0", F.lag("r0", 1).over(w).alias("r1"))
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     s = rl.groupBy("symbol").agg(
@@ -4148,20 +3923,8 @@ def events_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-sided 95% normal critical value. Counts are exact integers;
     E/Var/z are fixed-order float chains on identical doubles (the
     critical value is a frozen literal)."""
-    from pyspark.sql import Window
-
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias("symbol"),
-        "ts",
-        "event_id",
-        "value",
-    )
-    w = Window.partitionBy("symbol").orderBy(F.col("ts"), F.col("event_id"))
-    r = t.withColumn(
-        "r0",
-        F.floor((F.col("value") - F.lag("value", 1).over(w)) * 100 + F.lit(0.5)),
-    )
+    w = _tick_order()
+    r = _cent_returns(_td(spark, sf_dir, "ticks"))
     s = r.filter(F.col("r0").isNotNull() & (F.col("r0") != 0)).withColumn(
         "sgn", F.when(F.col("r0") > 0, 1).otherwise(-1)
     )
@@ -4354,22 +4117,10 @@ def ticks_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     first/second moments (decimal/HUGEINT accumulators), and
     VR(q) = Var_q / (q·Var₁) is one fixed-order float chain. One window
     sort carries all horizons; one hash agg."""
-    from pyspark.sql import Window
-
     qs = (2, 4)
     all_qs = sorted({1, *qs})
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias("symbol"),
-        "ts",
-        "event_id",
-        "value",
-    )
-    w = Window.partitionBy("symbol").orderBy(F.col("ts"), F.col("event_id"))
-    r = t.withColumn(
-        "r0",
-        F.floor((F.col("value") - F.lag("value", 1).over(w)) * 100 + F.lit(0.5)),
-    ).filter(F.col("r0").isNotNull())
+    w = _tick_order()
+    r = _cent_returns(_td(spark, sf_dir, "ticks")).filter(F.col("r0").isNotNull())
     cols = [F.col("symbol")]
     for q in all_qs:
         wq = w.rowsBetween(-(q - 1), 0)
@@ -4527,7 +4278,7 @@ def ticks_garman_klass(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly, so the daily mean is order-free. Negative daily sums (the
     GK term can be negative bar-by-bar) yield NULL rather than a NaN
     sqrt — mirrored in the oracle."""
-    ev = _td(spark, sf_dir, "events")
+    ev = _td(spark, sf_dir, "ticks")
     key = F.concat(
         F.lpad(F.expr("unix_micros(ts) div 1000").cast("string"), 14, "0"),
         F.lpad(F.col("event_id").cast("string"), 12, "0"),
@@ -4535,9 +4286,7 @@ def ticks_garman_klass(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars = (
         ev.filter(F.col("value") > 0)
         .select(
-            F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-                "symbol"
-            ),
+            "symbol",
             F.to_date("ts").alias("day"),
             F.date_trunc("minute", F.col("ts")).alias("bar"),
             "value",
@@ -4631,13 +4380,11 @@ def _hy_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     to at least three lineage branches (RV + both join sides)."""
     from pyspark.sql import Window
 
-    ev = _td(spark, sf_dir, "events")
+    ev = _td(spark, sf_dir, "ticks")
     t = (
         ev.filter(F.col("value") > 0)
         .select(
-            F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-                "symbol"
-            ),
+            "symbol",
             F.unix_micros("ts").alias("us"),
             F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
             "event_id",
@@ -5350,13 +5097,11 @@ def ticks_epps_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     symbol_statistics_generate.py:76-79)."""
     from pyspark.sql import Window
 
-    ev = _td(spark, sf_dir, "events")
+    ev = _td(spark, sf_dir, "ticks")
     t = (
         ev.filter(F.col("value") > 0)
         .select(
-            F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-                "symbol"
-            ),
+            "symbol",
             F.unix_micros("ts").alias("us"),
             F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
             "event_id",
@@ -6947,24 +6692,7 @@ def ticks_realized_semivariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     only float ops are the final 1e-4 scale, the SJ subtraction and the
     ratio, on identical doubles in fixed order. No counterpart in the
     reference (its stats are mean/std only, data_summary.py)."""
-    from pyspark.sql import Window
-
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        "ts",
-        "event_id",
-        "value",
-    )
-    w = Window.partitionBy("symbol").orderBy(F.col("ts"), F.col("event_id"))
-    r = t.select(
-        "symbol",
-        F.floor(
-            (F.col("value") - F.lag("value", 1).over(w)) * 100 + F.lit(0.5)
-        ).alias("r0"),
-    )
+    r = _cent_returns(_td(spark, sf_dir, "ticks"))
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     s = r.groupBy("symbol").agg(
         F.count("r0").alias("n_returns"),
@@ -8190,15 +7918,13 @@ def ticks_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     still thousands of rows). No counterpart in the reference."""
     from pyspark.sql import Window
 
-    ev = _td(spark, sf_dir, "events").filter(F.col("value") > 0)
+    ev = _td(spark, sf_dir, "ticks").filter(F.col("value") > 0)
     key = F.concat(
         F.lpad(F.expr("unix_micros(ts) div 1000").cast("string"), 14, "0"),
         F.lpad(F.col("event_id").cast("string"), 12, "0"),
     )
     t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
+        "symbol",
         F.to_date("ts").alias("day"),
         key.alias("k"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
@@ -9045,15 +8771,13 @@ def ticks_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     closes tied) emit no row. Scale: one tick pass to the (symbol,
     day) grain, then day-grain frames only.
     No counterpart in the reference."""
-    ev = _td(spark, sf_dir, "events").filter(F.col("value") > 0)
+    ev = _td(spark, sf_dir, "ticks").filter(F.col("value") > 0)
     key = F.concat(
         F.lpad(F.expr("unix_micros(ts) div 1000").cast("string"), 14, "0"),
         F.lpad(F.col("event_id").cast("string"), 12, "0"),
     )
     t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
+        "symbol",
         F.to_date("ts").alias("day"),
         key.alias("k"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
@@ -9187,18 +8911,10 @@ def ticks_dickey_fuller(spark: SparkSession, sf_dir: str) -> DataFrame:
     no row. Scale: the per-symbol lag window + one hash agg —
     #symbols-sized frames after the sums.
     No counterpart in the reference."""
-    from pyspark.sql import Window
-
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        "ts",
-        "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
+    t = _td(spark, sf_dir, "ticks").withColumn(
+        "v", F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     )
-    w = Window.partitionBy("symbol").orderBy(F.col("ts"), F.col("event_id"))
+    w = _tick_order()
     lagd = t.select(
         "symbol", F.col("v").alias("y"), F.lag("v", 1).over(w).alias("x")
     ).filter(F.col("x").isNotNull())

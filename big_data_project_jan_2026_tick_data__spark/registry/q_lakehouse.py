@@ -526,17 +526,16 @@ def incremental_ohlc_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.incremental import finalize_ohlc_view, refresh_ohlc_view
     from ..plans.snapshots import SnapshotTable
 
-    ev = _td(spark, sf_dir, "events").filter(
+    ev = _td(spark, sf_dir, "ticks").filter(
         F.col("user_id").isNotNull() & F.col("value").isNotNull()
     )
+    # the snapshot table stores every column it is given
     t = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
+        "symbol",
         F.col("ts").cast("long").alias("es"),
         "event_id",
         F.floor(F.col("value") * 1e6 + F.lit(0.5)).cast("bigint").alias("p6"),
-        (F.col("event_id") % 100 + 1).alias("sz"),
+        "sz",
     )
     with tempfile.TemporaryDirectory() as d:
         tbl = SnapshotTable(spark, f"{d}/view")

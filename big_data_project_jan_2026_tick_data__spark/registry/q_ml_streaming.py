@@ -18,7 +18,7 @@ from ..operators import (  # noqa: F401
 )
 from ..functions import detmath
 from ..functions.scalars import q6
-from ._base import _register, _td
+from ._base import _quotes, _register, _td, _ticks
 
 
 from contextlib import contextmanager
@@ -147,13 +147,7 @@ def ml_window_tensors(spark: SparkSession, sf_dir: str) -> DataFrame:
     ffill/bfill padding, and the float32 quantization of the tensor
     cells (CAST(... AS FLOAT) AS DOUBLE mirrors the ArrayType(Float)
     storage)."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.lit("EVENTS").alias("symbol"),
-        F.col("ts"),
-        F.col("value").alias("bid"),
-        (F.col("value") * 1.01).alias("ask"),
-    )
+    t = _td(spark, sf_dir, "quotes")
     # use wide windows so the events density yields real groups
     tensors = mlfeat.window_tensors(
         t, n_target=32, windows=((7, 0, 12, 0), (13, 0, 18, 0))
@@ -285,13 +279,7 @@ def ml_anomaly_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     step is replayed in SQL (generated CTE chain), so the PCA lifecycle
     carries a full DuckDB verdict — the eigh-based generic fit remains
     in mlfeat with its numpy-oracle tests."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.lit("EVENTS").alias("symbol"),
-        F.col("ts"),
-        F.col("value").alias("bid"),
-        (F.col("value") * 1.01).alias("ask"),
-    )
+    t = _td(spark, sf_dir, "quotes")
     tensors = mlfeat.window_tensors(
         t, n_target=32, windows=((7, 0, 12, 0), (13, 0, 18, 0))
     ).localCheckpoint()  # reused by fit AND score — one featurize pass
@@ -329,13 +317,7 @@ _AE_NT, _AE_NF = 32, 3  # n_target ticks × (bid, ask, spread)
 def _ae_tensors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The lifecycle's featurize step (identical to ml_window_tensors ★,
     whose oracle proves the SQL replay is bit-exact)."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.lit("EVENTS").alias("symbol"),
-        F.col("ts"),
-        F.col("value").alias("bid"),
-        (F.col("value") * 1.01).alias("ask"),
-    )
+    t = _td(spark, sf_dir, "quotes")
     return mlfeat.window_tensors(
         t, n_target=_AE_NT, windows=((7, 0, 12, 0), (13, 0, 18, 0))
     )
@@ -732,14 +714,8 @@ def streaming_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.session_pipeline import session_window_aggregate
 
     with _replayed_events(spark, sf_dir, "stream_events_") as src:
-        stream = src.select(
-            F.lit("EVENTS").alias("symbol"),
-            "ts",
-            F.col("value").alias("bid"),
-            (F.col("value") * 1.01).alias("ask"),
-        )
         agg = session_window_aggregate(
-            stream, windows=((7, 0, 12, 0), (13, 0, 18, 0))
+            _quotes(src), windows=((7, 0, 12, 0), (13, 0, 18, 0))
         )
         df = _materialized(spark, agg, "reg_stream_sess")
 
@@ -791,14 +767,8 @@ def streaming_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     with _replayed_events(spark, sf_dir, "stream_health_") as src:
-        stream = src.select(
-            F.lit("EVENTS").alias("symbol"),
-            "ts",
-            F.col("value").alias("bid"),
-            (F.col("value") * 1.01).alias("ask"),
-        )
         agg = session_window_aggregate(
-            stream, windows=((7, 0, 12, 0), (13, 0, 18, 0))
+            _quotes(src), windows=((7, 0, 12, 0), (13, 0, 18, 0))
         )
         # health_check needs the LIVE query, so this site drives its own
         # memory sink instead of _materialized
@@ -911,13 +881,7 @@ def ml_anomaly_scores_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentiles (Spark ``percentile`` ≡ DuckDB ``quantile_cont``). The
     PCA-scored twin (``ml_anomaly_scores``) stays rows-only: its model
     is a data-dependent eigendecomposition no SQL engine reproduces."""
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        F.lit("EVENTS").alias("symbol"),
-        F.col("ts"),
-        F.col("value").alias("bid"),
-        (F.col("value") * 1.01).alias("ask"),
-    )
+    t = _td(spark, sf_dir, "quotes")
     tensors = mlfeat.window_tensors(
         t, n_target=32, windows=((7, 0, 12, 0), (13, 0, 18, 0))
     )
@@ -988,14 +952,7 @@ def streaming_cusum_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
     set matches the batch closed form bit-for-bit."""
     from ..streaming.monitors import cusum_monitor
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        "event_id",
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias("symbol"),
-        "ts",
-        "value",
-    )
+    t = _td(spark, sf_dir, "ticks")
     x = F.col("value").cast("double")
     fit = (
         t.na.drop(subset=["symbol"])
@@ -1010,14 +967,8 @@ def streaming_cusum_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
         ref[r["symbol"]] = (mu, var**0.5 if var > 0 else 0.0)
 
     with _replayed_events(spark, sf_dir, "stream_cusum_") as src:
-        stream = src.select(
-            F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-                "symbol"
-            ),
-            "ts",
-            "event_id",
-            "value",
-        )
+        # the pandas state function is sent every column of its input
+        stream = _ticks(src).select("symbol", "ts", "event_id", "value")
         alarms = cusum_monitor(stream, ref, k=0.5, h=3.0)
         return _materialized(spark, alarms, "reg_stream_cusum")
 
@@ -1336,16 +1287,8 @@ def ml_triple_barrier(spark: SparkSession, sf_dir: str) -> DataFrame:
     barrier levels a single correctly-rounded product per entry."""
     from ..operators.mlfeat import triple_barrier_labels
 
-    ev = _td(spark, sf_dir, "events").filter(
+    src = _td(spark, sf_dir, "ticks").filter(
         F.col("user_id").isNotNull() & F.col("value").isNotNull()
-    )
-    src = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        "ts",
-        "event_id",
-        "value",
     )
     w = Window.partitionBy("symbol", F.date_trunc("minute", "ts")).orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
@@ -1414,16 +1357,8 @@ def ml_label_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval join as the labeler + one (symbol, bar) hash agg."""
     from ..operators.mlfeat import label_uniqueness_weights, triple_barrier_labels
 
-    ev = _td(spark, sf_dir, "events").filter(
+    src = _td(spark, sf_dir, "ticks").filter(
         F.col("user_id").isNotNull() & F.col("value").isNotNull()
-    )
-    src = ev.select(
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-            "symbol"
-        ),
-        "ts",
-        "event_id",
-        "value",
     )
     w = Window.partitionBy("symbol", F.date_trunc("minute", "ts")).orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
@@ -1935,13 +1870,11 @@ def ml_information_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lpad(F.expr("unix_micros(ts) div 1000").cast("string"), 14, "0"),
         F.lpad(F.col("event_id").cast("string"), 12, "0"),
     )
-    ev = _td(spark, sf_dir, "events")
+    ev = _td(spark, sf_dir, "ticks")
     closes = (
         ev.filter(F.col("value") > 0)
         .select(
-            F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-                "symbol"
-            ),
+            "symbol",
             F.to_date("ts").alias("day"),
             F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
             key.alias("__k"),
@@ -2142,14 +2075,7 @@ def streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     start is the standard PH convention and is shared by both sides)."""
     from ..streaming.monitors import ph_monitor
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = _td(spark, sf_dir, "events")
-    t = ev.select(
-        "event_id",
-        F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias("symbol"),
-        "ts",
-        "value",
-    )
+    t = _td(spark, sf_dir, "ticks")
     fit = (
         t.na.drop(subset=["symbol"])
         .groupBy("symbol")
@@ -2165,13 +2091,7 @@ def streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref = {r["symbol"]: (r["sc"] / 1e2) / r["n"] for r in fit}
 
     with _replayed_events(spark, sf_dir, "stream_ph_") as src:
-        stream = src.select(
-            F.concat(F.lit("S"), (F.col("user_id") % 4).cast("string")).alias(
-                "symbol"
-            ),
-            "ts",
-            "event_id",
-            "value",
-        )
+        # the pandas state function is sent every column of its input
+        stream = _ticks(src).select("symbol", "ts", "event_id", "value")
         alarms = ph_monitor(stream, ref, delta=0.005, lam=0.5)
         return _materialized(spark, alarms, "reg_stream_ph")

@@ -350,3 +350,51 @@ def test_row_map_has_one_definition():
                     sites.append(f"{path.relative_to(PKG)}:{node.lineno} {name}")
     assert len(sites) == 1 and sites[0].startswith("engine.py:"), "\n".join(sites)
     assert sites[0].endswith(" map_rows")
+
+
+def _feed_expr(node) -> str | None:
+    """Which tick-feed decision ``node`` computes, if any: the tick
+    feed's symbol (``F.col("user_id") % 4``), the quote feed's ask
+    (``F.col("value") * 1.01``) or the cent return
+    (``(F.col("value") - F.lag("value", 1).over(w)) * 100``)."""
+    if not isinstance(node, ast.BinOp):
+        return None
+    left, right = ast.unparse(node.left), node.right
+    if isinstance(node.op, ast.Mod) and left == "F.col('user_id')" and _is_lit(right, 4):
+        return "symbol"
+    if isinstance(node.op, ast.Mult) and left == "F.col('value')" and _is_lit(right, 1.01):
+        return "ask"
+    if (
+        isinstance(node.op, ast.Mult)
+        and _is_lit(right, 100)
+        and isinstance(node.left, ast.BinOp)
+        and isinstance(node.left.op, ast.Sub)
+        and ast.unparse(node.left.left) == "F.col('value')"
+        and ast.unparse(node.left.right).startswith("F.lag('value', 1).over(")
+    ):
+        return "cent return"
+    return None
+
+
+def test_tick_feed_has_one_definition():
+    """``registry/_base.py`` is the only package module that derives the
+    tick feed's symbol, the quote feed's ask or the per-symbol cent
+    return from the events columns; every query reads the ``ticks`` or
+    ``quotes`` table (``_td``) or calls ``_cent_returns`` instead of
+    keeping a local copy. Oracle SQL strings are constants, not
+    expressions, and keep their own text. ``ticks_tz_spread_scrub``
+    builds a different ask: NULL, inf and ``value * 0.99`` on rows
+    picked by ``event_id``, which the quote table does not carry."""
+    sites = []
+    for path in _module_files():
+        rel = path.relative_to(PKG)
+        if str(rel) == "registry/_base.py":
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for top in tree.body:
+            name = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                kind = _feed_expr(node)
+                if kind and not (kind == "ask" and name == "ticks_tz_spread_scrub"):
+                    sites.append(f"{rel}:{node.lineno} {name} {kind}")
+    assert not sites, f"{len(sites)} sites:\n" + "\n".join(sites)

@@ -151,6 +151,8 @@ def empty_sf_dir(sf_dir, tmp_path_factory):
         "ml_anomaly_scores",
         "ml_anomaly_scores_ae",
         "ml_anomaly_scores_ae_fixedw",
+        # the PQ search: query_id typed as the id column on both paths
+        "emb_pq_topk",
     ],
 )
 def test_kmeans_family_on_empty_embeddings(spark, sf_dir, empty_sf_dir, name):
