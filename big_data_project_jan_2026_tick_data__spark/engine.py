@@ -19,6 +19,7 @@ defaults.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 from typing import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -109,6 +110,25 @@ def to_local(df: DataFrame) -> DataFrame:
     return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
 
 
+# the directory that holds the package
+_PKG_PARENT = str(Path(__file__).resolve().parents[1])
+
+
+def _workers_import_package(spark: SparkSession) -> None:
+    """Put the package's directory on the Python workers' path. A
+    Python function of this package is unpickled inside a worker, which
+    starts with Spark's own path plus the process's ``PYTHONPATH`` only,
+    so a driver that found the package through its ``sys.path`` or
+    working directory would fail there with ``ModuleNotFoundError``. A
+    UDF takes ``SparkContext.environment`` when it is wrapped, which is
+    why :func:`map_rows` and every registry query run this before they
+    build anything."""
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PKG_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([*paths, _PKG_PARENT])
+
+
 def map_rows(
     df: DataFrame,
     cols: Sequence[str],
@@ -129,6 +149,7 @@ def map_rows(
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    _workers_import_package(df.sparkSession)
     arrow_schema = to_arrow_schema(schema)
     names = schema.names
 

@@ -72,6 +72,13 @@ def q6(c: Column) -> Column:
     return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
 
+def cents(c: Column) -> Column:
+    """A price on the whole-cent grid, half-up, as a BIGINT:
+    ``CAST(FLOOR(c * 100 + 0.5) AS BIGINT)`` in the oracle SQL. Sums
+    and differences of the snapped integers are exact in both engines."""
+    return F.floor(c * 100 + F.lit(0.5)).cast("long")
+
+
 def parse_tick_ts(col: Column, fmt: str = TICKS_TS_FORMAT) -> Column:
     """F1: null-on-failure timestamp parse (reference
     spark_session_window_tick_cleaner.py:136 / pandas errors='coerce')."""

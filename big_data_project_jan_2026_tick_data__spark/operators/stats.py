@@ -15,7 +15,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalars import q6
+from ..functions.scalars import cents, q6
 from .ticks import SESSION_WINDOWS, window_predicate
 
 
@@ -1279,9 +1279,7 @@ def abc_classification(
     )
     per_key = per_key.select(
         *key_cols,
-        F.floor(F.col("__vg") / F.lit(grid) * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("__cents"),
+        cents(F.col("__vg") / F.lit(grid)).alias("__cents"),
     )
     order = [F.col("__cents").desc(), *[F.col(c).asc() for c in key_cols]]
     cum = global_cumsum(

@@ -28,6 +28,17 @@ feeds out in their own SQL text (``'S' || CAST(user_id % 4 AS
 VARCHAR)``, ``value * 1.01``), so each side stays an independent check
 of the other.
 
+Prices and experiments: the exactness rule snaps prices to an integer
+grid so that Spark and the oracle agree bit for bit. Whole cents are
+``functions.scalars.cents`` (``CAST(FLOOR(value * 100 + 0.5) AS
+BIGINT)`` in the oracles). The A/B family splits users by the portable
+md5 hash in ``_base``: ``_user_bucket(n)`` is the first 28 bits of
+``md5(user_id)`` modulo ``n``, and ``_arm(a, b)`` labels the even half
+``a`` and the odd half ``b``; the oracles spell it ``CAST(concat('0x',
+substr(md5(CAST(user_id AS VARCHAR)), 1, 7)) AS BIGINT) % 2 = 0``.
+``_event_key()`` orders events by epoch millisecond, then
+``event_id``, as the padded string the oracles build with ``lpad``.
+
 Oracle/aliasing discipline (shared by every submodule): the driver
 hash-compares values order-insensitively with columns sorted by name, so
 every computed column is aliased identically on both sides, floats are
@@ -41,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import stats, ticks
-from ._base import ENV_GATED, ORACLE, QUERIES, QueryFn, _register, _td  # noqa: F401
+from ._base import ORACLE, QUERIES, QueryFn, _register, _td  # noqa: F401
 from . import (  # noqa: E402, F401  (side-effect registration)
     q_docs,
     q_embeddings,

@@ -15,13 +15,12 @@ Operator keys map to SURVEY.md §2 inventory lines (noted per query).
 from __future__ import annotations
 
 import functools
-import os
 from collections.abc import Callable, Iterator, Mapping
-from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from ..engine import _workers_import_package
 from ..operators import dedup, joins, mlfeat, multimodal, similarity, stats, text, ticks
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -68,32 +67,6 @@ class _Oracles(Mapping):
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE = _Oracles()
-
-# Names registered only under an env flag (e.g. the retired
-# probe_hugeint_render instrument under SPARK_GRAFT_PROBES=1).  The
-# documented registry counts (BASELINE/README/COVERAGE) and the test
-# that pins them exclude these, so the counts are invariant to the
-# environment the suite happens to run in (advisor r8).
-ENV_GATED: set[str] = set()
-
-
-# the directory that holds the package
-_PKG_PARENT = str(Path(__file__).resolve().parents[2])
-
-
-def _workers_import_package(spark: SparkSession) -> None:
-    """Put the package's directory on the Python workers' path. A pandas
-    UDF of this package is unpickled inside a worker, which starts with
-    Spark's own path plus the process's ``PYTHONPATH`` only, so a driver
-    that found the package through its ``sys.path`` or working directory
-    would fail there with ``ModuleNotFoundError``. A UDF takes
-    ``SparkContext.environment`` when it is wrapped, which is why every
-    registry query runs this before it builds anything."""
-    env = spark.sparkContext.environment
-    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
-    if _PKG_PARENT not in paths:
-        env["PYTHONPATH"] = os.pathsep.join([*paths, _PKG_PARENT])
-
 
 def _register(name: str, oracle: str | OracleBuilder | None = None):
     """Register ``fn`` as query ``name`` with its oracle SQL, or with a
@@ -177,6 +150,32 @@ def _cent_returns(ticks: DataFrame) -> DataFrame:
             (F.col("value") - F.lag("value", 1).over(_tick_order())) * 100
             + F.lit(0.5)
         ),
+    )
+
+
+def _user_bucket(n: int) -> Column:
+    """The portable md5 user split: the first 28 bits of
+    ``md5(user_id)`` modulo ``n``, the same BIGINT in both engines."""
+    return F.expr(
+        "cast(conv(substr(md5(cast(user_id as string)), 1, 7), 16, 10)"
+        f" as bigint) % {n}"
+    )
+
+
+def _arm(a, b) -> Column:
+    """Each user's experiment arm: label ``a`` for the even md5 half,
+    ``b`` for the odd one."""
+    return F.when(_user_bucket(2) == 0, F.lit(a)).otherwise(F.lit(b))
+
+
+def _event_key() -> Column:
+    """Each event's place in time order as a string: the epoch
+    millisecond padded to 14 digits, then ``event_id`` padded to 12, so
+    ``min_by``/``max_by`` over it pick the first or last event with
+    ``event_id`` breaking ties."""
+    return F.concat(
+        F.lpad(F.expr("unix_micros(ts) div 1000").cast("string"), 14, "0"),
+        F.lpad(F.col("event_id").cast("string"), 12, "0"),
     )
 
 

@@ -19,8 +19,16 @@ from ..operators import (  # noqa: F401
     ticks,
 )
 from ..functions import detmath, exactagg
-from ..functions.scalars import q6
-from ._base import _cent_returns, _register, _td, _tick_order
+from ..functions.scalars import cents, q6
+from ._base import (
+    _arm,
+    _cent_returns,
+    _event_key,
+    _register,
+    _td,
+    _tick_order,
+    _user_bucket,
+)
 
 _CS_DEN = 3.0 - 2.0 * math.sqrt(2.0)  # Corwin-Schultz denominator
 
@@ -657,9 +665,8 @@ def ticks_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents × size) and closing every $100k — robust to price-level
     drift where tick/volume bars aren't. One per-symbol sort + one
     hash agg; all integers, layout-independent."""
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
     t = _td(spark, sf_dir, "ticks").withColumns(
-        {"es": F.col("ts").cast("long"), "sz": cents * F.col("sz")}
+        {"es": F.col("ts").cast("long"), "sz": cents(F.col("value")) * F.col("sz")}
     )
     return ticks.volume_bars(
         t,
@@ -3581,7 +3588,7 @@ def ticks_ou_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
     #symbols-sized aggregate (the hurst 64 KB-codegen discipline). The
     b ≥ 1e-9 guard keeps 1/b inside det_ln_pos's BIGINT-floor domain."""
     t = _td(spark, sf_dir, "ticks").withColumn(
-        "v", F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+        "v", cents(F.col("value"))
     )
     w = _tick_order()
     lagd = t.select(
@@ -3755,10 +3762,10 @@ def events_benford_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     ev = _td(spark, sf_dir, "events")
-    cents = ev.filter(F.col("value") > 0).select(
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents")
+    pos = ev.filter(F.col("value") > 0).select(
+        cents(F.col("value")).alias("cents")
     )
-    d = cents.filter(F.col("cents") > 0).select(
+    d = pos.filter(F.col("cents") > 0).select(
         F.expr("CAST(substr(CAST(cents AS STRING), 1, 1) AS INT)").alias("d")
     )
     s = d.agg(
@@ -4203,7 +4210,7 @@ def stats_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = back.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("event_id").cast("long").alias("key_sum"),
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
+            F.sum(cents(F.col("value")))
             .cast("long")
             .alias("cents_sum"),
         )
@@ -4279,10 +4286,6 @@ def ticks_garman_klass(spark: SparkSession, sf_dir: str) -> DataFrame:
     GK term can be negative bar-by-bar) yield NULL rather than a NaN
     sqrt — mirrored in the oracle."""
     ev = _td(spark, sf_dir, "ticks")
-    key = F.concat(
-        F.lpad(F.expr("unix_micros(ts) div 1000").cast("string"), 14, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
     bars = (
         ev.filter(F.col("value") > 0)
         .select(
@@ -4290,7 +4293,7 @@ def ticks_garman_klass(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.to_date("ts").alias("day"),
             F.date_trunc("minute", F.col("ts")).alias("bar"),
             "value",
-            key.alias("__k"),
+            _event_key().alias("__k"),
         )
         .groupBy("symbol", "day", "bar")
         .agg(
@@ -4386,7 +4389,7 @@ def _hy_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "symbol",
             F.unix_micros("ts").alias("us"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+            cents(F.col("value")).alias("cents"),
             "event_id",
         )
         .groupBy("symbol", "us")
@@ -4511,19 +4514,99 @@ def ticks_hayashi_yoshida(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _hy_normalized(ov, rv, ["sym_a", "sym_b"])
 
 
-# Shared by the experimentation trio (events_ab_test, events_diff_in_diff,
-# events_cuped) on the Spark side; each oracle spells the same portable
-# 28-bit md5 split inline against its own table alias.
-def _md5_even() -> "F.Column":
-    """True for users in the even md5 half (arm A / treated) — the
-    doc_md5_* portable-hash convention, bit-identical in both engines."""
+def _user_spend(ev: DataFrame) -> DataFrame:
+    """``(user_id, spend)``: each user's spend in whole cents, summed
+    over the events with a positive value."""
     return (
-        F.expr(
-            "cast(conv(substr(md5(cast(user_id as string)), 1, 7),"
-            " 16, 10) as bigint) % 2"
-        )
-        == 0
+        ev.filter(F.col("value") > 0)
+        .groupBy("user_id")
+        .agg(F.sum(cents(F.col("value"))).cast("long").alias("spend"))
     )
+
+
+def _spend_hist(u: DataFrame) -> DataFrame:
+    """``(spend, t, t_a)``: for each spend of a ``_user_spend`` table,
+    the number of users and how many of them are in arm A."""
+    return (
+        u.select(_arm("A", "B").alias("arm"), "spend")
+        .groupBy("spend")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("t"),
+            F.count(F.when(F.col("arm") == "A", F.lit(1))).cast("long").alias("t_a"),
+        )
+    )
+
+
+def _first_conv(ev: DataFrame) -> DataFrame:
+    """``(is_a, conv)`` per user: 1 in arm A (else 0), and 1 when the
+    user's first event by ``_event_key`` is a purchase (else 0)."""
+    return (
+        ev.select("user_id", "event_type", _event_key().alias("__k"))
+        .groupBy("user_id")
+        .agg(
+            F.when(F.min_by("event_type", "__k") == "purchase", F.lit(1))
+            .otherwise(F.lit(0))
+            .alias("conv")
+        )
+        .select(_arm(1, 0).alias("is_a"), "conv")
+    )
+
+
+def _type_ztests(ev: DataFrame) -> DataFrame:
+    """``(event_type, x_a, x_b, z_q6)``: per event type, the users of
+    each arm whose first event (by ``_event_key``) has that type, and
+    the pooled two-proportion z of the two arms' shares, snapped to q6.
+    Types that are first for no user or for every user are left out."""
+    u = (
+        ev.select(
+            "user_id",
+            "event_type",
+            _arm("A", "B").alias("arm"),
+            _event_key().alias("__k"),
+        )
+        .groupBy("user_id", "arm")
+        .agg(F.min_by("event_type", "__k").alias("event_type"))
+        .localCheckpoint()  # feeds the population count and per-type counts
+    )
+    pop = u.agg(
+        F.count(F.when(F.col("arm") == "A", F.lit(1))).cast("long").alias("n_a"),
+        F.count(F.when(F.col("arm") == "B", F.lit(1))).cast("long").alias("n_b"),
+    )
+    x = u.groupBy("event_type").agg(
+        F.count(F.when(F.col("arm") == "A", F.lit(1))).cast("long").alias("x_a"),
+        F.count(F.when(F.col("arm") == "B", F.lit(1))).cast("long").alias("x_b"),
+    )
+    na_d = F.col("n_a").cast("double")
+    nb_d = F.col("n_b").cast("double")
+    pp = (F.col("x_a") + F.col("x_b")).cast("double") / (
+        F.col("n_a") + F.col("n_b")
+    ).cast("double")
+    zval = (
+        F.col("x_a").cast("double") / na_d - F.col("x_b").cast("double") / nb_d
+    ) / F.sqrt(pp * (F.lit(1.0) - pp) * (F.lit(1.0) / na_d + F.lit(1.0) / nb_d))
+    return (
+        x.crossJoin(F.broadcast(pop))
+        .filter(
+            (F.col("x_a") + F.col("x_b") > 0)
+            & (F.col("x_a") + F.col("x_b") < F.col("n_a") + F.col("n_b"))
+        )
+        .select("event_type", "x_a", "x_b", q6(zval).alias("z_q6"))
+    )
+
+
+def _contingency(cells: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The margins of an ``(event_type, arm, o)`` table of cell counts:
+    the row totals ``(event_type, r_tot)``, the column totals ``(arm,
+    c_tot)`` and the one-row grand total ``(n_tot, r, c)`` with the
+    numbers of rows and columns."""
+    rt = cells.groupBy("event_type").agg(F.sum("o").cast("long").alias("r_tot"))
+    ct = cells.groupBy("arm").agg(F.sum("o").cast("long").alias("c_tot"))
+    tt = cells.agg(
+        F.sum("o").cast("long").alias("n_tot"),
+        F.countDistinct("event_type").cast("long").alias("r"),
+        F.countDistinct("arm").cast("long").alias("c"),
+    )
+    return rt, ct, tt
 
 
 def _mid_cut(ev: DataFrame) -> DataFrame:
@@ -4607,15 +4690,7 @@ def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("conv")
         )
-        .select(
-            F.when(
-                _md5_even(),
-                F.lit("A"),
-            )
-            .otherwise(F.lit("B"))
-            .alias("arm"),
-            "conv",
-        )
+        .select(_arm("A", "B").alias("arm"), "conv")
     )
     g = u.agg(
         F.count(F.when(F.col("arm") == "A", F.lit(1))).cast("long").alias("n_a"),
@@ -4766,7 +4841,7 @@ def events_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_type") == "purchase") & (F.col("value") > 0)
     ).select(
         "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     rep = base.select(
         "event_id",
@@ -5103,7 +5178,7 @@ def ticks_epps_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "symbol",
             F.unix_micros("ts").alias("us"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+            cents(F.col("value")).alias("cents"),
             "event_id",
         )
         .groupBy("symbol", "us")
@@ -5269,16 +5344,11 @@ def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.crossJoin(F.broadcast(cut))
         .select(
             "user_id",
-            F.when(
-                _md5_even(),
-                F.lit("T"),
-            )
-            .otherwise(F.lit("C"))
-            .alias("arm"),
+            _arm("T", "C").alias("arm"),
             F.when(F.unix_micros("ts") < F.col("cut_us"), F.lit("pre"))
             .otherwise(F.lit("post"))
             .alias("period"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c1"),
+            cents(F.col("value")).alias("c1"),
         )
         .groupBy("user_id", "arm", "period")
         .agg(F.sum("c1").cast("long").alias("cents"))
@@ -5410,21 +5480,16 @@ def events_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row roll-ups.  No counterpart in the reference."""
     ev = _td(spark, sf_dir, "events").filter(F.col("value") > 0)
     cut = _mid_cut(ev)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    vc = cents(F.col("value"))
     u = (
         ev.crossJoin(F.broadcast(cut))
         .select(
             "user_id",
-            F.when(
-                _md5_even(),
-                F.lit("T"),
-            )
-            .otherwise(F.lit("C"))
-            .alias("arm"),
-            F.when(F.unix_micros("ts") < F.col("cut_us"), cents)
+            _arm("T", "C").alias("arm"),
+            F.when(F.unix_micros("ts") < F.col("cut_us"), vc)
             .otherwise(F.lit(0))
             .alias("xc"),
-            F.when(F.unix_micros("ts") >= F.col("cut_us"), cents)
+            F.when(F.unix_micros("ts") >= F.col("cut_us"), vc)
             .otherwise(F.lit(0))
             .alias("yc"),
         )
@@ -5665,7 +5730,7 @@ def events_bandit_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select(
             F.to_date("ts").alias("day"),
             "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c1"),
+            cents(F.col("value")).alias("c1"),
         )
         .groupBy("day", "event_type")
         .agg(
@@ -5787,7 +5852,7 @@ def stats_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = back.groupBy((F.col("user_id") % 10).alias("bucket")).agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("event_id").cast("long").alias("key_sum"),
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
+            F.sum(cents(F.col("value")))
             .cast("long")
             .alias("cents_sum"),
         )
@@ -5908,51 +5973,7 @@ def events_holm_multiple_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
     No counterpart in the reference."""
     from pyspark.sql import Window
 
-    ev = _td(spark, sf_dir, "events")
-    key = F.concat(
-        F.lpad(F.expr("unix_micros(ts) div 1000").cast("string"), 14, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
-    u = (
-        ev.select(
-            "user_id",
-            "event_type",
-            F.when(_md5_even(), F.lit("A")).otherwise(F.lit("B")).alias("arm"),
-            key.alias("__k"),
-        )
-        .groupBy("user_id", "arm")
-        .agg(F.min_by("event_type", "__k").alias("event_type"))
-        .localCheckpoint()  # feeds the population count and per-type counts
-    )
-    pop = u.agg(
-        F.count(F.when(F.col("arm") == "A", F.lit(1))).cast("long").alias("n_a"),
-        F.count(F.when(F.col("arm") == "B", F.lit(1))).cast("long").alias("n_b"),
-    )
-    x = u.groupBy("event_type").agg(
-        F.count(F.when(F.col("arm") == "A", F.lit(1))).cast("long").alias("x_a"),
-        F.count(F.when(F.col("arm") == "B", F.lit(1))).cast("long").alias("x_b"),
-    )
-    na_d = F.col("n_a").cast("double")
-    nb_d = F.col("n_b").cast("double")
-    pp = (F.col("x_a") + F.col("x_b")).cast("double") / (
-        F.col("n_a") + F.col("n_b")
-    ).cast("double")
-    zval = (
-        F.col("x_a").cast("double") / na_d - F.col("x_b").cast("double") / nb_d
-    ) / F.sqrt(pp * (F.lit(1.0) - pp) * (F.lit(1.0) / na_d + F.lit(1.0) / nb_d))
-    zq = (
-        x.crossJoin(F.broadcast(pop))
-        .filter(
-            (F.col("x_a") + F.col("x_b") > 0)
-            & (F.col("x_a") + F.col("x_b") < F.col("n_a") + F.col("n_b"))
-        )
-        .select(
-            "event_type",
-            "x_a",
-            "x_b",
-            (F.floor(zval * 1e6 + F.lit(0.5)) / 1e6).alias("z_q6"),
-        )
-    )
+    zq = _type_ztests(_td(spark, sf_dir, "events"))
     wr = Window.orderBy(F.abs(F.col("z_q6")).desc(), F.col("event_type"))
     ranked = zq.select(
         "*",
@@ -6048,16 +6069,13 @@ def events_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFr
             F.sum(
                 F.when(
                     (F.col("event_type") == "purchase") & (F.col("value") > 0),
-                    F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"),
+                    cents(F.col("value")),
                 ).otherwise(F.lit(0))
             )
             .cast("long")
             .alias("cents")
         )
-        .select(
-            F.when(_md5_even(), F.lit("T")).otherwise(F.lit("C")).alias("arm"),
-            "cents",
-        )
+        .select(_arm("T", "C").alias("arm"), "cents")
         .localCheckpoint()  # feeds the arm sizes and the histogram
     )
     n = u.groupBy("arm").agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -6167,24 +6185,7 @@ def events_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor/ceil identically; the verdict compares exact integers.
     Degenerate baselines (0% or 100%) emit no row rather than a
     division by zero.  Scale: one user-level hash agg, one-row output."""
-    ev = _td(spark, sf_dir, "events")
-    key = F.concat(
-        F.lpad(F.expr("unix_micros(ts) div 1000").cast("string"), 14, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
-    u = (
-        ev.select("user_id", "event_type", key.alias("__k"))
-        .groupBy("user_id")
-        .agg(
-            F.when(F.min_by("event_type", "__k") == "purchase", F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("conv")
-        )
-        .select(
-            F.when(_md5_even(), F.lit(1)).otherwise(F.lit(0)).alias("is_a"),
-            "conv",
-        )
-    )
+    u = _first_conv(_td(spark, sf_dir, "events"))
     g = u.agg(
         F.count(F.lit(1)).cast("long").alias("n_users"),
         F.sum("conv").cast("long").alias("x_conv"),
@@ -6299,20 +6300,7 @@ def events_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window), one roll-up. two_u_a is exact BIGINT
     (bounded by n_a·n_b·2 — past int64 only beyond ~2e9 users per arm).
     No counterpart in the reference."""
-    ev = _td(spark, sf_dir, "events").filter(F.col("value") > 0)
-    su = ev.groupBy("user_id").agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-        .cast("long")
-        .alias("spend")
-    )
-    u = su.select(
-        F.when(_md5_even(), F.lit("A")).otherwise(F.lit("B")).alias("arm"),
-        "spend",
-    )
-    g = u.groupBy("spend").agg(
-        F.count(F.lit(1)).cast("long").alias("t"),
-        F.count(F.when(F.col("arm") == "A", F.lit(1))).cast("long").alias("t_a"),
-    )
+    g = _spend_hist(_user_spend(_td(spark, sf_dir, "events")))
     c = stats.global_cumsum(g, ["spend"], "t")
     td = F.col("t").cast("decimal(19,0)")
     s = c.agg(
@@ -6435,22 +6423,14 @@ def events_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         ev.select(
             "event_type",
-            F.when(_md5_even(), F.lit("A")).otherwise(F.lit("B")).alias("arm"),
+            _arm("A", "B").alias("arm"),
         )
         .groupBy("event_type", "arm")
         .agg(F.count(F.lit(1)).cast("long").alias("o"))
         .localCheckpoint()  # types×2 rows feed four plan branches —
         # without this each branch re-scans the events corpus
     )
-    rt = cells.groupBy("event_type").agg(
-        F.sum("o").cast("long").alias("r_tot")
-    )
-    ct = cells.groupBy("arm").agg(F.sum("o").cast("long").alias("c_tot"))
-    tt = cells.agg(
-        F.sum("o").cast("long").alias("n_tot"),
-        F.countDistinct("event_type").cast("long").alias("r"),
-        F.countDistinct("arm").cast("long").alias("c"),
-    )
+    rt, ct, tt = _contingency(cells)
     j = (
         cells.join(F.broadcast(rt), "event_type")
         .join(F.broadcast(ct), "arm")
@@ -6574,14 +6554,10 @@ def events_jackknife_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     events pass, then ≤20-row frames. No counterpart in the
     reference."""
     ev = _td(spark, sf_dir, "events").filter(F.col("value") > 0)
-    bucket = F.expr(
-        "cast(conv(substr(md5(cast(user_id as string)), 1, 7), 16, 10)"
-        " as bigint) % 20"
-    )
     bk = (
         ev.select(
-            bucket.alias("bucket"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+            _user_bucket(20).alias("bucket"),
+            cents(F.col("value")).alias("c"),
         )
         .groupBy("bucket")
         .agg(
@@ -6786,25 +6762,8 @@ def events_wasserstein_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_classifier_auc / QTE histogram-sweep family, never a
     single-partition window over the corpus. No counterpart in the
     reference."""
-    ev = _td(spark, sf_dir, "events").filter(F.col("value") > 0)
-    su = ev.groupBy("user_id").agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-        .cast("long")
-        .alias("spend")
-    )
-    u = su.select(
-        F.when(_md5_even(), F.lit("A")).otherwise(F.lit("B")).alias("arm"),
-        "spend",
-    )
-    g = (
-        u.groupBy("spend")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("t"),
-            F.count(F.when(F.col("arm") == "A", F.lit(1)))
-            .cast("long")
-            .alias("t_a"),
-        )
-        .withColumn("one", F.lit(1).cast("long"))
+    g = _spend_hist(_user_spend(_td(spark, sf_dir, "events"))).withColumn(
+        "one", F.lit(1).cast("long")
     )
     c = stats.global_cumsum(
         stats.global_cumsum(
@@ -6916,22 +6875,7 @@ def events_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     global_cumsum histogram-sweep shape as events_wasserstein_arms —
     one user agg, one value agg, range-partitioned prefix sums, one
     roll-up. No counterpart in the reference."""
-    ev = _td(spark, sf_dir, "events").filter(F.col("value") > 0)
-    su = ev.groupBy("user_id").agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-        .cast("long")
-        .alias("spend")
-    )
-    u = su.select(
-        F.when(_md5_even(), F.lit("A")).otherwise(F.lit("B")).alias("arm"),
-        "spend",
-    )
-    g = u.groupBy("spend").agg(
-        F.count(F.lit(1)).cast("long").alias("t"),
-        F.count(F.when(F.col("arm") == "A", F.lit(1)))
-        .cast("long")
-        .alias("t_a"),
-    )
+    g = _spend_hist(_user_spend(_td(spark, sf_dir, "events")))
     c = stats.global_cumsum(
         stats.global_cumsum(g, ["spend"], "t"), ["spend"], "t_a"
     )
@@ -7022,22 +6966,7 @@ def events_winsorized_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the same histogram-sweep shape as events_wasserstein_arms /
     events_ks_test — one user agg, one value agg, a global_cumsum
     sweep, one broadcast roll-up. No counterpart in the reference."""
-    ev = _td(spark, sf_dir, "events").filter(F.col("value") > 0)
-    su = ev.groupBy("user_id").agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-        .cast("long")
-        .alias("spend")
-    )
-    u = su.select(
-        F.when(_md5_even(), F.lit("A")).otherwise(F.lit("B")).alias("arm"),
-        "spend",
-    )
-    g = u.groupBy("spend").agg(
-        F.count(F.lit(1)).cast("long").alias("t"),
-        F.count(F.when(F.col("arm") == "A", F.lit(1)))
-        .cast("long")
-        .alias("t_a"),
-    )
+    g = _spend_hist(_user_spend(_td(spark, sf_dir, "events")))
     c = stats.global_cumsum(g, ["spend"], "t")
     tot = c.agg(
         F.max("cum_t").cast("long").alias("n"),
@@ -7165,7 +7094,7 @@ def events_msprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _td(spark, sf_dir, "events").filter(F.col("value") > 0)
     su = ev.groupBy("user_id").agg(
         F.min("ts").cast("date").alias("day"),
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
+        F.sum(cents(F.col("value")))
         .cast("long")
         .alias("spend"),
     )
@@ -7174,7 +7103,7 @@ def events_msprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         "spend",
         (d19(F.col("spend")) * d19(F.col("spend"))).alias("spend2"),
-        F.when(_md5_even(), F.lit("T")).otherwise(F.lit("C")).alias("arm"),
+        _arm("T", "C").alias("arm"),
     )
     t_ = lambda c: F.when(F.col("arm") == "T", c).otherwise(F.lit(0))  # noqa: E731
     c_ = lambda c: F.when(F.col("arm") == "C", c).otherwise(F.lit(0))  # noqa: E731
@@ -7321,8 +7250,8 @@ def events_did_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
             "((unix_micros(ts) - cut_us + 100000 * 86400000000)"
             " div 86400000000) - 100000"
         ).alias("rel"),
-        F.when(_md5_even(), F.lit("T")).otherwise(F.lit("C")).alias("arm"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        _arm("T", "C").alias("arm"),
+        cents(F.col("value")).alias("cents"),
     )
     t_ = lambda c: F.when(F.col("arm") == "T", c).otherwise(F.lit(0))  # noqa: E731
     c_ = lambda c: F.when(F.col("arm") == "C", c).otherwise(F.lit(0))  # noqa: E731
@@ -7484,51 +7413,7 @@ def events_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     No counterpart in the reference."""
     from pyspark.sql import Window
 
-    ev = _td(spark, sf_dir, "events")
-    key = F.concat(
-        F.lpad(F.expr("unix_micros(ts) div 1000").cast("string"), 14, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
-    u = (
-        ev.select(
-            "user_id",
-            "event_type",
-            F.when(_md5_even(), F.lit("A")).otherwise(F.lit("B")).alias("arm"),
-            key.alias("__k"),
-        )
-        .groupBy("user_id", "arm")
-        .agg(F.min_by("event_type", "__k").alias("event_type"))
-        .localCheckpoint()  # feeds both the population and per-type counts
-    )
-    pop = u.agg(
-        F.count(F.when(F.col("arm") == "A", F.lit(1))).cast("long").alias("n_a"),
-        F.count(F.when(F.col("arm") == "B", F.lit(1))).cast("long").alias("n_b"),
-    )
-    x = u.groupBy("event_type").agg(
-        F.count(F.when(F.col("arm") == "A", F.lit(1))).cast("long").alias("x_a"),
-        F.count(F.when(F.col("arm") == "B", F.lit(1))).cast("long").alias("x_b"),
-    )
-    na_d = F.col("n_a").cast("double")
-    nb_d = F.col("n_b").cast("double")
-    pp = (F.col("x_a") + F.col("x_b")).cast("double") / (
-        F.col("n_a") + F.col("n_b")
-    ).cast("double")
-    zval = (
-        F.col("x_a").cast("double") / na_d - F.col("x_b").cast("double") / nb_d
-    ) / F.sqrt(pp * (F.lit(1.0) - pp) * (F.lit(1.0) / na_d + F.lit(1.0) / nb_d))
-    zq = (
-        x.crossJoin(F.broadcast(pop))
-        .filter(
-            (F.col("x_a") + F.col("x_b") > 0)
-            & (F.col("x_a") + F.col("x_b") < F.col("n_a") + F.col("n_b"))
-        )
-        .select(
-            "event_type",
-            "x_a",
-            "x_b",
-            (F.floor(zval * 1e6 + F.lit(0.5)) / 1e6).alias("z_q6"),
-        )
-    )
+    zq = _type_ztests(_td(spark, sf_dir, "events"))
     # A&S 7.1.26 erfc staged exactly as in the oracle: x = |z|/sqrt(2)
     # as one product with the frozen reciprocal literal, t the rational
     # node, exp(-x^2) via detmath on a staged column
@@ -7678,7 +7563,7 @@ def events_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _td(spark, sf_dir, "events").filter(F.col("value") > 0)
     obs = ev.select(
         F.col("event_type").alias("grp"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
+        cents(F.col("value")).alias("v"),
     )
     gv = obs.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("t"))
     c = stats.global_cumsum(gv, ["v"], "t").localCheckpoint()
@@ -7818,7 +7703,7 @@ def events_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _td(spark, sf_dir, "events").filter(F.col("value") > 0)
     d = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
+        F.sum(cents(F.col("value")))
         .cast("long")
         .alias("cents"),
     )
@@ -7919,15 +7804,11 @@ def ticks_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = _td(spark, sf_dir, "ticks").filter(F.col("value") > 0)
-    key = F.concat(
-        F.lpad(F.expr("unix_micros(ts) div 1000").cast("string"), 14, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
     t = ev.select(
         "symbol",
         F.to_date("ts").alias("day"),
-        key.alias("k"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        _event_key().alias("k"),
+        cents(F.col("value")).alias("cents"),
     )
     d = (
         t.groupBy("symbol", "day")
@@ -8253,7 +8134,7 @@ def events_log_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("tp").isNotNull(), F.lit(1))
             .otherwise(F.lit(0))
             .alias("c"),
-            F.when(_md5_even(), F.lit(1)).otherwise(F.lit(0)).alias("is_a"),
+            _arm(1, 0).alias("is_a"),
         )
     )
     n = u.agg(
@@ -8407,7 +8288,7 @@ def events_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _td(spark, sf_dir, "events").filter(F.col("value") > 0)
     obs = ev.select(
         F.col("event_type").alias("grp"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
+        cents(F.col("value")).alias("v"),
     )
     vd = F.col("v").cast("decimal(19,0)")
     g = obs.groupBy("grp").agg(
@@ -8530,12 +8411,7 @@ def events_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     two shares are single double divisions of exact integers snapped
     q6. Scale: one user-grain agg, one range exchange, a 10-row
     broadcast join. No counterpart in the reference."""
-    ev = _td(spark, sf_dir, "events").filter(F.col("value") > 0)
-    su = ev.groupBy("user_id").agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-        .cast("long")
-        .alias("spend")
-    )
+    su = _user_spend(_td(spark, sf_dir, "events"))
     ranked = stats.global_cumsum(
         su.withColumn("one", F.lit(1).cast("long")),
         order_cols=[F.col("spend").asc(), F.col("user_id").asc()],
@@ -8649,24 +8525,7 @@ def events_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     undefined; callers wanting a Haldane correction can add 0.5 —
     documented, not silently applied). Scale: one hash agg, one-row
     frames. No counterpart in the reference."""
-    ev = _td(spark, sf_dir, "events")
-    key = F.concat(
-        F.lpad(F.expr("unix_micros(ts) div 1000").cast("string"), 14, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
-    u = (
-        ev.select("user_id", "event_type", key.alias("__k"))
-        .groupBy("user_id")
-        .agg(
-            F.when(F.min_by("event_type", "__k") == "purchase", F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("conv")
-        )
-        .select(
-            F.when(_md5_even(), F.lit(1)).otherwise(F.lit(0)).alias("is_a"),
-            "conv",
-        )
-    )
+    u = _first_conv(_td(spark, sf_dir, "events"))
     t = u.agg(
         F.sum(F.col("is_a") * F.col("conv")).cast("long").alias("a"),
         F.sum(F.col("is_a") * (1 - F.col("conv"))).cast("long").alias("b"),
@@ -8772,15 +8631,11 @@ def ticks_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     day) grain, then day-grain frames only.
     No counterpart in the reference."""
     ev = _td(spark, sf_dir, "ticks").filter(F.col("value") > 0)
-    key = F.concat(
-        F.lpad(F.expr("unix_micros(ts) div 1000").cast("string"), 14, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
     t = ev.select(
         "symbol",
         F.to_date("ts").alias("day"),
-        key.alias("k"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        _event_key().alias("k"),
+        cents(F.col("value")).alias("cents"),
     )
     d = (
         t.groupBy("symbol", "day")
@@ -8912,7 +8767,7 @@ def ticks_dickey_fuller(spark: SparkSession, sf_dir: str) -> DataFrame:
     #symbols-sized frames after the sums.
     No counterpart in the reference."""
     t = _td(spark, sf_dir, "ticks").withColumn(
-        "v", F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+        "v", cents(F.col("value"))
     )
     w = _tick_order()
     lagd = t.select(
@@ -9014,18 +8869,12 @@ def events_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _td(spark, sf_dir, "events")
     ecells = ev.select(
         "event_type",
-        F.when(_md5_even(), F.lit("A")).otherwise(F.lit("B")).alias("arm"),
+        _arm("A", "B").alias("arm"),
     )
     cells = ecells.groupBy("event_type", "arm").agg(
         F.count(F.lit(1)).cast("long").alias("o")
     ).localCheckpoint()  # feeds the row/col/grand totals and the cell pass
-    rt = cells.groupBy("event_type").agg(F.sum("o").cast("long").alias("r_tot"))
-    ct = cells.groupBy("arm").agg(F.sum("o").cast("long").alias("c_tot"))
-    tt = cells.agg(
-        F.sum("o").cast("long").alias("n_tot"),
-        F.countDistinct("event_type").cast("long").alias("r"),
-        F.countDistinct("arm").cast("long").alias("c"),
-    )
+    rt, ct, tt = _contingency(cells)
     # FULL r x c scaffold: a zero cell still contributes (0-E)^2/E,
     # which a bare groupBy silently drops (the G-test is immune --
     # 0*ln(0/E) = 0 -- but chi-square is NOT)

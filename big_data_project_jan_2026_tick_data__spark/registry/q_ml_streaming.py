@@ -17,8 +17,8 @@ from ..operators import (  # noqa: F401
     ticks,
 )
 from ..functions import detmath
-from ..functions.scalars import q6
-from ._base import _quotes, _register, _td, _ticks
+from ..functions.scalars import cents, q6
+from ._base import _arm, _event_key, _quotes, _register, _td, _ticks
 
 
 from contextlib import contextmanager
@@ -1866,18 +1866,14 @@ def ml_information_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate.  No counterpart in the reference (its ML evaluation is
     accuracy-only, ML Model/Scripts/train.py); this is the signal-quality
     metric its tick features feed at a real desk."""
-    key = F.concat(
-        F.lpad(F.expr("unix_micros(ts) div 1000").cast("string"), 14, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
     ev = _td(spark, sf_dir, "ticks")
     closes = (
         ev.filter(F.col("value") > 0)
         .select(
             "symbol",
             F.to_date("ts").alias("day"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-            key.alias("__k"),
+            cents(F.col("value")).alias("cents"),
+            _event_key().alias("__k"),
         )
         .groupBy("symbol", "day")
         .agg(F.max_by("cents", "__k").alias("close"))
@@ -1974,17 +1970,11 @@ def streaming_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analogue: its monitoring posture (PDF §health checks) —
     no streaming statistics exist there."""
     with _replayed_events(spark, sf_dir, "stream_srm_") as src:
-        arm = F.when(
-            F.expr(
-                "cast(conv(substr(md5(cast(user_id as string)), 1, 7),"
-                " 16, 10) as bigint) % 2"
-            )
-            == 0,
-            F.lit("A"),
-        ).otherwise(F.lit("B"))
         agg = (
             src.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 day").alias("w"), arm.alias("arm"))
+            .groupBy(
+                F.window("ts", "1 day").alias("w"), _arm("A", "B").alias("arm")
+            )
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
             .select(
                 F.col("w.start").alias("window_start"),

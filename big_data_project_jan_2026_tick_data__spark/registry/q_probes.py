@@ -17,11 +17,11 @@ explicit ``CAST(sum(..) AS BIGINT)``) was the counter-diagnostic.
 The four originals now cast every integer-sum output to BIGINT.  These
 probes prove (or refute) the mechanism *in the driver environment*:
 
-- ``probe_hugeint_render`` — DELIBERATE INSTRUMENT, the only registry
-  row where a driver hash-FAIL is the *expected confirming* outcome:
-  its oracle emits a raw HUGEINT sum on purpose.  FAIL here + PASS on
-  its twin == the driver renders HUGEINT differently, q.e.d.  PASS here
-  == the theory is wrong and the detmath/norm probes take over.
+- ``probe_hugeint_render`` (retired, removed) — the deliberate
+  instrument whose oracle emitted a raw HUGEINT sum: a driver hash-FAIL
+  there with a PASS on its BIGINT twin confirmed the mechanism, and
+  the r7 driver run delivered exactly that.  The standing protection
+  is the guard test ``test_no_hugeint_oracle_outputs``.
 - ``probe_bigint_render`` — identical values with the BIGINT cast; must
   be green under any theory (control row).
 - ``probe_norm_wordfreq`` — top-200 normalized word frequencies; tests
@@ -33,43 +33,13 @@ probes prove (or refute) the mechanism *in the driver environment*:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import detmath
 from ..operators.text import normalize_text
-from ._base import ENV_GATED, _pin_session, _register, _td
+from ._base import _pin_session, _register, _td
 from .q_docs import _norm_sql
-
-
-def _probe_hugeint_render(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED instrument (r7 → r8): the oracle intentionally emits
-    ``sum(INTEGER)`` un-cast (HUGEINT in DuckDB) against Spark's BIGINT,
-    so a driver hash-FAIL was the *expected confirming* outcome.  The r7
-    driver run delivered exactly that (hash-FAIL here, PASS on the cast
-    twin probe_bigint_render) — the HUGEINT-rendering root cause of the
-    r4-r6 text-family hash-fails is proven, q.e.d.  Leaving it
-    registered would burn an adjudication slot every round re-proving a
-    settled fact and show a permanent cosmetic red, so it is registered
-    only under ``SPARK_GRAFT_PROBES=1``; the standing protection is the
-    guard test ``test_no_hugeint_oracle_outputs``."""
-    nation = _td(spark, sf_dir, "nation")
-    return nation.groupBy("n_regionkey").agg(
-        F.sum("n_nationkey").cast("long").alias("key_sum")
-    )
-
-
-if os.environ.get("SPARK_GRAFT_PROBES") == "1":
-    ENV_GATED.add("probe_hugeint_render")
-    _register(
-        "probe_hugeint_render",
-        """
-        SELECT n_regionkey, sum(n_nationkey) AS key_sum
-        FROM nation GROUP BY n_regionkey
-        """,
-    )(_probe_hugeint_render)
 
 
 @_register(
@@ -80,9 +50,10 @@ if os.environ.get("SPARK_GRAFT_PROBES") == "1":
     """,
 )
 def probe_bigint_render(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Control twin of probe_hugeint_render: identical values, oracle sum
-    cast to BIGINT.  Green under any theory; a FAIL here would falsify
-    the rendering hypothesis entirely and point at the data itself."""
+    """Control twin of the retired probe_hugeint_render: identical
+    values, oracle sum cast to BIGINT.  Green under any theory; a FAIL
+    here would falsify the rendering hypothesis entirely and point at
+    the data itself."""
     nation = _td(spark, sf_dir, "nation")
     return nation.groupBy("n_regionkey").agg(
         F.sum("n_nationkey").cast("long").alias("key_sum")

@@ -18,7 +18,7 @@ from ..operators import (  # noqa: F401
 )
 from ..functions import detmath
 from ..functions.exactagg import exact_avg, exact_avg_sql, exact_sum, exact_sum_sql
-from ..functions.scalars import q6
+from ..functions.scalars import cents, q6
 from ._base import _register, _td
 
 # Shorthand for the oracle f-strings: exact integer-grid sums/means of
@@ -303,21 +303,19 @@ def orders_semi_additive_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     o = _td(spark, sf_dir, "orders")
-    cents = o.select(
+    oc = o.select(
         "o_custkey",
         "o_orderkey",
         "o_orderdate",
         F.to_date(F.date_trunc("month", F.col("o_orderdate"))).alias("month"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("c"),
+        cents(F.col("o_totalprice")).alias("c"),
     )
     wcum = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    cum = cents.withColumn("bal", F.sum("c").over(wcum))
+    cum = oc.withColumn("bal", F.sum("c").over(wcum))
     wlast = Window.partitionBy("o_custkey", "month").orderBy(
         F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
     )
@@ -326,8 +324,8 @@ def orders_semi_additive_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("o_custkey", "month", "bal")
     )
-    months = cents.select("month").distinct()
-    custs = cents.select("o_custkey").distinct()
+    months = oc.select("month").distinct()
+    custs = oc.select("o_custkey").distinct()
     grid = custs.crossJoin(F.broadcast(months)).join(
         closing, ["o_custkey", "month"], "left"
     )
@@ -1698,8 +1696,7 @@ def orders_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = o.groupBy(
         F.date_trunc("month", F.col("o_orderdate")).alias("mon")
     ).agg(
-        F.floor(exact_sum(F.col("o_totalprice"), 4) * 100 + F.lit(0.5)).cast("long")
-        .alias("cents"),
+        cents(exact_sum(F.col("o_totalprice"), 4)).alias("cents"),
         F.count(F.lit(1)).alias("n_orders"),
     )
     spine = agg.agg(F.min("mon").alias("mn"), F.max("mon").alias("mx")).select(
@@ -1771,8 +1768,7 @@ def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max("o_orderdate").alias("__last"),
             F.count(F.lit(1)).alias("frequency"),
-            F.floor(exact_sum(F.col("o_totalprice"), 4) * 100 + F.lit(0.5)).cast("long")
-        .alias("cents"),
+            cents(exact_sum(F.col("o_totalprice"), 4)).alias("cents"),
         )
         .select(
             "o_custkey",
@@ -1860,8 +1856,7 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cz = fo.groupBy("cohort").agg(F.count(F.lit(1)).alias("cohort_size"))
     cell = r.groupBy("cohort", "offs").agg(
-        F.floor(exact_sum(F.col("o_totalprice"), 4) * 100 + F.lit(0.5)).cast("long")
-        .alias("cents"),
+        cents(exact_sum(F.col("o_totalprice"), 4)).alias("cents"),
         F.countDistinct("o_custkey").alias("active"),
     )
     w = (
@@ -1914,16 +1909,13 @@ def supplier_return_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _td(spark, sf_dir, "lineitem")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     ret = F.col("l_returnflag") == "R"
-    cents = F.floor(exact_sum(rev, 4) * 100 + F.lit(0.5)).cast("long")
-    ret_cents = F.floor(
-        F.coalesce(exact_sum(F.when(ret, rev), 4), F.lit(0.0)) * 100 + F.lit(0.5)
-    ).cast("long")
+    ret_cents = cents(F.coalesce(exact_sum(F.when(ret, rev), 4), F.lit(0.0)))
     return (
         li.groupBy("l_suppkey")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
             F.count_if(ret).alias("n_returned"),
-            cents.alias("cents"),
+            cents(exact_sum(rev, 4)).alias("cents"),
             ret_cents.alias("ret_cents"),
         )
         .select(
@@ -2340,11 +2332,10 @@ def orders_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a 1e-12 integer grid BEFORE the customer-sized sum (the grid
     rule: the sum is corpus-scale, so no float accumulation may touch
     it)."""
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
     o = _td(spark, sf_dir, "orders")
     c = o.groupBy(
         F.year("o_orderdate").alias("year"), "o_custkey"
-    ).agg(F.sum(cents).alias("cents"))
+    ).agg(F.sum(cents(F.col("o_totalprice"))).alias("cents"))
     t = c.groupBy("year").agg(F.sum("cents").alias("tot"))
     share = F.col("cents").cast("double") / F.col("tot")
     s = c.join(t, "year").select(
@@ -2407,10 +2398,9 @@ def orders_forecast_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-shaped 1-row frame and the q6 outputs are
     layout-independent."""
     orders = _td(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
     m_agg = orders.groupBy(
         F.date_trunc("month", "o_orderdate").alias("month")
-    ).agg(F.sum(cents).alias("rev_cents"))
+    ).agg(F.sum(cents(F.col("o_totalprice"))).alias("rev_cents"))
     # calendar-sized — pin on the driver so the four consumers (prev,
     # increment stats, max month, basis) cost ONE corpus scan, not four
     # (purged-CV precedent, caught by the scan audit)
@@ -2505,9 +2495,8 @@ def orders_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents×12 (12·rev − Σ12) so no division happens before the bounded
     per-month mean, making the q6 outputs layout-independent."""
     orders = _td(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
     m = orders.groupBy(F.date_trunc("month", "o_orderdate").alias("month")).agg(
-        F.sum(cents).alias("rev_cents")
+        F.sum(cents(F.col("o_totalprice"))).alias("rev_cents")
     )
     w = Window.orderBy("month").rowsBetween(-6, 5)
     t = m.select(
@@ -2630,9 +2619,7 @@ def orders_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long"))
         .cast("long")
         .alias("q"),
-        F.sum(
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-        )
+        F.sum(cents(F.col("l_extendedprice")))
         .cast("long")
         .alias("pc"),
     )
@@ -2884,16 +2871,10 @@ def orders_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_partkey").alias("part"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
+            F.sum(cents(F.col("l_extendedprice")))
             .cast("long")
             .alias("sp"),
-            F.sum(
-                F.floor(F.col("l_quantity") * 100 + F.lit(0.5)).cast("long")
-            )
+            F.sum(cents(F.col("l_quantity")))
             .cast("long")
             .alias("sq"),
         )
@@ -3022,7 +3003,7 @@ def orders_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _td(spark, sf_dir, "customer")
     nat = _td(spark, sf_dir, "nation")
     cu = o.groupBy(F.col("o_custkey").alias("ck")).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
+        F.sum(cents(F.col("o_totalprice")))
         .cast("long")
         .alias("x")
     )
@@ -3149,9 +3130,7 @@ def orders_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_totalprice",
         "o_orderdate",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("pc"),
+        cents(F.col("o_totalprice")).alias("pc"),
         F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01"))
         .cast("long")
         .alias("dd"),

@@ -26,7 +26,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.ticks import SESSION_WINDOWS, window_predicate
+from ..operators.ticks import SESSION_WINDOWS, session_filter
 
 
 def session_window_aggregate(
@@ -47,11 +47,7 @@ def session_window_aggregate(
     unified semantics), which is how the oracle checks it.
     """
     ts = F.col(ts_col)
-    pred = None
-    for w in windows:
-        p = window_predicate(ts, *w, closed="left")
-        pred = p if pred is None else (pred | p)
-    filtered = stream.filter(pred)
+    filtered = session_filter(stream, ts_col, windows, closed="left")
     if stream.isStreaming:
         filtered = filtered.withWatermark(ts_col, watermark)
 
@@ -139,12 +135,8 @@ def stateful_window_scorer(
     bucket_ms = bucket_minutes * 60 * 1000
 
     ts = F.col(ts_col)
-    pred = None
-    for w in SESSION_WINDOWS:
-        p = window_predicate(ts, *w, closed="left")
-        pred = p if pred is None else (pred | p)
     src = (
-        stream.filter(pred)
+        session_filter(stream, ts_col, closed="left")
         .withWatermark(ts_col, watermark)
         .withColumn(
             "w_start", F.window(ts, f"{bucket_minutes} minutes").getField("start")

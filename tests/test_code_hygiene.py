@@ -398,3 +398,113 @@ def test_tick_feed_has_one_definition():
                 if kind and not (kind == "ask" and name == "ticks_tz_spread_scrub"):
                     sites.append(f"{rel}:{node.lineno} {name} {kind}")
     assert not sites, f"{len(sites)} sites:\n" + "\n".join(sites)
+
+
+def _is_cents(node) -> bool:
+    """``node`` is ``F.floor(<x> * 100 + F.lit(0.5)).cast('long'|'bigint')``."""
+    if not (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "cast"
+        and len(node.args) == 1
+        and isinstance(node.args[0], ast.Constant)
+        and node.args[0].value in ("long", "bigint")
+    ):
+        return False
+    floor = node.func.value
+    if not (
+        isinstance(floor, ast.Call)
+        and ast.unparse(floor.func) == "F.floor"
+        and len(floor.args) == 1
+    ):
+        return False
+    s = floor.args[0]
+    return (
+        isinstance(s, ast.BinOp)
+        and isinstance(s.op, ast.Add)
+        and ast.unparse(s.right) == "F.lit(0.5)"
+        and isinstance(s.left, ast.BinOp)
+        and isinstance(s.left.op, ast.Mult)
+        and isinstance(s.left.right, ast.Constant)
+        and type(s.left.right.value) is int
+        and s.left.right.value == 100
+    )
+
+
+def _expr_text(node) -> str | None:
+    """The SQL text of an ``F.expr(...)`` call (constant parts of an
+    f-string included), else None."""
+    if not (
+        isinstance(node, ast.Call)
+        and ast.unparse(node.func) == "F.expr"
+        and node.args
+    ):
+        return None
+    arg = node.args[0]
+    if isinstance(arg, ast.JoinedStr):
+        return "".join(
+            v.value for v in arg.values if isinstance(v, ast.Constant)
+        )
+    if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+        return arg.value
+    return None
+
+
+def _is_md5_split(node) -> bool:
+    text = _expr_text(node)
+    return text is not None and "md5(cast(user_id as string))" in text
+
+
+def _is_event_key(node) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and ast.unparse(node.func) == "F.lpad"
+        and bool(node.args)
+        and ast.unparse(node.args[0]).startswith("F.expr('unix_micros(ts) div 1000')")
+    )
+
+
+def test_price_grid_and_arm_split_have_one_definition():
+    """``functions.scalars.cents`` is the one whole-cent price snap, and
+    ``registry/_base.py`` holds the one portable md5 user split
+    (``_user_bucket``, ``_arm``) and the one ``(ts ms, event_id)`` event
+    sort key (``_event_key``). Every other site calls them. A module
+    function that wraps the md5 split counts at each of its calls.
+    Oracle SQL strings are not ``F.expr`` arguments and keep their own
+    text."""
+    sites = []
+    for path in _module_files():
+        rel = str(path.relative_to(PKG))
+        tree = ast.parse(path.read_text(), filename=str(path))
+        tops = [(getattr(top, "name", "<module>"), top) for top in tree.body]
+        wrappers = set()
+        if rel != "registry/_base.py":
+            wrappers = {
+                name for name, top in tops
+                if isinstance(top, ast.FunctionDef)
+                and any(_is_md5_split(n) for n in ast.walk(top))
+                and not any(
+                    isinstance(d, ast.Call) and ast.unparse(d.func) == "_register"
+                    for d in top.decorator_list
+                )
+            }
+        for name, top in tops:
+            for node in ast.walk(top):
+                if _is_cents(node) and rel != "functions/scalars.py":
+                    kind = "cents"
+                elif rel == "registry/_base.py":
+                    continue
+                elif _is_md5_split(node) and name not in wrappers:
+                    kind = "md5 split"
+                elif (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Name)
+                    and node.func.id in wrappers
+                ):
+                    kind = "md5 split"
+                elif _is_event_key(node):
+                    kind = "event key"
+                else:
+                    continue
+                sites.append(f"{rel}:{node.lineno} {name} {kind}")
+    assert not sites, f"{len(sites)} sites:\n" + "\n".join(sites)

@@ -355,3 +355,37 @@ def test_kernels_on_input_that_yields_no_rows(spark, run, schema):
     out = run(spark)
     assert out.schema == schema
     assert out.collect() == []
+
+
+def test_map_rows_called_directly_from_any_directory(tmp_path):
+    """A row-map kernel called directly, not through the registry, from
+    another working directory and with the repo only on the driver's
+    ``sys.path``: ``engine.map_rows`` puts the package on the Python
+    workers' path itself."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    code = (
+        "import sys\n"
+        f"sys.path.insert(0, {str(root)!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        "from big_data_project_jan_2026_tick_data__spark.operators import multimodal\n"
+        "spark = SparkSession.builder.master('local[1]')"
+        ".config('spark.ui.enabled', 'false').getOrCreate()\n"
+        "print(multimodal.extract_features("
+        "multimodal.synthetic_media(spark, 8)).count())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert int(res.stdout.split()[-1]) == 8
