@@ -61,6 +61,13 @@ def brute_force_topk(
         "cosine",
         F.round(dot(F.col("cvec"), F.col("qvec")) / (F.col("cnorm") * F.col("qnorm")), 6),
     )
+    return _topk_by_cosine(scored, k, query_id, corpus_id)
+
+
+def _topk_by_cosine(scored: DataFrame, k: int, query_id: str, corpus_id: str) -> DataFrame:
+    """Per-query top-k of ``scored`` by ``cosine`` (ties by ascending
+    corpus id) as ``(query_id, corpus_id, cosine, rank)``: the exact
+    rerank of ``brute_force_topk``, ``lsh_bucket_topk`` and ``ivf_topk``."""
     w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(corpus_id).asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -217,6 +224,20 @@ def _signature_expr(
     return F.expr(f"({bits})")
 
 
+def _lsh_bucket_sql(dim: int, num_planes: int, seed: int) -> str:
+    """DuckDB twin of :func:`_signature_expr` over a ``vec`` column: the
+    same hyperplanes and bit weights as a sum of ``CASE`` terms, one per
+    plane (the LSH bucket of the oracles)."""
+    bucket_terms = []
+    for p in range(num_planes):
+        plane = ", ".join(repr(v) for v in _hyperplane(dim, p, seed))
+        bucket_terms.append(
+            f"(CASE WHEN list_dot_product(vec, [{plane}]) >= 0 "
+            f"THEN {1 << p} ELSE 0 END)"
+        )
+    return "\n        + ".join(bucket_terms)
+
+
 def _hyperplane(dim: int, plane_idx: int, seed: int) -> list[float]:
     """Deterministic pseudo-random unit-ish hyperplane (pure function of
     (plane_idx, seed) — same plane on every executor, no driver state).
@@ -276,12 +297,7 @@ def lsh_bucket_topk(
             6,
         ),
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(corpus_id).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
-    )
+    return _topk_by_cosine(scored, k, query_id, corpus_id)
 
 
 def ivf_topk(
@@ -406,12 +422,7 @@ def ivf_topk(
             6,
         ),
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(corpus_id).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
-    )
+    return _topk_by_cosine(scored, k, query_id, corpus_id)
 
 
 def _q6(v: float) -> float:
@@ -1034,6 +1045,26 @@ def math_sqrt(x: float) -> float:
     return math.sqrt(x)
 
 
+def _exact_term_sums(v: DataFrame, terms: Column) -> list:
+    """Collected ``(k, s, cnt)`` rows: for each moment term ``k`` of the
+    exploded ``terms`` structs, the exact sum of its values on the 1e-9
+    grid (``decimal(38,0)``, so the sum is order-independent) and the
+    row count. The moment sums of ``whitening_matrix`` and
+    ``procrustes_drift``."""
+    return (
+        v.select(F.explode(terms).alias("e"))
+        .select(F.col("e.k").alias("k"), F.col("e.val").alias("val"))
+        .groupBy("k")
+        .agg(
+            F.sum(
+                F.floor(F.col("val") * 1e9 + F.lit(0.5)).cast("decimal(38,0)")
+            ).alias("s"),
+            F.count(F.lit(1)).cast("long").alias("cnt"),
+        )
+        .collect()
+    )
+
+
 def whitening_matrix(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -1066,18 +1097,7 @@ def whitening_matrix(
                      element_at(v, i + 1) * element_at(v, j + 1) AS val))))
         ))"""
     )
-    agg = (
-        v.select(F.explode(terms).alias("e"))
-        .select(F.col("e.k").alias("k"), F.col("e.val").alias("val"))
-        .groupBy("k")
-        .agg(
-            F.sum(
-                F.floor(F.col("val") * 1e9 + F.lit(0.5)).cast("decimal(38,0)")
-            ).alias("s"),
-            F.count(F.lit(1)).cast("long").alias("cnt"),
-        )
-        .collect()
-    )
+    agg = _exact_term_sums(v, terms)
     if not agg:  # empty corpus: no covariance, so the zero transform
         return [[0.0] * d for _ in range(top)], [0.0] * top
     by_k = {r["k"]: (int(r["s"]), int(r["cnt"])) for r in agg}
@@ -1835,18 +1855,7 @@ def procrustes_drift(
                      element_at(v, i + 1) * element_at(w, j + 1) AS val))))
         ))"""
     )
-    agg = (
-        v.select(F.explode(terms).alias("e"))
-        .select(F.col("e.k").alias("k"), F.col("e.val").alias("val"))
-        .groupBy("k")
-        .agg(
-            F.sum(
-                F.floor(F.col("val") * 1e9 + F.lit(0.5)).cast("decimal(38,0)")
-            ).alias("s"),
-            F.count(F.lit(1)).cast("long").alias("cnt"),
-        )
-        .collect()
-    )
+    agg = _exact_term_sums(v, terms)
     if not agg:
         raise ValueError("procrustes_drift: empty corpus (no vectors of the requested dim)")
     by_k = {r["k"]: int(r["s"]) for r in agg}

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import cents, q6
-from .ticks import SESSION_WINDOWS, window_predicate
+from .ticks import SESSION_WINDOWS, _tick_side, window_predicate
 
 
 def quality_scan(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
@@ -102,25 +102,13 @@ def error_stats(
         n = F.count(c)
         mean = (s1 / F.lit(g1)) / n
         var = (s2 / F.lit(g2) - n.cast("double") * mean * mean) / (n - 1)
-        aggs = [
+        mean_std = [
             mean.alias("mean_err"),
             F.when(n > 1, F.sqrt(F.greatest(var, F.lit(0.0)))).alias("std_err"),
-            F.min(err_col).alias("min_err"),
-            F.max(err_col).alias("max_err"),
-            F.expr(f"percentile({err_col}, 0.5)").alias("median_err"),
         ]
-        for p in percentiles:
-            aggs.append(
-                F.expr(f"percentile({err_col}, {p / 100.0})").alias(
-                    f"p{str(p).replace('.', '_')}"
-                )
-            )
-        if group_cols:
-            return df.groupBy(*group_cols).agg(*aggs)
-        return df.agg(*aggs)
-    aggs = [
-        F.mean(err_col).alias("mean_err"),
-        F.stddev(err_col).alias("std_err"),
+    else:
+        mean_std = [F.mean(err_col).alias("mean_err"), F.stddev(err_col).alias("std_err")]
+    aggs = mean_std + [
         F.min(err_col).alias("min_err"),
         F.max(err_col).alias("max_err"),
         F.expr(f"percentile({err_col}, 0.5)").alias("median_err"),
@@ -289,6 +277,30 @@ def exact_corr_value(prefix: str):
     return F.when((dx > 0) & (dy > 0), num / (F.sqrt(dx) * F.sqrt(dy)))
 
 
+def _bucket_means6(
+    df: DataFrame, ts_col: str, symbol_col: str, value_col: str, interval_sec: int
+) -> DataFrame:
+    """``(sym, __b, __v6)``: each symbol's mean value per ``interval_sec``
+    bucket on the 1e-6 integer grid (exact BIGINT sum over count, then
+    one half-up floor), the resample step of :func:`symbol_correlation`,
+    :func:`lead_lag_correlation` and :func:`market_beta`."""
+    bucket = (F.col(ts_col).cast("long") / interval_sec).cast("long")
+    v6 = F.floor(F.col(value_col) * 1e6 + F.lit(0.5))
+    return (
+        df.groupBy(F.col(symbol_col).alias("sym"), bucket.alias("__b"))
+        .agg(F.sum(v6).alias("__s6"), F.count(value_col).alias("__c"))
+        .select(
+            "sym",
+            "__b",
+            # __s6 is already in 1e-6 units, so the grid-snapped mean is
+            # one floor of the integer-over-count quotient
+            F.floor(
+                F.col("__s6").cast("double") / F.col("__c") + F.lit(0.5)
+            ).alias("__v6"),
+        )
+    )
+
+
 def symbol_correlation(
     df: DataFrame,
     ts_col: str = "ts",
@@ -318,21 +330,7 @@ def symbol_correlation(
     exact integer arithmetic, so partial-agg order cannot move the q6
     result (the r4 doc-query hash-FAIL class).
     """
-    bucket = (F.col(ts_col).cast("long") / interval_sec).cast("long")
-    v6 = F.floor(F.col(value_col) * 1e6 + F.lit(0.5))
-    means = (
-        df.groupBy(F.col(symbol_col).alias("sym"), bucket.alias("__b"))
-        .agg(F.sum(v6).alias("__s6"), F.count(value_col).alias("__c"))
-        .select(
-            "sym",
-            "__b",
-            # __s6 is already in 1e-6 units, so the grid-snapped mean is
-            # one floor of the integer-over-count quotient
-            F.floor(
-                F.col("__s6").cast("double") / F.col("__c") + F.lit(0.5)
-            ).alias("__v6"),
-        )
-    )
+    means = _bucket_means6(df, ts_col, symbol_col, value_col, interval_sec)
     a, b = means.alias("a"), means.alias("b")
     joined = a.join(
         b,
@@ -522,18 +520,14 @@ def kyle_lambda(
     divides back out); symbols with constant signed volume (dx ≤ 0) are
     dropped, a flat price series yields λ = 0 with NULL R².
     """
-    order = [F.col(ts_col).asc(), *[F.col(c).asc() for c in tiebreak_cols]]
-    w1 = Window.partitionBy(symbol_col).orderBy(*order)
-    wc = w1.rowsBetween(Window.unboundedPreceding, 0)
     d = df.withColumn(
         "__p6", F.floor(F.col(price_col) * 1e6 + F.lit(0.5))
     )
-    dp = F.col("__p6") - F.lag("__p6", 1).over(w1)
-    raw_sign = F.when(dp > 0, F.lit(1)).when(dp < 0, F.lit(-1))
+    _, side = _tick_side(ts_col, symbol_col, "__p6", tiebreak_cols)
     bucket = (F.col(ts_col).cast("long") / interval_sec).cast("long")
     okey = F.struct(F.col(ts_col), *[F.col(c) for c in tiebreak_cols])
     bars = (
-        d.withColumn("__side", F.last(raw_sign, ignorenulls=True).over(wc))
+        d.withColumn("__side", side)
         .groupBy(F.col(symbol_col).alias("symbol"), bucket.alias("__b"))
         .agg(
             F.sum(
@@ -599,17 +593,13 @@ def vpin(
         raise ValueError(
             f"bucket_volume must be positive, got {bucket_volume}"
         )
-    order = [F.col(ts_col).asc(), *[F.col(c).asc() for c in tiebreak_cols]]
-    w1 = Window.partitionBy(symbol_col).orderBy(*order)
-    wc = w1.rowsBetween(Window.unboundedPreceding, 0)
     d = df.withColumn(
         "__p6", F.floor(F.col(price_col) * 1e6 + F.lit(0.5))
     )
-    dp = F.col("__p6") - F.lag("__p6", 1).over(w1)
-    raw_sign = F.when(dp > 0, F.lit(1)).when(dp < 0, F.lit(-1))
+    wc, side = _tick_side(ts_col, symbol_col, "__p6", tiebreak_cols)
     sz = F.col(size_col).cast("bigint")
     d = (
-        d.withColumn("__side", F.last(raw_sign, ignorenulls=True).over(wc))
+        d.withColumn("__side", side)
         .withColumn("__sz", sz)
         .withColumn("__cum", F.sum(sz).over(wc))
     )
@@ -738,19 +728,7 @@ def lead_lag_correlation(
     :func:`exact_corr_sums` — every compared aggregate is exact integer
     arithmetic; partial-agg order cannot move the q6 output.
     """
-    bucket = (F.col(ts_col).cast("long") / interval_sec).cast("long")
-    v6 = F.floor(F.col(value_col) * 1e6 + F.lit(0.5))
-    means = (
-        df.groupBy(F.col(symbol_col).alias("sym"), bucket.alias("__b"))
-        .agg(F.sum(v6).alias("__s6"), F.count(value_col).alias("__c"))
-        .select(
-            "sym",
-            "__b",
-            F.floor(
-                F.col("__s6").cast("double") / F.col("__c") + F.lit(0.5)
-            ).alias("__v6"),
-        )
-    )
+    means = _bucket_means6(df, ts_col, symbol_col, value_col, interval_sec)
     w = Window.partitionBy("sym").orderBy("__b")
     diffs = (
         means.withColumn("__pv", F.lag("__v6").over(w))
@@ -1502,19 +1480,7 @@ def market_beta(
     a flat market) drop out, as does any symbol with fewer than
     ``min_buckets`` aligned buckets.
     """
-    bucket = (F.col(ts_col).cast("long") / interval_sec).cast("long")
-    v6 = F.floor(F.col(value_col) * 1e6 + F.lit(0.5))
-    means = (
-        df.groupBy(F.col(symbol_col).alias("sym"), bucket.alias("__b"))
-        .agg(F.sum(v6).alias("__s6"), F.count(value_col).alias("__c"))
-        .select(
-            "sym",
-            "__b",
-            F.floor(
-                F.col("__s6").cast("double") / F.col("__c") + F.lit(0.5)
-            ).alias("__v6"),
-        )
-    )
+    means = _bucket_means6(df, ts_col, symbol_col, value_col, interval_sec)
     mkt = means.groupBy("__b").agg(
         F.floor(
             F.sum("__v6").cast("double") / F.count("__v6") + F.lit(0.5)

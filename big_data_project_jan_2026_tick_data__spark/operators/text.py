@@ -365,6 +365,15 @@ PII_PHONE_RE = r"\+?\d[\d\s()-]{7,}\d"
 PII_IP_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 
 
+def _term_stream(df: DataFrame, key: Column, text_col: str) -> DataFrame:
+    """``(key, term)``: one row per non-empty normalized token of each
+    text. The token stream of :func:`tfidf_top_terms`,
+    :func:`vocab_coverage`, :func:`bm25_search`, :func:`distinctive_terms`
+    and :func:`source_js_divergence`."""
+    toks = F.split(normalize_text(F.col(text_col)), " ")
+    return df.select(key, F.explode(toks).alias("term")).filter(F.length("term") > 0)
+
+
 def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     """PII scrubbing for training corpora: replace emails, phone-shaped
     number runs and IPv4 literals with typed placeholders — chained
@@ -418,10 +427,8 @@ def tfidf_top_terms(
     """
     from pyspark.sql import Window
 
-    toks = F.split(normalize_text(F.col(text_col)), " ")
     tf = (
-        df.select(F.col(id_col), F.explode(toks).alias("term"))
-        .filter(F.length("term") > 0)
+        _term_stream(df, F.col(id_col), text_col)
         .groupBy(id_col, "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -658,10 +665,7 @@ def vocab_coverage(
     corpus text itself never shuffles. Returns
     (id, n_tokens, n_oov, oov_rate_q6).
     """
-    toks = F.split(normalize_text(F.col(text_col)), " ")
-    stream = df.select(F.col(id_col), F.explode(toks).alias("term")).filter(
-        F.length("term") > 0
-    )
+    stream = _term_stream(df, F.col(id_col), text_col)
     freq = stream.groupBy("term").agg(F.count(F.lit(1)).alias("freq"))
     vocab = (
         freq.orderBy(F.col("freq").desc(), F.col("term").asc())
@@ -710,10 +714,7 @@ def bm25_search(
     """
     from pyspark.sql import Window
 
-    toks = F.split(normalize_text(F.col(text_col)), " ")
-    stream = df.select(F.col(id_col), F.explode(toks).alias("term")).filter(
-        F.length("term") > 0
-    )
+    stream = _term_stream(df, F.col(id_col), text_col)
     tf = stream.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     doclen = stream.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
     stats_ = doclen.agg(
@@ -884,10 +885,7 @@ def distinctive_terms(
 
     from ..functions import detmath
 
-    toks = F.split(normalize_text(F.col(text_col)), " ")
-    stream = df.select(F.col(group_col).alias("grp"), F.explode(toks).alias("term")).filter(
-        F.length("term") > 0
-    )
+    stream = _term_stream(df, F.col(group_col).alias("grp"), text_col)
     gt = stream.groupBy("grp", "term").agg(F.count(F.lit(1)).alias("y_st"))
     tmarg = gt.groupBy("term").agg(F.sum("y_st").alias("y_t"))
     gmarg = gt.groupBy("grp").agg(F.sum("y_st").alias("n_s"))
@@ -984,10 +982,7 @@ def source_js_divergence(
             f"ceiling of {_JSD_MAX_PINNED_CELLS}; shrink vocab_size or "
             "pre-bucket the group column"
         )
-    toks = F.split(normalize_text(F.col(text_col)), " ")
-    stream = df.select(F.col(group_col).alias("grp"), F.explode(toks).alias("term")).filter(
-        F.length("term") > 0
-    )
+    stream = _term_stream(df, F.col(group_col).alias("grp"), text_col)
     # ONE corpus pass: aggregate the token stream to (grp, term) counts
     # first and derive everything downstream from that model-sized table
     # (checkpointed — three consumers). The r11 form computed the

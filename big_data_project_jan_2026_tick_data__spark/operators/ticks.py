@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from ..functions.scalars import interval_expr, q6
@@ -171,6 +171,22 @@ def scrub_inf_nan(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     return out
 
 
+def _tick_side(
+    ts_col: str, symbol_col: str, price_col: str, tiebreak_cols: Sequence[str]
+) -> tuple[WindowSpec, Column]:
+    """The tick rule over one per-symbol sort: ``(wc, side)``, the
+    running window (unbounded preceding to the current tick) and each
+    tick's side, +1 above the previous price, −1 below, carried forward
+    over zero ticks (NULL before the first change). Shared by
+    :func:`tick_rule_flow` and ``stats.kyle_lambda``/``stats.vpin``."""
+    order = [F.col(ts_col).asc(), *[F.col(c).asc() for c in tiebreak_cols]]
+    w1 = Window.partitionBy(symbol_col).orderBy(*order)
+    wc = w1.rowsBetween(Window.unboundedPreceding, 0)
+    dp = F.col(price_col) - F.lag(price_col, 1).over(w1)
+    raw_sign = F.when(dp > 0, F.lit(1)).when(dp < 0, F.lit(-1))
+    return wc, F.last(raw_sign, ignorenulls=True).over(wc)
+
+
 def tick_rule_flow(
     df: DataFrame,
     ts_col: str = "ts",
@@ -198,13 +214,8 @@ def tick_rule_flow(
     bar output is integer counts plus a pointwise integer-ratio q6 —
     nothing for partial-agg order to move.
     """
-    order = [F.col(ts_col).asc(), *[F.col(c).asc() for c in tiebreak_cols]]
-    w1 = Window.partitionBy(symbol_col).orderBy(*order)
-    wc = w1.rowsBetween(Window.unboundedPreceding, 0)
-    dp = F.col(price_col) - F.lag(price_col, 1).over(w1)
-    raw_sign = F.when(dp > 0, F.lit(1)).when(dp < 0, F.lit(-1))
+    _, side = _tick_side(ts_col, symbol_col, price_col, tiebreak_cols)
     bucket = (F.col(ts_col).cast("long") / interval_sec).cast("long")
-    side = F.last(raw_sign, ignorenulls=True).over(wc)
     out = (
         df.withColumn("__side", side)
         .withColumn("__b", bucket)
@@ -231,6 +242,22 @@ def tick_rule_flow(
     )
 
 
+def _fill(df, cols, ts_col, partition_cols, tiebreak_cols, pick, start, end) -> DataFrame:
+    """Replace each of ``cols`` by ``pick(col, ignorenulls=True)`` over the
+    per-partition event-time window framed ``rowsBetween(start, end)``:
+    :func:`ffill` is ``F.last`` over the preceding rows, :func:`bfill`
+    ``F.first`` over the following ones."""
+    w = (
+        Window.partitionBy(*partition_cols)
+        .orderBy(F.col(ts_col).asc(), *[F.col(c).asc() for c in tiebreak_cols])
+        .rowsBetween(start, end)
+    )
+    out = df
+    for c in cols:
+        out = out.withColumn(c, pick(F.col(c), ignorenulls=True).over(w))
+    return out
+
+
 def ffill(
     df: DataFrame,
     cols: Sequence[str],
@@ -244,15 +271,10 @@ def ffill(
     ``tiebreak_cols`` totalizes the order when timestamps can repeat —
     without it, fill results on duplicate timestamps are
     partitioning-dependent."""
-    w = (
-        Window.partitionBy(*partition_cols)
-        .orderBy(F.col(ts_col).asc(), *[F.col(c).asc() for c in tiebreak_cols])
-        .rowsBetween(Window.unboundedPreceding, 0)
+    return _fill(
+        df, cols, ts_col, partition_cols, tiebreak_cols,
+        F.last, Window.unboundedPreceding, 0,
     )
-    out = df
-    for c in cols:
-        out = out.withColumn(c, F.last(F.col(c), ignorenulls=True).over(w))
-    return out
 
 
 def bfill(
@@ -265,15 +287,10 @@ def bfill(
     """Backward-fill (reference model.py:227-231 ``bfill``) — mirrored
     first(ignorenulls) over unbounded-following. ``tiebreak_cols`` as in
     :func:`ffill`."""
-    w = (
-        Window.partitionBy(*partition_cols)
-        .orderBy(F.col(ts_col).asc(), *[F.col(c).asc() for c in tiebreak_cols])
-        .rowsBetween(0, Window.unboundedFollowing)
+    return _fill(
+        df, cols, ts_col, partition_cols, tiebreak_cols,
+        F.first, 0, Window.unboundedFollowing,
     )
-    out = df
-    for c in cols:
-        out = out.withColumn(c, F.first(F.col(c), ignorenulls=True).over(w))
-    return out
 
 
 def shift_timezone(df: DataFrame, ts_col: str = "ts", hours: int = 2) -> DataFrame:

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -118,6 +118,36 @@ def enforce(df: DataFrame, rules: Sequence[dict]) -> DataFrame:
     return df if pred is None else df.filter(~F.coalesce(pred, F.lit(False)))
 
 
+def _risk_rollup(
+    classes: DataFrame, risky: Column, by: Sequence[str], ok_name: str
+) -> DataFrame:
+    """Roll equivalence ``classes`` (``__n`` rows each) up to the
+    per-``by`` report of :func:`k_anonymity_report` and
+    :func:`l_diversity_report`: row and class counts, the ``risky``
+    ones, the q6 risky-row fraction and ``ok_name`` (no risky class)."""
+    rep = classes.groupBy(*by).agg(
+        F.sum("__n").alias("n_rows"),
+        F.count(F.lit(1)).alias("n_classes"),
+        F.sum(risky.cast("long")).alias("n_risky_classes"),
+        F.sum(F.when(risky, F.col("__n")).otherwise(0)).alias("n_risky_rows"),
+    )
+    frac = (
+        F.floor(
+            F.col("n_risky_rows") / F.col("n_rows") * 1e6 + F.lit(0.5)
+        )
+        / 1e6
+    )
+    return rep.select(
+        *by,
+        "n_rows",
+        "n_classes",
+        "n_risky_classes",
+        "n_risky_rows",
+        frac.alias("risky_row_frac_q6"),
+        (F.col("n_risky_classes") == 0).alias(ok_name),
+    )
+
+
 def k_anonymity_report(
     df: DataFrame,
     quasi_cols: Sequence[str],
@@ -142,27 +172,7 @@ def k_anonymity_report(
         F.count(F.lit(1)).alias("__n")
     )
     risky = F.col("__n") < k
-    rep = classes.groupBy(*by).agg(
-        F.sum("__n").alias("n_rows"),
-        F.count(F.lit(1)).alias("n_classes"),
-        F.sum(risky.cast("long")).alias("n_risky_classes"),
-        F.sum(F.when(risky, F.col("__n")).otherwise(0)).alias("n_risky_rows"),
-    )
-    frac = (
-        F.floor(
-            F.col("n_risky_rows") / F.col("n_rows") * 1e6 + F.lit(0.5)
-        )
-        / 1e6
-    )
-    return rep.select(
-        *by,
-        "n_rows",
-        "n_classes",
-        "n_risky_classes",
-        "n_risky_rows",
-        frac.alias("risky_row_frac_q6"),
-        (F.col("n_risky_classes") == 0).alias("k_anonymous"),
-    )
+    return _risk_rollup(classes, risky, by, "k_anonymous")
 
 
 def l_diversity_report(
@@ -185,27 +195,7 @@ def l_diversity_report(
         F.countDistinct(sensitive_col).alias("__d"),
     )
     risky = F.col("__d") < l
-    rep = classes.groupBy(*by).agg(
-        F.sum("__n").alias("n_rows"),
-        F.count(F.lit(1)).alias("n_classes"),
-        F.sum(risky.cast("long")).alias("n_risky_classes"),
-        F.sum(F.when(risky, F.col("__n")).otherwise(0)).alias("n_risky_rows"),
-    )
-    frac = (
-        F.floor(
-            F.col("n_risky_rows") / F.col("n_rows") * 1e6 + F.lit(0.5)
-        )
-        / 1e6
-    )
-    return rep.select(
-        *by,
-        "n_rows",
-        "n_classes",
-        "n_risky_classes",
-        "n_risky_rows",
-        frac.alias("risky_row_frac_q6"),
-        (F.col("n_risky_classes") == 0).alias("l_diverse"),
-    )
+    return _risk_rollup(classes, risky, by, "l_diverse")
 
 
 def t_closeness_report(

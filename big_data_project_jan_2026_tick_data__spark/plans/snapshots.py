@@ -250,18 +250,24 @@ class SnapshotTable:
                 last_err = e
         raise last_err
 
+    def _write_data(self, df: DataFrame, mode: str) -> tuple[str, int]:
+        """Write ``df`` once as the parquet files of a new commit directory
+        (``mode`` checked first); returns ``(commit_dir, row count)``.
+        The data step of :meth:`write` and :meth:`write_to_branch`."""
+        if mode not in ("append", "overwrite"):
+            raise ValueError("mode must be append|overwrite")
+        commit_dir = f"data/{uuid.uuid4().hex}"
+        out_path = f"{self.root}/{commit_dir}"
+        df.write.mode("errorifexists").parquet(out_path)
+        return commit_dir, self._hfs.parquet_row_count(out_path)
+
     def write(self, df: DataFrame, mode: str = "append", retries: int = 3) -> Snapshot:
         """Commit ``df`` as a new snapshot. ``mode``: append | overwrite.
         ``retries``: optimistic-concurrency attempts — on a commit race
         the metadata attach is recomputed against the winner's log tail
         and retried; raises :class:`ConcurrentCommitError` when all
         attempts lose."""
-        if mode not in ("append", "overwrite"):
-            raise ValueError("mode must be append|overwrite")
-        commit_dir = f"data/{uuid.uuid4().hex}"
-        out_path = f"{self.root}/{commit_dir}"
-        df.write.mode("errorifexists").parquet(out_path)
-        added = self._hfs.parquet_row_count(out_path)
+        commit_dir, added = self._write_data(df, mode)
         return self._attach(commit_dir, added, mode, mode, retries=retries)
 
     # -- write-audit-publish (WAP) ----------------------------------------
@@ -503,12 +509,7 @@ class SnapshotTable:
         head = self._ref_head(branch)
         if head["type"] != "branch":
             raise ValueError(f"ref {branch!r} is a tag — tags are immutable")
-        if mode not in ("append", "overwrite"):
-            raise ValueError("mode must be append|overwrite")
-        commit_dir = f"data/{uuid.uuid4().hex}"
-        out_path = f"{self.root}/{commit_dir}"
-        df.write.mode("errorifexists").parquet(out_path)
-        added = self._hfs.parquet_row_count(out_path)
+        commit_dir, added = self._write_data(df, mode)
         last_err: Exception | None = None
         for _ in range(max(1, retries)):
             snap = self._attach(

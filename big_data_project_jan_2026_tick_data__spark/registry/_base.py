@@ -179,6 +179,44 @@ def _event_key() -> Column:
     )
 
 
+def _cov_terms(n_col: str) -> tuple[Column, Column, Column]:
+    """``(vx, vy, cov)``: n·Σx² − (Σx)², n·Σy² − (Σy)² and n·Σxy − ΣxΣy
+    over the count ``n_col``, the integer sums ``sx``/``sy`` and the
+    double sums ``sxx``/``syy``/``sxy`` (the regression terms of
+    ``events_cuped`` and ``orders_price_elasticity``)."""
+    nd = F.col(n_col).cast("double")
+    sxd = F.col("sx").cast("double")
+    syd = F.col("sy").cast("double")
+    vx = nd * F.col("sxx") - sxd * sxd
+    vy = nd * F.col("syy") - syd * syd
+    cov = nd * F.col("sxy") - sxd * syd
+    return vx, vy, cov
+
+
+def _minute_closes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(symbol, bar_ts, close_i4)``: each symbol's last tick of every
+    minute (latest ``ts``, then highest ``event_id``) with its price on
+    the 1e-4 integer grid. The minute bars of ticks_frac_diff,
+    ml_triple_barrier and ml_label_uniqueness."""
+    src = _td(spark, sf_dir, "ticks").filter(
+        F.col("user_id").isNotNull() & F.col("value").isNotNull()
+    )
+    w = Window.partitionBy("symbol", F.date_trunc("minute", "ts")).orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
+    return (
+        src.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(
+            "symbol",
+            F.date_trunc("minute", "ts").alias("bar_ts"),
+            F.floor(F.col("value") * 1e4 + F.lit(0.5))
+            .cast("bigint")
+            .alias("close_i4"),
+        )
+    )
+
+
 def _td(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     _pin_session(spark)
     key = (spark, sf_dir, table)

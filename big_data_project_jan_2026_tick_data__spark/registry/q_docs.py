@@ -383,13 +383,13 @@ def _portable_minhash_oracle(
     """
 
 
-def _portable_minhash_ctes(
-    num_hashes: int = 32, bands: int = 8, cap: int = 1000
-) -> str:
-    """The WITH-body of the portable MinHash re-derivation up through
-    the candidate-pair CTE ``mh_pairs`` (and the per-doc shingle-hash
-    CTE ``sh``) — shared by the doc_minhash_pairs oracle and the
-    calibration roll-up, which extends it with exact Jaccard."""
+def _minhash_sql_lists(num_hashes: int, bands: int) -> tuple[str, str, str]:
+    """The three generated lists of the MinHash oracles: ``mins``, the
+    Carter-Wegman signature minima over the shingle hashes ``h`` (the
+    engine's own constants, ``dedup._mh_consts``); ``band_rows``, one
+    ``UNION ALL`` branch per band over ``sigs`` with its '-'-joined key
+    and the whole signature; ``eq``, the count of equal minima between
+    ``a.sig`` and ``b.sig``."""
     from ..operators.dedup import _P31, _mh_consts
 
     rows = num_hashes // bands
@@ -410,6 +410,19 @@ def _portable_minhash_ctes(
         f"(CASE WHEN a.sig[{i + 1}] = b.sig[{i + 1}] THEN 1 ELSE 0 END)"
         for i in range(num_hashes)
     )
+    return mins, band_rows, eq
+
+
+def _portable_minhash_ctes(
+    num_hashes: int = 32, bands: int = 8, cap: int = 1000
+) -> str:
+    """The WITH-body of the portable MinHash re-derivation up through
+    the candidate-pair CTE ``mh_pairs`` (and the per-doc shingle-hash
+    CTE ``sh``) — shared by the doc_minhash_pairs oracle and the
+    calibration roll-up, which extends it with exact Jaccard."""
+    from ..operators.dedup import _P31
+
+    mins, band_rows, eq = _minhash_sql_lists(num_hashes, bands)
     K = 1000003
     return rf"""norm AS (
       SELECT doc_id,
@@ -624,16 +637,7 @@ def _hybrid_near_dup_oracle(
     restricted to the candidate documents — the staged
     ANN-prefilter → exact-text-verify pipeline re-derived end to end in
     SQL."""
-    from ..operators.similarity import _hyperplane
-
-    bucket_terms = []
-    for p in range(num_planes):
-        plane = ", ".join(repr(v) for v in _hyperplane(dim, p, seed))
-        bucket_terms.append(
-            f"(CASE WHEN list_dot_product(vec, [{plane}]) >= 0 "
-            f"THEN {1 << p} ELSE 0 END)"
-        )
-    bucket = "\n        + ".join(bucket_terms)
+    bucket = similarity._lsh_bucket_sql(dim, num_planes, seed)
     return rf"""
     WITH v AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
@@ -1300,26 +1304,7 @@ def _md5_minhash_oracle(
     hashes → the same Carter-Wegman signature mins (constants imported
     from the engine) → '-'-joined band keys → capped band self-join →
     fraction-of-equal-minima similarity estimate."""
-    from ..operators.dedup import _P31, _mh_consts
-
-    rows = num_hashes // bands
-    mins = ", ".join(
-        f"MIN((h * {a} + {b}) % {_P31}) AS h{i}"
-        for i, (a, b) in ((i, _mh_consts(i)) for i in range(num_hashes))
-    )
-    band_rows = "\n      UNION ALL ".join(
-        "SELECT doc_id, {idx} AS band_idx, concat_ws('-', {cols}) AS band_key, "
-        "[{allc}] AS sig FROM sigs".format(
-            idx=b,
-            cols=", ".join(f"h{b * rows + r}" for r in range(rows)),
-            allc=", ".join(f"h{i}" for i in range(num_hashes)),
-        )
-        for b in range(bands)
-    )
-    eq = " + ".join(
-        f"(CASE WHEN a.sig[{i + 1}] = b.sig[{i + 1}] THEN 1 ELSE 0 END)"
-        for i in range(num_hashes)
-    )
+    mins, band_rows, eq = _minhash_sql_lists(num_hashes, bands)
     return rf"""
     WITH norm AS (
       SELECT doc_id,
@@ -1666,26 +1651,7 @@ def _md5_incr_minhash_oracle(
     machinery as _md5_minhash_oracle, but pairs must straddle the batch
     split (doc_id % 5 = 4 is the 'arriving' generation) — the oracle for
     the incremental ingestion path."""
-    from ..operators.dedup import _P31, _mh_consts
-
-    rows = num_hashes // bands
-    mins = ", ".join(
-        f"MIN((h * {a} + {b}) % {_P31}) AS h{i}"
-        for i, (a, b) in ((i, _mh_consts(i)) for i in range(num_hashes))
-    )
-    band_rows = "\n      UNION ALL ".join(
-        "SELECT doc_id, {idx} AS band_idx, concat_ws('-', {cols}) AS band_key, "
-        "[{allc}] AS sig FROM sigs".format(
-            idx=b,
-            cols=", ".join(f"h{b * rows + r}" for r in range(rows)),
-            allc=", ".join(f"h{i}" for i in range(num_hashes)),
-        )
-        for b in range(bands)
-    )
-    eq = " + ".join(
-        f"(CASE WHEN a.sig[{i + 1}] = b.sig[{i + 1}] THEN 1 ELSE 0 END)"
-        for i in range(num_hashes)
-    )
+    mins, band_rows, eq = _minhash_sql_lists(num_hashes, bands)
     return rf"""
     WITH norm AS (
       SELECT doc_id,
@@ -3792,6 +3758,16 @@ def doc_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _score_buckets(scored: DataFrame) -> DataFrame:
+    """``(s6, pos_c, neg_c)``: positives and negatives per 1e-6 score
+    bucket, the histogram doc_classifier_auc and doc_classifier_pr_auc
+    sweep."""
+    return scored.groupBy("s6").agg(
+        F.count(F.when(F.col("y") == 1.0, F.lit(1))).cast("long").alias("pos_c"),
+        F.count(F.when(F.col("y") == 0.0, F.lit(1))).cast("long").alias("neg_c"),
+    )
+
+
 @_register("doc_classifier_auc", _quality_classifier_oracle(auc=True))
 def doc_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking quality of the in-engine classifier: exact AUC plus the
@@ -3816,10 +3792,7 @@ def doc_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("y").cast("double").alias("y"),
         F.col("pred").cast("int").alias("pred"),
     ).localCheckpoint()  # feeds the bucket sweep and the confusion matrix
-    g = scored.groupBy("s6").agg(
-        F.count(F.when(F.col("y") == 1.0, F.lit(1))).cast("long").alias("pos_c"),
-        F.count(F.when(F.col("y") == 0.0, F.lit(1))).cast("long").alias("neg_c"),
-    )
+    g = _score_buckets(scored)
     sw = stats.global_cumsum(g, ["s6"], "neg_c").select(
         "s6",
         "pos_c",
@@ -4148,10 +4121,7 @@ def doc_classifier_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("score_q6") * 1e6 + F.lit(0.5)).cast("long").alias("s6"),
         F.col("y").cast("double").alias("y"),
     )
-    g = scored.groupBy("s6").agg(
-        F.count(F.when(F.col("y") == 1.0, F.lit(1))).cast("long").alias("pos_c"),
-        F.count(F.when(F.col("y") == 0.0, F.lit(1))).cast("long").alias("neg_c"),
-    )
+    g = _score_buckets(scored)
     c1 = stats.global_cumsum(g, ["s6"], "pos_c").withColumnRenamed(
         "cum_pos_c", "cum_pos"
     )

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import to_local
@@ -22,6 +22,8 @@ from ..functions import detmath, exactagg
 from ..functions.scalars import cents, q6
 from ._base import (
     _arm,
+    _cov_terms,
+    _minute_closes,
     _cent_returns,
     _event_key,
     _register,
@@ -387,26 +389,7 @@ def ticks_frac_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly-rounded product snapped to a 1e-9-relative grid, summed
     as exact BIGINT (scale-separation rule), so the q6 output is
     layout-independent."""
-    from pyspark.sql import Window
-
-    src = _td(spark, sf_dir, "ticks").filter(
-        F.col("user_id").isNotNull() & F.col("value").isNotNull()
-    )
-    w = Window.partitionBy("symbol", F.date_trunc("minute", "ts")).orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    bars = (
-        src.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "symbol",
-            F.date_trunc("minute", "ts").alias("bar_ts"),
-            F.floor(F.col("value") * 1e4 + F.lit(0.5))
-            .cast("bigint")
-            .alias("close_i4"),
-        )
-    )
-    return stats.frac_diff(bars, d=0.4, window=20)
+    return stats.frac_diff(_minute_closes(spark, sf_dir), d=0.4, window=20)
 
 
 @_register(
@@ -2190,11 +2173,12 @@ def events_inter_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _acf_oracle(lags: int = 3) -> str:
-    """Generated oracle for ticks_return_acf: cent-grid returns, then
-    per-lag exact integer Pearson sums (pairwise deletion mirrored with
-    explicit both-non-null guards) — the DuckDB twin of
-    stats.exact_corr_sums / exact_corr_value."""
+def _lag_corr_sums_sql(lags: int) -> str:
+    """The ``t → r → rl → g → s → c`` CTEs of the return-autocorrelation
+    oracles: cent-grid returns ``r0``, their lags 1..``lags``, per-lag
+    exact integer Pearson sums with pairwise deletion (the DuckDB twin
+    of stats.exact_corr_sums) and the ``num{k}``/``dx{k}``/``dy{k}``
+    terms of stats.corr_terms. Ends after ``c``, with no comma."""
     guards = ",\n             ".join(
         f"CASE WHEN r0 IS NOT NULL AND r{k} IS NOT NULL THEN r0 END AS x{k},\n"
         f"             CASE WHEN r0 IS NOT NULL AND r{k} IS NOT NULL THEN r{k} END AS y{k}"
@@ -2214,12 +2198,6 @@ def _acf_oracle(lags: int = 3) -> str:
         f"               - CAST(l{k}_sx AS DOUBLE) * CAST(l{k}_sx AS DOUBLE) AS dx{k},\n"
         f"             CAST(l{k}_n AS DOUBLE) * CAST(l{k}_syy AS DOUBLE)\n"
         f"               - CAST(l{k}_sy AS DOUBLE) * CAST(l{k}_sy AS DOUBLE) AS dy{k}"
-        for k in range(1, lags + 1)
-    )
-    outs = ",\n           ".join(
-        f"CASE WHEN dx{k} > 0 AND dy{k} > 0 THEN\n"
-        f"             FLOOR(num{k} / (sqrt(dx{k}) * sqrt(dy{k})) * 1e6 + 0.5) / 1e6\n"
-        f"           END AS acf{k}_q6"
         for k in range(1, lags + 1)
     )
     lag_cols = ",\n             ".join(
@@ -2248,7 +2226,28 @@ def _acf_oracle(lags: int = 3) -> str:
     c AS (
       SELECT symbol, n_returns,
              {combos}
-      FROM s)
+      FROM s)"""
+
+
+def _lag_corr_q6_sql(lags: int, alias: str) -> str:
+    """The select list of per-lag correlations over the ``c`` CTE of
+    :func:`_lag_corr_sums_sql`, snapped to q6 (NULL on a zero
+    variance term); ``alias`` is formatted with ``k``."""
+    return ",\n           ".join(
+        f"CASE WHEN dx{k} > 0 AND dy{k} > 0 THEN\n"
+        f"             FLOOR(num{k} / (sqrt(dx{k}) * sqrt(dy{k})) * 1e6 + 0.5) / 1e6\n"
+        f"           END AS {alias.format(k=k)}"
+        for k in range(1, lags + 1)
+    )
+
+
+def _acf_oracle(lags: int = 3) -> str:
+    """Generated oracle for ticks_return_acf: cent-grid returns, then
+    per-lag exact integer Pearson sums (pairwise deletion mirrored with
+    explicit both-non-null guards) — the DuckDB twin of
+    stats.exact_corr_sums / exact_corr_value."""
+    outs = _lag_corr_q6_sql(lags, "acf{k}_q6")
+    return _lag_corr_sums_sql(lags) + f"""
     SELECT symbol, n_returns,
            {outs}
     FROM c
@@ -2353,38 +2352,16 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hurst_oracle() -> str:
-    """Generated DuckDB oracle for ticks_hurst_exponent — one CTE per
-    stage so every detmath/exactagg expansion references a short staged
-    column (the expansion discipline), lags and formulas emitted from
-    the same K list as the Spark side."""
-    from ..functions import exactagg
-
-    ks = [1, 2, 4, 8, 16]
-    lags = ",\n             ".join(
-        f"lag(p, {k}) OVER w AS pl{k}" for k in ks
-    )
+def _lag_log_returns_sql(ks: list[int]) -> str:
+    """The ``ticks → lagged → ratios → lnr`` CTEs, DuckDB twin of
+    :func:`_lag_log_returns` in wide form: one ratio ``hl{k}`` and one
+    detmath ln ``r{k}`` column per lag. The prologue of the hurst and
+    TSRV oracles."""
+    lags = ",\n             ".join(f"lag(p, {k}) OVER w AS pl{k}" for k in ks)
     hls = ",\n             ".join(f"p / pl{k} AS hl{k}" for k in ks)
     lns = ",\n             ".join(
         f"{detmath.det_ln_pos_sql(f'hl{k}', 'duckdb')} AS r{k}" for k in ks
     )
-    aggs = ",\n             ".join(
-        f"count(r{k}) AS n{k},\n             "
-        f"{exactagg.exact_sum_sql(f'r{k}', 9)} AS s1_{k},\n             "
-        f"{exactagg.exact_sum_sql(f'(r{k} * r{k})', 12)} AS s2_{k}"
-        for k in ks
-    )
-    vars_ = ",\n             ".join(
-        f"CASE WHEN n{k} > 1 THEN s2_{k} / n{k}"
-        f" - (s1_{k} / n{k}) * (s1_{k} / n{k}) END AS v{k}"
-        for k in ks
-    )
-    ys = ",\n             ".join(
-        f"CASE WHEN v{k} > 0 THEN "
-        f"{detmath.det_ln_pos_sql(f'v{k}', 'duckdb')} END AS y{k}"
-        for k in ks
-    )
-    den = detmath.dlit(20.0 * math.log(2.0))
     return rf"""
     WITH ticks AS (
       SELECT 'S' || CAST(user_id % 4 AS VARCHAR) AS symbol,
@@ -2402,7 +2379,35 @@ def _hurst_oracle() -> str:
     lnr AS (
       SELECT symbol,
              {lns}
-      FROM ratios),
+      FROM ratios),"""
+
+
+def _hurst_oracle() -> str:
+    """Generated DuckDB oracle for ticks_hurst_exponent — one CTE per
+    stage so every detmath/exactagg expansion references a short staged
+    column (the expansion discipline), lags and formulas emitted from
+    the same K list as the Spark side."""
+    from ..functions import exactagg
+
+    ks = [1, 2, 4, 8, 16]
+    aggs = ",\n             ".join(
+        f"count(r{k}) AS n{k},\n             "
+        f"{exactagg.exact_sum_sql(f'r{k}', 9)} AS s1_{k},\n             "
+        f"{exactagg.exact_sum_sql(f'(r{k} * r{k})', 12)} AS s2_{k}"
+        for k in ks
+    )
+    vars_ = ",\n             ".join(
+        f"CASE WHEN n{k} > 1 THEN s2_{k} / n{k}"
+        f" - (s1_{k} / n{k}) * (s1_{k} / n{k}) END AS v{k}"
+        for k in ks
+    )
+    ys = ",\n             ".join(
+        f"CASE WHEN v{k} > 0 THEN "
+        f"{detmath.det_ln_pos_sql(f'v{k}', 'duckdb')} END AS y{k}"
+        for k in ks
+    )
+    den = detmath.dlit(20.0 * math.log(2.0))
+    return _lag_log_returns_sql(ks) + rf"""
     agg AS (
       SELECT symbol,
              {aggs}
@@ -2426,6 +2431,42 @@ def _hurst_oracle() -> str:
                  * 1e6 + 0.5) / 1e6 AS hurst_q6
     FROM y
     """
+
+
+def _lag_log_returns(spark: SparkSession, sf_dir: str, ks: list[int]) -> DataFrame:
+    """``(symbol, k, hl, r)``: for every positive-price tick and each lag
+    ``k`` in ``ks``, the price ratio to the tick ``k`` places earlier
+    (``_tick_order``) and its detmath ln ``r`` (NULL when there is no
+    such tick). The k-tick log returns of ticks_hurst_exponent and
+    ticks_tsrv."""
+    ticks_df = _td(spark, sf_dir, "ticks").filter(F.col("value") > 0).select(
+        "symbol", "ts", "event_id", F.col("value").alias("p")
+    )
+    w = _tick_order()
+    lagged = ticks_df.select(
+        "symbol",
+        "p",
+        *[F.lag("p", k).over(w).alias(f"pl{k}") for k in ks],
+    )
+    # LONG format: one (symbol, k, ratio) row per lag, so the hot
+    # corpus stage carries exactly ONE det_ln expansion — the wide
+    # 5-column formulation fused 10 expansions into a single generated
+    # aggregate function and blew janino's 64 KB method limit
+    pairs = ", ".join(f"struct({k} AS k, p / pl{k} AS hl)" for k in ks)
+    return (
+        lagged.select(
+            "symbol",
+            F.explode(F.expr(f"array({pairs})")).alias("kv"),
+        )
+        .select("symbol", F.col("kv.k").alias("k"), F.col("kv.hl").alias("hl"))
+        # NO isNotNull filter here: aggregating the unfiltered stream
+        # with null-skipping count(r) keeps a symbol with <2 qualifying
+        # ticks PRESENT in the output (n_returns=0, NULL metrics) exactly
+        # like the oracle's GROUP BY over lagged NULLs — a filtered
+        # stream would drop the symbol's rows entirely and row-count
+        # mismatch on sparse keys (advisor r8)
+        .withColumn("r", detmath.det_ln_pos("hl"))
+    )
 
 
 @_register("ticks_hurst_exponent", _hurst_oracle)
@@ -2452,36 +2493,7 @@ def ticks_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.exactagg import exact_sum
 
     ks = [1, 2, 4, 8, 16]
-    ticks_df = _td(spark, sf_dir, "ticks").filter(F.col("value") > 0).select(
-        "symbol", "ts", "event_id", F.col("value").alias("p")
-    )
-    w = _tick_order()
-    lagged = ticks_df.select(
-        "symbol",
-        "p",
-        *[F.lag("p", k).over(w).alias(f"pl{k}") for k in ks],
-    )
-    # LONG format: one (symbol, k, ratio) row per lag, so the hot
-    # corpus stage carries exactly ONE det_ln expansion — the wide
-    # 5-column formulation fused 10 expansions into a single generated
-    # aggregate function and blew janino's 64 KB method limit
-    pairs = ", ".join(
-        f"struct({k} AS k, p / pl{k} AS hl)" for k in ks
-    )
-    long_df = (
-        lagged.select(
-            "symbol",
-            F.explode(F.expr(f"array({pairs})")).alias("kv"),
-        )
-        .select("symbol", F.col("kv.k").alias("k"), F.col("kv.hl").alias("hl"))
-        # NO isNotNull filter here: aggregating the unfiltered stream
-        # with null-skipping count(r) keeps a symbol with <2 qualifying
-        # ticks PRESENT in the output (n_returns=0, NULL metrics) exactly
-        # like the oracle's GROUP BY over lagged NULLs — a filtered
-        # stream would drop the symbol's rows entirely and row-count
-        # mismatch on sparse keys (advisor r8)
-        .withColumn("r", detmath.det_ln_pos("hl"))
-    )
+    long_df = _lag_log_returns(spark, sf_dir, ks)
     agg_df = long_df.groupBy("symbol", "k").agg(
         F.count(F.col("r")).alias("n"),
         exact_sum(F.col("r"), 9).alias("s1"),
@@ -2745,34 +2757,12 @@ def _tsrv_oracle() -> str:
     from ..functions import exactagg
 
     ks = [1, 5]
-    lags = ",\n             ".join(f"lag(p, {k}) OVER w AS pl{k}" for k in ks)
-    hls = ",\n             ".join(f"p / pl{k} AS hl{k}" for k in ks)
-    lns = ",\n             ".join(
-        f"{detmath.det_ln_pos_sql(f'hl{k}', 'duckdb')} AS r{k}" for k in ks
-    )
     aggs = ",\n             ".join(
         f"count(r{k}) AS n{k},\n             "
         f"{exactagg.exact_sum_sql(f'(r{k} * r{k})', 12)} AS s2_{k}"
         for k in ks
     )
-    return rf"""
-    WITH ticks AS (
-      SELECT 'S' || CAST(user_id % 4 AS VARCHAR) AS symbol,
-             ts, event_id, value AS p
-      FROM events WHERE value > 0),
-    lagged AS (
-      SELECT symbol, p,
-             {lags}
-      FROM ticks
-      WINDOW w AS (PARTITION BY symbol ORDER BY ts, event_id)),
-    ratios AS (
-      SELECT symbol,
-             {hls}
-      FROM lagged),
-    lnr AS (
-      SELECT symbol,
-             {lns}
-      FROM ratios),
+    return _lag_log_returns_sql(ks) + rf"""
     agg AS (
       SELECT symbol,
              {aggs}
@@ -2807,27 +2797,7 @@ def ticks_tsrv(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion per codegen stage (the hurst 64 KB-janino discipline)."""
     from ..functions.exactagg import exact_sum
 
-    ks = [1, 5]
-    ticks_df = _td(spark, sf_dir, "ticks").filter(F.col("value") > 0).select(
-        "symbol", "ts", "event_id", F.col("value").alias("p")
-    )
-    w = _tick_order()
-    lagged = ticks_df.select(
-        "symbol",
-        "p",
-        *[F.lag("p", k).over(w).alias(f"pl{k}") for k in ks],
-    )
-    pairs = ", ".join(f"struct({k} AS k, p / pl{k} AS hl)" for k in ks)
-    long_df = (
-        lagged.select(
-            "symbol",
-            F.explode(F.expr(f"array({pairs})")).alias("kv"),
-        )
-        .select("symbol", F.col("kv.k").alias("k"), F.col("kv.hl").alias("hl"))
-        # unfiltered stream + null-skipping count: sparse symbols stay
-        # present (the hurst row-presence rule)
-        .withColumn("r", detmath.det_ln_pos("hl"))
-    )
+    long_df = _lag_log_returns(spark, sf_dir, [1, 5])
     agg_df = long_df.groupBy("symbol", "k").agg(
         F.count(F.col("r")).alias("n"),
         exact_sum(F.col("r") * F.col("r"), 12).alias("s2"),
@@ -3394,36 +3364,7 @@ def _ljung_box_oracle(lags: int = 5) -> str:
     q6-SNAPPED autocorrelations — every input to the Q arithmetic is an
     identical IEEE double on both engines, and the +/×/÷ chain is
     written in the same left-to-right order as the Spark expression."""
-    guards = ",\n             ".join(
-        f"CASE WHEN r0 IS NOT NULL AND r{k} IS NOT NULL THEN r0 END AS x{k},\n"
-        f"             CASE WHEN r0 IS NOT NULL AND r{k} IS NOT NULL THEN r{k} END AS y{k}"
-        for k in range(1, lags + 1)
-    )
-    sums = ",\n             ".join(
-        f"count(x{k}) AS l{k}_n, sum(x{k}) AS l{k}_sx, sum(y{k}) AS l{k}_sy,\n"
-        f"             sum(CAST(x{k} AS HUGEINT) * y{k}) AS l{k}_sxy,\n"
-        f"             sum(CAST(x{k} AS HUGEINT) * x{k}) AS l{k}_sxx,\n"
-        f"             sum(CAST(y{k} AS HUGEINT) * y{k}) AS l{k}_syy"
-        for k in range(1, lags + 1)
-    )
-    combos = ",\n             ".join(
-        f"CAST(l{k}_n AS DOUBLE) * CAST(l{k}_sxy AS DOUBLE)\n"
-        f"               - CAST(l{k}_sx AS DOUBLE) * CAST(l{k}_sy AS DOUBLE) AS num{k},\n"
-        f"             CAST(l{k}_n AS DOUBLE) * CAST(l{k}_sxx AS DOUBLE)\n"
-        f"               - CAST(l{k}_sx AS DOUBLE) * CAST(l{k}_sx AS DOUBLE) AS dx{k},\n"
-        f"             CAST(l{k}_n AS DOUBLE) * CAST(l{k}_syy AS DOUBLE)\n"
-        f"               - CAST(l{k}_sy AS DOUBLE) * CAST(l{k}_sy AS DOUBLE) AS dy{k}"
-        for k in range(1, lags + 1)
-    )
-    rhos = ",\n           ".join(
-        f"CASE WHEN dx{k} > 0 AND dy{k} > 0 THEN\n"
-        f"             FLOOR(num{k} / (sqrt(dx{k}) * sqrt(dy{k})) * 1e6 + 0.5) / 1e6\n"
-        f"           END AS rho{k}"
-        for k in range(1, lags + 1)
-    )
-    lag_cols = ",\n             ".join(
-        f"lag(r0, {k}) OVER w AS r{k}" for k in range(1, lags + 1)
-    )
+    rhos = _lag_corr_q6_sql(lags, "rho{k}")
     q_terms = " + ".join(
         f"(rho{k} * rho{k}) / (n_returns - {k})" for k in range(1, lags + 1)
     )
@@ -3431,30 +3372,7 @@ def _ljung_box_oracle(lags: int = 5) -> str:
         f"CAST(n_returns AS DOUBLE) * (CAST(n_returns AS DOUBLE) "
         f"+ CAST(2 AS DOUBLE)) * ({q_terms})"
     )
-    return f"""
-    WITH t AS (
-      SELECT 'S' || CAST(user_id % 4 AS VARCHAR) AS symbol, ts, event_id, value
-      FROM events),
-    r AS (
-      SELECT symbol, ts, event_id,
-             CAST(FLOOR((value - lag(value, 1) OVER w) * 100 + 0.5) AS BIGINT) AS r0
-      FROM t WINDOW w AS (PARTITION BY symbol ORDER BY ts, event_id)),
-    rl AS (
-      SELECT symbol, r0,
-             {lag_cols}
-      FROM r WINDOW w AS (PARTITION BY symbol ORDER BY ts, event_id)),
-    g AS (
-      SELECT symbol, r0,
-             {guards}
-      FROM rl),
-    s AS (
-      SELECT symbol, count(r0) AS n_returns,
-             {sums}
-      FROM g GROUP BY symbol),
-    c AS (
-      SELECT symbol, n_returns,
-             {combos}
-      FROM s),
+    return _lag_corr_sums_sql(lags) + f""",
     rh AS (
       SELECT symbol, n_returns,
            {rhos}
@@ -4375,12 +4293,18 @@ _HY_IV_CTES = r"""t AS (
       FROM iv2 GROUP BY symbol)"""
 
 
-def _hy_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _hy_intervals(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Cent-return interval table for the HY estimators: simultaneous
     same-symbol ticks collapse to the last by event_id (deterministic,
     strictly positive-length intervals), one lag window builds
     (start_us, end_us, r].  Checkpointed — every HY consumer feeds it
-    to at least three lineage branches (RV + both join sides)."""
+    to at least three lineage branches (RV + both join sides).
+
+    Returns ``(iv, rv, a)``: the interval table, each symbol's realized
+    variance ``rv`` (exact BIGINT sum of squared cent returns) and the
+    left side of the overlap join, ``(sym_a, a_start, a_end, ra)``."""
     from pyspark.sql import Window
 
     ev = _td(spark, sf_dir, "ticks")
@@ -4396,7 +4320,7 @@ def _hy_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max_by("cents", "event_id").alias("cents"))
     )
     w = Window.partitionBy("symbol").orderBy("us")
-    return (
+    iv = (
         t.select(
             "symbol",
             F.lag("us").over(w).alias("start_us"),
@@ -4406,6 +4330,16 @@ def _hy_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("start_us").isNotNull())
         .localCheckpoint()
     )
+    rv = iv.groupBy("symbol").agg(
+        F.sum(F.col("r") * F.col("r")).cast("long").alias("rv")
+    )
+    a = iv.select(
+        F.col("symbol").alias("sym_a"),
+        F.col("start_us").alias("a_start"),
+        F.col("end_us").alias("a_end"),
+        F.col("r").alias("ra"),
+    )
+    return iv, rv, a
 
 
 def _hy_normalized(ov: DataFrame, rv: DataFrame, keys: list) -> DataFrame:
@@ -4484,16 +4418,7 @@ def ticks_hayashi_yoshida(spark: SparkSession, sf_dir: str) -> DataFrame:
     No counterpart in the reference (its correlation is grid-aligned
     pandas, symbol_statistics_generate.py:76-79); this is the
     asynchronous-microstructure upgrade of that alignment."""
-    iv = _hy_intervals(spark, sf_dir)
-    rv = iv.groupBy("symbol").agg(
-        F.sum(F.col("r") * F.col("r")).cast("long").alias("rv")
-    )
-    a = iv.select(
-        F.col("symbol").alias("sym_a"),
-        F.col("start_us").alias("a_start"),
-        F.col("end_us").alias("a_end"),
-        F.col("r").alias("ra"),
-    )
+    iv, rv, a = _hy_intervals(spark, sf_dir)
     b = iv.select(
         F.col("symbol").alias("sym_b"),
         F.col("start_us").alias("b_start"),
@@ -4912,14 +4837,80 @@ def events_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kaplan_meier_oracle() -> str:
-    """Generated oracle for events_kaplan_meier: identical duration /
-    risk-set construction, detmath ln on the per-event-time factor
-    (1e-12 grid, exact cumulative integer sum), detmath exp on the
-    clamped cumulative log-survival, q6 snap."""
-    ln = detmath.det_ln_pos_sql("term", "duckdb")
-    ex = detmath.det_exp_sql("cumd", "duckdb")
-    return rf"""
+def _survival_users(ev: DataFrame, *extra: Column) -> DataFrame:
+    """``(d_sec, c, *extra)``: one row per user with a click, the
+    click→purchase duration of the survival queries. A user enters at
+    the first click and converts (``c = 1``) at the first purchase
+    strictly after it; otherwise ``c = 0`` and the duration runs to the
+    user's last event. Durations are whole seconds (integer ``div``).
+    ``events_kaplan_meier``, ``events_nelson_aalen`` and
+    ``events_log_rank`` build on it; its oracle twin is
+    :func:`_survival_users_sql`."""
+    clicks = (
+        ev.filter(F.col("event_type") == "click")
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t0"))
+    )
+    pur = (
+        clicks.join(
+            ev.filter(F.col("event_type") == "purchase").select(
+                "user_id", F.col("ts").alias("tp")
+            ),
+            "user_id",
+        )
+        .filter(F.col("tp") > F.col("t0"))
+        .groupBy("user_id")
+        .agg(F.min("tp").alias("tp"))
+    )
+    lastev = ev.groupBy("user_id").agg(F.max("ts").alias("tl"))
+    return (
+        clicks.join(pur, "user_id", "left")
+        .join(lastev, "user_id")
+        .select(
+            F.when(
+                F.col("tp").isNotNull(),
+                F.expr("(unix_micros(tp) - unix_micros(t0)) div 1000000"),
+            )
+            .otherwise(F.expr("(unix_micros(tl) - unix_micros(t0)) div 1000000"))
+            .alias("d_sec"),
+            F.when(F.col("tp").isNotNull(), F.lit(1))
+            .otherwise(F.lit(0))
+            .alias("c"),
+            *extra,
+        )
+    )
+
+
+def _risk_sets(u: DataFrame) -> DataFrame:
+    """``(d_sec, d_events, n_risk)`` at each event time of the
+    :func:`_survival_users` rows ``u``: conversions there and the users
+    still at risk, from an exact ``stats.global_cumsum`` of the per-time
+    totals. Shared by ``events_kaplan_meier`` and
+    ``events_nelson_aalen``; its oracle twin is :data:`_RISK_SETS_SQL`."""
+    n_total = u.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
+    grp = u.groupBy("d_sec").agg(
+        F.count(F.lit(1)).cast("long").alias("total"),
+        F.sum("c").cast("long").alias("d_events"),
+    )
+    ord_df = stats.global_cumsum(grp, ["d_sec"], "total").withColumnRenamed(
+        "cum_total", "cumtot"
+    )
+    return (
+        ord_df.crossJoin(F.broadcast(n_total))
+        .filter(F.col("d_events") > 0)
+        .select(
+            "d_sec",
+            "d_events",
+            (F.col("n_total") - F.col("cumtot") + F.col("total")).alias("n_risk"),
+        )
+    )
+
+
+def _survival_users_sql(extra: str = "") -> str:
+    """The ``clicks → pur → lastev → u`` CTEs, DuckDB twin of
+    :func:`_survival_users` (``extra`` is appended to ``u``'s select
+    list); the prologue of the three survival oracles."""
+    return r"""
     WITH clicks AS (
       SELECT user_id, min(ts) AS t0 FROM events
       WHERE event_type = 'click' GROUP BY user_id),
@@ -4937,10 +4928,21 @@ def _kaplan_meier_oracle() -> str:
                   THEN (epoch_us(p.tp) - epoch_us(c.t0)) // 1000000
                   ELSE (epoch_us(l.tl) - epoch_us(c.t0)) // 1000000
              END AS d_sec,
-             CASE WHEN p.tp IS NOT NULL THEN 1 ELSE 0 END AS c
+             CASE WHEN p.tp IS NOT NULL THEN 1 ELSE 0 END AS c""" + extra + r"""
       FROM clicks c
       LEFT JOIN pur p ON p.user_id = c.user_id
-      JOIN lastev l ON l.user_id = c.user_id),
+      JOIN lastev l ON l.user_id = c.user_id),"""
+
+
+# events_log_rank's extra ``u`` column: the md5 arm (A = 1).
+_LOG_RANK_ARM_SQL = r""",
+             CASE WHEN CAST(concat('0x', substr(md5(CAST(c.user_id AS VARCHAR)),
+                                                1, 7)) AS BIGINT) % 2 = 0
+                  THEN 1 ELSE 0 END AS is_a"""
+
+# The ``n → grp → ord → ev`` CTEs over ``u``, DuckDB twin of
+# :func:`_risk_sets` (events_kaplan_meier, events_nelson_aalen).
+_RISK_SETS_SQL = r"""
     n AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM u),
     grp AS (
       SELECT d_sec, CAST(count(*) AS BIGINT) AS total,
@@ -4953,7 +4955,17 @@ def _kaplan_meier_oracle() -> str:
     ev AS (
       SELECT d_sec, d_events,
              n.n_total - cumtot + total AS n_risk
-      FROM ord, n WHERE d_events > 0),
+      FROM ord, n WHERE d_events > 0),"""
+
+
+def _kaplan_meier_oracle() -> str:
+    """Generated oracle for events_kaplan_meier: identical duration /
+    risk-set construction, detmath ln on the per-event-time factor
+    (1e-12 grid, exact cumulative integer sum), detmath exp on the
+    clamped cumulative log-survival, q6 snap."""
+    ln = detmath.det_ln_pos_sql("term", "duckdb")
+    ex = detmath.det_exp_sql("cumd", "duckdb")
+    return _survival_users_sql() + _RISK_SETS_SQL + rf"""
     t AS (
       SELECT d_sec, d_events, n_risk,
              CAST(n_risk - d_events AS DOUBLE) / CAST(n_risk AS DOUBLE)
@@ -4998,56 +5010,7 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``stats.global_cumsum`` (range-exchange prefix sums), never a
     single-partition window.  No counterpart in the reference;
     upgrades its funnel timing (PDF §KPIs) to censoring-aware."""
-    ev = _td(spark, sf_dir, "events")
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t0"))
-    )
-    pur = (
-        clicks.join(
-            ev.filter(F.col("event_type") == "purchase").select(
-                "user_id", F.col("ts").alias("tp")
-            ),
-            "user_id",
-        )
-        .filter(F.col("tp") > F.col("t0"))
-        .groupBy("user_id")
-        .agg(F.min("tp").alias("tp"))
-    )
-    lastev = ev.groupBy("user_id").agg(F.max("ts").alias("tl"))
-    u = (
-        clicks.join(pur, "user_id", "left")
-        .join(lastev, "user_id")
-        .select(
-            F.when(
-                F.col("tp").isNotNull(),
-                F.expr("(unix_micros(tp) - unix_micros(t0)) div 1000000"),
-            )
-            .otherwise(F.expr("(unix_micros(tl) - unix_micros(t0)) div 1000000"))
-            .alias("d_sec"),
-            F.when(F.col("tp").isNotNull(), F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("c"),
-        )
-    )
-    n_total = u.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    grp = u.groupBy("d_sec").agg(
-        F.count(F.lit(1)).cast("long").alias("total"),
-        F.sum("c").cast("long").alias("d_events"),
-    )
-    ord_df = stats.global_cumsum(grp, ["d_sec"], "total").withColumnRenamed(
-        "cum_total", "cumtot"
-    )
-    evt = (
-        ord_df.crossJoin(F.broadcast(n_total))
-        .filter(F.col("d_events") > 0)
-        .select(
-            "d_sec",
-            "d_events",
-            (F.col("n_total") - F.col("cumtot") + F.col("total")).alias("n_risk"),
-        )
-    )
+    evt = _risk_sets(_survival_users(_td(spark, sf_dir, "events")))
     t = evt.withColumn(
         "term",
         (F.col("n_risk") - F.col("d_events")).cast("double")
@@ -5398,6 +5361,24 @@ def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _arm_sums(*sums: tuple[str, Column, str | None]) -> list[Column]:
+    """Aggregates over rows labelled ``arm`` T or C: the arm sizes
+    ``n_t``/``n_c``, then for each ``(name, x, cast)`` the per-arm sums
+    ``<name>_t``/``<name>_c`` of ``x`` (cast to ``cast`` unless None).
+    The arm roll-up of events_cuped, events_msprt_sequential and
+    events_did_event_study."""
+    arms = (("T", "t"), ("C", "c"))
+    aggs = [
+        F.count(F.when(F.col("arm") == arm, F.lit(1))).cast("long").alias(f"n_{sfx}")
+        for arm, sfx in arms
+    ]
+    for name, x, cast in sums:
+        for arm, sfx in arms:
+            s = F.sum(F.when(F.col("arm") == arm, x).otherwise(F.lit(0)))
+            aggs.append((s if cast is None else s.cast(cast)).alias(f"{name}_{sfx}"))
+    return aggs
+
+
 @_register(
     "events_cuped",
     r"""
@@ -5518,28 +5499,8 @@ def events_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("syy"),
     )
-    arms = u.agg(
-        F.count(F.when(F.col("arm") == "T", F.lit(1))).cast("long").alias("n_t"),
-        F.count(F.when(F.col("arm") == "C", F.lit(1))).cast("long").alias("n_c"),
-        F.sum(F.when(F.col("arm") == "T", F.col("x")).otherwise(F.lit(0)))
-        .cast("long")
-        .alias("sx_t"),
-        F.sum(F.when(F.col("arm") == "C", F.col("x")).otherwise(F.lit(0)))
-        .cast("long")
-        .alias("sx_c"),
-        F.sum(F.when(F.col("arm") == "T", F.col("y")).otherwise(F.lit(0)))
-        .cast("long")
-        .alias("sy_t"),
-        F.sum(F.when(F.col("arm") == "C", F.col("y")).otherwise(F.lit(0)))
-        .cast("long")
-        .alias("sy_c"),
-    )
-    nd = F.col("n").cast("double")
-    sxd = F.col("sx").cast("double")
-    syd = F.col("sy").cast("double")
-    vx = nd * F.col("sxx") - sxd * sxd
-    vy = nd * F.col("syy") - syd * syd
-    cov = nd * F.col("sxy") - sxd * syd
+    arms = u.agg(*_arm_sums(("sx", F.col("x"), "long"), ("sy", F.col("y"), "long")))
+    vx, vy, cov = _cov_terms("n")
     f = (
         pool.crossJoin(F.broadcast(arms))
         .filter((F.col("n_t") > 0) & (F.col("n_c") > 0) & (vx > 0.0) & (vy > 0.0))
@@ -5618,16 +5579,7 @@ def ticks_hy_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pair, lag) after).  Epoch micros stay positive under every lag, so
     integer bucket division is exact; covariances are exact BIGINTs;
     the normalization reuses the lag-invariant realized variances."""
-    iv = _hy_intervals(spark, sf_dir)
-    rv = iv.groupBy("symbol").agg(
-        F.sum(F.col("r") * F.col("r")).cast("long").alias("rv")
-    )
-    a = iv.select(
-        F.col("symbol").alias("sym_a"),
-        F.col("start_us").alias("a_start"),
-        F.col("end_us").alias("a_end"),
-        F.col("r").alias("ra"),
-    )
+    iv, rv, a = _hy_intervals(spark, sf_dir)
     b = (
         iv.select(
             F.col("symbol").alias("sym_b"),
@@ -5886,9 +5838,12 @@ _HOLM_ZCRIT = (
 )
 
 
-def _holm_oracle() -> str:
-    zrows = ", ".join(f"({k}, {z})" for k, z in _HOLM_ZCRIT)
-    return rf"""
+def _type_ztests_sql(z_extra: str = "") -> str:
+    """The ``u → pop → x → z → zq`` CTEs of the Holm and BH oracles, the
+    DuckDB twin of :func:`_type_ztests`: first-touch event type and md5
+    arm per user, arm sizes, per-type arm counts and the q6
+    two-proportion z. ``z_extra`` is appended to ``z``'s select list."""
+    return r"""
     WITH u AS (
       SELECT user_id,
              arg_min(event_type,
@@ -5912,7 +5867,7 @@ def _holm_oracle() -> str:
              CAST(count(*) FILTER (arm = 'B') AS BIGINT) AS x_b
       FROM u GROUP BY event_type),
     z AS (
-      SELECT x.event_type, x.x_a, x.x_b, pop.n_a, pop.n_b,
+      SELECT x.event_type, x.x_a, x.x_b,""" + z_extra + r"""
              (CAST(x.x_a AS DOUBLE) / CAST(pop.n_a AS DOUBLE)
               - CAST(x.x_b AS DOUBLE) / CAST(pop.n_b AS DOUBLE))
              / sqrt((CAST(x.x_a + x.x_b AS DOUBLE)
@@ -5926,7 +5881,12 @@ def _holm_oracle() -> str:
     zq AS (
       SELECT event_type, x_a, x_b,
              FLOOR(zval * 1e6 + 0.5) / 1e6 AS z_q6
-      FROM z),
+      FROM z),"""
+
+
+def _holm_oracle() -> str:
+    zrows = ", ".join(f"({k}, {z})" for k, z in _HOLM_ZCRIT)
+    return _type_ztests_sql(" pop.n_a, pop.n_b,") + rf"""
     ranked AS (
       SELECT *, CAST(row_number() OVER (ORDER BY abs(z_q6) DESC, event_type)
                      AS BIGINT) AS rank,
@@ -7105,15 +7065,8 @@ def events_msprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
         (d19(F.col("spend")) * d19(F.col("spend"))).alias("spend2"),
         _arm("T", "C").alias("arm"),
     )
-    t_ = lambda c: F.when(F.col("arm") == "T", c).otherwise(F.lit(0))  # noqa: E731
-    c_ = lambda c: F.when(F.col("arm") == "C", c).otherwise(F.lit(0))  # noqa: E731
     d = u.groupBy("day").agg(
-        F.count(F.when(F.col("arm") == "T", F.lit(1))).cast("long").alias("n_t"),
-        F.count(F.when(F.col("arm") == "C", F.lit(1))).cast("long").alias("n_c"),
-        F.sum(t_(F.col("spend"))).cast("long").alias("sx_t"),
-        F.sum(c_(F.col("spend"))).cast("long").alias("sx_c"),
-        F.sum(t_(F.col("spend2"))).alias("sxx_t"),
-        F.sum(c_(F.col("spend2"))).alias("sxx_c"),
+        *_arm_sums(("sx", F.col("spend"), "long"), ("sxx", F.col("spend2"), None))
     )
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     c = d.select(
@@ -7253,20 +7206,9 @@ def events_did_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
         _arm("T", "C").alias("arm"),
         cents(F.col("value")).alias("cents"),
     )
-    t_ = lambda c: F.when(F.col("arm") == "T", c).otherwise(F.lit(0))  # noqa: E731
-    c_ = lambda c: F.when(F.col("arm") == "C", c).otherwise(F.lit(0))  # noqa: E731
     g = (
         e.groupBy("rel")
-        .agg(
-            F.count(F.when(F.col("arm") == "T", F.lit(1)))
-            .cast("long")
-            .alias("n_t"),
-            F.count(F.when(F.col("arm") == "C", F.lit(1)))
-            .cast("long")
-            .alias("n_c"),
-            F.sum(t_(F.col("cents"))).cast("long").alias("s_t"),
-            F.sum(c_(F.col("cents"))).cast("long").alias("s_c"),
-        )
+        .agg(*_arm_sums(("s", F.col("cents"), "long")))
         .localCheckpoint()  # #days rows feed the baseline AND the curve
     )
     pre = g.filter(F.col("rel") < 0).agg(
@@ -7301,53 +7243,15 @@ def events_did_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bh_fdr_oracle() -> str:
-    # z-stage: LOCKSTEP DUPLICATE of _holm_oracle's u/pop/x/z/zq CTEs
-    # (first-touch two-proportion z per event type on the md5 arms) —
-    # change only together with it and with the Spark twins below.
-    # After zq the procedures diverge: Holm is step-DOWN on frozen
-    # critical values; BH is step-UP on p-values, so this oracle also
-    # re-derives the two-sided normal p via the shared A&S 7.1.26 erfc
-    # chain (frozen constants, detmath exp — bit-identical engines).
+    # z-stage: _type_ztests_sql, shared with _holm_oracle (first-touch
+    # two-proportion z per event type on the md5 arms; the Spark side
+    # is _type_ztests). After zq the procedures diverge: Holm is
+    # step-DOWN on frozen critical values; BH is step-UP on p-values, so
+    # this oracle also re-derives the two-sided normal p via the shared
+    # A&S 7.1.26 erfc chain (frozen constants, detmath exp —
+    # bit-identical engines).
     exp_neg = detmath.det_exp_sql("negx2", "duckdb")
-    return rf"""
-    WITH u AS (
-      SELECT user_id,
-             arg_min(event_type,
-                     lpad(CAST(epoch_ms(ts) AS VARCHAR), 14, '0')
-                     || lpad(CAST(event_id AS VARCHAR), 12, '0'))
-               AS event_type,
-             CASE WHEN CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)),
-                                                1, 7)) AS BIGINT) % 2 = 0
-                  THEN 'A' ELSE 'B' END AS arm
-      FROM events GROUP BY user_id,
-             CASE WHEN CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)),
-                                                1, 7)) AS BIGINT) % 2 = 0
-                  THEN 'A' ELSE 'B' END),
-    pop AS (
-      SELECT CAST(count(CASE WHEN arm = 'A' THEN 1 END) AS BIGINT) AS n_a,
-             CAST(count(CASE WHEN arm = 'B' THEN 1 END) AS BIGINT) AS n_b
-      FROM u),
-    x AS (
-      SELECT event_type,
-             CAST(count(*) FILTER (arm = 'A') AS BIGINT) AS x_a,
-             CAST(count(*) FILTER (arm = 'B') AS BIGINT) AS x_b
-      FROM u GROUP BY event_type),
-    z AS (
-      SELECT x.event_type, x.x_a, x.x_b,
-             (CAST(x.x_a AS DOUBLE) / CAST(pop.n_a AS DOUBLE)
-              - CAST(x.x_b AS DOUBLE) / CAST(pop.n_b AS DOUBLE))
-             / sqrt((CAST(x.x_a + x.x_b AS DOUBLE)
-                     / CAST(pop.n_a + pop.n_b AS DOUBLE))
-                    * (1.0 - CAST(x.x_a + x.x_b AS DOUBLE)
-                             / CAST(pop.n_a + pop.n_b AS DOUBLE))
-                    * (1.0 / CAST(pop.n_a AS DOUBLE)
-                       + 1.0 / CAST(pop.n_b AS DOUBLE))) AS zval
-      FROM x, pop
-      WHERE x.x_a + x.x_b > 0 AND x.x_a + x.x_b < pop.n_a + pop.n_b),
-    zq AS (
-      SELECT event_type, x_a, x_b,
-             FLOOR(zval * 1e6 + 0.5) / 1e6 AS z_q6
-      FROM z),
+    return _type_ztests_sql() + rf"""
     st AS (
       SELECT *,
              abs(z_q6) * 0.7071067811865476e0 AS xx,
@@ -7394,10 +7298,10 @@ def events_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     for wide metric families (Holm controls FWER and starves power as
     m grows; BH controls the false-discovery RATE, the quantity a
     metrics platform actually budgets). Per event type: first-touch
-    two-proportion z on the md5 arms (LOCKSTEP with the Holm z stage —
-    change only together), two-sided p via the Abramowitz-Stegun
-    7.1.26 erfc chain (frozen rational constants, detmath exp — no
-    libm), then the 1995 step-up rule: rank p ascending, k* = the
+    two-proportion z on the md5 arms (the Holm z stage,
+    :func:`_type_ztests` and its oracle twin ``_type_ztests_sql``),
+    two-sided p via the Abramowitz-Stegun 7.1.26 erfc chain (frozen
+    rational constants, detmath exp — no libm), then the 1995 step-up rule: rank p ascending, k* = the
     LARGEST rank with p ≤ α·rank/m, everything at rank ≤ k* is
     significant (unlike Holm, rejections can resume after a failure).
     Also emits the standard monotone adjusted p (running min of
@@ -7748,16 +7652,37 @@ def events_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "ticks_theil_sen",
-    r"""
+# The ``t`` CTE of the ticks_theil_sen and ticks_mann_kendall oracles:
+# the positive ticks with their day, event key and whole cents, over
+# which each takes the daily close (the twin of :func:`_daily_closes`).
+_DAILY_TICKS_SQL = r"""
     WITH t AS (
       SELECT concat('S', CAST(user_id % 4 AS VARCHAR)) AS symbol,
              CAST(ts AS DATE) AS day,
              lpad(CAST(epoch_ms(ts) AS VARCHAR), 14, '0')
                || lpad(CAST(event_id AS VARCHAR), 12, '0') AS k,
              CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
-      FROM events WHERE value > 0),
+      FROM events WHERE value > 0),"""
+
+
+def _daily_closes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(symbol, day, close)``: each symbol's last positive tick of the
+    day (``max_by`` on :func:`_event_key`) in whole cents, the daily
+    series of ticks_theil_sen and ticks_mann_kendall."""
+    ev = _td(spark, sf_dir, "ticks").filter(F.col("value") > 0)
+    t = ev.select(
+        "symbol",
+        F.to_date("ts").alias("day"),
+        _event_key().alias("k"),
+        cents(F.col("value")).alias("cents"),
+    )
+    return t.groupBy("symbol", "day").agg(F.max_by("cents", "k").alias("close"))
+
+
+@_register(
+    "ticks_theil_sen",
+    _DAILY_TICKS_SQL
+    + r"""
     d AS (
       SELECT symbol, day,
              day - DATE '1970-01-01' AS dd,
@@ -7803,16 +7728,8 @@ def ticks_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     still thousands of rows). No counterpart in the reference."""
     from pyspark.sql import Window
 
-    ev = _td(spark, sf_dir, "ticks").filter(F.col("value") > 0)
-    t = ev.select(
-        "symbol",
-        F.to_date("ts").alias("day"),
-        _event_key().alias("k"),
-        cents(F.col("value")).alias("cents"),
-    )
     d = (
-        t.groupBy("symbol", "day")
-        .agg(F.max_by("cents", "k").alias("close"))
+        _daily_closes(spark, sf_dir)
         .withColumn("dd", F.datediff(F.col("day"), F.lit("1970-01-01")))
         .localCheckpoint()  # feeds the pair join twice + the day count
     )
@@ -7844,46 +7761,13 @@ def ticks_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _nelson_aalen_oracle() -> str:
     """Generated oracle for events_nelson_aalen: the Kaplan-Meier
-    duration/risk-set construction (LOCKSTEP with _kaplan_meier_oracle
-    — change only together), per-event-time hazard d/n snapped to a
-    1e-12 grid and cumulated exactly, detmath exp on the clamped
-    negated hazard for the Fleming-Harrington survival twin."""
+    duration/risk-set construction (``_survival_users_sql`` and
+    ``_RISK_SETS_SQL``, shared with _kaplan_meier_oracle), per-event-time
+    hazard d/n snapped to a 1e-12 grid and cumulated exactly, detmath
+    exp on the clamped negated hazard for the Fleming-Harrington
+    survival twin."""
     ex = detmath.det_exp_sql("negh", "duckdb")
-    return rf"""
-    WITH clicks AS (
-      SELECT user_id, min(ts) AS t0 FROM events
-      WHERE event_type = 'click' GROUP BY user_id),
-    pur AS (
-      SELECT c.user_id, min(e.ts) AS tp
-      FROM clicks c JOIN events e
-        ON e.user_id = c.user_id AND e.event_type = 'purchase'
-       AND e.ts > c.t0
-      GROUP BY c.user_id),
-    lastev AS (
-      SELECT user_id, max(ts) AS tl FROM events GROUP BY user_id),
-    u AS (
-      SELECT c.user_id,
-             CASE WHEN p.tp IS NOT NULL
-                  THEN (epoch_us(p.tp) - epoch_us(c.t0)) // 1000000
-                  ELSE (epoch_us(l.tl) - epoch_us(c.t0)) // 1000000
-             END AS d_sec,
-             CASE WHEN p.tp IS NOT NULL THEN 1 ELSE 0 END AS c
-      FROM clicks c
-      LEFT JOIN pur p ON p.user_id = c.user_id
-      JOIN lastev l ON l.user_id = c.user_id),
-    n AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM u),
-    grp AS (
-      SELECT d_sec, CAST(count(*) AS BIGINT) AS total,
-             CAST(sum(c) AS BIGINT) AS d_events
-      FROM u GROUP BY d_sec),
-    ord AS (
-      SELECT d_sec, total, d_events,
-             CAST(sum(total) OVER (ORDER BY d_sec) AS BIGINT) AS cumtot
-      FROM grp),
-    ev AS (
-      SELECT d_sec, d_events,
-             n.n_total - cumtot + total AS n_risk
-      FROM ord, n WHERE d_events > 0),
+    return _survival_users_sql() + _RISK_SETS_SQL + rf"""
     h AS (
       SELECT d_sec, d_events, n_risk,
              CAST(FLOOR(CAST(d_events AS DOUBLE) / CAST(n_risk AS DOUBLE)
@@ -7908,8 +7792,9 @@ def _nelson_aalen_oracle() -> str:
 @_register("events_nelson_aalen", _nelson_aalen_oracle)
 def events_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nelson-Aalen cumulative hazard for click→purchase conversion —
-    the hazard-space companion to events_kaplan_meier (same entry/
-    censoring construction, LOCKSTEP): H(t) = Σ_{t_i≤t} d_i/n_i, the
+    the hazard-space companion to events_kaplan_meier (the same
+    entry/censoring construction, :func:`_survival_users`, and risk
+    sets, :func:`_risk_sets`): H(t) = Σ_{t_i≤t} d_i/n_i, the
     estimator survival texts prefer for small risk sets (it never hits
     the KM product's hard zero when d = n) and the input to hazard-
     ratio eyeballing; also emits the Fleming-Harrington survival
@@ -7923,56 +7808,7 @@ def events_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation ride stats.global_cumsum (range-exchange prefix
     sums), never a single-partition window; output is event-time-grain.
     No counterpart in the reference."""
-    ev = _td(spark, sf_dir, "events")
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t0"))
-    )
-    pur = (
-        clicks.join(
-            ev.filter(F.col("event_type") == "purchase").select(
-                "user_id", F.col("ts").alias("tp")
-            ),
-            "user_id",
-        )
-        .filter(F.col("tp") > F.col("t0"))
-        .groupBy("user_id")
-        .agg(F.min("tp").alias("tp"))
-    )
-    lastev = ev.groupBy("user_id").agg(F.max("ts").alias("tl"))
-    u = (
-        clicks.join(pur, "user_id", "left")
-        .join(lastev, "user_id")
-        .select(
-            F.when(
-                F.col("tp").isNotNull(),
-                F.expr("(unix_micros(tp) - unix_micros(t0)) div 1000000"),
-            )
-            .otherwise(F.expr("(unix_micros(tl) - unix_micros(t0)) div 1000000"))
-            .alias("d_sec"),
-            F.when(F.col("tp").isNotNull(), F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("c"),
-        )
-    )
-    n_total = u.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    grp = u.groupBy("d_sec").agg(
-        F.count(F.lit(1)).cast("long").alias("total"),
-        F.sum("c").cast("long").alias("d_events"),
-    )
-    ord_df = stats.global_cumsum(grp, ["d_sec"], "total").withColumnRenamed(
-        "cum_total", "cumtot"
-    )
-    evt = (
-        ord_df.crossJoin(F.broadcast(n_total))
-        .filter(F.col("d_events") > 0)
-        .select(
-            "d_sec",
-            "d_events",
-            (F.col("n_total") - F.col("cumtot") + F.col("total")).alias("n_risk"),
-        )
-    )
+    evt = _risk_sets(_survival_users(_td(spark, sf_dir, "events")))
     h = evt.select(
         "d_sec",
         "d_events",
@@ -8009,31 +7845,8 @@ def events_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "events_log_rank",
-    r"""
-    WITH clicks AS (
-      SELECT user_id, min(ts) AS t0 FROM events
-      WHERE event_type = 'click' GROUP BY user_id),
-    pur AS (
-      SELECT c.user_id, min(e.ts) AS tp
-      FROM clicks c JOIN events e
-        ON e.user_id = c.user_id AND e.event_type = 'purchase'
-       AND e.ts > c.t0
-      GROUP BY c.user_id),
-    lastev AS (
-      SELECT user_id, max(ts) AS tl FROM events GROUP BY user_id),
-    u AS (
-      SELECT c.user_id,
-             CASE WHEN p.tp IS NOT NULL
-                  THEN (epoch_us(p.tp) - epoch_us(c.t0)) // 1000000
-                  ELSE (epoch_us(l.tl) - epoch_us(c.t0)) // 1000000
-             END AS d_sec,
-             CASE WHEN p.tp IS NOT NULL THEN 1 ELSE 0 END AS c,
-             CASE WHEN CAST(concat('0x', substr(md5(CAST(c.user_id AS VARCHAR)),
-                                                1, 7)) AS BIGINT) % 2 = 0
-                  THEN 1 ELSE 0 END AS is_a
-      FROM clicks c
-      LEFT JOIN pur p ON p.user_id = c.user_id
-      JOIN lastev l ON l.user_id = c.user_id),
+    _survival_users_sql(_LOG_RANK_ARM_SQL)
+    + r"""
     n AS (SELECT CAST(count(*) AS BIGINT) AS n_total,
                  CAST(sum(is_a) AS BIGINT) AS n_a_total FROM u),
     grp AS (
@@ -8094,49 +7907,16 @@ def events_log_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     hypergeometric variance; χ² = (O_A − E_A)²/V against the frozen
     df=1 critical.
 
-    Determinism: the duration/censoring construction is LOCKSTEP with
-    events_kaplan_meier / events_nelson_aalen (change only together);
-    risk sets come from exact integer cumsums; each per-time E and V
+    Determinism: the duration/censoring construction is
+    :func:`_survival_users`, as in events_kaplan_meier /
+    events_nelson_aalen; risk sets come from exact integer cumsums; each per-time E and V
     term is a fixed-order double chain over exact integers snapped to
     the 1e-12 grid and summed exactly (decimal/HUGEINT); the χ² tail
     is one fixed-order double formula snapped q6. Scale: one user-grain
     pass, the global_cumsum event-time sweep (range-partitioned — the
     survival-family shape), then one-row frames.
     No counterpart in the reference."""
-    ev = _td(spark, sf_dir, "events")
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t0"))
-    )
-    pur = (
-        clicks.join(
-            ev.filter(F.col("event_type") == "purchase").select(
-                "user_id", F.col("ts").alias("tp")
-            ),
-            "user_id",
-        )
-        .filter(F.col("tp") > F.col("t0"))
-        .groupBy("user_id")
-        .agg(F.min("tp").alias("tp"))
-    )
-    lastev = ev.groupBy("user_id").agg(F.max("ts").alias("tl"))
-    u = (
-        clicks.join(pur, "user_id", "left")
-        .join(lastev, "user_id")
-        .select(
-            F.when(
-                F.col("tp").isNotNull(),
-                F.expr("(unix_micros(tp) - unix_micros(t0)) div 1000000"),
-            )
-            .otherwise(F.expr("(unix_micros(tl) - unix_micros(t0)) div 1000000"))
-            .alias("d_sec"),
-            F.when(F.col("tp").isNotNull(), F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("c"),
-            _arm(1, 0).alias("is_a"),
-        )
-    )
+    u = _survival_users(_td(spark, sf_dir, "events"), _arm(1, 0).alias("is_a"))
     n = u.agg(
         F.count(F.lit(1)).cast("long").alias("n_total"),
         F.sum("is_a").cast("long").alias("n_a_total"),
@@ -8567,14 +8347,8 @@ def events_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "ticks_mann_kendall",
-    r"""
-    WITH t AS (
-      SELECT concat('S', CAST(user_id % 4 AS VARCHAR)) AS symbol,
-             CAST(ts AS DATE) AS day,
-             lpad(CAST(epoch_ms(ts) AS VARCHAR), 14, '0')
-               || lpad(CAST(event_id AS VARCHAR), 12, '0') AS k,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
-      FROM events WHERE value > 0),
+    _DAILY_TICKS_SQL
+    + r"""
     d AS (
       SELECT symbol, day, arg_max(cents, k) AS close
       FROM t GROUP BY symbol, day),
@@ -8617,9 +8391,9 @@ def events_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ticks_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall trend test per symbol on the daily-close series —
     the nonparametric 'is there a monotone trend at all?' gate that
-    pairs with ticks_theil_sen (same LOCKSTEP daily-close
-    construction; Theil-Sen says the slope, MK says whether to believe
-    it): S = Σ_{i<j} sign(c_j − c_i), tie-corrected variance
+    pairs with ticks_theil_sen (the same daily closes,
+    :func:`_daily_closes`; Theil-Sen says the slope, MK says whether to
+    believe it): S = Σ_{i<j} sign(c_j − c_i), tie-corrected variance
     [n(n−1)(2n+5) − Σt(t−1)(2t+5)]/18, the standard ±1 continuity
     correction, |z| against the frozen two-sided critical.
 
@@ -8630,16 +8404,8 @@ def ticks_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     closes tied) emit no row. Scale: one tick pass to the (symbol,
     day) grain, then day-grain frames only.
     No counterpart in the reference."""
-    ev = _td(spark, sf_dir, "ticks").filter(F.col("value") > 0)
-    t = ev.select(
-        "symbol",
-        F.to_date("ts").alias("day"),
-        _event_key().alias("k"),
-        cents(F.col("value")).alias("cents"),
-    )
     d = (
-        t.groupBy("symbol", "day")
-        .agg(F.max_by("cents", "k").alias("close"))
+        _daily_closes(spark, sf_dir)
         .localCheckpoint()  # feeds the pair join (twice), counts and ties
     )
     a, b = d.alias("a"), d.alias("b")

@@ -18,7 +18,7 @@ from ..operators import (  # noqa: F401
 )
 from ..functions import detmath
 from ..functions.scalars import cents, q6
-from ._base import _arm, _event_key, _quotes, _register, _td, _ticks
+from ._base import _arm, _event_key, _minute_closes, _quotes, _register, _td, _ticks
 
 
 from contextlib import contextmanager
@@ -267,6 +267,24 @@ def _pca_anomaly_oracle(dim: int = 3, iters: int = 16) -> str:
     """
 
 
+def _flag_anomalies(errs: DataFrame) -> DataFrame:
+    """``(symbol, window_id, err, anomaly_p92, anomaly_p99_5)``: each
+    window's reconstruction error (rounded to 6 places) flagged against
+    its symbol's interpolated 92nd and 99.5th error percentiles. The
+    output of the ``ml_anomaly_scores`` family."""
+    thresholds = errs.groupBy("symbol").agg(
+        F.percentile(F.col("err"), 0.92).alias("p92"),
+        F.percentile(F.col("err"), 0.995).alias("p99_5"),
+    )
+    return errs.join(F.broadcast(thresholds), "symbol").select(
+        "symbol",
+        "window_id",
+        F.round("err", 6).alias("err"),
+        (F.col("err") > F.col("p92")).alias("anomaly_p92"),
+        (F.col("err") > F.col("p99_5")).alias("anomaly_p99_5"),
+    )
+
+
 @_register("ml_anomaly_scores", _pca_anomaly_oracle)
 def ml_anomaly_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's full ML lifecycle (SURVEY §3.3) as one plan:
@@ -287,20 +305,7 @@ def ml_anomaly_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     errs = mlfeat.pca_anomaly_errors_det(
         tensors, models, dim=3
     ).localCheckpoint()  # feeds thresholds AND the final join
-    thresholds = errs.groupBy("symbol").agg(
-        F.percentile(F.col("err"), 0.92).alias("p92"),
-        F.percentile(F.col("err"), 0.995).alias("p99_5"),
-    )
-    return (
-        errs.join(F.broadcast(thresholds), "symbol")
-        .select(
-            "symbol",
-            "window_id",
-            F.round("err", 6).alias("err"),
-            (F.col("err") > F.col("p92")).alias("anomaly_p92"),
-            (F.col("err") > F.col("p99_5")).alias("anomaly_p99_5"),
-        )
-    )
+    return _flag_anomalies(errs)
 
 
 # Hyperparameters shared by the ml_anomaly_scores_ae query and its
@@ -506,17 +511,7 @@ def ml_anomaly_scores_ae(spark: SparkSession, sf_dir: str) -> DataFrame:
     tensors = _ae_tensors(spark, sf_dir).localCheckpoint()
     model = ae.fit_autoencoder(tensors, **_AE_LIFECYCLE)
     errs = ae.score_errors_seq(tensors, model)
-    thresholds = errs.groupBy("symbol").agg(
-        F.percentile(F.col("err"), 0.92).alias("p92"),
-        F.percentile(F.col("err"), 0.995).alias("p99_5"),
-    )
-    return errs.join(F.broadcast(thresholds), "symbol").select(
-        "symbol",
-        "window_id",
-        F.round("err", 6).alias("err"),
-        (F.col("err") > F.col("p92")).alias("anomaly_p92"),
-        (F.col("err") > F.col("p99_5")).alias("anomaly_p99_5"),
-    )
+    return _flag_anomalies(errs)
 
 
 _AE_FIXEDW = {"n_ticks": 8, "n_feats": 3, "hidden": (8,), "latent": 4, "n_windows": 24}
@@ -886,17 +881,7 @@ def ml_anomaly_scores_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         t, n_target=32, windows=((7, 0, 12, 0), (13, 0, 18, 0))
     )
     errs = mlfeat.reconstruction_errors(tensors).localCheckpoint()
-    thresholds = errs.groupBy("symbol").agg(
-        F.percentile(F.col("err"), 0.92).alias("p92"),
-        F.percentile(F.col("err"), 0.995).alias("p99_5"),
-    )
-    return errs.join(F.broadcast(thresholds), "symbol").select(
-        "symbol",
-        "window_id",
-        F.round("err", 6).alias("err"),
-        (F.col("err") > F.col("p92")).alias("anomaly_p92"),
-        (F.col("err") > F.col("p99_5")).alias("anomaly_p99_5"),
-    )
+    return _flag_anomalies(errs)
 
 
 _STREAM_CUSUM_ORACLE = r"""
@@ -1287,26 +1272,9 @@ def ml_triple_barrier(spark: SparkSession, sf_dir: str) -> DataFrame:
     barrier levels a single correctly-rounded product per entry."""
     from ..operators.mlfeat import triple_barrier_labels
 
-    src = _td(spark, sf_dir, "ticks").filter(
-        F.col("user_id").isNotNull() & F.col("value").isNotNull()
-    )
-    w = Window.partitionBy("symbol", F.date_trunc("minute", "ts")).orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    bars = (
-        src.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "symbol",
-            F.date_trunc("minute", "ts").alias("bar_ts"),
-            F.floor(F.col("value") * 1e4 + F.lit(0.5))
-            .cast("bigint")
-            .alias("close_i4"),
-        )
-        # minute-scale (tape/60); feeds entries AND the interval join —
-        # materialize once instead of re-scanning the tape per consumer
-        .localCheckpoint()
-    )
+    # minute-scale (tape/60); feeds entries AND the interval join —
+    # materialize once instead of re-scanning the tape per consumer
+    bars = _minute_closes(spark, sf_dir).localCheckpoint()
     entries = bars.filter(F.minute("bar_ts") == 0).select(
         "symbol",
         F.col("bar_ts").alias("entry_ts"),
@@ -1357,26 +1325,9 @@ def ml_label_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval join as the labeler + one (symbol, bar) hash agg."""
     from ..operators.mlfeat import label_uniqueness_weights, triple_barrier_labels
 
-    src = _td(spark, sf_dir, "ticks").filter(
-        F.col("user_id").isNotNull() & F.col("value").isNotNull()
-    )
-    w = Window.partitionBy("symbol", F.date_trunc("minute", "ts")).orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    bars = (
-        src.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "symbol",
-            F.date_trunc("minute", "ts").alias("bar_ts"),
-            F.floor(F.col("value") * 1e4 + F.lit(0.5))
-            .cast("bigint")
-            .alias("close_i4"),
-        )
-        # minute-scale (tape/60); feeds entries AND the interval join —
-        # materialize once instead of re-scanning the tape per consumer
-        .localCheckpoint()
-    )
+    # minute-scale (tape/60); feeds entries AND the interval join —
+    # materialize once instead of re-scanning the tape per consumer
+    bars = _minute_closes(spark, sf_dir).localCheckpoint()
     entries = bars.filter(F.minute("bar_ts") == 0).select(
         "symbol",
         F.col("bar_ts").alias("entry_ts"),
@@ -2071,9 +2022,7 @@ def streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("symbol")
         .agg(
             F.count("value").alias("n"),
-            F.sum(F.floor(F.col("value") * 1e2 + F.lit(0.5)).cast("long")).alias(
-                "sc"
-            ),
+            F.sum(cents(F.col("value"))).alias("sc"),
         )
         .collect()
     )

@@ -19,7 +19,7 @@ from ..operators import (  # noqa: F401
 from ..functions import detmath
 from ..functions.exactagg import exact_avg, exact_avg_sql, exact_sum, exact_sum_sql
 from ..functions.scalars import cents, q6
-from ._base import _register, _td
+from ._base import _cov_terms, _register, _td
 
 # Shorthand for the oracle f-strings: exact integer-grid sums/means of
 # fixed-decimal columns (see functions/exactagg.py) — revenue terms are
@@ -2109,6 +2109,20 @@ def orders_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(src, dst)``: the co-purchase graph on one part category
+    (``l_partkey % 7 = 0``), an edge ``src < dst`` for every two parts
+    in the same order (once per such order). The graph of
+    part_copurchase_triangles and part_copurchase_communities."""
+    li = _td(spark, sf_dir, "lineitem").filter(F.col("l_partkey") % 7 == 0)
+    a, b = li.alias("a"), li.alias("b")
+    return a.join(
+        b,
+        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+        & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+    ).select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
+
+
 @_register(
     "part_copurchase_triangles",
     """
@@ -2162,16 +2176,7 @@ def part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     orientation algebra in SQL."""
     from ..operators.graph import triangle_counts
 
-    li = _td(spark, sf_dir, "lineitem").filter(F.col("l_partkey") % 7 == 0)
-    a, b = li.alias("a"), li.alias("b")
-    edges = a.join(
-        b,
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-    ).select(
-        F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
-    )
-    return triangle_counts(edges).select(
+    return triangle_counts(_copurchase_edges(spark, sf_dir)).select(
         F.col("node").alias("part_key"), "triangles"
     )
 
@@ -2227,14 +2232,7 @@ def part_copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     final partition."""
     from ..operators.graph import label_propagation
 
-    li = _td(spark, sf_dir, "lineitem").filter(F.col("l_partkey") % 7 == 0)
-    a, b = li.alias("a"), li.alias("b")
-    edges = a.join(
-        b,
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-    ).select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-    return label_propagation(edges, iters=4).select(
+    return label_propagation(_copurchase_edges(spark, sf_dir), iters=4).select(
         F.col("node").alias("part_key"), F.col("label").alias("community")
     )
 
@@ -2657,12 +2655,7 @@ def orders_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("syy"),
     )
-    nd = F.col("n_parts").cast("double")
-    sxd = F.col("sx").cast("double")
-    syd = F.col("sy").cast("double")
-    vx = nd * F.col("sxx") - sxd * sxd
-    vy = nd * F.col("syy") - syd * syd
-    cov = nd * F.col("sxy") - sxd * syd
+    vx, vy, cov = _cov_terms("n_parts")
     return m.select(
         "brand",
         "n_parts",

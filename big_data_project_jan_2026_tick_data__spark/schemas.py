@@ -46,3 +46,16 @@ DAILY_WINDOW_COUNTS = T.StructType(
         T.StructField("ticks_window2", T.LongType(), False),
     ]
 )
+
+# One JSON event of the live feeds (the socket and Kafka sources of
+# sources.io): the events table's columns, ``ts`` parsed as a timestamp.
+EVENTS_JSON = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..schemas import TICKS_RAW_DDL
+from ..schemas import EVENTS_JSON, TICKS_RAW_DDL
 
 TESTDATA_TABLES = (
     "region",
@@ -144,18 +144,6 @@ def events_socket_stream_source(
     (exactly-once via file listing) or a Kafka-shaped source with real
     offsets; this function exists so the session pipeline can be
     exercised end to end against a live network feed."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
     lines = (
         spark.readStream.format("socket")
         .option("host", host)
@@ -163,7 +151,7 @@ def events_socket_stream_source(
         .load()
     )
     return lines.select(
-        F.from_json(F.col("value"), schema).alias("e")
+        F.from_json(F.col("value"), EVENTS_JSON).alias("e")
     ).select("e.*")
 
 
@@ -199,18 +187,6 @@ def events_kafka_stream_source(
     env-gated (tests/test_streaming.py records the skip) and the
     missing-jar failure is rewritten into an actionable error instead
     of Spark's DATA_SOURCE_NOT_FOUND."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
     try:
         raw = (
             spark.readStream.format("kafka")
@@ -232,7 +208,7 @@ def events_kafka_stream_source(
             ) from e
         raise
     return raw.select(
-        F.from_json(F.col("value").cast("string"), schema).alias("e")
+        F.from_json(F.col("value").cast("string"), EVENTS_JSON).alias("e")
     ).select("e.*")
 
 

@@ -8,13 +8,18 @@ best-of-N timer.
     python perf.py sweep [--top N]                cold and warm time of every registry query
     python perf.py scaling                        operator pipelines on a replicated corpus
     python perf.py bpe [--merges N] [--batch B]   sequential vs batched BPE training
+    python perf.py reach FUNC... [--queries Q...] registry queries whose build + write enter FUNC
 
 Queries read ``$SPARK_GRAFT_SF_DIR`` (default sf0.1, as ``bench.py``);
 the session runs on ``local[$SPARK_GRAFT_CPUS]``. ``plans`` defaults to the
 headline suite, ``bench.HEADLINE``. ``micro`` and ``scaling`` warm up
 at sf0.001 first, as ``bench.py`` does, so JIT and codegen compile
 outside the timed runs. For a core-count scaling curve, run ``scaling``
-once per ``SPARK_GRAFT_CPUS`` value.
+once per ``SPARK_GRAFT_CPUS`` value. ``reach`` always runs at sf0.001:
+it lists the queries whose build + noop write calls any of the named
+package functions (``module.Qualname`` suffixes such as
+``SnapshotTable.write`` or ``stats._bucket_means6``), traced with
+``sys.setprofile`` in the driver's Python threads.
 """
 
 from __future__ import annotations
@@ -24,6 +29,7 @@ import json
 import os
 import sys
 import tempfile
+import threading
 import time
 from collections.abc import Callable
 
@@ -163,6 +169,50 @@ def bpe(spark: SparkSession, sf_dir: str, args) -> None:
     print("merge sequence identical:", seq == bat)
 
 
+def reach(spark: SparkSession, sf_dir: str, args) -> None:
+    pkg = os.path.join(ROOT, "big_data_project_jan_2026_tick_data__spark")
+    names: dict = {}  # code object -> dotted "module.qualname"
+
+    def dotted(code) -> str | None:
+        if code not in names:
+            path = code.co_filename
+            names[code] = None
+            if path.startswith(pkg + os.sep):
+                mod = os.path.relpath(path, pkg)[: -len(".py")].replace(os.sep, ".")
+                names[code] = f"{mod}.{code.co_qualname}"
+        return names[code]
+
+    entered: set[str] = set()
+
+    def hook(frame, event, _arg):
+        if event == "call":
+            name = dotted(frame.f_code)
+            if name is not None:
+                entered.add(name)
+
+    def matches(spec: str, name: str) -> bool:
+        return name == spec or name.endswith("." + spec)
+
+    hits: dict[str, list[str]] = {f: [] for f in args.funcs}
+    errors = {}
+    for q in args.queries or sorted(QUERIES):
+        entered.clear()
+        sys.setprofile(hook)
+        threading.setprofile(hook)
+        try:
+            _noop(QUERIES[q](spark, WARM_DIR))
+        except Exception as exc:  # noqa: BLE001
+            errors[q] = f"{type(exc).__name__}: {str(exc)[:200]}"
+        finally:
+            sys.setprofile(None)
+            threading.setprofile(None)
+        for f in args.funcs:
+            if any(matches(f, name) for name in entered):
+                hits[f].append(q)
+    reached = sorted({q for qs in hits.values() for q in qs})
+    print(json.dumps({"queries": reached, "by_function": hits, "errors": errors}, indent=1))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     sub = ap.add_subparsers(required=True)
@@ -183,6 +233,10 @@ def main() -> None:
     p.add_argument("--merges", type=int, default=64)
     p.add_argument("--batch", type=int, default=16)
     p.set_defaults(run=bpe)
+    p = sub.add_parser("reach", help="registry queries that enter the named functions")
+    p.add_argument("funcs", nargs="+")
+    p.add_argument("--queries", nargs="*")
+    p.set_defaults(run=reach)
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

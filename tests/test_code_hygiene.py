@@ -401,7 +401,8 @@ def test_tick_feed_has_one_definition():
 
 
 def _is_cents(node) -> bool:
-    """``node`` is ``F.floor(<x> * 100 + F.lit(0.5)).cast('long'|'bigint')``."""
+    """``node`` is ``F.floor(<x> * 100 + F.lit(0.5)).cast('long'|'bigint')``,
+    the multiplier written as an integer or a float (``1e2``, ``100.0``)."""
     if not (
         isinstance(node, ast.Call)
         and isinstance(node.func, ast.Attribute)
@@ -426,7 +427,7 @@ def _is_cents(node) -> bool:
         and isinstance(s.left, ast.BinOp)
         and isinstance(s.left.op, ast.Mult)
         and isinstance(s.left.right, ast.Constant)
-        and type(s.left.right.value) is int
+        and type(s.left.right.value) in (int, float)
         and s.left.right.value == 100
     )
 
@@ -508,3 +509,114 @@ def test_price_grid_and_arm_split_have_one_definition():
                     continue
                 sites.append(f"{rel}:{node.lineno} {name} {kind}")
     assert not sites, f"{len(sites)} sites:\n" + "\n".join(sites)
+
+
+_CLONE_MIN_NODES = 60
+
+
+def _statement_lists(tree):
+    """Every statement list in ``tree`` (module, class and function
+    bodies, branches, handlers) with the names of its enclosing
+    functions, docstrings and imports left out."""
+
+    def keep(st) -> bool:
+        if isinstance(st, (ast.Import, ast.ImportFrom)):
+            return False
+        return not (
+            isinstance(st, ast.Expr)
+            and isinstance(st.value, ast.Constant)
+            and isinstance(st.value.value, str)
+        )
+
+    def walk(node, fns):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fns = fns + (node.name,)
+        for _field, val in ast.iter_fields(node):
+            children = val if isinstance(val, list) else [val]
+            if children and isinstance(children[0], ast.stmt):
+                stmts = [st for st in children if keep(st)]
+                if stmts:
+                    yield stmts, fns
+            for child in children:
+                if isinstance(child, ast.AST):
+                    yield from walk(child, fns)
+
+    yield from walk(tree, ())
+
+
+def _clone_exempt(fns_a, fns_b) -> bool:
+    """A ``*_numpy`` function is the driver-local twin that oracles and
+    tests compare the Spark code against, and an oracle builder
+    re-derives Spark-side code on purpose: a copy shared with either
+    is not a clone."""
+    if any(f.endswith("_numpy") for f in fns_a + fns_b):
+        return True
+    return any("oracle" in f for f in fns_a) != any("oracle" in f for f in fns_b)
+
+
+def test_no_copied_blocks():
+    """No run of consecutive sibling statements of 60 or more AST nodes
+    appears twice in the package (compared by ``ast.dump`` without
+    positions): a block needed twice is one function. Each group is
+    reported by its maximal runs, with every site."""
+    seqs = []  # (file, enclosing functions, statements, dumps, sizes)
+    for path in _module_files():
+        rel = str(path.relative_to(PKG))
+        for stmts, fns in _statement_lists(ast.parse(path.read_text())):
+            dumps = [ast.dump(st) for st in stmts]
+            sizes = [sum(1 for _ in ast.walk(st)) for st in stmts]
+            seqs.append((rel, fns, stmts, dumps, sizes))
+    where: dict[str, list[tuple[int, int]]] = {}
+    for k, seq in enumerate(seqs):
+        for i, d in enumerate(seq[3]):
+            where.setdefault(d, []).append((k, i))
+    groups: dict[tuple, set] = {}
+    for occ in where.values():
+        for x, (a, i) in enumerate(occ):
+            for b, j in occ[x + 1:]:
+                da, db = seqs[a][3], seqs[b][3]
+                if i and j and da[i - 1] == db[j - 1]:
+                    continue  # not the start of a maximal run
+                n = 0
+                while (
+                    i + n < len(da) and j + n < len(db) and da[i + n] == db[j + n]
+                    and not (a == b and i + n >= j)
+                ):
+                    n += 1
+                if sum(seqs[a][4][i:i + n]) >= _CLONE_MIN_NODES:
+                    groups.setdefault(tuple(da[i:i + n]), set()).update(
+                        {(a, i), (b, j)}
+                    )
+    failing = [
+        (len(run), sorted(sites))
+        for run, sites in groups.items()
+        if not all(
+            _clone_exempt(seqs[a][1], seqs[b][1])
+            for x, (a, _i) in enumerate(sorted(sites))
+            for b, _j in sorted(sites)[x + 1:]
+        )
+    ]
+    # runs that overlap in one statement list are one copied block,
+    # reported once with all its sites
+    merged: list[list] = []
+    for n, sites in failing:
+        spans = {(k, i, i + n) for k, i in sites}
+        hit = [
+            g for g in merged
+            if any(k == k2 and i < e2 and i2 < e for k, i, e in spans for k2, i2, e2 in g)
+        ]
+        for g in hit:
+            spans |= g
+            merged.remove(g)
+        merged.append(spans)
+    report = []
+    for spans in merged:
+        lines = []
+        for k, i, e in sorted(spans):
+            rel, fns, stmts, _d, _s = seqs[k]
+            lines.append(
+                f"  {rel}:{stmts[i].lineno}-{stmts[e - 1].end_lineno} "
+                f"({'.'.join(fns) or '<module>'})"
+            )
+        report.append("\n".join(lines))
+    assert not report, f"{len(report)} copied blocks:\n" + "\n\n".join(sorted(report))

@@ -1554,3 +1554,52 @@ def test_cramers_v_bounds_on_independence_and_determinism(spark, tmp_path):
     sf2 = _write_events(spark, tmp_path / "det", rows)
     r2 = QUERIES["events_cramers_v"](spark, sf2).collect()[0]
     assert r2["cramers_v_q6"] > 0.999
+
+
+def test_survival_users_durations_and_censoring(spark):
+    """``_survival_users`` (the entry/censoring rows of the three
+    survival queries) on five hand-made users: a converter, a purchase
+    at the click's own instant, a purchase only before the first click,
+    a click only, and a user who never clicks."""
+    from big_data_project_jan_2026_tick_data__spark.registry.q_events_ticks import (
+        _survival_users,
+    )
+
+    t0 = 1_767_225_600_000_000  # 2026-01-01T00:00:00Z in epoch micros
+    s = 1_000_000
+    rows = [
+        # converts 60 s after the first click; the later view is ignored
+        (1, t0, 1, "click"),
+        (2, t0 + 20 * s, 1, "click"),
+        (3, t0 + 60 * s, 1, "purchase"),
+        (4, t0 + 900 * s, 1, "view"),
+        # purchase at the click's ts is not after it: censored at the
+        # last event, 30.5 s later (whole seconds, rounded down)
+        (5, t0, 2, "click"),
+        (6, t0, 2, "purchase"),
+        (7, t0 + 30 * s + 500_000, 2, "view"),
+        # purchase only before the first click: censored at the last event
+        (8, t0 - 100 * s, 3, "purchase"),
+        (9, t0, 3, "click"),
+        (10, t0 + 200 * s, 3, "view"),
+        # clicks only: censored at the last click
+        (11, t0, 4, "click"),
+        (12, t0 + 7 * s + 900_000, 4, "click"),
+        # no click at all: not in the table
+        (13, t0, 5, "view"),
+        (14, t0 + 5 * s, 5, "purchase"),
+    ]
+    ev = spark.createDataFrame(
+        rows, "event_id long, us long, user_id long, event_type string"
+    ).select(
+        "event_id",
+        F.timestamp_micros("us").alias("ts"),
+        "user_id",
+        "event_type",
+        F.lit(1.0).alias("value"),
+    )
+    got = {
+        r["user_id"]: (r["d_sec"], r["c"])
+        for r in _survival_users(ev, F.col("user_id")).collect()
+    }
+    assert got == {1: (60, 1), 2: (30, 0), 3: (200, 0), 4: (7, 0)}
