@@ -658,14 +658,12 @@ def _ivf_kmeanspar_oracle(nlist: int = 16, nprobe: int = 4, k: int = 10) -> str 
             # the WHOLE oracle to rows-only (advisor r10 #3): a branch-
             # less sf would return zero oracle rows against live IVF
             # results — a guaranteed parity failure, strictly worse
-            # than the weaker rows-only check (same handling as the
-            # ambiguous-fingerprint case above).
+            # than the weaker rows-only check (the same handling
+            # `_frozen_corpora` gives an ambiguous fingerprint).
             return None
         branches.append(
             _ivf_kmeanspar_branch(seed_ids, int(fp), nprobe=nprobe, k=k)
         )
-    if not branches:
-        return None
     return "\n    UNION ALL\n    ".join(branches)
 
 
@@ -2279,8 +2277,6 @@ def _whitening_oracle(top: int = 3, dim: int = 64) -> str | None:
             "WHERE (SELECT CAST(SUM(CAST(FLOOR(CAST(embedding[1] AS DOUBLE)"
             f" * 1e9 + 0.5) AS BIGINT)) AS BIGINT) FROM embeddings) = {fp}"
         )
-    if not branches:
-        return None
     return "\n    UNION ALL\n    ".join(branches)
 
 
@@ -2392,8 +2388,6 @@ def _procrustes_oracle(dim: int = 64, c: float = 0.8, s: float = 0.6) -> str | N
     WHERE (SELECT CAST(SUM(CAST(FLOOR(CAST(embedding[1] AS DOUBLE)
                  * 1e9 + 0.5) AS BIGINT)) AS BIGINT) FROM embeddings) = {fp}"""
         )
-    if not branches:
-        return None
     return "\n    UNION ALL\n    ".join(branches)
 
 

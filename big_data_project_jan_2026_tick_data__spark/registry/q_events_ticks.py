@@ -7301,11 +7301,12 @@ def events_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-proportion z on the md5 arms (the Holm z stage,
     :func:`_type_ztests` and its oracle twin ``_type_ztests_sql``),
     two-sided p via the Abramowitz-Stegun 7.1.26 erfc chain (frozen
-    rational constants, detmath exp — no libm), then the 1995 step-up rule: rank p ascending, k* = the
-    LARGEST rank with p ≤ α·rank/m, everything at rank ≤ k* is
-    significant (unlike Holm, rejections can resume after a failure).
-    Also emits the standard monotone adjusted p (running min of
-    m·p/rank from the bottom, clamped at 1).
+    rational constants, detmath exp — no libm), then the 1995 step-up
+    rule: rank p ascending, k* = the LARGEST rank with p ≤ α·rank/m,
+    everything at rank ≤ k* is significant (unlike Holm, rejections
+    can resume after a failure). Also emits the standard monotone
+    adjusted p (running min of m·p/rank from the bottom, clamped at
+    1).
 
     Determinism: counts are exact BIGINTs; z is one fixed-order double
     snapped q6; p is one fixed-order double chain over z_q6 (the exp
@@ -7909,12 +7910,13 @@ def events_log_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: the duration/censoring construction is
     :func:`_survival_users`, as in events_kaplan_meier /
-    events_nelson_aalen; risk sets come from exact integer cumsums; each per-time E and V
-    term is a fixed-order double chain over exact integers snapped to
-    the 1e-12 grid and summed exactly (decimal/HUGEINT); the χ² tail
-    is one fixed-order double formula snapped q6. Scale: one user-grain
-    pass, the global_cumsum event-time sweep (range-partitioned — the
-    survival-family shape), then one-row frames.
+    events_nelson_aalen; risk sets come from exact integer cumsums;
+    each per-time E and V term is a fixed-order double chain over
+    exact integers snapped to the 1e-12 grid and summed exactly
+    (decimal/HUGEINT); the χ² tail is one fixed-order double formula
+    snapped q6. Scale: one user-grain pass, the global_cumsum
+    event-time sweep (range-partitioned — the survival-family shape),
+    then one-row frames.
     No counterpart in the reference."""
     u = _survival_users(_td(spark, sf_dir, "events"), _arm(1, 0).alias("is_a"))
     n = u.agg(

@@ -8,7 +8,7 @@ best-of-N timer.
     python perf.py sweep [--top N]                cold and warm time of every registry query
     python perf.py scaling                        operator pipelines on a replicated corpus
     python perf.py bpe [--merges N] [--batch B]   sequential vs batched BPE training
-    python perf.py reach FUNC... [--queries Q...] registry queries whose build + write enter FUNC
+    python perf.py reach FUNC...                  registry queries whose build + write enter FUNC
 
 Queries read ``$SPARK_GRAFT_SF_DIR`` (default sf0.1, as ``bench.py``);
 the session runs on ``local[$SPARK_GRAFT_CPUS]``. ``plans`` defaults to the
@@ -195,7 +195,7 @@ def reach(spark: SparkSession, sf_dir: str, args) -> None:
 
     hits: dict[str, list[str]] = {f: [] for f in args.funcs}
     errors = {}
-    for q in args.queries or sorted(QUERIES):
+    for q in sorted(QUERIES):
         entered.clear()
         sys.setprofile(hook)
         threading.setprofile(hook)
@@ -235,7 +235,6 @@ def main() -> None:
     p.set_defaults(run=bpe)
     p = sub.add_parser("reach", help="registry queries that enter the named functions")
     p.add_argument("funcs", nargs="+")
-    p.add_argument("--queries", nargs="*")
     p.set_defaults(run=reach)
     args = ap.parse_args()
 

@@ -547,11 +547,14 @@ def _statement_lists(tree):
 def _clone_exempt(fns_a, fns_b) -> bool:
     """A ``*_numpy`` function is the driver-local twin that oracles and
     tests compare the Spark code against, and an oracle builder
-    re-derives Spark-side code on purpose: a copy shared with either
-    is not a clone."""
-    if any(f.endswith("_numpy") for f in fns_a + fns_b):
-        return True
-    return any("oracle" in f for f in fns_a) != any("oracle" in f for f in fns_b)
+    re-derives Spark-side code on purpose: a copy with exactly one side
+    in such a function is not a clone. A copy between two numpy twins,
+    or between two oracle builders, is."""
+
+    def differ(mark) -> bool:
+        return any(mark(f) for f in fns_a) != any(mark(f) for f in fns_b)
+
+    return differ(lambda f: f.endswith("_numpy")) or differ(lambda f: "oracle" in f)
 
 
 def test_no_copied_blocks():
