@@ -58,6 +58,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .scalars import half_up
+
 
 def _pow10(k: int) -> float:
     return float(10**k)
@@ -70,7 +72,7 @@ def _split(col: Column, k: int) -> tuple[Column, Column]:
     recombination ``w + f/10^k`` is still exact, so no carry pass is
     needed."""
     w = F.floor(col).cast("long")
-    f = F.floor((col - w) * F.lit(_pow10(k)) + F.lit(0.5)).cast("long")
+    f = half_up((col - w) * F.lit(_pow10(k))).cast("long")
     return w, f
 
 

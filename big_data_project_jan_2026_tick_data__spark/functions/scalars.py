@@ -64,19 +64,35 @@ def interval_expr(spec: str | int | _dt.timedelta, unit: str | None = None) -> C
     return F.expr(f"INTERVAL {n} {u.upper()}")
 
 
+def half_up(x: Column) -> Column:
+    """The package's one floor-half-up, ``FLOOR(x + 0.5)``. Every float
+    compared with the SQL oracle is scaled onto an integer grid and
+    snapped here: Spark and an IEEE-754 oracle floor the same binary
+    double, so half-way values cannot disagree the way decimal-string
+    HALF_UP and binary rounding do. Callers scale ``x`` themselves and
+    keep their own ``.cast(...)``.
+
+    Range condition: Spark's ``floor(double)`` returns BIGINT, so
+    |x| >= 2**63 saturates to the BIGINT bounds and NaN becomes 0,
+    while DuckDB's ``FLOOR`` keeps the double (``q6(1e300)`` is
+    9223372036854.775 in Spark and 1e300 in DuckDB; ``q6(NaN)`` is 0.0
+    against NaN). Callers keep |x| < 2**63 after scaling: |c| < 9.2e12
+    for :func:`q6`, |x| < 9.2e6 on the 1e-12 grid. No registry input
+    comes near, so there is no guard."""
+    return F.floor(x + F.lit(0.5))
+
+
 def q6(c: Column) -> Column:
-    """Floor-half-up to 6 decimals, ``FLOOR(c * 1e6 + 0.5) / 1e6``. Spark
-    and an IEEE-754 SQL oracle floor the same binary double, so 6th-
-    decimal half-way values cannot disagree the way decimal-string
-    HALF_UP and binary rounding do."""
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
+    """Floor-half-up to 6 decimals, ``FLOOR(c * 1e6 + 0.5) / 1e6``
+    (:func:`half_up` on the 1e-6 grid)."""
+    return half_up(c * 1e6) / 1e6
 
 
 def cents(c: Column) -> Column:
     """A price on the whole-cent grid, half-up, as a BIGINT:
     ``CAST(FLOOR(c * 100 + 0.5) AS BIGINT)`` in the oracle SQL. Sums
     and differences of the snapped integers are exact in both engines."""
-    return F.floor(c * 100 + F.lit(0.5)).cast("long")
+    return half_up(c * 100).cast("long")
 
 
 def parse_tick_ts(col: Column, fmt: str = TICKS_TS_FORMAT) -> Column:

@@ -34,6 +34,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalars import half_up, q6
 from .text import normalize_text
 
 #: feature names in weight order (w[0] is the bias)
@@ -119,7 +120,7 @@ def train_logreg(
         row = staged.agg(
             F.count(F.lit(1)).alias("n"),
             *[
-                F.sum(F.floor(F.col(f) * err * 1e9 + F.lit(0.5))).alias(f"g_{f}")
+                F.sum(half_up(F.col(f) * err * 1e9)).alias(f"g_{f}")
                 for f in FEATURES
             ],
         ).collect()[0]
@@ -144,7 +145,7 @@ def score(
     return staged.select(
         id_col,
         F.col("y").cast("int").alias("y"),
-        (F.floor(s * 1e6 + F.lit(0.5)) / 1e6).alias("score_q6"),
+        q6(s).alias("score_q6"),
         (s >= 0.5).cast("int").alias("pred"),
     )
 

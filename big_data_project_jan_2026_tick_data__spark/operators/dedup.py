@@ -992,14 +992,9 @@ def cross_doc_overlap(
     return per.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_shingles"),
         F.sum((F.col("__docs") >= 2).cast("long")).alias("n_shared"),
-        (
-            F.floor(
-                F.sum((F.col("__docs") >= 2).cast("long"))
-                / F.count(F.lit(1))
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
+        q6(
+            F.sum((F.col("__docs") >= 2).cast("long"))
+            / F.count(F.lit(1))
         ).alias("overlap_frac"),
     )
 

@@ -14,11 +14,11 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalars import q6
+from ..functions.scalars import half_up, q6
 
 
 def _q9(c):
-    return F.floor(c * 1e9 + F.lit(0.5)) / 1e9
+    return half_up(c * 1e9) / 1e9
 
 
 def pagerank(
@@ -112,9 +112,7 @@ def pagerank(
         )
         ckpts.release_superseded()
     ckpts.release_all_but_last()
-    return ranks.select(
-        "node", (F.floor(F.col("rank") * 1e6 + F.lit(0.5)) / 1e6).alias("rank_q6")
-    )
+    return ranks.select("node", q6(F.col("rank")).alias("rank_q6"))
 
 
 def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..engine import to_local
-from ..functions.scalars import interval_expr, q6
+from ..functions.scalars import half_up, interval_expr, q6
 from pyspark.sql import types as T
 
 from .ticks import SESSION_WINDOWS, session_filter, with_spread
@@ -231,16 +231,14 @@ def fit_pca_power_det(
     for i in range(dim):
         aggs.append(
             F.sum(
-                F.floor(F.col(f"x{i}") * 1e6 + F.lit(0.5)).cast("decimal(38,0)")
+                half_up(F.col(f"x{i}") * 1e6).cast("decimal(38,0)")
             ).alias(f"s{i}")
         )
     for i in range(dim):
         for j in range(i, dim):
             aggs.append(
                 F.sum(
-                    F.floor(
-                        F.col(f"x{i}") * F.col(f"x{j}") * 1e6 + F.lit(0.5)
-                    ).cast("decimal(38,0)")
+                    half_up(F.col(f"x{i}") * F.col(f"x{j}") * 1e6).cast("decimal(38,0)")
                 ).alias(f"s{i}_{j}")
             )
     rows = cells.groupBy("symbol").agg(*aggs).collect()
@@ -316,7 +314,7 @@ def pca_anomaly_errors_det(
     q = None
     for i in range(dim):
         d = F.col(f"c{i}") - F.col("t") * F.col(f"v{i}")
-        qi = F.floor(d * d * 1e9 + F.lit(0.5)).cast("long")
+        qi = half_up(d * d * 1e9).cast("long")
         q = qi if q is None else q + qi
     staged = staged.withColumn("q", q)
     return staged.groupBy("symbol", "window_id").agg(
@@ -483,12 +481,8 @@ def triple_barrier_labels(
         F.col(entry_close_col).alias("entry_close_i4"),
     ).withColumns(
         {
-            "up_i4": F.floor(
-                F.col("entry_close_i4").cast("double") * up_mult + F.lit(0.5)
-            ),
-            "dn_i4": F.floor(
-                F.col("entry_close_i4").cast("double") * dn_mult + F.lit(0.5)
-            ),
+            "up_i4": half_up(F.col("entry_close_i4").cast("double") * up_mult),
+            "dn_i4": half_up(F.col("entry_close_i4").cast("double") * dn_mult),
         }
     )
     b = bars.select(
@@ -586,7 +580,7 @@ def label_uniqueness_weights(
     contrib = pairs.join(conc, ["symbol", "bar_ts"]).select(
         "symbol",
         "entry_ts",
-        F.floor(F.lit(1e9) / F.col("c") + F.lit(0.5)).alias("u9"),
+        half_up(F.lit(1e9) / F.col("c")).alias("u9"),
     )
     w = contrib.groupBy("symbol", "entry_ts").agg(
         F.count(F.lit(1)).alias("n_bars"), F.sum("u9").alias("s9")

@@ -23,7 +23,6 @@ import math
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F  # noqa: F401  (for meta structs)
 from pyspark.sql import types as T
 
 from ..engine import map_rows

@@ -14,6 +14,7 @@ import json
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.scalars import half_up, q6
 from .dedup import _bucket_pairs, _drop_hot
 
 
@@ -83,8 +84,6 @@ def _sql_arr(vals) -> str:
     which either fails SQL parsing or resolves as a column reference —
     a cryptic analysis error far from the cause (centroids are computed
     from data, so a poisoned embedding CAN reach here)."""
-    import math
-
     vals = _check_finite(vals)
     return "array(" + ", ".join(f"{v!r}D" for v in vals) + ")"
 
@@ -511,7 +510,7 @@ def kmeans(
     cols = [
         F.col(id_col),
         F.col("a").getField("cid").alias("cluster"),
-        (F.floor(F.col("a").getField("dsq") * 1e6 + F.lit(0.5)) / 1e6).alias("dist_sq"),
+        q6(F.col("a").getField("dsq")).alias("dist_sq"),
     ]
     if return_vec:
         # downstream consumers (semantic_dedup) keep the vector next to
@@ -578,7 +577,7 @@ def _lloyd(v: DataFrame, init_rows: list, iters: int, m: int = 1):
             .select("cl", F.posexplode("vec").alias("pos", "x"))
             .groupBy(F.expr(key).alias("cl"), "pos")
             .agg(
-                F.sum(F.floor(F.col("x") * 1e9 + F.lit(0.5))).alias("s9"),
+                F.sum(half_up(F.col("x") * 1e9)).alias("s9"),
                 F.count(F.lit(1)).alias("n"),
             )
             .collect()
@@ -1057,7 +1056,7 @@ def _exact_term_sums(v: DataFrame, terms: Column) -> list:
         .groupBy("k")
         .agg(
             F.sum(
-                F.floor(F.col("val") * 1e9 + F.lit(0.5)).cast("decimal(38,0)")
+                half_up(F.col("val") * 1e9).cast("decimal(38,0)")
             ).alias("s"),
             F.count(F.lit(1)).cast("long").alias("cnt"),
         )
@@ -1314,8 +1313,7 @@ def quantize_embeddings_int8(
         stats = embedding_dim_stats(df, vec_col, id_col)
     scale = (F.col("dmax") - F.col("dmin")) / F.lit(255.0)
     q = F.when(F.col("dmax") == F.col("dmin"), F.lit(0)).otherwise(
-        F.floor((F.col("__v") - F.col("dmin")) / scale + F.lit(0.5)).cast("int")
-        - F.lit(128)
+        half_up((F.col("__v") - F.col("dmin")) / scale).cast("int") - F.lit(128)
     )
     rows = ex.join(F.broadcast(stats), "pos").select(
         F.col(id_col),
@@ -1384,10 +1382,7 @@ def rrf_fuse(
     ]
     u = reduce(lambda a, b: a.unionByName(b), slim)
     scored = u.groupBy(query_col, id_col).agg(
-        (
-            F.floor(F.sum(1.0 / (F.lit(float(k)) + F.col(rank_col))) * 1e6 + F.lit(0.5))
-            / 1e6
-        ).alias("rrf_q6"),
+        q6(F.sum(1.0 / (F.lit(float(k)) + F.col(rank_col)))).alias("rrf_q6"),
         F.count(F.lit(1)).alias("n_systems"),
     )
     w = Window.partitionBy(query_col).orderBy(
@@ -1426,12 +1421,8 @@ def ann_recall(
             query_col,
             "n_exact",
             F.coalesce(F.col("n_hit"), F.lit(0)).alias("n_hit"),
-            (
-                F.floor(
-                    F.coalesce(F.col("n_hit"), F.lit(0)) / F.col("n_exact") * 1e6
-                    + F.lit(0.5)
-                )
-                / 1e6
+            q6(
+                F.coalesce(F.col("n_hit"), F.lit(0)) / F.col("n_exact")
             ).alias("recall_q6"),
         )
     )
@@ -1568,7 +1559,7 @@ def _pq_train(
         *keep,
         "subspace",
         F.col("a.cid").alias("code"),
-        (F.floor(F.col("a.dsq") * 1e6 + F.lit(0.5)) / 1e6).alias("dist_q6"),
+        q6(F.col("a.dsq")).alias("dist_q6"),
     )
     return codes, books
 

@@ -32,6 +32,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.scalars import half_up, q6
+
 DEFAULT_LGK = 12
 
 
@@ -189,20 +191,17 @@ def psi_drift(
     j = j.withColumn("__p", p).withColumn("__q", q).withColumn(
         "__pr", F.col("__p") / F.col("__q")
     )
-    contrib = F.floor(
+    contrib = half_up(
         (F.col("__p") - F.col("__q"))
         * detmath.det_ln_pos("__pr")
         * F.lit(grid)
-        + F.lit(0.5)
     ).cast("bigint")
     out = j.select(*group_cols, contrib.alias("__c")).groupBy(*group_cols).agg(
         F.sum("__c").alias("__s")
     )
     return out.select(
         *group_cols,
-        (F.floor(F.col("__s").cast("double") / F.lit(grid) * 1e6 + F.lit(0.5)) / 1e6).alias(
-            "psi_q6"
-        ),
+        q6(F.col("__s").cast("double") / F.lit(grid)).alias("psi_q6"),
     )
 
 

@@ -15,7 +15,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalars import cents, q6
+from ..functions.scalars import cents, half_up, q6
 from .ticks import SESSION_WINDOWS, _tick_side, window_predicate
 
 
@@ -94,10 +94,10 @@ def error_stats(
         g1, g2 = float(10**decimals), float(10 ** (2 * decimals))
         c = F.col(err_col)
         s1 = F.sum(
-            F.floor(c * F.lit(g1) + F.lit(0.5)).cast("decimal(38,0)")
+            half_up(c * F.lit(g1)).cast("decimal(38,0)")
         ).cast("double")
         s2 = F.sum(
-            F.floor(c * c * F.lit(g2) + F.lit(0.5)).cast("decimal(38,0)")
+            half_up(c * c * F.lit(g2)).cast("decimal(38,0)")
         ).cast("double")
         n = F.count(c)
         mean = (s1 / F.lit(g1)) / n
@@ -159,10 +159,10 @@ def resample_even(
     ).withColumn("__rn", F.row_number().over(w) - 1)
     # idx is selected iff rn == round(k*(cnt-1)/(n-1)) for some integer k in
     # [0, n-1]; invert: k = round(rn*(n-1)/(cnt-1)) and check the round-trip.
-    # round(x) spelled floor(x+0.5) so every engine agrees on halfway cases.
+    # round(x) is half_up(x) so every engine agrees on halfway cases.
     rn, cnt = F.col("__rn"), F.col("__cnt")
-    k = F.floor(rn * (n_target - 1) / (cnt - 1) + 0.5)
-    selected = F.floor(k * (cnt - 1) / (n_target - 1) + 0.5) == rn
+    k = half_up(rn * (n_target - 1) / (cnt - 1))
+    selected = half_up(k * (cnt - 1) / (n_target - 1)) == rn
     return (
         out.filter((cnt <= n_target) | selected)
         .drop("__cnt", "__rn")
@@ -285,7 +285,7 @@ def _bucket_means6(
     one half-up floor), the resample step of :func:`symbol_correlation`,
     :func:`lead_lag_correlation` and :func:`market_beta`."""
     bucket = (F.col(ts_col).cast("long") / interval_sec).cast("long")
-    v6 = F.floor(F.col(value_col) * 1e6 + F.lit(0.5))
+    v6 = half_up(F.col(value_col) * 1e6)
     return (
         df.groupBy(F.col(symbol_col).alias("sym"), bucket.alias("__b"))
         .agg(F.sum(v6).alias("__s6"), F.count(value_col).alias("__c"))
@@ -294,9 +294,7 @@ def _bucket_means6(
             "__b",
             # __s6 is already in 1e-6 units, so the grid-snapped mean is
             # one floor of the integer-over-count quotient
-            F.floor(
-                F.col("__s6").cast("double") / F.col("__c") + F.lit(0.5)
-            ).alias("__v6"),
+            half_up(F.col("__s6").cast("double") / F.col("__c")).alias("__v6"),
         )
     )
 
@@ -347,7 +345,7 @@ def symbol_correlation(
             "sym_a",
             "sym_b",
             F.col("c_n").alias("n_buckets"),
-            (F.floor(F.col("__corr") * 1e6 + F.lit(0.5)) / 1e6).alias("corr"),
+            q6(F.col("__corr")).alias("corr"),
         )
     )
 
@@ -387,7 +385,7 @@ def rv_signature(
                 f"interval {d_} is not a multiple of base_interval "
                 f"{base_interval}"
             )
-    p6 = F.floor(F.col(price_col) * 1e6 + F.lit(0.5))
+    p6 = half_up(F.col(price_col) * 1e6)
     okey = F.struct(F.col(ts_col), *[F.col(c) for c in tiebreak_cols])
     b0 = (F.col(ts_col).cast("long") / base_interval).cast("long")
     base = (
@@ -425,7 +423,7 @@ def rv_signature(
         "symbol",
         "interval_sec",
         "n_returns",
-        (F.floor(rv * 1e6 + F.lit(0.5)) / 1e6).alias("rv_q6"),
+        q6(rv).alias("rv_q6"),
     )
 
 
@@ -456,7 +454,7 @@ def roll_spread(
     """
     order = [F.col(ts_col).asc(), *[F.col(c).asc() for c in tiebreak_cols]]
     w1 = Window.partitionBy(symbol_col).orderBy(*order)
-    p6 = F.floor(F.col(price_col) * 1e6 + F.lit(0.5))
+    p6 = half_up(F.col(price_col) * 1e6)
     d = df.withColumn("__p6", p6).withColumn(
         "__dp", F.col("__p6") - F.lag("__p6", 1).over(w1)
     )
@@ -477,9 +475,7 @@ def roll_spread(
         .select(
             "symbol",
             F.col("c_n").alias("n_pairs"),
-            F.when(
-                cov6sq < 0, F.floor(spread * 1e6 + F.lit(0.5)) / 1e6
-            ).alias("roll_spread_q6"),
+            F.when(cov6sq < 0, q6(spread)).alias("roll_spread_q6"),
         )
     )
 
@@ -520,9 +516,7 @@ def kyle_lambda(
     divides back out); symbols with constant signed volume (dx ≤ 0) are
     dropped, a flat price series yields λ = 0 with NULL R².
     """
-    d = df.withColumn(
-        "__p6", F.floor(F.col(price_col) * 1e6 + F.lit(0.5))
-    )
+    d = df.withColumn("__p6", half_up(F.col(price_col) * 1e6))
     _, side = _tick_side(ts_col, symbol_col, "__p6", tiebreak_cols)
     bucket = (F.col(ts_col).cast("long") / interval_sec).cast("long")
     okey = F.struct(F.col(ts_col), *[F.col(c) for c in tiebreak_cols])
@@ -552,8 +546,8 @@ def kyle_lambda(
         .select(
             "symbol",
             F.col("c_n").alias("n_buckets"),
-            (F.floor(lam * 1e9 + F.lit(0.5)) / 1e9).alias("lambda_q9"),
-            (F.floor(r2 * 1e6 + F.lit(0.5)) / 1e6).alias("r2_q6"),
+            (half_up(lam * 1e9) / 1e9).alias("lambda_q9"),
+            q6(r2).alias("r2_q6"),
         )
     )
 
@@ -593,9 +587,7 @@ def vpin(
         raise ValueError(
             f"bucket_volume must be positive, got {bucket_volume}"
         )
-    d = df.withColumn(
-        "__p6", F.floor(F.col(price_col) * 1e6 + F.lit(0.5))
-    )
+    d = df.withColumn("__p6", half_up(F.col(price_col) * 1e6))
     wc, side = _tick_side(ts_col, symbol_col, "__p6", tiebreak_cols)
     sz = F.col(size_col).cast("bigint")
     d = (
@@ -627,7 +619,7 @@ def vpin(
     return agg.filter(F.col("n_buckets") >= min_buckets).select(
         "symbol",
         "n_buckets",
-        (F.floor(vp * 1e6 + F.lit(0.5)) / 1e6).alias("vpin_q6"),
+        q6(vp).alias("vpin_q6"),
     )
 
 
@@ -661,7 +653,7 @@ def amihud_illiquidity(
     always (every tick has positive size).
     """
     okey = F.struct(F.col(ts_col), *[F.col(c) for c in tiebreak_cols])
-    p6 = F.floor(F.col(price_col) * 1e6 + F.lit(0.5))
+    p6 = half_up(F.col(price_col) * 1e6)
     sz = F.col(size_col).cast("bigint")
     period = (F.col(ts_col).cast("long") / interval_sec).cast("long")
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
@@ -678,15 +670,14 @@ def amihud_illiquidity(
     # |r| = |Δp6|/prev6 (grid divides out); DV = pv/1e6 in price units
     absr = F.abs(F.col("__c6") - F.col("__prev")) / F.col("__prev")
     dv = F.col("__pv").cast("double") / F.lit(1e6)
-    contrib = F.floor(absr / dv * F.lit(1e15) + F.lit(0.5))
+    contrib = half_up(absr / dv * F.lit(1e15))
     agg = d.withColumn("__c", contrib).groupBy("symbol").agg(
         F.count("__c").alias("n_periods"),
         F.sum("__c").alias("__s"),
     )
     # __c is |r|/DV in 1e-15 units = (|r|/DV × 1e9) in 1e-6 units
     out_q6 = (
-        F.floor(F.col("__s").cast("double") / F.col("n_periods") + F.lit(0.5))
-        / 1e6
+        half_up(F.col("__s").cast("double") / F.col("n_periods")) / 1e6
     )
     return agg.filter(F.col("n_periods") >= min_periods).select(
         "symbol",
@@ -765,9 +756,7 @@ def lead_lag_correlation(
             "sym_lag",
             "lag_buckets",
             F.col("c_n").alias("n_buckets"),
-            (F.floor(F.col("__corr") * 1e6 + F.lit(0.5)) / 1e6).alias(
-                "corr_q6"
-            ),
+            q6(F.col("__corr")).alias("corr_q6"),
         )
     )
 
@@ -844,12 +833,8 @@ def funnel(
         "step_idx",
         F.col("s.step").alias("step"),
         F.col("s.users").alias("users"),
-        (
-            F.floor(
-                F.col("s.users") / F.greatest(F.col("__c0"), F.lit(1)) * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
+        q6(
+            F.col("s.users") / F.greatest(F.col("__c0"), F.lit(1))
         ).alias("conversion_q6"),
     )
 
@@ -892,12 +877,7 @@ def retention_cohorts(
             "cohort_week",
             "week_offset",
             "active_users",
-            (
-                F.floor(
-                    F.col("active_users") / F.col("__size") * 1e6 + F.lit(0.5)
-                )
-                / 1e6
-            ).alias("retention_q6"),
+            q6(F.col("active_users") / F.col("__size")).alias("retention_q6"),
         )
     )
 
@@ -934,9 +914,7 @@ def transition_matrix(
         "state",
         "next_state",
         "n",
-        (
-            F.floor(F.col("n") / F.sum("n").over(totals) * 1e6 + F.lit(0.5)) / 1e6
-        ).alias("prob_q6"),
+        q6(F.col("n") / F.sum("n").over(totals)).alias("prob_q6"),
     )
 
 
@@ -1017,7 +995,7 @@ def moment_stats(
     i.e. |x| ≤ ~3e4 at the default grid with 1e12 rows — pick a coarser
     grid for wider domains.
     """
-    xi = F.floor(F.col(value_col).cast("double") * F.lit(input_grid) + F.lit(0.5))
+    xi = half_up(F.col(value_col).cast("double") * F.lit(input_grid))
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     xd = dec(xi)
     agg = (
@@ -1248,9 +1226,7 @@ def abc_classification(
     grid = float(10**decimals)
     per_key = df.groupBy(*key_cols).agg(
         F.sum(
-            F.floor(F.col(value_col) * F.lit(grid) + F.lit(0.5)).cast(
-                "decimal(38,0)"
-            )
+            half_up(F.col(value_col) * F.lit(grid)).cast("decimal(38,0)")
         )
         .cast("double")
         .alias("__vg")
@@ -1271,7 +1247,7 @@ def abc_classification(
         .select(
             *key_cols,
             (F.col("__cents") / 100.0).alias("total_value"),
-            (F.floor(share * 1e6 + F.lit(0.5)) / 1e6).alias("cum_share_q6"),
+            q6(share).alias("cum_share_q6"),
             F.when(prev_share < a_share, "A")
             .when(prev_share < b_share, "B")
             .otherwise("C")
@@ -1399,7 +1375,7 @@ def cusum_changepoints(
     z = F.when(
         x.isNotNull() & (F.col("__sd") > 0), (x - F.col("__mu")) / F.col("__sd")
     ).otherwise(F.lit(0.0))
-    zq = F.floor(z * 1e6 + F.lit(0.5)) / 1e6
+    zq = q6(z)
     order = [F.col(ts_col), *[F.col(c) for c in tiebreak_cols]]
     wseq = (
         Window.partitionBy(*by)
@@ -1482,9 +1458,7 @@ def market_beta(
     """
     means = _bucket_means6(df, ts_col, symbol_col, value_col, interval_sec)
     mkt = means.groupBy("__b").agg(
-        F.floor(
-            F.sum("__v6").cast("double") / F.count("__v6") + F.lit(0.5)
-        ).alias("__m6")
+        half_up(F.sum("__v6").cast("double") / F.count("__v6")).alias("__m6")
     )
     joined = means.join(mkt, "__b")
     agg = joined.groupBy("sym").agg(
@@ -1551,11 +1525,10 @@ def frac_diff(
     wts = frac_diff_weights(d, window)
     w = W.partitionBy(symbol_col).orderBy(ts_col)
     terms = [
-        F.floor(
+        half_up(
             F.lag(F.col(price_i4_col), k).over(w).cast("double")
             * F.lit(wk)
             * F.lit(1e9)
-            + F.lit(0.5)
         )
         for k, wk in enumerate(wts)
     ]

@@ -11,7 +11,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..engine import to_local
-from ..functions.scalars import q6
+from ..functions.scalars import half_up, q6
 
 # Word-splitting pattern: runs of letters/digits (BPE-ish fallback is
 # token_count_bpe below).
@@ -41,17 +41,11 @@ def _rc_legacy(col: Column, pat: str) -> Column:
     return F.coalesce(F.regexp_count(col, F.lit(pat)), F.lit(-1))
 
 
-def _word_count(col: Column, word: str) -> Column:
-    # \b word boundaries; case-insensitive via lower() upstream.
-    # (The historical coalesce(size(...), 0) never actually fired — old
-    # size() returned -1, not NULL, on NULL input; _rc_legacy keeps it.)
-    return _rc_legacy(col, rf"\b{word}\b")
-
-
 def _marker_hits(col: Column, markers: list[str]) -> Column:
     """Total hits of ``markers`` in ``col`` as ONE regex pass.
 
-    Equal by construction to summing :func:`_word_count` per marker:
+    Equal by construction to summing one ``_rc_legacy(col,
+    rf"\\b{marker}\\b")`` count per marker (lowercased upstream):
     every match is a whole ``\\b``-delimited token, tokens are disjoint
     spans, and no token can equal two different markers — so the union
     alternation finds exactly the same match set in one scan instead of
@@ -443,7 +437,7 @@ def tfidf_top_terms(
         .withColumn("__dd", F.lit(1.0) + F.col("df"))
         .withColumn(
             "tfidf",
-            F.floor(
+            q6(
                 F.col("tf")
                 * (
                     (
@@ -452,10 +446,7 @@ def tfidf_top_terms(
                     )
                     + 1.0
                 )
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6,
+            ),
         )
         .drop("__nn", "__dd")
     )
@@ -624,7 +615,7 @@ def lm_cross_entropy(
         ),
     )
     lp = detmath.det_log2_int("__pnum") - detmath.det_log2_int("__pden")
-    lp9 = F.floor(lp * 1e9 + F.lit(0.5))
+    lp9 = half_up(lp * 1e9)
     h = -(F.col("__s9").cast("double") / F.lit(1e9)) / F.col("n_tokens").cast(
         "double"
     )
@@ -683,7 +674,7 @@ def vocab_coverage(
         )
         .withColumn(
             "oov_rate_q6",
-            F.floor(F.col("n_oov") / F.col("n_tokens") * 1e6 + F.lit(0.5)) / 1e6,
+            q6(F.col("n_oov") / F.col("n_tokens")),
         )
     )
 
@@ -745,23 +736,17 @@ def bm25_search(
         .withColumn("__idf", detmath.det_ln_pos("__qa", assume_ge_1=True))
         .withColumn(
             "__s9",
-            F.floor(
+            half_up(
                 F.col("__idf")
                 * F.col("tf")
                 * (k1 + 1)
                 / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avg_dl")))
                 * 1e9
-                + F.lit(0.5)
             ),
         )
     )
     agg = scored.groupBy(id_col).agg(
-        (
-            F.floor(
-                (F.sum("__s9").cast("double") / F.lit(1e9)) * 1e6 + F.lit(0.5)
-            )
-            / 1e6
-        ).alias("bm25_q6"),
+        q6(F.sum("__s9").cast("double") / F.lit(1e9)).alias("bm25_q6"),
         F.count(F.lit(1)).alias("n_terms_hit"),
     )
     return (
@@ -812,7 +797,7 @@ def mixture_weights(
     n_tok = F.when(
         F.length(normalize_text(F.col(text_col))) > 0, F.size(toks)
     ).otherwise(F.lit(0))
-    q9int = F.floor(F.col("quality") * 1e9 + F.lit(0.5))
+    q9int = half_up(F.col("quality") * 1e9)
     per_src = (
         scored.withColumn("__nt", n_tok)
         .groupBy(source_col)
@@ -828,7 +813,7 @@ def mixture_weights(
         if alpha == 0.5
         else F.pow(F.col("n_tokens").cast("double"), F.lit(alpha))
     )
-    w6int = F.floor(tempered * mq * 1e6 + F.lit(0.5))
+    w6int = half_up(tempered * mq * 1e6)
     per_src = per_src.withColumn("__w6", w6int)
     tot = per_src.agg(F.sum("__w6").alias("__tw6"))
     wq = F.col("__w6").cast("double") / F.lit(1e6)
@@ -920,7 +905,7 @@ def distinctive_terms(
     delta = (
         detmath.det_ln_pos("__na", assume_ge_1=True) - detmath.det_ln_pos("__da")
     ) - (detmath.det_ln_pos("__nb") - detmath.det_ln_pos("__db"))
-    z = F.floor(delta / F.sqrt("__var") * 1e4 + F.lit(0.5)) / 1e4
+    z = half_up(delta / F.sqrt("__var") * 1e4) / 1e4
     w = Window.partitionBy("grp").orderBy(F.col("z_q4").desc(), F.col("term").asc())
     return (
         staged.withColumn("z_q4", z)
@@ -1015,7 +1000,7 @@ def source_js_divergence(
     probs = gt.join(gtot, "grp").select(
         "grp",
         "term",
-        (F.floor(F.col("c") / F.col("nt") * 1e9 + F.lit(0.5)) / 1e9).alias("p"),
+        (half_up(F.col("c") / F.col("nt") * 1e9) / 1e9).alias("p"),
     )
     # alphabet-sized (groups × (vocab+1)) but consumed by FIVE plan
     # branches (both pair sides, the term scaffold, pa, pb) — pin it on
@@ -1062,14 +1047,14 @@ def source_js_divergence(
     # per-term contribution snapped to a 1e-12 integer grid, summed as
     # BIGINT (vocab+1 terms per pair) — the sum is exact and order-
     # independent, so engine partial-agg order can't move jsd_q6
-    kl12 = F.floor(term_kl * 1e12 + F.lit(0.5))
+    kl12 = half_up(term_kl * 1e12)
     return (
         cells.groupBy(F.col("ga").alias("source_a"), F.col("gb").alias("source_b"))
         .agg(((F.sum(kl12).cast("double") / F.lit(1e12)) / 2).alias("__jsd"))
         .select(
             "source_a",
             "source_b",
-            (F.floor(F.col("__jsd") * 1e6 + F.lit(0.5)) / 1e6).alias("jsd_q6"),
+            q6(F.col("__jsd")).alias("jsd_q6"),
         )
     )
 
@@ -1372,9 +1357,7 @@ def bpe_token_counts(
     order-independent. Only ^[a-z0-9]+$ words count (the trained
     domain). Returns (id_col, n_words, bpe_tokens).
     """
-    merges, words, state, ckpts = _bpe_train(
-        df, text_col, num_merges, batch_size
-    )
+    _, _, state, ckpts = _bpe_train(df, text_col, num_merges, batch_size)
     per_word = state.groupBy("word").agg(F.count(F.lit(1)).alias("n_sym"))
     toks = F.split(normalize_text(F.col(text_col)), " ")
     doc_words = (
@@ -1476,8 +1459,5 @@ def dup_span_coverage(
         "n_grams",
         "n_dup_grams",
         "dup_tokens",
-        (
-            F.floor(F.col("dup_tokens") / F.col("n_tokens") * 1e6 + F.lit(0.5))
-            / 1e6
-        ).alias("dup_token_frac_q6"),
+        q6(F.col("dup_tokens") / F.col("n_tokens")).alias("dup_token_frac_q6"),
     )

@@ -25,7 +25,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from ..functions.scalars import interval_expr, q6
+from ..functions.scalars import half_up, interval_expr, q6
 
 from ..schemas import TICKS_TS_FORMAT
 
@@ -236,9 +236,7 @@ def tick_rule_flow(
         "n_up",
         "n_dn",
         "n_unclassified",
-        F.when(
-            tot > 0, F.floor(imb * 1e6 + F.lit(0.5)) / 1e6
-        ).alias("imbalance_q6"),
+        F.when(tot > 0, q6(imb)).alias("imbalance_q6"),
     )
 
 
@@ -397,9 +395,7 @@ def indicators(
         .withColumn("ema", F.round(weighted / wsum, 6))
         .drop("__vals")
     )
-    sq12 = F.floor(
-        F.col("__ret_raw") * F.col("__ret_raw") * 1e12 + F.lit(0.5)
-    )
+    sq12 = half_up(F.col("__ret_raw") * F.col("__ret_raw") * 1e12)
     out = (
         out.withColumn(
             "rvol",
@@ -409,8 +405,8 @@ def indicators(
         )
         .drop("__ret_raw", "__ratio")
     )
-    v6 = F.floor(F.col(value_col) * 1e6 + F.lit(0.5))
-    v2_6 = F.floor(F.col(value_col) * F.col(value_col) * 1e6 + F.lit(0.5))
+    v6 = half_up(F.col(value_col) * 1e6)
+    v2_6 = half_up(F.col(value_col) * F.col(value_col) * 1e6)
     cnt = F.count(F.col(value_col)).over(wN)
     s1 = F.sum(v6).over(wN).cast("double") / F.lit(1e6)
     s2 = F.sum(v2_6).over(wN).cast("double") / F.lit(1e6)
@@ -451,7 +447,7 @@ def rolling_stats(
         .orderBy(F.unix_millis(F.col(ts_col)))
         .rangeBetween(-window_ms, 0)
     )
-    v6 = F.floor(F.col(value_col) * 1e6 + F.lit(0.5))
+    v6 = half_up(F.col(value_col) * 1e6)
     avg6 = (F.sum(v6).over(w).cast("double") / F.lit(1e6)) / F.count(
         F.col(value_col)
     ).over(w)
@@ -705,8 +701,8 @@ def max_drawdown_summary(
             # decimal string can disagree with FLOOR(x*1e6+0.5)/1e6 on
             # the binary double at representation boundaries — the exact
             # grid the DuckDB oracle uses)
-            (F.floor(F.col("dd_pct") * 1e6 + F.lit(0.5)) / 1e6).alias("max_dd_pct"),
-            (F.floor(F.col("dd") * 1e6 + F.lit(0.5)) / 1e6).alias("max_dd_abs"),
+            q6(F.col("dd_pct")).alias("max_dd_pct"),
+            q6(F.col("dd")).alias("max_dd_abs"),
             F.col("peak").alias("peak_at_trough"),
             F.col(ts_col).alias("trough_ts"),
             F.col("__n").alias("n_ticks"),
@@ -760,9 +756,7 @@ def volume_bars(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     okey = F.struct(F.col(ts_col), *[F.col(c) for c in tiebreak_cols])
-    p = F.floor(F.col(price_col) * F.lit(price_grid) + F.lit(0.5)).cast(
-        "bigint"
-    )
+    p = half_up(F.col(price_col) * F.lit(price_grid)).cast("bigint")
     sz = F.col(size_col).cast("bigint")
     t = df.select(
         F.col(symbol_col).alias("symbol"),
@@ -855,7 +849,7 @@ def vwap_twap_bars(
     bar_start = F.window(F.col(ts_col), f"{interval_ms} milliseconds").getField(
         "start"
     )
-    p4 = F.floor(F.col(price_col) * F.lit(price_grid) + F.lit(0.5)).cast("bigint")
+    p4 = half_up(F.col(price_col) * F.lit(price_grid)).cast("bigint")
     t = df.select(
         *partition_cols,
         bar_start.alias("bar_start"),

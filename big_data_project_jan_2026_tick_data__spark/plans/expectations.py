@@ -29,6 +29,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalars import half_up, q6
+
 
 def _violation_pred(rule: dict):
     kind = rule["rule"]
@@ -131,12 +133,7 @@ def _risk_rollup(
         F.sum(risky.cast("long")).alias("n_risky_classes"),
         F.sum(F.when(risky, F.col("__n")).otherwise(0)).alias("n_risky_rows"),
     )
-    frac = (
-        F.floor(
-            F.col("n_risky_rows") / F.col("n_rows") * 1e6 + F.lit(0.5)
-        )
-        / 1e6
-    )
+    frac = q6(F.col("n_risky_rows") / F.col("n_rows"))
     return rep.select(
         *by,
         "n_rows",
@@ -254,25 +251,16 @@ def t_closeness_report(
         if by
         else classes.crossJoin(F.broadcast(gdist))
     ).join(cv, [*by, *quasi_cols, sensitive_col], "left")
-    term12 = F.floor(
+    term12 = half_up(
         F.abs(
             F.coalesce(F.col("__n_cv"), F.lit(0)) / F.col("__n_c")
             - F.col("__n_v") / F.col("__n_tot")
         )
         * 1e12
-        + F.lit(0.5)
     ).cast("long")
     cl = grid.groupBy(*by, *quasi_cols).agg(
         F.min("__n_c").alias("__n"),
-        (
-            F.floor(
-                (F.sum(term12).cast("double") / F.lit(1e12))
-                / 2
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
-        ).alias("__tvd_q6"),
+        q6((F.sum(term12).cast("double") / F.lit(1e12)) / 2).alias("__tvd_q6"),
     )
     risky = F.col("__tvd_q6") > t
     rep = (
@@ -286,9 +274,7 @@ def t_closeness_report(
         F.sum(risky.cast("long")).alias("n_risky_classes"),
         F.sum(F.when(risky, F.col("__n")).otherwise(0)).alias("n_risky_rows"),
     )
-    frac = (
-        F.floor(F.col("n_risky_rows") / F.col("n_rows") * 1e6 + F.lit(0.5)) / 1e6
-    )
+    frac = q6(F.col("n_risky_rows") / F.col("n_rows"))
     return rep.select(
         *by,
         "n_rows",

@@ -29,7 +29,10 @@ VARCHAR)``, ``value * 1.01``), so each side stays an independent check
 of the other.
 
 Prices and experiments: the exactness rule snaps prices to an integer
-grid so that Spark and the oracle agree bit for bit. Whole cents are
+grid so that Spark and the oracle agree bit for bit. The snap is
+``functions.scalars.half_up`` (``FLOOR(x + 0.5)`` on a value the caller
+has scaled onto its grid), the package's one floor-half-up; ``q6`` is
+the 6-decimal snap built on it. Whole cents are
 ``functions.scalars.cents`` (``CAST(FLOOR(value * 100 + 0.5) AS
 BIGINT)`` in the oracles). The A/B family splits users by the portable
 md5 hash in ``_base``: ``_user_bucket(n)`` is the first 28 bits of

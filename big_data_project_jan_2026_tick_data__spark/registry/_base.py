@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from ..engine import _workers_import_package
-from ..operators import dedup, joins, mlfeat, multimodal, similarity, stats, text, ticks
+from ..functions.scalars import half_up
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 OracleBuilder = Callable[[], "str | None"]
@@ -146,10 +146,7 @@ def _cent_returns(ticks: DataFrame) -> DataFrame:
     previous tick in whole cents, rounded half-up (NULL on the first)."""
     return ticks.withColumn(
         "r0",
-        F.floor(
-            (F.col("value") - F.lag("value", 1).over(_tick_order())) * 100
-            + F.lit(0.5)
-        ),
+        half_up((F.col("value") - F.lag("value", 1).over(_tick_order())) * 100),
     )
 
 
@@ -210,9 +207,7 @@ def _minute_closes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "symbol",
             F.date_trunc("minute", "ts").alias("bar_ts"),
-            F.floor(F.col("value") * 1e4 + F.lit(0.5))
-            .cast("bigint")
-            .alias("close_i4"),
+            half_up(F.col("value") * 1e4).cast("bigint").alias("close_i4"),
         )
     )
 

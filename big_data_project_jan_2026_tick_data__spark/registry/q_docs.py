@@ -6,18 +6,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import detmath
-from ..functions.scalars import q6
+from ..functions.scalars import half_up, q6
 from ..engine import to_local
-from ..operators import (  # noqa: F401
-    dedup,
-    joins,
-    mlfeat,
-    multimodal,
-    similarity,
-    stats,
-    text,
-    ticks,
-)
+from ..operators import dedup, similarity, stats, text
 from ._base import _register, _td
 
 
@@ -162,7 +153,7 @@ def doc_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tok").alias("n_tokens"),
             F.countDistinct(F.md5("nrm")).alias("n_unique_md5"),
             F.sum(
-                F.floor(F.col("quality") * 1e9 + F.lit(0.5)).cast("bigint")
+                half_up(F.col("quality") * 1e9).cast("bigint")
             ).alias("sq9"),
             F.sum((F.col("lang_pred") == "en").cast("bigint")).alias("n_en"),
         )
@@ -243,12 +234,8 @@ def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sum_chars",
         "min_chars",
         "max_chars",
-        (
-            F.floor(
-                F.col("n_docs").cast("double") / F.sum("n_docs").over(w) * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
+        q6(
+            F.col("n_docs").cast("double") / F.sum("n_docs").over(w)
         ).alias("doc_frac_q6"),
     )
 
@@ -561,21 +548,18 @@ def doc_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least(F.floor(F.col("est_jaccard") * 8).cast("int"), F.lit(7))
             .cast("int")
             .alias("bucket"),
-            F.floor(F.col("est_jaccard") * 1e6 + F.lit(0.5))
-            .cast("long")
-            .alias("est6"),
-            F.floor(
+            half_up(F.col("est_jaccard") * 1e6).cast("long").alias("est6"),
+            half_up(
                 F.coalesce(F.col("i"), F.lit(0))
                 / (F.col("sa") + F.col("sb") - F.coalesce(F.col("i"), F.lit(0)))
                 * 1e6
-                + F.lit(0.5)
             )
             .cast("long")
             .alias("true6"),
         )
     )
     q6m = lambda s, n: (  # noqa: E731
-        F.floor(s.cast("double") / 1e6 / n * 1e6 + F.lit(0.5)) / 1e6
+        q6(s.cast("double") / 1e6 / n)
     )
     n = F.count(F.lit(1))
     return pp.groupBy("bucket").agg(
@@ -964,8 +948,6 @@ def doc_cross_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.cross_doc_overlap(docs)
 
 
-
-
 @_register(
     "doc_quality_scores",
     f"""
@@ -1092,8 +1074,6 @@ def sql_function_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_testdata_views(spark, sf_dir)
     register_sql_functions(spark)
     return spark.sql(_SQL_SURFACE_QUERY)
-
-
 
 
 def _scrub_pii_oracle() -> str:
@@ -2383,7 +2363,7 @@ def doc_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _td(spark, sf_dir, "documents")
     scored = classifier.quality_classifier(docs, iters=12, lr=1.0)
-    s6 = F.floor(F.col("score_q6") * 1e6 + F.lit(0.5)).cast("long")
+    s6 = half_up(F.col("score_q6") * 1e6).cast("long")
     b = F.least(F.floor(F.col("score_q6") * 10).cast("int"), F.lit(9))
     agg = (
         scored.select(b.alias("bucket"), s6.alias("s6"), "y")
@@ -2733,9 +2713,7 @@ def doc_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "lang_pred",
         "n",
-        (F.floor(F.col("n") / F.sum("n").over(tot) * 1e6 + F.lit(0.5)) / 1e6).alias(
-            "row_frac_q6"
-        ),
+        q6(F.col("n") / F.sum("n").over(tot)).alias("row_frac_q6"),
         (F.col("lang") == F.col("lang_pred")).alias("is_correct"),
     )
 
@@ -2807,7 +2785,7 @@ def doc_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = stream.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("c"))
     lg = tf.withColumn("l2c", detmath.det_log2_int("c"))
-    contrib9 = F.floor(F.col("c").cast("double") * F.col("l2c") * 1e9 + F.lit(0.5))
+    contrib9 = half_up(F.col("c").cast("double") * F.col("l2c") * 1e9)
     agg = lg.groupBy("doc_id").agg(
         F.sum("c").alias("nt"),
         F.count(F.lit(1)).alias("n_distinct"),
@@ -2978,7 +2956,7 @@ def doc_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c_ab") / F.col("n_big"))
         / ((F.col("ca") / F.col("n_uni")) * (F.col("cb") / F.col("n_uni"))),
     )
-    pmi = F.floor(detmath.det_log2_pos("__pr") * 1e6 + F.lit(0.5)) / 1e6
+    pmi = q6(detmath.det_log2_pos("__pr"))
     w = Window.orderBy(F.col("pmi_q6").desc(), F.col("wa").asc(), F.col("wb").asc())
     return (
         j.withColumn("pmi_q6", pmi)
@@ -3207,13 +3185,7 @@ def doc_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         "n_words",
         "bpe_tokens",
-        (
-            F.floor(
-                F.col("bpe_tokens").cast("double") / F.col("n_words") * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
-        ).alias("fertility_q6"),
+        q6(F.col("bpe_tokens").cast("double") / F.col("n_words")).alias("fertility_q6"),
     )
 
 
@@ -3335,10 +3307,7 @@ def doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_shingles",
         "n_novel",
-        (
-            F.floor(F.col("n_novel") * 1.0 / F.col("n_shingles") * 1e6 + F.lit(0.5))
-            / 1e6
-        ).alias("novelty_q6"),
+        q6(F.col("n_novel") * 1.0 / F.col("n_shingles")).alias("novelty_q6"),
     )
 
 
@@ -3432,13 +3401,7 @@ def doc_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_shingles",
         "n_new",
         F.col("cum_n_new").cast("long").alias("cum_distinct"),
-        (
-            F.floor(
-                F.col("cum_n_new") * 1.0 / F.col("cum_n_shingles") * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
-        ).alias("coverage_q6"),
+        q6(F.col("cum_n_new") * 1.0 / F.col("cum_n_shingles")).alias("coverage_q6"),
     )
 
 
@@ -3499,7 +3462,7 @@ def doc_flesch_reading_ease(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sentences",
         "words",
         "syllables",
-        (F.floor(score * 1e4 + F.lit(0.5)) / 1e4).alias("flesch_q4"),
+        (half_up(score * 1e4) / 1e4).alias("flesch_q4"),
     )
 
 
@@ -3743,11 +3706,7 @@ def doc_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_words",
         (
-            F.floor(
-                F.col("n_chars").cast("double") / F.col("n_words") * 1e4
-                + F.lit(0.5)
-            )
-            / 1e4
+            half_up(F.col("n_chars").cast("double") / F.col("n_words") * 1e4) / 1e4
         ).alias("mean_wlen_q4"),
         pass_wc.alias("pass_word_count"),
         pass_wl.alias("pass_word_length"),
@@ -3788,7 +3747,7 @@ def doc_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _td(spark, sf_dir, "documents")
     scored = classifier.quality_classifier(docs, iters=12, lr=1.0).select(
-        F.floor(F.col("score_q6") * 1e6 + F.lit(0.5)).cast("long").alias("s6"),
+        half_up(F.col("score_q6") * 1e6).cast("long").alias("s6"),
         F.col("y").cast("double").alias("y"),
         F.col("pred").cast("int").alias("pred"),
     ).localCheckpoint()  # feeds the bucket sweep and the confusion matrix
@@ -3834,27 +3793,17 @@ def doc_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fp",
             "fn",
             "tn",
-            (
-                F.floor(
-                    F.col("two_num")
-                    / (
-                        F.lit(2.0)
-                        * F.col("n_pos").cast("double")
-                        * F.col("n_neg").cast("double")
-                    )
-                    * 1e6
-                    + F.lit(0.5)
+            q6(
+                F.col("two_num")
+                / (
+                    F.lit(2.0)
+                    * F.col("n_pos").cast("double")
+                    * F.col("n_neg").cast("double")
                 )
-                / 1e6
             ).alias("auc_q6"),
-            (
-                F.floor(
-                    (F.col("tp") + F.col("tn")).cast("double")
-                    / (F.col("n_pos") + F.col("n_neg")).cast("double")
-                    * 1e6
-                    + F.lit(0.5)
-                )
-                / 1e6
+            q6(
+                (F.col("tp") + F.col("tn")).cast("double")
+                / (F.col("n_pos") + F.col("n_neg")).cast("double")
             ).alias("accuracy_q6"),
         )
     )
@@ -3890,7 +3839,7 @@ def doc_shap_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = classifier.train_logreg(feats, iters=12, lr=1.0)
 
     def x9(col: str):
-        return F.floor(F.col(col) * 1e9 + F.lit(0.5)).cast("long")
+        return half_up(F.col(col) * 1e9).cast("long")
 
     m = feats.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -3993,7 +3942,7 @@ def doc_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_tokens",
         "n_types",
-        (F.floor(k * 1e6 + F.lit(0.5)) / 1e6).alias("yule_k_q6"),
+        q6(k).alias("yule_k_q6"),
     )
 
 
@@ -4081,15 +4030,9 @@ def doc_rater_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n10",
         "n01",
         "n00",
-        (F.floor(F.col("po") * 1e6 + F.lit(0.5)) / 1e6).alias("po_q6"),
-        (F.floor(F.col("pe") * 1e6 + F.lit(0.5)) / 1e6).alias("pe_q6"),
-        (
-            F.floor(
-                (F.col("po") - F.col("pe")) / (F.lit(1.0) - F.col("pe")) * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
-        ).alias("kappa_q6"),
+        q6(F.col("po")).alias("po_q6"),
+        q6(F.col("pe")).alias("pe_q6"),
+        q6((F.col("po") - F.col("pe")) / (F.lit(1.0) - F.col("pe"))).alias("kappa_q6"),
     )
 
 
@@ -4118,7 +4061,7 @@ def doc_classifier_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _td(spark, sf_dir, "documents")
     scored = classifier.quality_classifier(docs, iters=12, lr=1.0).select(
-        F.floor(F.col("score_q6") * 1e6 + F.lit(0.5)).cast("long").alias("s6"),
+        half_up(F.col("score_q6") * 1e6).cast("long").alias("s6"),
         F.col("y").cast("double").alias("y"),
     )
     g = _score_buckets(scored)
@@ -4134,11 +4077,10 @@ def doc_classifier_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pos_ge = F.col("n_pos") - F.col("cum_pos") + F.col("pos_c")
     tot_ge = pos_ge + (F.col("n_neg") - F.col("cum_neg") + F.col("neg_c"))
-    t12 = F.floor(
+    t12 = half_up(
         (F.col("pos_c").cast("double") / F.col("n_pos").cast("double"))
         * (pos_ge.cast("double") / tot_ge.cast("double"))
         * 1e12
-        + F.lit(0.5)
     ).cast("long")
     terms = (
         c2.crossJoin(F.broadcast(tt))
@@ -4152,18 +4094,10 @@ def doc_classifier_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "n_pos",
             "n_neg",
-            (
-                F.floor(F.col("s12").cast("double") / F.lit(1e12) * 1e6 + F.lit(0.5))
-                / 1e6
-            ).alias("ap_q6"),
-            (
-                F.floor(
-                    F.col("n_pos").cast("double")
-                    / (F.col("n_pos") + F.col("n_neg")).cast("double")
-                    * 1e6
-                    + F.lit(0.5)
-                )
-                / 1e6
+            q6(F.col("s12").cast("double") / F.lit(1e12)).alias("ap_q6"),
+            q6(
+                F.col("n_pos").cast("double")
+                / (F.col("n_pos") + F.col("n_neg")).cast("double")
             ).alias("prevalence_q6"),
         )
     )
@@ -4195,7 +4129,7 @@ def doc_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least(F.floor(F.col("score_q6") * 10).cast("int"), F.lit(9)).alias(
             "bucket"
         ),
-        F.floor(F.col("score_q6") * 1e6 + F.lit(0.5)).cast("long").alias("s6"),
+        half_up(F.col("score_q6") * 1e6).cast("long").alias("s6"),
         F.col("y").cast("long").alias("y"),
     )
     bk = scored.groupBy("bucket").agg(
@@ -4211,12 +4145,8 @@ def doc_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     sbar = F.col("s_sum6").cast("double") / nkd / F.lit(1e6)
     ybar = F.col("y_sum").cast("double") / nkd
     ybart = F.col("y_tot").cast("double") / F.col("n").cast("double")
-    rel12 = F.floor(nkd * (sbar - ybar) * (sbar - ybar) * 1e12 + F.lit(0.5)).cast(
-        "long"
-    )
-    res12 = F.floor(
-        nkd * (ybar - ybart) * (ybar - ybart) * 1e12 + F.lit(0.5)
-    ).cast("long")
+    rel12 = half_up(nkd * (sbar - ybar) * (sbar - ybar) * 1e12).cast("long")
+    res12 = half_up(nkd * (ybar - ybart) * (ybar - ybart) * 1e12).cast("long")
     terms = bk.crossJoin(F.broadcast(tt)).select(
         rel12.alias("rel12"), res12.alias("res12")
     )
@@ -4274,7 +4204,7 @@ def doc_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         == 0
     )
     scored = classifier.quality_classifier(docs, iters=12, lr=1.0).select(
-        F.floor(F.col("score_q6") * 1e6 + F.lit(0.5)).cast("long").alias("s6"),
+        half_up(F.col("score_q6") * 1e6).cast("long").alias("s6"),
         F.col("y").cast("double").alias("y"),
         F.when(is_cal, F.lit(1)).otherwise(F.lit(0)).alias("is_cal"),
     )
@@ -4333,21 +4263,11 @@ def doc_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_cal").alias("n_calib"),
         "n_test",
         (F.col("qhat6").cast("double") / F.lit(1e6)).alias("qhat_q6"),
-        (
-            F.floor(
-                F.col("covered").cast("double") / F.col("n_test").cast("double")
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
+        q6(
+            F.col("covered").cast("double") / F.col("n_test").cast("double")
         ).alias("coverage_q6"),
-        (
-            F.floor(
-                F.col("set_cells").cast("double")
-                / F.col("n_test").cast("double")
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
+        q6(
+            F.col("set_cells").cast("double")
+            / F.col("n_test").cast("double")
         ).alias("avg_set_size_q6"),
     )

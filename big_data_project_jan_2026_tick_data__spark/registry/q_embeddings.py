@@ -5,18 +5,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import (  # noqa: F401
-    dedup,
-    joins,
-    mlfeat,
-    multimodal,
-    similarity,
-    stats,
-    text,
-    ticks,
-)
+from ..operators import dedup, similarity
 from ..functions import detmath
-from ..functions.scalars import q6
+from ..functions.scalars import half_up, q6
 from ._base import _register, _td
 
 
@@ -119,13 +110,7 @@ def emb_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.join(ov, "query_id", "left").select(
         "query_id",
         F.coalesce(F.col("n_overlap"), F.lit(0)).cast("long").alias("n_overlap"),
-        (
-            F.floor(
-                F.coalesce(F.col("n_overlap"), F.lit(0)) / F.lit(10) * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
-        ).alias("recall_q6"),
+        q6(F.coalesce(F.col("n_overlap"), F.lit(0)) / F.lit(10)).alias("recall_q6"),
     )
 
 
@@ -317,8 +302,6 @@ def emb_lsh_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     detmath log2 of small integers, per-position terms snap to a 1e-9
     grid and sum as BIGINT; IDCG is a shared cross-engine literal
     (Σ (11−j)/log2(j+1), j=1..10)."""
-    from pyspark.sql import Window
-
     from ..functions import detmath
 
     emb = _td(spark, sf_dir, "embeddings")
@@ -340,9 +323,7 @@ def emb_lsh_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("d", F.col("rank") + 1)
         .withColumn(
             "t9",
-            F.floor(
-                F.col("rel") / detmath.det_log2_int("d") * 1e9 + F.lit(0.5)
-            ).cast("long"),
+            half_up(F.col("rel") / detmath.det_log2_int("d") * 1e9).cast("long"),
         )
     )
     dcg = graded.groupBy("query_id").agg(
@@ -889,16 +870,11 @@ def emb_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = [_math.floor(float(x) * 1e6 + 0.5) / 1e6 for x in head[0].v]
     prev_state = state
     for _ in range(iters):
-        s6 = (
-            F.floor(
-                F.expr(
-                    f"aggregate(zip_with(v, {similarity._sql_arr(state)}, "
-                    "(x, c) -> x * c), 0D, (a, b) -> a + b)"
-                )
-                * 1e6
-                + F.lit(0.5)
+        s6 = q6(
+            F.expr(
+                f"aggregate(zip_with(v, {similarity._sql_arr(state)}, "
+                "(x, c) -> x * c), 0D, (a, b) -> a + b)"
             )
-            / 1e6
         )
         terms = base.select(
             s6.alias("s6"), F.posexplode("v").alias("pos", "x")
@@ -906,16 +882,9 @@ def emb_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = (
             terms.groupBy("pos")
             .agg(
-                (
-                    F.floor(
-                        (
-                            exact_sum(F.col("s6") * F.col("x"), 9)
-                            / F.count(F.lit(1))
-                        )
-                        * 1e6
-                        + F.lit(0.5)
-                    )
-                    / 1e6
+                q6(
+                    exact_sum(F.col("s6") * F.col("x"), 9)
+                    / F.count(F.lit(1))
                 ).alias("q")
             )
             .collect()
@@ -1305,7 +1274,7 @@ def emb_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "cluster",
         F.col("dist_sq"),
-        (F.floor(F.col("p95") * 1e6 + F.lit(0.5)) / 1e6).alias("cluster_p95"),
+        q6(F.col("p95")).alias("cluster_p95"),
     )
 
 
@@ -1457,7 +1426,7 @@ def emb_diversity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id",
         "dim",
-        F.floor(F.col("x") * 1e6 + F.lit(0.5)).alias("xi"),
+        half_up(F.col("x") * 1e6).alias("xi"),
     )
     d = e.groupBy("dim").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1470,7 +1439,7 @@ def emb_diversity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (F.col("i1").cast("double") / F.lit(1e6) / F.col("n"))
     )
     v = d.select(
-        "n", F.floor(var_pop * 1e12 + F.lit(0.5)).alias("vi")
+        "n", half_up(var_pop * 1e12).alias("vi")
     )
     nrm = e.groupBy("vec_id").agg(
         F.sum(dec(F.col("xi")) * dec(F.col("xi"))).alias("sq12")
@@ -1482,7 +1451,7 @@ def emb_diversity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     sq = F.col("sq12").cast("double") / F.lit(1e12)
     agg_n = nrm.agg(
         F.count(F.lit(1)).alias("nv"),
-        F.sum(F.floor(F.sqrt(sq) * 1e9 + F.lit(0.5))).alias("sn"),
+        F.sum(half_up(F.sqrt(sq) * 1e9)).alias("sn"),
         F.sum("sq12").alias("ssq"),
     )
     mn = (F.col("sn").cast("double") / F.col("nv")) / F.lit(1e9)
@@ -1838,27 +1807,24 @@ def emb_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         F.when(
             F.lit(1.0) - F.col("c1") > 0,
-            F.floor((F.lit(1.0) - F.col("c2")) / (F.lit(1.0) - F.col("c1")) * 1e9 + F.lit(0.5))
+            half_up((F.lit(1.0) - F.col("c2")) / (F.lit(1.0) - F.col("c1")) * 1e9)
             / 1e9,
         ).alias("mu_q9"),
     ).filter(F.col("mu_q9").isNotNull() & (F.col("mu_q9") > 1.0))
     lnmu = F.expr(detmath.det_ln_pos_sql("mu_q9", "spark", assume_ge_1=True))
-    l = mu.select(F.floor(lnmu * 1e9 + F.lit(0.5)).cast("long").alias("l9"))
+    l = mu.select(half_up(lnmu * 1e9).cast("long").alias("l9"))
     s = l.agg(
         F.count(F.lit(1)).alias("n_used"),
         F.sum("l9").cast("long").alias("s9"),
     )
     return s.select(
         "n_used",
-        (F.floor(F.col("s9").cast("double") / 1e9 * 1e6 + F.lit(0.5)) / 1e6).alias(
-            "sum_ln_mu_q6"
-        ),
+        q6(F.col("s9").cast("double") / 1e9).alias("sum_ln_mu_q6"),
         (
-            F.floor(
+            half_up(
                 F.col("n_used").cast("double")
                 / (F.col("s9").cast("double") / 1e9)
                 * 1e4
-                + F.lit(0.5)
             )
             / 1e4
         ).alias("intrinsic_dim_q4"),
@@ -1931,7 +1897,7 @@ def emb_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum(
-                F.floor(F.sqrt(F.col("dq")) * 1e9 + F.lit(0.5)).cast("long")
+                half_up(F.sqrt(F.col("dq")) * 1e9).cast("long")
             )
             .cast("long")
             .alias("s9"),
@@ -1956,11 +1922,10 @@ def emb_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("a.cid").alias("ci"), F.col("b.cid").alias("cj"))
         .agg(
             F.sum(
-                F.floor(
+                half_up(
                     (F.col("a.x") - F.col("b.x"))
                     * (F.col("a.x") - F.col("b.x"))
                     * 1e12
-                    + F.lit(0.5)
                 ).cast("long")
             )
             .cast("long")
@@ -1975,11 +1940,10 @@ def emb_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(sb, "cj")
         .select(
             "ci",
-            F.floor(
+            half_up(
                 (F.col("s_a") + F.col("s_b"))
                 / F.sqrt(F.col("m12").cast("double") / 1e12)
                 * 1e6
-                + F.lit(0.5)
             )
             .cast("long")
             .alias("r6"),
@@ -1989,7 +1953,7 @@ def emb_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sv.join(db, "cluster", "left").select(
         F.col("cluster").cast("int").alias("cluster"),
         F.col("n").alias("n_members"),
-        (F.floor(F.col("s") * 1e6 + F.lit(0.5)) / 1e6).alias("s_q6"),
+        q6(F.col("s")).alias("s_q6"),
         (F.col("db6").cast("double") / 1e6).alias("db_c_q6"),
     )
 
@@ -2063,8 +2027,8 @@ def emb_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"{sorted_arr}[1]").alias("sec"),
     ).select(
         F.col("own.cid").alias("cid"),
-        (F.floor(F.col("own.dsq") * 1e6 + F.lit(0.5)) / 1e6).alias("aq"),
-        (F.floor(F.col("sec.dsq") * 1e6 + F.lit(0.5)) / 1e6).alias("bq"),
+        q6(F.col("own.dsq")).alias("aq"),
+        q6(F.col("sec.dsq")).alias("bq"),
     )
     sa = F.sqrt(F.col("aq"))
     sb = F.sqrt(F.col("bq"))
@@ -2072,19 +2036,14 @@ def emb_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cid",
         F.when(
             F.greatest(sa, sb) > 0.0,
-            F.floor((sb - sa) / F.greatest(sa, sb) * 1e6 + F.lit(0.5)).cast(
-                "long"
-            ),
+            half_up((sb - sa) / F.greatest(sa, sb) * 1e6).cast("long"),
         )
         .otherwise(F.lit(0).cast("long"))
         .alias("s6"),
     )
     return sil.groupBy("cid").agg(
         F.count(F.lit(1)).cast("long").alias("n_members"),
-        F.floor(
-            F.sum("s6").cast("double") / 1e6 / F.count(F.lit(1)) * 1e6
-            + F.lit(0.5)
-        )
+        half_up(F.sum("s6").cast("double") / 1e6 / F.count(F.lit(1)) * 1e6)
         .alias("__m6"),
     ).select(
         F.col("cid").cast("int").alias("cluster"),
@@ -2166,7 +2125,7 @@ def emb_calinski_harabasz(spark: SparkSession, sf_dir: str) -> DataFrame:
     asn = asn.localCheckpoint()  # feeds W and the per-cluster sizes
     w = asn.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.floor(F.col("dist_sq") * 1e6 + F.lit(0.5)).cast("long"))
+        F.sum(half_up(F.col("dist_sq") * 1e6).cast("long"))
         .cast("long")
         .alias("w6"),
     )
@@ -2177,7 +2136,7 @@ def emb_calinski_harabasz(spark: SparkSession, sf_dir: str) -> DataFrame:
         v.select(F.posexplode("vec").alias("pos", "x"))
         .groupBy("pos")
         .agg(
-            F.sum(F.floor(F.col("x") * 1e9 + F.lit(0.5)).cast("long")).alias(
+            F.sum(half_up(F.col("x") * 1e9).cast("long")).alias(
                 "s9"
             ),
             F.count(F.lit(1)).alias("cnt"),
@@ -2203,9 +2162,8 @@ def emb_calinski_harabasz(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact-integer headroom to coordinate magnitudes ~1e5
     bd = ce.groupBy("cid").agg(
         F.sum(
-            F.floor(
+            half_up(
                 (F.col("x") - F.col("g")) * (F.col("x") - F.col("g")) * 1e6
-                + F.lit(0.5)
             ).cast("long")
         )
         .cast("long")
@@ -2226,22 +2184,17 @@ def emb_calinski_harabasz(spark: SparkSession, sf_dir: str) -> DataFrame:
     return w.crossJoin(F.broadcast(btot)).select(
         "n",
         "k_used",
-        (F.floor(F.col("w6").cast("double") / 1e6 * 1e6 + F.lit(0.5)) / 1e6).alias(
-            "w_q6"
-        ),
-        (F.floor(F.col("b6n") / 1e6 * 1e6 + F.lit(0.5)) / 1e6).alias("b_q6"),
+        q6(F.col("w6").cast("double") / 1e6).alias("w_q6"),
+        q6(F.col("b6n") / 1e6).alias("b_q6"),
         F.when(
             (F.col("w6") > 0) & (F.col("k_used") > 1) & (F.col("n") > F.col("k_used")),
-            F.floor(
+            q6(
                 ((F.col("b6n") / 1e6) / (F.col("k_used") - 1).cast("double"))
                 / (
                     (F.col("w6").cast("double") / 1e6)
                     / (F.col("n") - F.col("k_used")).cast("double")
                 )
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6,
+            ),
         ).alias("ch_q6"),
     )
 
@@ -2304,12 +2257,7 @@ def emb_whitening_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import _dot_sql, _sql_arr
 
     cols = [
-        (
-            F.floor(
-                F.expr(_dot_sql("v", _sql_arr(wr))) * 1e6 + F.lit(0.5)
-            )
-            / 1e6
-        ).alias(f"wc{k}_q6")
+        q6(F.expr(_dot_sql("v", _sql_arr(wr)))).alias(f"wc{k}_q6")
         for k, wr in enumerate(wrows)
     ]
     return v.select("vec_id", *cols)

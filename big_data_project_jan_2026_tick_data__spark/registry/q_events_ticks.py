@@ -8,18 +8,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import to_local
-from ..operators import (  # noqa: F401
-    dedup,
-    joins,
-    mlfeat,
-    multimodal,
-    similarity,
-    stats,
-    text,
-    ticks,
-)
+from ..operators import joins, stats, ticks
 from ..functions import detmath, exactagg
-from ..functions.scalars import cents, q6
+from ..functions.scalars import cents, half_up, q6
 from ._base import (
     _arm,
     _cov_terms,
@@ -33,8 +24,6 @@ from ._base import (
 )
 
 _CS_DEN = 3.0 - 2.0 * math.sqrt(2.0)  # Corwin-Schultz denominator
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -815,7 +804,7 @@ def ticks_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "event_id",
         "symbol",
-        (F.floor(F.col("value") * 1e6 + F.lit(0.5)) / 1e6).alias("value_w"),
+        q6(F.col("value")).alias("value_w"),
         "value_clamped",
     )
 
@@ -1594,11 +1583,10 @@ def events_markov_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(ca, "state")
         .crossJoin(F.broadcast(n))
         .select(
-            F.floor(
+            half_up(
                 (F.col("cab").cast("double") / F.col("nt"))
                 * (detmath.det_log2_int("cab") - detmath.det_log2_int("ct"))
                 * 1e9
-                + F.lit(0.5)
             )
             .cast("bigint")
             .alias("t9"),
@@ -2159,9 +2147,7 @@ def events_inter_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
         q6(
             (
                 F.sum(
-                    F.floor(F.col("gap_s") * 1e3 + F.lit(0.5)).cast(
-                        "decimal(38,0)"
-                    )
+                    half_up(F.col("gap_s") * 1e3).cast("decimal(38,0)")
                 ).cast("double")
                 / F.lit(1e3)
             )
@@ -2345,9 +2331,7 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.select(
         "path",
         "n_users",
-        (F.floor(F.col("n_users") / F.col("total") * 1e6 + F.lit(0.5)) / 1e6).alias(
-            "share_q6"
-        ),
+        q6(F.col("n_users") / F.col("total")).alias("share_q6"),
         "rank",
     )
 
@@ -2732,20 +2716,15 @@ def ticks_parkinson_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = bars.withColumn("__hl", F.col("high") / F.col("low")).withColumn(
         "__lr", detmath.det_ln_pos("__hl", assume_ge_1=True)
     )
-    t12 = F.floor(F.col("__lr") * F.col("__lr") * 1e12 + F.lit(0.5))
+    t12 = half_up(F.col("__lr") * F.col("__lr") * 1e12)
     c4ln2 = F.lit(4 * math.log(2.0))
     return staged.groupBy("symbol", "day").agg(
         F.count(F.lit(1)).alias("n_bars"),
-        (
-            F.floor(
-                F.sqrt(
-                    ((F.sum(t12).cast("double") / F.lit(1e12)) / F.count(F.lit(1)))
-                    / c4ln2
-                )
-                * 1e6
-                + F.lit(0.5)
+        q6(
+            F.sqrt(
+                ((F.sum(t12).cast("double") / F.lit(1e12)) / F.count(F.lit(1)))
+                / c4ln2
             )
-            / 1e6
         ).alias("parkinson_vol_q6"),
     )
 
@@ -2950,7 +2929,7 @@ def ticks_yang_zhang(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rs"),
     )
     g = lambda col, s: F.sum(  # noqa: E731
-        F.floor(col * F.lit(s) + F.lit(0.5)).cast("long")
+        half_up(col * F.lit(s)).cast("long")
     )
     agg = (
         terms.groupBy("symbol")
@@ -3058,14 +3037,11 @@ def events_decay_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     term = staged.withColumn(
         "__w9",
-        F.floor(detmath.det_exp("__x") * 1e9 + F.lit(0.5)).cast("long"),
+        half_up(detmath.det_exp("__x") * 1e9).cast("long"),
     )
     return term.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
-        (
-            F.floor(F.sum("__w9").cast("double") / 1e9 * 1e6 + F.lit(0.5))
-            / 1e6
-        ).alias("decay_score_q6"),
+        q6(F.sum("__w9").cast("double") / 1e9).alias("decay_score_q6"),
         F.max("ts").alias("last_seen"),
     )
 
@@ -3232,12 +3208,8 @@ def events_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "r", F.row_number().over(Window.orderBy(F.col("c").desc()))
     )
     xy = rk.select(
-        F.floor(
-            detmath.det_ln_pos("r", assume_ge_1=True) * 1e9 + F.lit(0.5)
-        ).alias("xi"),
-        F.floor(
-            detmath.det_ln_pos("c", assume_ge_1=True) * 1e9 + F.lit(0.5)
-        ).alias("yi"),
+        half_up(detmath.det_ln_pos("r", assume_ge_1=True) * 1e9).alias("xi"),
+        half_up(detmath.det_ln_pos("c", assume_ge_1=True) * 1e9).alias("yi"),
     )
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     si = xy.agg(
@@ -3436,7 +3408,7 @@ def events_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rh.select(
         "symbol",
         "n_returns",
-        (F.floor(q_raw * 1e4 + F.lit(0.5)) / 1e4).alias("q_stat_q4"),
+        (half_up(q_raw * 1e4) / 1e4).alias("q_stat_q4"),
         (q_raw > F.lit(11.070497693516351)).alias("reject_white_noise"),
     )
 
@@ -3519,7 +3491,7 @@ def ticks_ou_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = agg.select(
         "symbol",
         F.col("l1_n").alias("n_pairs"),
-        F.when(dx > 0, F.floor(num / dx * 1e9 + F.lit(0.5)) / 1e9).alias("b_q9"),
+        F.when(dx > 0, half_up(num / dx * 1e9) / 1e9).alias("b_q9"),
     )
     ln_b = F.expr(detmath.det_ln_pos_sql("b_q9", "spark"))
     in_domain = (F.col("b_q9") >= 1e-9) & (F.col("b_q9") < 1.0)
@@ -3533,8 +3505,8 @@ def ticks_ou_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
     return h.select(
         "symbol",
         "n_pairs",
-        (F.floor(F.col("b_q9") * 1e6 + F.lit(0.5)) / 1e6).alias("ar1_slope_q6"),
-        (F.floor(F.col("hl") * 1e4 + F.lit(0.5)) / 1e4).alias("half_life_q4"),
+        q6(F.col("b_q9")).alias("ar1_slope_q6"),
+        (half_up(F.col("hl") * 1e4) / 1e4).alias("half_life_q4"),
         "mean_reverting",
     )
 
@@ -3622,11 +3594,8 @@ def ticks_realized_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "symbol",
         "n_returns",
-        (
-            F.floor(F.expr(f"(g0 + 2.0 * ({combine}))") / 1e4 * 1e6 + F.lit(0.5))
-            / 1e6
-        ).alias("rk_q6"),
-        (F.floor(F.col("g0") / 1e4 * 1e6 + F.lit(0.5)) / 1e6).alias("rv_q6"),
+        q6(F.expr(f"(g0 + 2.0 * ({combine}))") / 1e4).alias("rk_q6"),
+        q6(F.col("g0") / 1e4).alias("rv_q6"),
     )
 
 
@@ -3704,7 +3673,7 @@ def events_benford_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "n",
         *[f"d{k}" for k in range(1, 10)],
-        (F.floor(F.expr(chi2) * 1e4 + F.lit(0.5)) / 1e4).alias("chi2_q4"),
+        (half_up(F.expr(chi2) * 1e4) / 1e4).alias("chi2_q4"),
         (F.expr(chi2) < F.lit(15.50731305586545)).alias("benford_consistent"),
     )
 
@@ -3781,12 +3750,11 @@ def ticks_bipower_variation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select(
         "symbol",
         "n_returns",
-        (F.floor(F.col("rv") * 1e6 + F.lit(0.5)) / 1e6).alias("rv_q6"),
-        (F.floor(F.col("bv") * 1e6 + F.lit(0.5)) / 1e6).alias("bv_q6"),
+        q6(F.col("rv")).alias("rv_q6"),
+        q6(F.col("bv")).alias("bv_q6"),
         F.when(
             F.col("rv") > 0,
-            F.floor((F.col("rv") - F.col("bv")) / F.col("rv") * 1e6 + F.lit(0.5))
-            / 1e6,
+            q6((F.col("rv") - F.col("bv")) / F.col("rv")),
         ).alias("rel_jump_q6"),
         (F.col("rv") - F.col("bv") > 0).alias("jump_positive"),
     )
@@ -3893,9 +3861,9 @@ def events_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_runs",
         "n_up",
         "n_down",
-        (F.floor(F.col("e_runs") * 1e6 + F.lit(0.5)) / 1e6).alias("e_runs_q6"),
+        q6(F.col("e_runs")).alias("e_runs_q6"),
         F.when(
-            F.col("var_runs") > 0, F.floor(zexpr * 1e6 + F.lit(0.5)) / 1e6
+            F.col("var_runs") > 0, q6(zexpr)
         ).alias("z_q6"),
         F.when(
             F.col("var_runs") > 0,
@@ -3968,7 +3936,7 @@ def events_gini_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "n",
         "total",
-        (F.floor(gini * 1e6 + F.lit(0.5)) / 1e6).alias("gini_q6"),
+        q6(gini).alias("gini_q6"),
     )
 
 
@@ -4078,14 +4046,13 @@ def ticks_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = [
         F.col("symbol"),
         F.col("n_returns"),
-        (F.floor(F.col("v1") * 1e6 + F.lit(0.5)) / 1e6).alias("var1_q6"),
+        q6(F.col("v1")).alias("var1_q6"),
     ]
     for q in qs:
         out.append(
             F.when(
                 F.col("v1") > 0,
-                F.floor(F.col(f"v{q}") / (q * F.col("v1")) * 1e6 + F.lit(0.5))
-                / 1e6,
+                q6(F.col(f"v{q}") / (q * F.col("v1"))),
             ).alias(f"vr{q}_q6")
         )
     return v.select(*out)
@@ -4244,10 +4211,9 @@ def ticks_garman_klass(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = piv.select(
         "symbol",
         "day",
-        F.floor(
+        half_up(
             (F.lit(0.5) * (F.col("u") * F.col("u")) - c_gk * (F.col("c") * F.col("c")))
             * 1e12
-            + F.lit(0.5)
         )
         .cast("long")
         .alias("t12"),
@@ -4262,12 +4228,7 @@ def ticks_garman_klass(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_bars",
         F.when(
             F.col("s12") >= 0,
-            F.floor(
-                F.sqrt((F.col("s12").cast("double") / 1e12) / F.col("n_bars"))
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6,
+            q6(F.sqrt((F.col("s12").cast("double") / 1e12) / F.col("n_bars"))),
         ).alias("gk_vol_q6"),
     )
 
@@ -4358,15 +4319,12 @@ def _hy_normalized(ov: DataFrame, rv: DataFrame, keys: list) -> DataFrame:
             "hy_cov_c2",
             F.when(
                 (F.col("rv_a") > 0) & (F.col("rv_b") > 0),
-                F.floor(
+                q6(
                     F.col("hy_cov_c2").cast("double")
                     / F.sqrt(
                         F.col("rv_a").cast("double") * F.col("rv_b").cast("double")
                     )
-                    * 1e6
-                    + F.lit(0.5)
-                )
-                / 1e6,
+                ),
             ).alias("hy_corr_q6"),
         )
     )
@@ -4659,8 +4617,8 @@ def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("z"),
     )
-    chi_q6 = F.floor(F.col("srm_chi2") * 1e6 + F.lit(0.5)) / 1e6
-    z_q6 = F.floor(F.col("z") * 1e6 + F.lit(0.5)) / 1e6
+    chi_q6 = q6(F.col("srm_chi2"))
+    z_q6 = q6(F.col("z"))
     return s.select(
         "n_a",
         "n_b",
@@ -4792,10 +4750,7 @@ def events_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("wn") > 0)
         .select(
             "k",
-            F.floor(
-                F.col("wsum").cast("double") / F.col("wn").cast("double") * 1e6
-                + F.lit(0.5)
-            )
+            half_up(F.col("wsum").cast("double") / F.col("wn").cast("double") * 1e6)
             .cast("long")
             .alias("m6"),
         )
@@ -4823,14 +4778,10 @@ def events_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "r_used",
         (
-            F.floor(F.col("csum").cast("double") / F.col("n") * 1e4 + F.lit(0.5))
-            / 1e4
+            half_up(F.col("csum").cast("double") / F.col("n") * 1e4) / 1e4
         ).alias("mean_cents_q4"),
         (
-            F.floor(
-                F.col("s6").cast("double") / F.col("r_used") * 1e-2 + F.lit(0.5)
-            )
-            / 1e4
+            half_up(F.col("s6").cast("double") / F.col("r_used") * 1e-2) / 1e4
         ).alias("boot_mean_cents_q4"),
         (F.col("lo6").cast("double") / 1e6).alias("ci_lo_cents_q6"),
         (F.col("hi6").cast("double") / 1e6).alias("ci_hi_cents_q6"),
@@ -5022,7 +4973,7 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_risk",
         F.when(
             F.col("d_events") < F.col("n_risk"),
-            F.floor(detmath.det_ln_pos("term") * 1e12 + F.lit(0.5)).cast("long"),
+            half_up(detmath.det_ln_pos("term") * 1e12).cast("long"),
         )
         .otherwise(F.lit(0).cast("long"))
         .alias("l12"),
@@ -5041,7 +4992,7 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d_events",
         F.when(F.col("d_events") == F.col("n_risk"), F.lit(0.0))
         .otherwise(
-            F.floor(detmath.det_exp("cumd") * 1e6 + F.lit(0.5)) / 1e6
+            q6(detmath.det_exp("cumd"))
         )
         .alias("km_q6"),
     )
@@ -5226,12 +5177,7 @@ def ticks_epps_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         F.when(
             (va > 0) & (vb > 0),
-            F.floor(
-                num.cast("double") / F.sqrt(va.cast("double") * vb.cast("double"))
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6,
+            q6(num.cast("double") / F.sqrt(va.cast("double") * vb.cast("double"))),
         ).alias("corr_q6"),
     )
 
@@ -5748,8 +5694,7 @@ def events_bandit_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n_matched"),
         F.when(
             F.col("n") > 0,
-            F.floor(F.col("cents").cast("double") / F.col("n") * 1e4 + F.lit(0.5))
-            / 1e4,
+            half_up(F.col("cents").cast("double") / F.col("n") * 1e4) / 1e4,
         ).alias("est_value_q4"),
     )
 
@@ -6181,7 +6126,7 @@ def events_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x_conv",
         "n_a",
         "n_b",
-        (F.floor(F.col("p1") * 1e6 + F.lit(0.5)) / 1e6).alias("p_base_q6"),
+        q6(F.col("p1")).alias("p_base_q6"),
         F.lit(0.02).alias("mde_abs"),
         req.alias("required_n_per_arm"),
         (F.least(F.col("n_a"), F.col("n_b")) >= req).alias("powered"),
@@ -6295,7 +6240,7 @@ def events_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     zval = (
         F.col("two_u_a").cast("double") / F.lit(2.0) - nad * nbd / F.lit(2.0)
     ) / F.sqrt(var)
-    zq6 = F.floor(zval * 1e6 + F.lit(0.5)) / 1e6
+    zq6 = q6(zval)
     return (
         f.filter(var > 0.0)
         .select(
@@ -6413,10 +6358,7 @@ def events_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_tot",
         "r",
         "c",
-        F.floor(
-            F.col("od") * (F.col("lno") - F.col("lne")) * 1e6 + F.lit(0.5)
-        )
-        .cast("long")
+        half_up(F.col("od") * (F.col("lno") - F.col("lne")) * 1e6).cast("long")
         .alias("t6"),
     ).agg(
         F.max("n_tot").cast("long").alias("n"),
@@ -6424,13 +6366,7 @@ def events_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("c").cast("long").alias("c"),
         F.sum("t6").cast("long").alias("s6"),
     )
-    gq6 = (
-        F.floor(
-            F.lit(2.0) * (F.col("s6").cast("double") / F.lit(1e6)) * 1e6
-            + F.lit(0.5)
-        )
-        / 1e6
-    )
+    gq6 = q6(F.lit(2.0) * (F.col("s6").cast("double") / F.lit(1e6)))
     df_col = (F.col("r") - 1) * (F.col("c") - 1)
     crit = (
         F.when(df_col == 1, F.lit(3.841459))
@@ -6535,13 +6471,12 @@ def events_jackknife_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         bk.crossJoin(F.broadcast(tot))
         .filter((F.col("nn") - F.col("n_b")) > 0)
         .select(
-            F.floor(
+            half_up(
                 (
                     (F.col("v") - F.col("v_b")).cast("double")
                     / (F.col("nn") - F.col("n_b")).cast("double")
                 )
                 * 1e9
-                + F.lit(0.5)
             )
             .cast("long")
             .alias("t9"),
@@ -6762,17 +6697,12 @@ def events_wasserstein_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("n_a").cast("long").alias("n_a"),
         (F.col("n") - F.col("n_a")).cast("long").alias("n_b"),
-        (
-            F.floor(
-                F.col("tv").cast("double")
-                / (
-                    F.col("n_a").cast("double")
-                    * (F.col("n") - F.col("n_a")).cast("double")
-                )
-                * 1e6
-                + F.lit(0.5)
+        q6(
+            F.col("tv").cast("double")
+            / (
+                F.col("n_a").cast("double")
+                * (F.col("n") - F.col("n_a")).cast("double")
             )
-            / 1e6
         ).alias("w1_cents_q6"),
     )
 
@@ -7127,7 +7057,7 @@ def events_msprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("lnl"),
     )
-    lq6 = F.floor(F.col("lnl") * 1e6 + F.lit(0.5)) / 1e6
+    lq6 = q6(F.col("lnl"))
     return lam.select(
         "day",
         F.col("c_n_t").alias("n_t"),
@@ -7236,7 +7166,7 @@ def events_did_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rel",
             "n_t",
             "n_c",
-            (F.floor(att * 1e6 + F.lit(0.5)) / 1e6).alias("att_q6"),
+            q6(att).alias("att_q6"),
             (F.col("rel") < 0).alias("is_pre"),
         )
     )
@@ -7344,9 +7274,7 @@ def events_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x_a",
         "x_b",
         "z_q6",
-        (
-            F.floor(poly * detmath.det_exp("__negx2") * 1e9 + F.lit(0.5)) / 1e9
-        ).alias("p_q9"),
+        (half_up(poly * detmath.det_exp("__negx2") * 1e9) / 1e9).alias("p_q9"),
     )
     wr = Window.orderBy(F.col("p_q9").asc(), F.col("event_type"))
     ranked = p.select(
@@ -7379,7 +7307,7 @@ def events_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "z_q6",
         "p_q9",
         "rank",
-        (F.floor(adj * 1e6 + F.lit(0.5)) / 1e6).alias("p_adj_q6"),
+        q6(adj).alias("p_adj_q6"),
         F.coalesce(F.col("rank") <= F.col("k_star"), F.lit(False)).alias(
             "significant_bh"
         ),
@@ -7534,8 +7462,8 @@ def events_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("df") == 7, F.lit(14.067140))
         .otherwise(F.lit(15.507313))
     )
-    hq6 = F.floor(F.col("h_raw") * 1e6 + F.lit(0.5)) / 1e6
-    haq6 = F.floor(F.col("h_raw") / F.col("corr") * 1e6 + F.lit(0.5)) / 1e6
+    hq6 = q6(F.col("h_raw"))
+    haq6 = q6(F.col("h_raw") / F.col("corr"))
     return h.select(
         "n",
         "k",
@@ -7630,9 +7558,7 @@ def events_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         "n",
         x.alias("x"),
-        F.floor((x - xb - F.lit(0.005)) * 1e9 + F.lit(0.5))
-        .cast("long")
-        .alias("term9"),
+        half_up((x - xb - F.lit(0.005)) * 1e9).cast("long").alias("term9"),
     )
     m = t9.select(
         "day",
@@ -7640,14 +7566,11 @@ def events_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x",
         F.sum("term9").over(wd).alias("m9"),
     ).withColumn("minm9", F.min("m9").over(wd))
-    ph = F.floor(
-        (F.col("m9") - F.col("minm9")).cast("double") / F.lit(1e9) * 1e6
-        + F.lit(0.5)
-    ) / 1e6
+    ph = q6((F.col("m9") - F.col("minm9")).cast("double") / F.lit(1e9))
     return m.select(
         "day",
         "n",
-        (F.floor(F.col("x") * 1e6 + F.lit(0.5)) / 1e6).alias("mean_q6"),
+        q6(F.col("x")).alias("mean_q6"),
         ph.alias("ph_q6"),
         (ph > F.lit(0.5)).alias("alarm"),
     )
@@ -7736,12 +7659,10 @@ def ticks_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nd = d.groupBy("symbol").agg(F.count(F.lit(1)).cast("long").alias("n_days"))
     a, b = d.alias("a"), d.alias("b")
-    slope = F.floor(
+    slope = q6(
         (F.col("b.close") - F.col("a.close")).cast("double")
         / (F.col("b.dd") - F.col("a.dd")).cast("double")
-        * 1e6
-        + F.lit(0.5)
-    ) / 1e6
+    )
     p = a.join(
         b,
         (F.col("a.symbol") == F.col("b.symbol")) & (F.col("a.day") < F.col("b.day")),
@@ -7814,10 +7735,7 @@ def events_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d_sec",
         "d_events",
         "n_risk",
-        F.floor(
-            F.col("d_events").cast("double") / F.col("n_risk").cast("double") * 1e12
-            + F.lit(0.5)
-        )
+        half_up(F.col("d_events").cast("double") / F.col("n_risk").cast("double") * 1e12)
         .cast("long")
         .alias("h12"),
     )
@@ -7834,13 +7752,8 @@ def events_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d_sec",
         "n_risk",
         "d_events",
-        (
-            F.floor(F.col("ch12").cast("double") / F.lit(1e12) * 1e6 + F.lit(0.5))
-            / 1e6
-        ).alias("cum_hazard_q6"),
-        (F.floor(detmath.det_exp("negh") * 1e6 + F.lit(0.5)) / 1e6).alias(
-            "s_fh_q6"
-        ),
+        q6(F.col("ch12").cast("double") / F.lit(1e12)).alias("cum_hazard_q6"),
+        q6(detmath.det_exp("negh")).alias("s_fh_q6"),
     )
 
 
@@ -7951,16 +7864,15 @@ def events_log_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = F.col("d_events").cast("double")
     nad = F.col("n_risk_a").cast("double")
     nd_ = F.col("n_risk").cast("double")
-    e12 = F.floor(dd * (nad / nd_) * 1e12 + F.lit(0.5)).cast("decimal(38,0)")
+    e12 = half_up(dd * (nad / nd_) * 1e12).cast("decimal(38,0)")
     v12 = F.when(
         F.col("n_risk") > 1,
-        F.floor(
+        half_up(
             dd
             * (nad / nd_)
             * (F.lit(1.0) - nad / nd_)
             * ((nd_ - dd) / (nd_ - F.lit(1.0)))
             * 1e12
-            + F.lit(0.5)
         ).cast("decimal(38,0)"),
     ).otherwise(F.lit(0).cast("decimal(38,0)"))
     t = evt.select("d_a", e12.alias("e12"), v12.alias("v12"))
@@ -7981,15 +7893,12 @@ def events_log_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     oad = F.col("o_a").cast("double")
-    chi2 = (
-        F.floor((oad - F.col("e_a")) * (oad - F.col("e_a")) / F.col("v") * 1e6 + F.lit(0.5))
-        / 1e6
-    )
+    chi2 = q6((oad - F.col("e_a")) * (oad - F.col("e_a")) / F.col("v"))
     return f.select(
         "n_users",
         "n_a",
         "o_a",
-        (F.floor(F.col("e_a") * 1e6 + F.lit(0.5)) / 1e6).alias("e_a_q6"),
+        q6(F.col("e_a")).alias("e_a_q6"),
         chi2.alias("chi2_q6"),
         (chi2 > F.lit(3.841459)).alias("significant"),
     )
@@ -8115,16 +8024,11 @@ def events_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("ssw") > 0.0)
     )
-    fq6 = (
-        F.floor(
-            (F.col("ssb") / F.col("df_between").cast("double"))
-            / (F.col("ssw") / F.col("df_within").cast("double"))
-            * 1e6
-            + F.lit(0.5)
-        )
-        / 1e6
+    fq6 = q6(
+        (F.col("ssb") / F.col("df_between").cast("double"))
+        / (F.col("ssw") / F.col("df_within").cast("double"))
     )
-    eq6 = F.floor(F.col("ssb") / (F.col("ssb") + F.col("ssw")) * 1e6 + F.lit(0.5)) / 1e6
+    eq6 = q6(F.col("ssb") / (F.col("ssb") + F.col("ssw")))
     crit = (
         F.when(F.col("df_between") == 1, F.lit(3.841459))
         .when(F.col("df_between") == 2, F.lit(5.991465))
@@ -8218,26 +8122,17 @@ def events_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "decile",
         F.col("boundary").alias("users_cum"),
         F.col("cum_spend").alias("spend_cum_cents"),
-        (
-            F.floor(
-                F.col("boundary").cast("double") / F.col("n").cast("double") * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
+        q6(
+            F.col("boundary").cast("double") / F.col("n").cast("double")
         ).alias("user_share_q6"),
-        (
-            F.floor(
-                F.col("cum_spend").cast("double") / F.col("s").cast("double") * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
+        q6(
+            F.col("cum_spend").cast("double") / F.col("s").cast("double")
         ).alias("spend_share_q6"),
     )
 
 
 def _odds_ratio_oracle() -> str:
     ln_or = detmath.det_ln_pos_sql("orat", "duckdb")
-    ln_rr = detmath.det_ln_pos_sql("rrat", "duckdb")
     ex_lo = detmath.det_exp_sql("lo_or", "duckdb")
     ex_hi = detmath.det_exp_sql("hi_or", "duckdb")
     return rf"""
@@ -8457,7 +8352,7 @@ def ticks_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("s_stat") < 0, (sd + F.lit(1.0)) / F.sqrt(F.col("var")))
         .otherwise(F.lit(0.0))
     )
-    zq6 = F.floor(zval * 1e6 + F.lit(0.5)) / 1e6
+    zq6 = q6(zval)
     return v.select(
         "symbol",
         F.col("n").alias("n_days"),
@@ -8556,11 +8451,11 @@ def ticks_dickey_fuller(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("dy") - F.col("q") * F.col("num"))
         / ((F.col("n").cast("double") - F.lit(2.0)) * F.col("dx"))
     )
-    tq6 = F.floor(tval * 1e6 + F.lit(0.5)) / 1e6
+    tq6 = q6(tval)
     return f.select(
         "symbol",
         F.col("n").alias("n_pairs"),
-        (F.floor(F.col("q") * 1e6 + F.lit(0.5)) / 1e6).alias("gamma_q6"),
+        q6(F.col("q")).alias("gamma_q6"),
         tq6.alias("t_stat_q6"),
         (tq6 < F.lit(-2.8621)).alias("mean_reverting"),
     )
@@ -8672,9 +8567,8 @@ def events_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("e") > 0.0)
     )
-    t6 = F.floor(
+    t6 = half_up(
         (F.col("od") - F.col("e")) * (F.col("od") - F.col("e")) / F.col("e") * 1e6
-        + F.lit(0.5)
     ).cast("long")
     s = j.select("n_tot", "r", "c", t6.alias("t6")).agg(
         F.max("n_tot").cast("long").alias("n"),
@@ -8682,20 +8576,15 @@ def events_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("c").cast("long").alias("c"),
         F.sum("t6").cast("long").alias("s6"),
     )
-    chi2 = F.floor(F.col("s6").cast("double") / F.lit(1e6) * 1e6 + F.lit(0.5)) / 1e6
-    v = (
-        F.floor(
-            F.sqrt(
-                (F.col("s6").cast("double") / F.lit(1e6))
-                / (
-                    F.col("n").cast("double")
-                    * F.least(F.col("r") - 1, F.col("c") - 1).cast("double")
-                )
+    chi2 = q6(F.col("s6").cast("double") / F.lit(1e6))
+    v = q6(
+        F.sqrt(
+            (F.col("s6").cast("double") / F.lit(1e6))
+            / (
+                F.col("n").cast("double")
+                * F.least(F.col("r") - 1, F.col("c") - 1).cast("double")
             )
-            * 1e6
-            + F.lit(0.5)
         )
-        / 1e6
     )
     return (
         s.filter(

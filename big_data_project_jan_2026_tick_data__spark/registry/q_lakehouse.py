@@ -6,16 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import to_local
-from ..operators import (  # noqa: F401
-    dedup,
-    joins,
-    mlfeat,
-    multimodal,
-    similarity,
-    stats,
-    text,
-    ticks,
-)
+from ..functions.scalars import half_up
 from ._base import _register, _td
 
 
@@ -404,7 +395,7 @@ def snapshot_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("n_events"),
                 F.sum("event_id").cast("long").alias("id_sum"),
                 F.sum(
-                    F.floor(F.col("value") * 1e4 + F.lit(0.5)).cast("long")
+                    half_up(F.col("value") * 1e4).cast("long")
                 )
                 .cast("long")
                 .alias("value_i4_sum"),
@@ -469,7 +460,7 @@ def snapshot_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.sum(
-                    F.floor(F.col("value") * 1e4 + F.lit(0.5)).cast("bigint")
+                    half_up(F.col("value") * 1e4).cast("bigint")
                 ).alias("value_i4"),
             )
             .withColumn(
@@ -534,7 +525,7 @@ def incremental_ohlc_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         "symbol",
         F.col("ts").cast("long").alias("es"),
         "event_id",
-        F.floor(F.col("value") * 1e6 + F.lit(0.5)).cast("bigint").alias("p6"),
+        half_up(F.col("value") * 1e6).cast("bigint").alias("p6"),
         "sz",
     )
     with tempfile.TemporaryDirectory() as d:
@@ -581,7 +572,7 @@ def snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.write(
             ev.filter(F.col("event_id") % 2 == 1).withColumn(
                 "value_i4",
-                F.floor(F.col("value") * 1e4 + F.lit(0.5)).cast("bigint"),
+                half_up(F.col("value") * 1e4).cast("bigint"),
             ),
             mode="append",
         )
@@ -643,7 +634,7 @@ def snapshot_delete_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.sum(
-                    F.floor(F.col("value") * 1e4 + F.lit(0.5)).cast("bigint")
+                    half_up(F.col("value") * 1e4).cast("bigint")
                 ).alias("value_i4"),
             )
             .withColumn("snapshots_remaining", F.lit(int(n_snaps)))

@@ -6,18 +6,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..engine import to_local
-from ..operators import (  # noqa: F401
-    dedup,
-    joins,
-    mlfeat,
-    multimodal,
-    similarity,
-    stats,
-    text,
-    ticks,
-)
+from ..operators import mlfeat
 from ..functions import detmath
-from ..functions.scalars import cents, q6
+from ..functions.scalars import cents, half_up, q6
 from ._base import _arm, _event_key, _minute_closes, _quotes, _register, _td, _ticks
 
 
@@ -655,7 +646,7 @@ def ml_anomaly_scores_ae_fixedw(spark: SparkSession, sf_dir: str) -> DataFrame:
     return errs.select(
         "symbol",
         "window_id",
-        (F.floor(F.col("err") * 1e6 + F.lit(0.5)) / 1e6).alias("err_q6"),
+        q6(F.col("err")).alias("err_q6"),
     )
 
 
@@ -1062,7 +1053,7 @@ def events_histogram_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "event_type",
         "p",
-        (F.floor(F.col("est") * 1e6 + F.lit(0.5)) / 1e6).alias("est"),
+        q6(F.col("est")).alias("est"),
     )
 
 
@@ -1253,6 +1244,23 @@ _TB_CTES = f"""src AS (
         ON a.symbol = e.symbol AND a.entry_ts = e.entry_ts)"""
 
 
+def _tb_labels(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The triple-barrier family's Spark side, as ``(bars, labels)``: the
+    minute-bar closes (checkpointed: they feed the entries AND the
+    interval join, so the tape is scanned once), the top-of-hour
+    entries, and their ±0.2% / 120-minute first-touch labels."""
+    bars = _minute_closes(spark, sf_dir).localCheckpoint()
+    entries = bars.filter(F.minute("bar_ts") == 0).select(
+        "symbol",
+        F.col("bar_ts").alias("entry_ts"),
+        F.col("close_i4").alias("entry_close_i4"),
+    )
+    labels = mlfeat.triple_barrier_labels(
+        bars, entries, horizon_minutes=120, up_mult=1.002, dn_mult=0.998
+    )
+    return bars, labels
+
+
 @_register(
     "ml_triple_barrier",
     f"""
@@ -1270,23 +1278,7 @@ def ml_triple_barrier(spark: SparkSession, sf_dir: str) -> DataFrame:
     The label generator the purged-CV plan protects; one symbol-keyed
     interval join (horizon-bounded fan-out) + conditional-MIN aggs,
     barrier levels a single correctly-rounded product per entry."""
-    from ..operators.mlfeat import triple_barrier_labels
-
-    # minute-scale (tape/60); feeds entries AND the interval join —
-    # materialize once instead of re-scanning the tape per consumer
-    bars = _minute_closes(spark, sf_dir).localCheckpoint()
-    entries = bars.filter(F.minute("bar_ts") == 0).select(
-        "symbol",
-        F.col("bar_ts").alias("entry_ts"),
-        F.col("close_i4").alias("entry_close_i4"),
-    )
-    return triple_barrier_labels(
-        bars,
-        entries,
-        horizon_minutes=120,
-        up_mult=1.002,
-        dn_mult=0.998,
-    )
+    return _tb_labels(spark, sf_dir)[1]
 
 
 @_register(
@@ -1323,20 +1315,10 @@ def ml_label_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ch.4 companion that downweights the serially-overlapping
     events the purged CV also guards against. Same horizon-bounded
     interval join as the labeler + one (symbol, bar) hash agg."""
-    from ..operators.mlfeat import label_uniqueness_weights, triple_barrier_labels
-
-    # minute-scale (tape/60); feeds entries AND the interval join —
-    # materialize once instead of re-scanning the tape per consumer
-    bars = _minute_closes(spark, sf_dir).localCheckpoint()
-    entries = bars.filter(F.minute("bar_ts") == 0).select(
-        "symbol",
-        F.col("bar_ts").alias("entry_ts"),
-        F.col("close_i4").alias("entry_close_i4"),
-    )
-    labels = triple_barrier_labels(
-        bars, entries, horizon_minutes=120, up_mult=1.002, dn_mult=0.998
-    ).localCheckpoint()  # label-sized; feeds the span join AND the final join
-    return label_uniqueness_weights(bars, labels, horizon_minutes=120)
+    bars, labels = _tb_labels(spark, sf_dir)
+    # label-sized; feeds the span join AND the final join
+    labels = labels.localCheckpoint()
+    return mlfeat.label_uniqueness_weights(bars, labels, horizon_minutes=120)
 
 
 @_register(
@@ -1608,8 +1590,6 @@ def ml_purged_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     enter neither side. Two fold-keyed aggregates over one
     events-joined-calendar pass; everything integer until the final q6
     renders."""
-    from pyspark.sql import Window
-
     from ..operators.mlfeat import purged_cv_folds
 
     ev = _td(spark, sf_dir, "events")
@@ -1618,7 +1598,7 @@ def ml_purged_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = ev.filter(F.col("value").isNotNull()).select(
         F.to_date("ts").alias("day"),
-        F.floor(F.col("value") * 1e4 + F.lit(0.5)).cast("bigint").alias("v4"),
+        half_up(F.col("value") * 1e4).cast("bigint").alias("v4"),
     )
     j = rows.join(F.broadcast(roles), "day")
     tr = (
@@ -1626,10 +1606,7 @@ def ml_purged_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("fold")
         .agg(
             F.count(F.lit(1)).alias("n_train"),
-            F.floor(
-                F.sum("v4").cast("double") / F.count(F.lit(1)) + F.lit(0.5)
-            )
-            .cast("bigint")
+            half_up(F.sum("v4").cast("double") / F.count(F.lit(1))).cast("bigint")
             .alias("mu4"),
         )
     )
@@ -1698,7 +1675,7 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.sum(
-                    F.floor(F.col("value") * 1e4 + F.lit(0.5)).cast("bigint")
+                    half_up(F.col("value") * 1e4).cast("bigint")
                 ).alias("value_i4"),
             )
             .select(
@@ -1863,12 +1840,7 @@ def ml_information_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         F.when(
             (vx > 0) & (vy > 0),
-            F.floor(
-                num.cast("double") / F.sqrt(vx.cast("double") * vy.cast("double"))
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6,
+            q6(num.cast("double") / F.sqrt(vx.cast("double") * vy.cast("double"))),
         ).alias("ic_q6"),
     )
 
@@ -1955,7 +1927,7 @@ def streaming_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     na_d = F.col("n_a").cast("double")
     nb_d = F.col("n_b").cast("double")
     chi = ((na_d - e) * (na_d - e) / e) + ((nb_d - e) * (nb_d - e) / e)
-    chi_q6 = F.floor(chi * 1e6 + F.lit(0.5)) / 1e6
+    chi_q6 = q6(chi)
     return wide.select(
         "window_start",
         "window_end",

@@ -5,18 +5,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import (  # noqa: F401
-    dedup,
-    joins,
-    mlfeat,
-    multimodal,
-    similarity,
-    stats,
-    text,
-    ticks,
-)
+from ..operators import dedup, multimodal
 from ..functions.scalars import q6
-from ._base import _register, _td
+from ._base import _register
 
 
 # ---------------------------------------------------------------------------

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import detmath
+from ..functions.scalars import half_up
 from ..operators.text import normalize_text
 from ._base import _pin_session, _register, _td
 from .q_docs import _norm_sql
@@ -113,5 +114,5 @@ def probe_detmath_log2(spark: SparkSession, sf_dir: str) -> DataFrame:
     l2 = detmath.det_log2_int("n")
     return n.select(
         "n",
-        F.floor(l2 * F.lit(1e9) + F.lit(0.5)).cast("long").alias("l2_q9"),
+        half_up(l2 * F.lit(1e9)).cast("long").alias("l2_q9"),
     )

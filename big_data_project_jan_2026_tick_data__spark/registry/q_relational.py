@@ -6,19 +6,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..engine import to_local
-from ..operators import (  # noqa: F401
-    dedup,
-    joins,
-    mlfeat,
-    multimodal,
-    similarity,
-    stats,
-    text,
-    ticks,
-)
+from ..operators import joins, stats
 from ..functions import detmath
 from ..functions.exactagg import exact_avg, exact_avg_sql, exact_sum, exact_sum_sql
-from ..functions.scalars import cents, q6
+from ..functions.scalars import cents, half_up, q6
 from ._base import _cov_terms, _register, _td
 
 # Shorthand for the oracle f-strings: exact integer-grid sums/means of
@@ -27,7 +18,6 @@ from ._base import _cov_terms, _register, _td
 _S = exact_sum_sql
 _A = exact_avg_sql
 _REV = "l_extendedprice * (1 - l_discount)"
-
 
 
 # ---------------------------------------------------------------------------
@@ -342,12 +332,8 @@ def orders_semi_additive_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("bal").cast("double") / 100)
         .cast("double")
         .alias("total_closing_balance"),
-        (
-            F.floor(
-                F.sum("bal").cast("double") / 100 / F.count("bal") * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
+        q6(
+            F.sum("bal").cast("double") / 100 / F.count("bal")
         ).alias("avg_closing_balance_q6"),
     )
 
@@ -1871,12 +1857,8 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("offs").alias("month_offset"),
             F.col("active").alias("active_customers"),
             (F.col("cents") / 100.0).alias("revenue"),
-            (
-                F.floor(
-                    F.sum("cents").over(w) / 100.0 / F.col("cohort_size") * 1e6
-                    + F.lit(0.5)
-                )
-                / 1e6
+            q6(
+                F.sum("cents").over(w) / 100.0 / F.col("cohort_size")
             ).alias("cum_ltv_q6"),
         )
     )
@@ -2099,13 +2081,7 @@ def orders_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "segment_early",
         "segment_late",
         "n_customers",
-        (
-            F.floor(
-                F.col("n_customers") / F.sum("n_customers").over(tot) * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
-        ).alias("row_frac_q6"),
+        q6(F.col("n_customers") / F.sum("n_customers").over(tot)).alias("row_frac_q6"),
     )
 
 
@@ -2338,18 +2314,11 @@ def orders_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     share = F.col("cents").cast("double") / F.col("tot")
     s = c.join(t, "year").select(
         "year",
-        F.floor(share * share * 1e12 + F.lit(0.5))
-        .cast("bigint")
-        .alias("sh12"),
+        half_up(share * share * 1e12).cast("bigint").alias("sh12"),
     )
     return s.groupBy("year").agg(
         F.count(F.lit(1)).alias("n_customers"),
-        (
-            F.floor(
-                F.sum("sh12").cast("double") / F.lit(1e12) * 1e6 + F.lit(0.5)
-            )
-            / 1e6
-        ).alias("hhi_q6"),
+        q6(F.sum("sh12").cast("double") / F.lit(1e12)).alias("hhi_q6"),
     ).select(F.col("year").cast("int").alias("year"), "n_customers", "hhi_q6")
 
 
@@ -2440,9 +2409,7 @@ def orders_forecast_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "horizon",
             q6(F.col("rev_cents").cast("double") / 100).alias("basis_revenue"),
             q6(mean_yoy / 100).alias("mean_yoy"),
-            q6(
-                (F.col("rev_cents").cast("double") + mean_yoy) / 100
-            ).alias("forecast"),
+            q6((F.col("rev_cents").cast("double") + mean_yoy) / 100).alias("forecast"),
         )
     )
 
@@ -2614,7 +2581,7 @@ def orders_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _td(spark, sf_dir, "lineitem")
     pt = _td(spark, sf_dir, "part").select("p_partkey", "p_brand")
     pp = li.groupBy("l_partkey").agg(
-        F.sum(F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long"))
+        F.sum(half_up(F.col("l_quantity")).cast("long"))
         .cast("long")
         .alias("q"),
         F.sum(cents(F.col("l_extendedprice")))
@@ -2632,13 +2599,8 @@ def orders_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     l = uq.select(
         "brand",
-        F.floor(detmath.det_ln_pos("u") * 1e4 + F.lit(0.5))
-        .cast("long")
-        .alias("lx"),
-        F.floor(
-            detmath.det_ln_pos("qd", assume_ge_1=True) * 1e4 + F.lit(0.5)
-        )
-        .cast("long")
+        half_up(detmath.det_ln_pos("u") * 1e4).cast("long").alias("lx"),
+        half_up(detmath.det_ln_pos("qd", assume_ge_1=True) * 1e4).cast("long")
         .alias("ly"),
     )
     m = l.groupBy("brand").agg(
@@ -2661,11 +2623,11 @@ def orders_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_parts",
         F.when(
             (F.col("n_parts") >= 2) & (vx > 0.0),
-            F.floor(cov / vx * 1e6 + F.lit(0.5)) / 1e6,
+            q6(cov / vx),
         ).alias("elasticity_q6"),
         F.when(
             (F.col("n_parts") >= 2) & (vx > 0.0) & (vy > 0.0),
-            F.floor((cov * cov) / (vx * vy) * 1e6 + F.lit(0.5)) / 1e6,
+            q6((cov * cov) / (vx * vy)),
         ).alias("r2_q6"),
     )
 
@@ -2756,7 +2718,7 @@ def part_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         "node", F.col("deg").cast("double").alias("degd")
     ).select(
         "node",
-        F.floor((F.lit(1.0) / detmath.det_ln_pos("degd", assume_ge_1=True)) * 1e9 + F.lit(0.5))
+        half_up((F.lit(1.0) / detmath.det_ln_pos("degd", assume_ge_1=True)) * 1e9)
         .cast("long")
         .alias("t9"),
     )
@@ -2876,10 +2838,7 @@ def orders_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "yr",
             "part",
             "sq",
-            F.floor(
-                F.col("sp").cast("double") / F.col("sq").cast("double") * 1e6
-                + F.lit(0.5)
-            )
+            half_up(F.col("sp").cast("double") / F.col("sq").cast("double") * 1e6)
             .cast("long")
             .alias("p6"),
         )
@@ -3038,12 +2997,8 @@ def orders_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     share = F.col("x").cast("double") / F.col("x_tot").cast("double")
     pt = pc.select(
-        F.floor(share * F.col("__lt") * 1e12 + F.lit(0.5))
-        .cast("decimal(38,0)")
-        .alias("t12"),
-        F.floor(share * F.col("__lw") * 1e12 + F.lit(0.5))
-        .cast("decimal(38,0)")
-        .alias("w12"),
+        half_up(share * F.col("__lt") * 1e12).cast("decimal(38,0)").alias("t12"),
+        half_up(share * F.col("__lw") * 1e12).cast("decimal(38,0)").alias("w12"),
     )
     sums = pt.agg(F.sum("t12").alias("st12"), F.sum("w12").alias("sw12"))
     gb = (
@@ -3060,21 +3015,19 @@ def orders_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     gshare = F.col("x_g").cast("double") / F.col("x_tot").cast("double")
     bsum = gb.select(
-        F.floor(gshare * F.col("__lb") * 1e12 + F.lit(0.5))
-        .cast("decimal(38,0)")
-        .alias("b12"),
+        half_up(gshare * F.col("__lb") * 1e12).cast("decimal(38,0)").alias("b12"),
         F.lit(1).alias("one"),
     ).agg(F.sum("b12").alias("sb12"), F.sum("one").cast("long").alias("k"))
-    q6 = lambda col: F.floor(col.cast("double") / F.lit(1e12) * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
+    q6_e12 = lambda col: q6(col.cast("double") / F.lit(1e12))  # noqa: E731
     return (
         tot.crossJoin(F.broadcast(sums))
         .crossJoin(F.broadcast(bsum))
         .select(
             F.col("n").alias("n_customers"),
             F.col("k").alias("n_groups"),
-            q6(F.col("st12")).alias("theil_total_q6"),
-            q6(F.col("sb12")).alias("theil_between_q6"),
-            q6(F.col("sw12")).alias("theil_within_q6"),
+            q6_e12(F.col("st12")).alias("theil_total_q6"),
+            q6_e12(F.col("sb12")).alias("theil_between_q6"),
+            q6_e12(F.col("sw12")).alias("theil_within_q6"),
         )
     )
 

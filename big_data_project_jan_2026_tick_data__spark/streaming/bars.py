@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalars import half_up, q6
+
 
 def vwap_bars_stream(
     stream: DataFrame,
@@ -38,7 +40,7 @@ def vwap_bars_stream(
     """Watermarked streaming VWAP bars. Returns a streaming DataFrame
     (symbol, bar_start, n_ticks, volume, vwap) suitable for an
     append-mode sink."""
-    p4 = F.floor(F.col(price_col) * F.lit(price_grid) + F.lit(0.5)).cast("bigint")
+    p4 = half_up(F.col(price_col) * F.lit(price_grid)).cast("bigint")
     sz = F.col(size_col).cast("bigint")
     agg = (
         stream.withWatermark(ts_col, watermark)
@@ -54,13 +56,8 @@ def vwap_bars_stream(
         F.col("window.start").alias("bar_start"),
         "n_ticks",
         F.col("__sv").alias("volume"),
-        (
-            F.floor(
-                (F.col("__spv").cast("double") / F.col("__sv"))
-                / F.lit(price_grid)
-                * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
+        q6(
+            (F.col("__spv").cast("double") / F.col("__sv"))
+            / F.lit(price_grid)
         ).alias("vwap"),
     )

@@ -25,7 +25,6 @@ from __future__ import annotations
 from collections.abc import Mapping
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def cusum_monitor(

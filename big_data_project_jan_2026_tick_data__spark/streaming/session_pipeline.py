@@ -26,6 +26,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.scalars import half_up
 from ..operators.ticks import SESSION_WINDOWS, session_filter
 
 
@@ -58,7 +59,7 @@ def session_window_aggregate(
         # mean — but order-independent (a float AVG differs between
         # engines/partitionings in the last ulp, the q6 flip class)
         s6 = F.sum(
-            F.floor(F.col(c) * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,0)")
+            half_up(F.col(c) * F.lit(1e6)).cast("decimal(38,0)")
         ).cast("double")
         aggs.extend(
             [

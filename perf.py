@@ -12,12 +12,15 @@ best-of-N timer.
 
 Queries read ``$SPARK_GRAFT_SF_DIR`` (default sf0.1, as ``bench.py``);
 the session runs on ``local[$SPARK_GRAFT_CPUS]``. ``plans`` defaults to the
-headline suite, ``bench.HEADLINE``. ``micro`` and ``scaling`` warm up
-at sf0.001 first, as ``bench.py`` does, so JIT and codegen compile
-outside the timed runs. For a core-count scaling curve, run ``scaling``
-once per ``SPARK_GRAFT_CPUS`` value. ``reach`` always runs at sf0.001:
-it lists the queries whose build + noop write calls any of the named
-package functions (``module.Qualname`` suffixes such as
+headline suite, ``bench.HEADLINE``; the files it writes number expression
+ids (``#123``) by first appearance and replace ``plan_id=``, temp paths,
+UUIDs and JVM object hashes, so ``diff -r plans/A plans/B`` between two
+checkouts is empty when their plans are the same. ``micro`` and
+``scaling`` warm up at sf0.001 first, as ``bench.py`` does, so JIT and
+codegen compile outside the timed runs. For a core-count scaling curve,
+run ``scaling`` once per ``SPARK_GRAFT_CPUS`` value. ``reach`` always
+runs at sf0.001: it lists the queries whose build + noop write calls any
+of the named package functions (``module.Qualname`` suffixes such as
 ``SnapshotTable.write`` or ``stats._bucket_means6``), traced with
 ``sys.setprofile`` in the driver's Python threads.
 """
@@ -27,6 +30,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import tempfile
 import threading
@@ -61,6 +65,21 @@ def _best_of(runs: int, build: Callable[[], DataFrame]) -> tuple[float, list[flo
     return min(times), times
 
 
+_UUID = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
+_TMP = re.compile(re.escape(tempfile.gettempdir()) + r"/[^\s,\]\)\}'\"]*")
+
+
+def _normalize_plan(plan: str) -> str:
+    """``plan`` without what differs from run to run: expression ids
+    renumbered by first appearance, ``plan_id=`` tags dropped, temp
+    paths, UUIDs and JVM object hashes replaced."""
+    ids: dict[str, int] = {}
+    plan = re.sub(r"#(\d+)", lambda m: f"#{ids.setdefault(m.group(1), len(ids))}", plan)
+    plan = re.sub(r",? ?\[plan_id=\d+\]", "", plan)
+    plan = _TMP.sub("<tmp>", _UUID.sub("<uuid>", plan))
+    return re.sub(r"@[0-9a-f]{5,}\b", "@<hash>", plan)
+
+
 def plans(spark: SparkSession, sf_dir: str, args) -> None:
     out = os.path.join(ROOT, "plans", args.label)
     os.makedirs(out, exist_ok=True)
@@ -73,7 +92,7 @@ def plans(spark: SparkSession, sf_dir: str, args) -> None:
         except Exception as exc:  # noqa: BLE001
             plan = f"ERROR: {type(exc).__name__}: {exc}"
         with open(os.path.join(out, f"{name}.txt"), "w") as fh:
-            fh.write(plan)
+            fh.write(_normalize_plan(plan))
         print(f"{name}: {len(plan)} chars -> {os.path.relpath(out, ROOT)}")
 
 

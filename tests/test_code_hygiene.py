@@ -218,66 +218,165 @@ def _is_lit(node, value) -> bool:
     return isinstance(node, ast.Constant) and node.value == value
 
 
-def _q6_operand(node):
-    """``x`` when ``node`` is ``F.floor(x * 1e6 + F.lit(0.5)) / 1e6``."""
-    if not (isinstance(node, ast.BinOp) and isinstance(node.op, ast.Div)):
-        return None
-    floor = node.left
+def _half_up_operand(node):
+    """``x`` when ``node`` is the floor-half-up ``F.floor(x + F.lit(0.5))``
+    (the ``0.5`` bare or in ``F.lit``)."""
     if not (
-        _is_lit(node.right, 1e6)
-        and isinstance(floor, ast.Call)
-        and ast.unparse(floor.func) == "F.floor"
-        and len(floor.args) == 1
+        isinstance(node, ast.Call)
+        and ast.unparse(node.func) == "F.floor"
+        and len(node.args) == 1
     ):
         return None
-    add = floor.args[0]
-    if not (
+    add = node.args[0]
+    if (
         isinstance(add, ast.BinOp)
         and isinstance(add.op, ast.Add)
         and _is_lit(add.right, 0.5)
     ):
-        return None
-    mul = add.left
+        return add.left
+    return None
+
+
+def _snap_operand(node):
+    """``y`` when ``node`` is ``half_up(y)`` or the same floor written
+    out, ``F.floor(y + F.lit(0.5))``."""
+    if (
+        isinstance(node, ast.Call)
+        and ast.unparse(node.func) == "half_up"
+        and len(node.args) == 1
+    ):
+        return node.args[0]
+    return _half_up_operand(node)
+
+
+def _q6_operand(node):
+    """``x`` when ``node`` is ``half_up(x * 1e6) / 1e6`` or the same snap
+    written out, ``F.floor(x * 1e6 + F.lit(0.5)) / 1e6``."""
     if not (
+        isinstance(node, ast.BinOp)
+        and isinstance(node.op, ast.Div)
+        and _is_lit(node.right, 1e6)
+    ):
+        return None
+    mul = _snap_operand(node.left)
+    if (
         isinstance(mul, ast.BinOp)
         and isinstance(mul.op, ast.Mult)
         and _is_lit(mul.right, 1e6)
     ):
-        return None
-    return mul.left
+        return mul.left
+    return None
 
 
-def test_q6_snap_has_one_definition():
-    """``functions.scalars.q6`` is the only package function or lambda
-    that returns the 6-decimal floor-half-up snap of a name; every other
-    site calls it instead of keeping a local copy."""
+def test_half_up_has_one_definition():
+    """``functions.scalars.half_up`` is the package's one floor-half-up
+    (``F.floor(x + F.lit(0.5))``) and ``functions.scalars.q6`` its one
+    6-decimal snap; every other site calls them instead of spelling the
+    rule out. Oracle SQL strings and the numpy twins' ``math.floor``
+    keep their own text."""
     sites = []
     for path in _module_files():
+        rel = str(path.relative_to(PKG))
         tree = ast.parse(path.read_text(), filename=str(path))
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Return):
-                value = node.value
-            elif isinstance(node, ast.Lambda):
-                value = node.body
-            else:
-                continue
-            if isinstance(_q6_operand(value), ast.Name):
-                sites.append(f"{path.relative_to(PKG)}:{node.lineno}")
-    assert len(sites) == 1 and sites[0].startswith("functions/scalars.py:"), (
-        "\n".join(sites)
-    )
+        for top in tree.body:
+            name = getattr(top, "name", "<module>")
+            own = rel == "functions/scalars.py"
+            q6_floors = set()
+            for node in ast.walk(top):
+                if _q6_operand(node) is not None:
+                    q6_floors.add(id(node.left))
+                    if not (own and name == "q6"):
+                        sites.append(f"{rel}:{node.lineno} {name} q6")
+            for node in ast.walk(top):
+                if (
+                    _half_up_operand(node) is not None
+                    and id(node) not in q6_floors
+                    and not (own and name == "half_up")
+                ):
+                    sites.append(f"{rel}:{node.lineno} {name} half_up")
+    assert not sites, f"{len(sites)} sites:\n" + "\n".join(sites)
+
+
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+
+
+def _body(scope) -> list:
+    return scope.body if isinstance(scope.body, list) else [scope.body]
 
 
 def _own_nodes(fn):
     """Nodes of ``fn``'s body, not descending into nested defs."""
-    stack = list(fn.body)
+    stack = list(_body(fn))
     while stack:
         node = stack.pop()
         yield node
         stack.extend(
             child for child in ast.iter_child_nodes(node)
-            if not isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda))
+            if not isinstance(child, _FUNCS)
         )
+
+
+def _scope_names(scope) -> tuple[set[str], set[str], list]:
+    """``(reads, binds, imports)`` of ``scope``: the names it reads, the
+    names it binds (parameters, assignments, imports) and its own import
+    statements. A nested function's reads count only for names that
+    function does not bind itself, so a parameter that shadows an import
+    is not a use of it; its signature, defaults and decorators belong to
+    ``scope``."""
+    reads, binds, imports = set(), set(), []
+    if isinstance(scope, _FUNCS):
+        a = scope.args
+        params = a.posonlyargs + a.args + a.kwonlyargs + [a.vararg, a.kwarg]
+        binds = {x.arg for x in params if x}
+    stack = list(_body(scope))
+    while stack:
+        node = stack.pop()
+        if isinstance(node, _FUNCS):
+            inner_reads, inner_binds, _ = _scope_names(node)
+            reads |= inner_reads - inner_binds
+            body = _body(node)
+            stack.extend(
+                c for c in ast.iter_child_nodes(node) if not any(c is b for b in body)
+            )
+            if not isinstance(node, ast.Lambda):
+                binds.add(node.name)
+            continue
+        if isinstance(node, ast.Name):
+            (binds if isinstance(node.ctx, ast.Store) else reads).add(node.id)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            imports.append(node)
+            binds |= {(x.asname or x.name).split(".")[0] for x in node.names}
+        stack.extend(ast.iter_child_nodes(node))
+    return reads, binds, imports
+
+
+def test_no_unused_imports():
+    """Every name a module imports is read in the scope that imports it
+    (see :func:`_scope_names`): a module-level import somewhere in the
+    module, a function-local import inside that function. ``__init__.py``
+    re-exports are exempt."""
+    sites = []
+    for path in _module_files():
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        scopes = [tree] + [
+            n for n in ast.walk(tree)
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for scope in scopes:
+            used, _, imports = _scope_names(scope)
+            for imp in imports:
+                if getattr(imp, "module", None) == "__future__":
+                    continue
+                for alias in imp.names:
+                    bound = (alias.asname or alias.name).split(".")[0]
+                    if bound not in used:
+                        where = getattr(scope, "name", "<module>")
+                        sites.append(
+                            f"{path.relative_to(PKG)}:{imp.lineno} {where} {bound}"
+                        )
+    assert not sites, f"{len(sites)} unused imports:\n" + "\n".join(sites)
 
 
 def _builds_hot_key_cap(fn) -> bool:
@@ -401,8 +500,9 @@ def test_tick_feed_has_one_definition():
 
 
 def _is_cents(node) -> bool:
-    """``node`` is ``F.floor(<x> * 100 + F.lit(0.5)).cast('long'|'bigint')``,
-    the multiplier written as an integer or a float (``1e2``, ``100.0``)."""
+    """``node`` is ``half_up(<x> * 100).cast('long'|'bigint')`` or the same
+    snap written out, ``F.floor(<x> * 100 + F.lit(0.5)).cast(...)``, the
+    multiplier written as an integer or a float (``1e2``, ``100.0``)."""
     if not (
         isinstance(node, ast.Call)
         and isinstance(node.func, ast.Attribute)
@@ -412,23 +512,13 @@ def _is_cents(node) -> bool:
         and node.args[0].value in ("long", "bigint")
     ):
         return False
-    floor = node.func.value
-    if not (
-        isinstance(floor, ast.Call)
-        and ast.unparse(floor.func) == "F.floor"
-        and len(floor.args) == 1
-    ):
-        return False
-    s = floor.args[0]
+    mul = _snap_operand(node.func.value)
     return (
-        isinstance(s, ast.BinOp)
-        and isinstance(s.op, ast.Add)
-        and ast.unparse(s.right) == "F.lit(0.5)"
-        and isinstance(s.left, ast.BinOp)
-        and isinstance(s.left.op, ast.Mult)
-        and isinstance(s.left.right, ast.Constant)
-        and type(s.left.right.value) in (int, float)
-        and s.left.right.value == 100
+        isinstance(mul, ast.BinOp)
+        and isinstance(mul.op, ast.Mult)
+        and isinstance(mul.right, ast.Constant)
+        and type(mul.right.value) in (int, float)
+        and mul.right.value == 100
     )
 
 

@@ -22,6 +22,11 @@ from big_data_project_jan_2026_tick_data__spark.functions.detmath import (
     det_log2_int_sql,
     dlit,
 )
+from big_data_project_jan_2026_tick_data__spark.functions.scalars import (
+    cents,
+    half_up,
+    q6,
+)
 
 
 def _bits(x: float) -> bytes:
@@ -159,3 +164,59 @@ def test_det_exp_bit_identical_and_accurate(spark, fn):
     for h in hs:
         want = ref(h)
         assert abs(d_val[_bits(h)] - want) <= 5e-15 * abs(want), (h, d_val[_bits(h)])
+
+
+# functions.scalars snaps against their oracle SQL spelling: (Spark
+# function, DuckDB expression of x, scale, exact half-way step). Odd
+# multiples of the step land exactly half-way on the snap's grid
+# (2.5, 12.5 cents = 0.125, 7812.5e-6 = 0.0078125).
+_SNAPS = {
+    "half_up": (half_up, "FLOOR(x + 0.5)", 1.0, 0.5),
+    "q6": (q6, "FLOOR(x * 1e6 + 0.5) / 1e6", 1e6, 1 / 128),
+    "cents": (cents, "CAST(FLOOR(x * 100 + 0.5) AS BIGINT)", 100.0, 1 / 8),
+}
+
+
+def _snap_inputs(scale: float, step: float) -> list:
+    halfway = [sign * step * j for j in (1, 3, 5, 99, 12345) for sign in (1, -1)]
+    near = [h + d / scale for h in halfway for d in (1e-7, -1e-7, 1e-3, -1e-3)]
+    decimal_halfway = [2.675, -2.675, 1.005, -1.005, 1.2345675, -0.0000005]
+    return [None, 0.0, 0.49999999999999994, -0.49999999999999994,
+            *halfway, *near, *decimal_halfway]
+
+
+@pytest.mark.parametrize("name", sorted(_SNAPS))
+def test_half_up_snaps_match_duckdb(spark, name):
+    fn, sql, scale, step = _SNAPS[name]
+    xs = _snap_inputs(scale, step)
+    rows = list(enumerate(xs))
+    got = dict(
+        spark.createDataFrame(rows, "i int, x double")
+        .select("i", fn(F.col("x")).alias("y"))
+        .collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t(i INTEGER, x DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    want = dict(con.execute(f"SELECT i, {sql} FROM t").fetchall())
+    for i, x in rows:
+        a, b = got[i], want[i]
+        if x is None:
+            assert a is None and b is None, (name, a, b)
+        else:
+            assert _bits(float(a)) == _bits(float(b)), (name, x, a, b)
+
+
+def test_half_up_range_condition(spark):
+    """The condition ``scalars.half_up`` documents: Spark's floor of a
+    double is a BIGINT, so a value past 2**63 saturates and NaN becomes
+    0, while DuckDB keeps the double."""
+    row = spark.createDataFrame([(1e300, float("nan"))], "big double, nan double").select(
+        q6(F.col("big")).alias("big"), q6(F.col("nan")).alias("nan")
+    ).first()
+    assert (row["big"], row["nan"]) == (9223372036854.775, 0.0)
+    big, nan = duckdb.sql(
+        "SELECT FLOOR(x * 1e6 + 0.5) / 1e6, FLOOR(y * 1e6 + 0.5) / 1e6 "
+        "FROM (SELECT 1e300::DOUBLE AS x, 'nan'::DOUBLE AS y)"
+    ).fetchone()
+    assert big == 1e300 and math.isnan(nan)

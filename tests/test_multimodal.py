@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from big_data_project_jan_2026_tick_data__spark.operators import codecs, multimodal
 
@@ -66,12 +67,12 @@ def test_extract_features_real_decode(spark):
 def test_unknown_codec_gate(spark):
     media = multimodal.synthetic_media(spark, n=6).withColumn(
         "meta",
-        multimodal.F.struct(
-            multimodal.F.lit(None).cast("int").alias("width"),
-            multimodal.F.lit(None).cast("int").alias("height"),
-            multimodal.F.lit(None).cast("int").alias("sample_rate"),
-            multimodal.F.lit(None).cast("long").alias("duration_ms"),
-            multimodal.F.lit("h264").alias("codec"),
+        F.struct(
+            F.lit(None).cast("int").alias("width"),
+            F.lit(None).cast("int").alias("height"),
+            F.lit(None).cast("int").alias("sample_rate"),
+            F.lit(None).cast("long").alias("duration_ms"),
+            F.lit("h264").alias("codec"),
         ),
     )
     with pytest.raises(Exception, match="NotImplementedError|external decoder|h264"):
